@@ -70,7 +70,7 @@ def stamp(jars, files):
         with open(f, "rb") as fh:
             h.update(hashlib.sha256(fh.read()).digest())
     h.update(jars.encode())
-    h.update(subprocess.run(["java", "-version"], capture_output=True).stderr)
+    h.update(subprocess.run(["java", "-XX:-UsePerfData", "-version"], capture_output=True).stderr)
     return h.hexdigest()
 
 
