@@ -30,8 +30,9 @@ final class OpRec(val client: Int, val idx: Int, val traced: Boolean) {
 trait Workload {
   /** Closed-loop clients; each runs operations one after another. */
   def clients: Int
-  /** Operations per client cycle: the timed phase ends at a cycle
-    * boundary, so every run sees the same operation mix. */
+  /** Operations per client cycle: a client's timed phase ends at the
+    * cycle boundary nearest to --seconds, so every run sees the same
+    * operation mix and, on one machine, the same number of cycles. */
   def cycle: Int
   /** Generate the inputs from the seed and load them into graft. */
   def load(rep: Int): Unit
@@ -39,6 +40,9 @@ trait Workload {
   def warmUp(): Unit
   /** Drop the state of a load that the timed phase will not use. */
   def release(): Unit
+  /** Untimed work on the kept load just before the timed phase, so that
+    * the first timed operation does not meet a fresh load. */
+  def settle(): Unit = ()
   /** One operation; sets rec.first and rec.rows, throws on failure. */
   def run(rec: OpRec): Unit
   /** Check every operation's output; mark wrong ones with rec.fail. */
@@ -53,6 +57,11 @@ trait Workload {
 
 object Main {
   val SetupReps = 3
+  private val t00 = System.nanoTime()
+
+  /** Time since the JVM entered main, on stderr, to show where a run goes. */
+  def phase(what: String): Unit =
+    System.err.println(f"perfbench: +${(System.nanoTime() - t00) / 1e9}%.1f s $what")
 
   def main(argv: Array[String]): Unit = {
     val kv = argv.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
@@ -72,12 +81,21 @@ object Main {
       .config("spark.sql.warehouse.dir", a.work.resolve("warehouse").toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    phase("session")
     val code = try run(spark, a, procStartMs) finally spark.stop()
     sys.exit(code)
   }
 
   private def run(spark: SparkSession, a: Args, procStartMs: Long): Int = {
     val tracer = new Tracer(spark)
+    if (a.workload == "train") {
+      // the build's class-data sharing run: both driven workloads' load
+      // and one untimed operation
+      Seq(new Serve(spark, a, tracer), new IngestRounds(spark, a, tracer)).foreach { w =>
+        w.load(0); w.settle(); w.close()
+      }
+      return 0
+    }
     val w: Workload = a.workload match {
       case "serve" => new Serve(spark, a, tracer)
       case "ingest" => new IngestRounds(spark, a, tracer)
@@ -91,22 +109,31 @@ object Main {
     // process and session start and the warm-up, which moves the one-time
     // class-load and JIT cost out of the timed phase; setup_s is the median.
     val setups = (0 until SetupReps).map { rep =>
-      val t0 = if (rep == 0) procStartMs else System.currentTimeMillis()
+      val t0 = System.nanoTime()
       if (rep > 0) w.release()
       w.load(rep)
-      if (rep == 0) w.warmUp()
-      (System.currentTimeMillis() - t0) / 1e3
+      phase(s"load $rep")
+      if (rep == 0) { w.warmUp(); phase("warm-up") }
+      if (rep == 0) (System.currentTimeMillis() - procStartMs) / 1e3
+      else (System.nanoTime() - t0) / 1e9
     }
     System.err.println(s"perfbench: set-ups ${setups.mkString(", ")} s")
+    w.settle()
+    phase("settle")
     if (a.trace) tracer.register()
     val gcBefore = gcMs()
     val t0 = System.nanoTime()
-    val deadline = t0 + a.seconds * 1000000000L
+    val budgetNs = a.seconds * 1000000000L
+    // start another cycle unless the budget ends within half a cycle
+    def another(i: Int): Boolean = i % w.cycle != 0 || i == 0 || {
+      val spent = System.nanoTime() - t0
+      spent + spent / (i / w.cycle) / 2 < budgetNs
+    }
     val perClient = (0 until w.clients).map { c =>
       val recs = scala.collection.mutable.ArrayBuffer[OpRec]()
       val th = new Thread(() => {
         var i = 0
-        while (System.nanoTime() < deadline || i % w.cycle != 0) {
+        while (another(i)) {
           // in a traced run half the operations record spans and the other
           // half give the tracing overhead: the second client's, or every
           // other operation of a single client
@@ -127,11 +154,15 @@ object Main {
     val t1 = recs.map(_.end).max
     val gcAfter = gcMs()
     System.err.println(f"perfbench: timed phase ${(t1 - t0) / 1e9}%.1f s, ${recs.size} operations")
+    System.err.println("perfbench: operation ms " + recs.map(r => f"${r.ms}%.0f").mkString(" "))
     if (a.trace) tracer.drain()
+    phase("timed phase")
     try w.check(recs) catch { case NonFatal(e) => recs.foreach(_.fail("check", e)) }
     val layerVals = if (a.trace) w.layers(recs) else Map.empty[String, Double]
+    phase("check")
     w.close()
     val retainedMb = retainedHeapMb()
+    phase("close")
     val ok = recs.filter(_.ok)
     // closed-loop throughput: the sum of each client's rate over its own run
     def perSecond(f: OpRec => Double): Double =

@@ -11,14 +11,14 @@ import graft.vis.Visibility
 /** `serve`: DataWave's primary traffic. Two closed-loop clients run full
   * query lifecycles over HTTP against a QueryServer with a principal
   * registry: createAndNext, /query/next until 204, close. A client runs
-  * 12 operations, twice this pattern: 4 lookups (one page: plan and
-  * visibility probe dominate), 1 range/regex/LUCENE scan (about 10 pages)
-  * and 1 deep drain (50+ pages: paging dominates), at pageSize 100. */
+  * cycles of 5 operations: 3 lookups (one page: plan and visibility probe
+  * dominate), 1 range/regex/LUCENE scan (about 3 pages) and 1 drain (about
+  * 12 pages: paging dominates), at pageSize 100. */
 final class Serve(spark: SparkSession, a: Args, tr: Tracer) extends Workload {
   import Serve._
 
   val clients = 2
-  val cycle = 12
+  val cycle = 5
   private var server: QueryServer = _
   private var base = ""
   private var events: DataFrame = _
@@ -37,8 +37,12 @@ final class Serve(spark: SparkSession, a: Args, tr: Tracer) extends Workload {
     base = s"http://127.0.0.1:${server.start(0)}"
   }
 
-  /** Lookups and scans from a seed stream the timed phase never uses. */
-  def warmUp(): Unit = Seq(0, 1, 2, 3, 5, 7).foreach(i => lifecycle(query(a.seed, 99, i), None))
+  /** A lookup, a scan and a drain from a seed stream the timed phase
+    * never uses. */
+  def warmUp(): Unit = Seq(0, 1, 3).foreach(i => lifecycle(query(a.seed, 99, i), None))
+
+  /** One lookup against the kept server. */
+  override def settle(): Unit = lifecycle(query(a.seed, 99, 0), None)
 
   def release(): Unit = server.stop()
 
@@ -135,16 +139,23 @@ final class Serve(spark: SparkSession, a: Args, tr: Tracer) extends Workload {
   def check(recs: Seq[OpRec]): Unit = {
     val ref = spark.read.parquet(table)
     ref.createOrReplaceTempView("serve_ref")
-    val byQuery = recs.filter(r => r.ok && seen.containsKey(r)).groupBy(r => seen.get(r)._1)
+    val byQuery = recs.filter(r => r.ok && seen.containsKey(r)).groupBy(r => seen.get(r)._1).toSeq
+    // every query's visible uids in one job
+    val union = byQuery.zipWithIndex.map { case ((q, _), i) =>
+      val allowed = Vis.filter(_._2(Users(q.user))).map(v => s"'${v._1}'").mkString(",")
+      s"SELECT $i AS q, uid FROM serve_ref WHERE (${q.sql}) AND visibility IN ($allowed)"
+    }
+    val uidsOf = if (union.isEmpty) Map.empty[Int, Seq[String]]
+      else spark.sql(union.mkString(" UNION ALL ")).collect()
+        .groupBy(_.getInt(0)).map { case (i, rows) => i -> rows.toSeq.map(_.getString(1)) }
     var visible = 0L
     var all = 0L
-    byQuery.foreach { case (q, rs) =>
-      val allowed = Vis.filter(_._2(Users(q.user))).map(v => s"'${v._1}'").mkString(",")
-      val u = spark.sql(s"SELECT uid FROM serve_ref WHERE (${q.sql}) AND visibility IN ($allowed)")
-        .collect().map(_.getString(0))
+    byQuery.zipWithIndex.foreach { case ((q, rs), i) =>
+      val u = uidsOf.getOrElse(i, Nil)
       val want = u.foldLeft(Acc(0, 0))((acc, s) => acc.add(Acc.one(s)))
       visible += u.length
-      all += spark.sql(s"SELECT count(*) FROM serve_ref WHERE ${q.sql}").head().getLong(0)
+      // only the traced run reports the visible share
+      if (a.trace) all += spark.sql(s"SELECT count(*) FROM serve_ref WHERE ${q.sql}").head().getLong(0)
       rs.foreach { r =>
         val (_, n, d) = seen.get(r)
         if (n != want.n || d != want.sum)
@@ -208,9 +219,10 @@ object Serve {
     "partner" -> Set("PUBLIC", "SECRET"),
     "auditor" -> Set("PUBLIC", "FOUO", "SECRET", "USA"))
   private val UserNames = Users.keys.toSeq.sorted
-  /** Days of `view` events a drain spans: the users see 88%, 73% and 100%
-    * of the rows, so each drain pages through about the same rows. */
-  private val DrainDays = Map("analyst" -> 5, "partner" -> 6, "auditor" -> 4)
+  /** The user_id cut of a drain over two days of `view` events: the users
+    * see 88%, 73% and 100% of the rows, so each drain pages through about
+    * 1200 rows. */
+  private val DrainUsers = Map("analyst" -> 1136, "partner" -> 1370, "auditor" -> 1000)
 
   val NRows = 120000
   val Days = 30
@@ -246,15 +258,18 @@ object Serve {
   /** A query with its plain-SQL equivalent over the same columns. */
   final case class Q(syntax: String, text: String, sql: String, user: String)
 
-  /** The `idx`-th query of a client: the class comes from the cycle
-    * pattern, its terms from the seed. */
+  /** The `idx`-th query of a client. Its class, shape and user come from
+    * the client and the position, so every seed runs the same mix; its
+    * terms come from the seed. */
   def query(seed: Long, client: Int, idx: Int): Q = {
     val r = new java.util.SplittableRandom(seed * 1000003L + client * 10007L + idx)
-    val user = UserNames(r.nextInt(UserNames.size))
+    val user = UserNames((client + idx) % UserNames.size)
+    val cycle = idx / 5
     // L lookup, S scan, D drain
-    "LSLLDL"(idx % 6) match {
+    "LSLDL"(idx % 5) match {
       case 'L' =>
-        if (r.nextBoolean()) {
+        val lookup = cycle * 3 + idx % 5 / 2
+        if ((lookup + client) % 2 == 0) {
           val u = r.nextLong(2000L)
           Q("JEXL", s"USER_ID == $u", s"user_id = $u", user)
         } else {
@@ -265,30 +280,33 @@ object Serve {
             s"host = '$h' AND event_type = '$t' AND shard_date = '$d'", user)
         }
       case 'S' =>
-        // ~1000 visible rows (about 10 pages) for each shape
-        r.nextInt(3) match {
+        // ~300 visible rows (about 3 pages) for each shape
+        (cycle + client) % 3 match {
           case 0 =>
             val lo = r.nextInt(900)
-            val hi = lo + 10
+            val hi = lo + 3
             Q("JEXL", s"VALUE >= $lo && VALUE < $hi", s"value >= $lo AND value < $hi", user)
           case 1 =>
             val d = r.nextInt(10)
             val t = Seq("login", "logout")(r.nextInt(2))
-            Q("JEXL", s"HOST =~ 'web-[0-3]$d' && EVENT_TYPE == '$t'",
-              s"host RLIKE '^(?:web-[0-3]$d)$$' AND event_type = '$t'", user)
+            val dt = Datatypes(r.nextInt(Datatypes.size))
+            Q("JEXL", s"HOST =~ 'web-[0-3]$d' && EVENT_TYPE == '$t' && DATATYPE == '$dt'",
+              s"host RLIKE '^(?:web-[0-3]$d)$$' AND event_type = '$t' AND datatype = '$dt'", user)
           case _ =>
             val d = r.nextInt(4)
             val t = Seq("error", "upload", "download")(r.nextInt(3))
-            Q("LUCENE", s"HOST:web-$d* AND EVENT_TYPE:$t",
-              s"host LIKE 'web-$d%' AND event_type = '$t'", user)
+            val dt = Datatypes(r.nextInt(Datatypes.size))
+            Q("LUCENE", s"HOST:web-$d* AND EVENT_TYPE:$t AND DATATYPE:$dt",
+              s"host LIKE 'web-$d%' AND event_type = '$t' AND datatype = '$dt'", user)
         }
       case _ =>
-        // ~5k visible rows (50+ pages) whatever the user's grant
-        val span = DrainDays(user)
-        val from = r.nextInt(Days - span + 1)
-        val to = from + span - 1
-        Q("JEXL", s"EVENT_TYPE == 'view' && SHARD_DATE >= '${day(from)}' && SHARD_DATE <= '${day(to)}'",
-          s"event_type = 'view' AND shard_date >= '${day(from)}' AND shard_date <= '${day(to)}'", user)
+        // ~1200 visible rows (about 12 pages) whatever the user's grant
+        val from = r.nextInt(Days - 1)
+        val cut = DrainUsers(user)
+        Q("JEXL", s"EVENT_TYPE == 'view' && SHARD_DATE >= '${day(from)}' && " +
+          s"SHARD_DATE <= '${day(from + 1)}' && USER_ID < $cut",
+          s"event_type = 'view' AND shard_date >= '${day(from)}' AND " +
+            s"shard_date <= '${day(from + 1)}' AND user_id < $cut", user)
     }
   }
 
