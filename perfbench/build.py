@@ -10,9 +10,9 @@ Usage: python3 perfbench/build.py   (from the root of a checkout)
 
 The build directory is $CARGO_TARGET_DIR when set, else `.bench_build`.
 A build is skipped when a stamp over every source file, this file, the
-compiler jars and the Java version matches the last one. Prints the classpath of
-the built program on its last stdout line. Exits 2 when the checkout
-holds no graft sources.
+compiler jars and the Java version matches the last one. Prints the
+classpath of the built program on its last stdout line. Exits 2 when the
+checkout holds no graft sources.
 """
 import fcntl
 import glob
@@ -133,9 +133,9 @@ def build():
 
 def train(classpath, archive):
     """Load both driven workloads, run one operation of each, and dump the
-    classes that took into `archive`. The archive names the jars it came from, so this runs
-    on the final classpath. Without an archive the runs are only slower to
-    start."""
+    classes that took into `archive`. The archive names the jars it came
+    from, so this runs on the final classpath. Without an archive the runs
+    are only slower to start."""
     work = os.path.join(build_dir(), "work", f"train-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(os.path.join(work, "tmp"))
@@ -165,7 +165,7 @@ def compile_into(jars, spark_cp, out, main_files, bench_files):
     scalac(jars, os.path.join(tmp, "bench"),
            os.pathsep.join([os.path.join(tmp, "graft"), spark_cp]), bench_files)
     # jars, not class directories: the JVM's class-data sharing archive
-    # (see run.py) only holds classes loaded from jars
+    # (see train) only holds classes loaded from jars
     for name in ("graft", "bench"):
         jar_dir(os.path.join(tmp, name), os.path.join(tmp, name + ".jar"))
         shutil.rmtree(os.path.join(tmp, name))

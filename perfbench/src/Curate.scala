@@ -12,6 +12,7 @@ import graft.operators.{Dedup, Sampling, TextOps, VectorOps}
 final class Curate(spark: SparkSession, a: Args, tr: Tracer) extends Workload {
   val clients = 1
   val cycle = Curate.Passes
+  val cycleSeconds = 14.0
   private val NDocs = 500
   private val NVecs = 1000
   private val K = 10

@@ -30,10 +30,13 @@ final class OpRec(val client: Int, val idx: Int, val traced: Boolean) {
 trait Workload {
   /** Closed-loop clients; each runs operations one after another. */
   def clients: Int
-  /** Operations per client cycle: a client's timed phase ends at the
-    * cycle boundary nearest to --seconds, so every run sees the same
-    * operation mix and, on one machine, the same number of cycles. */
+  /** Operations per client cycle. */
   def cycle: Int
+  /** Seconds a client cycle takes on a 4-core box. Each client runs the
+    * whole number of cycles nearest to --seconds / this, so every run
+    * does the same work whatever the host's speed at the time: on a
+    * slow host, ending on the clock would leave fewer, colder cycles. */
+  def cycleSeconds: Double
   /** Generate the inputs from the seed and load them into graft. */
   def load(rep: Int): Unit
   /** Run the operation's code paths once, outside the timed phase. */
@@ -123,17 +126,12 @@ object Main {
     if (a.trace) tracer.register()
     val gcBefore = gcMs()
     val t0 = System.nanoTime()
-    val budgetNs = a.seconds * 1000000000L
-    // start another cycle unless the budget ends within half a cycle
-    def another(i: Int): Boolean = i % w.cycle != 0 || i == 0 || {
-      val spent = System.nanoTime() - t0
-      spent + spent / (i / w.cycle) / 2 < budgetNs
-    }
+    val ops = math.max(1L, math.round(a.seconds / w.cycleSeconds)).toInt * w.cycle
     val perClient = (0 until w.clients).map { c =>
       val recs = scala.collection.mutable.ArrayBuffer[OpRec]()
       val th = new Thread(() => {
         var i = 0
-        while (another(i)) {
+        while (i < ops) {
           // in a traced run half the operations record spans and the other
           // half give the tracing overhead: the second client's, or every
           // other operation of a single client

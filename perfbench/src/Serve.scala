@@ -19,6 +19,7 @@ final class Serve(spark: SparkSession, a: Args, tr: Tracer) extends Workload {
 
   val clients = 2
   val cycle = 5
+  val cycleSeconds = 5.5
   private var server: QueryServer = _
   private var base = ""
   private var events: DataFrame = _
@@ -37,9 +38,9 @@ final class Serve(spark: SparkSession, a: Args, tr: Tracer) extends Workload {
     base = s"http://127.0.0.1:${server.start(0)}"
   }
 
-  /** A lookup, a scan and a drain from a seed stream the timed phase
-    * never uses. */
-  def warmUp(): Unit = Seq(0, 1, 3).foreach(i => lifecycle(query(a.seed, 99, i), None))
+  /** Two cycles from a seed stream the timed phase never uses: operation
+    * times keep falling for several cycles while the JIT catches up. */
+  def warmUp(): Unit = (0 until 2 * cycle).foreach(i => lifecycle(query(a.seed, 99, i), None))
 
   /** One lookup against the kept server. */
   override def settle(): Unit = lifecycle(query(a.seed, 99, 0), None)
@@ -265,10 +266,13 @@ object Serve {
     val r = new java.util.SplittableRandom(seed * 1000003L + client * 10007L + idx)
     val user = UserNames((client + idx) % UserNames.size)
     val cycle = idx / 5
+    // the second client runs the pattern two places on, so the clients do
+    // not fall into lock-step on the same class of query
+    val pos = (idx + 2 * client) % 5
     // L lookup, S scan, D drain
-    "LSLDL"(idx % 5) match {
+    "LSLDL"(pos) match {
       case 'L' =>
-        val lookup = cycle * 3 + idx % 5 / 2
+        val lookup = cycle * 3 + pos / 2
         if ((lookup + client) % 2 == 0) {
           val u = r.nextLong(2000L)
           Q("JEXL", s"USER_ID == $u", s"user_id = $u", user)
