@@ -198,6 +198,8 @@ final class RunningQuery(
     // run ordinal stamped on every recorded page (see PageMetric)
     val attempt: Long = 0L) {
 
+  RunningQuery.checkOrder(df, orderCols)
+
   // startPage seeds the 1-based numbering when a restarted server
   // resumes a durable cursor mid-query: the next served page keeps its
   // true ordinal instead of restarting at 1
@@ -260,10 +262,12 @@ final class RunningQuery(
     * exhaustion probe's advance) are identical to the per-page drain,
     * pinned by RunningQuerySpec. A finite pageTimeoutMillis falls back to
     * the per-page drain: a mid-run short-circuit can only be observed by
-    * timing real page jobs. */
+    * timing real page jobs. Each page is timed from the end of the one
+    * before it (the first carries the counting job), so the pages' times
+    * add up to the run's. */
   def run(maxPages: Int = Int.MaxValue): Long = {
     if (pageTimeoutMillis != Long.MaxValue) return runPerPage(maxPages)
-    val t0 = System.currentTimeMillis()
+    var t0 = System.currentTimeMillis()
     var remaining = math.max(0L, df.count() - cursor.currentOffset(queryId))
     var served = 0L
     var continue = true
@@ -272,6 +276,7 @@ final class RunningQuery(
       cursor.advance(queryId, pageSize) // same durable state as cursor.next
       remaining -= rows
       if (record(rows, t0) == 0) continue = false else served += 1
+      t0 = System.currentTimeMillis()
     }
     served
   }
@@ -288,5 +293,16 @@ final class RunningQuery(
       }
     }
     served
+  }
+}
+
+object RunningQuery {
+  /** Refuse order columns `df` does not have (case-insensitively), as an
+    * IllegalArgumentException — before any page runs, and before a
+    * caller caches the frame it is about to page. */
+  def checkOrder(df: DataFrame, orderCols: Seq[String]): Unit = {
+    val missing = orderCols.filterNot(c => df.columns.exists(_.equalsIgnoreCase(c)))
+    require(missing.isEmpty,
+      s"unknown orderBy column(s): ${missing.mkString(", ")}")
   }
 }

@@ -16,7 +16,8 @@ import java.util.concurrent.ConcurrentHashMap
   *
   * Endpoints (query-string parameters, JSON responses):
   *  - `POST /query/create?table=T&query=Q[&syntax=JEXL|LUCENE]
-  *    [&pageSize=N][&orderBy=c1,c2]` → `{"queryId": "..."}`; the query
+  *    [&model=M][&pageSize=N][&orderBy=c1,c2]` → `{"queryId": "..."}`;
+  *    `model` names a stored query model (the `/model` verbs); the query
   *    plans eagerly so a bad query fails at create (the reference's
   *    createQuery semantics), and the frame is persisted so pages read
   *    cached partitions, not re-planned scans.
@@ -32,15 +33,17 @@ import java.util.concurrent.ConcurrentHashMap
   *    `POST /query/remove?id=…` → close + delete the definition.
   *  - `GET /query/next?id=...` → `{"rows": [...], "page": N}`, or HTTP
   *    204 when exhausted (the reference's NO_CONTENT page).
-  *  - `GET /query/plan?id=...` → the executed physical plan text.
+  *  - `GET /query/plan?id=...` → the executed physical plan text;
+  *    `GET /query/plan?table=T&query=Q[&syntax=…][&model=M]` plans
+  *    without creating.
   *  - `GET /query/metrics?id=...` → the per-page metrics recorded for
   *    the query (QueryMetricsBean surface: rows/elapsed/status per page).
   *  - `POST /query/close?id=...` → drops cursor state + unpersists.
   *  - `GET /query/list` / `GET /query/listQueryLogic` → active sessions
   *    with paging position / dispatchable logic names.
-  *  - `GET /query/predict?table=T&query=Q[&syntax=…]` → named cost
-  *    predictions from the configured predictors (plan stats + metric
-  *    history), no execution.
+  *  - `GET /query/predict?table=T&query=Q[&syntax=…][&model=M]` → named
+  *    cost predictions from the configured predictors (plan stats +
+  *    metric history), no execution.
   *  - `POST /query/duplicate?id=...` → new id, same definition, page 1;
   *    `POST /query/reset?id=...` → same id, paging restarted;
   *    `POST /query/cancel?id=...` → abort + release (served pages stand).
@@ -84,6 +87,7 @@ final class QueryServer(
       * reference's timer-driven expiration beans); None = sweep only on
       * demand via [[expire]] or `/admin/expire`. */
     expirationSweepMillis: Option[Long] = None) {
+  import QueryServer._
 
   /** The served tables. `/modification/submit` REBINDS an entry to its
     * edited frame (the reference's mutation service writes through to
@@ -113,29 +117,10 @@ final class QueryServer(
     * exists, else re-planned from the durable definition — WITHOUT
     * creating a session or touching cursor state. */
   private def definitionFrame(queryId: String): DataFrame =
-    Option(sessions.get(queryId)).map(_.df).getOrElse {
-      val f = sessionFile(queryId)
-      if (!java.nio.file.Files.exists(f))
-        throw new IllegalArgumentException(s"unknown queryId '$queryId'")
-      val p = new java.util.Properties()
-      val in = java.nio.file.Files.newInputStream(f)
-      try p.load(in) finally in.close()
-      val table = p.getProperty("table", "")
-      val df0 = tableMap.getOrElse(table,
-        throw new IllegalArgumentException(s"unknown table '$table'"))
-      val qp = QueryParams(syntax = p.getProperty("syntax", "JEXL"),
-        auths = definitionAuths(p))
-      val (effLogic, effQp) = resolveModel(p.getProperty("model", ""), qp)
-      effLogic.query(df0, p.getProperty("query", ""), effQp)
-    }
+    Option(sessions.get(queryId)).map(_.df).getOrElse(plan(readDef(queryId)
+      .getOrElse(throw new IllegalArgumentException(s"unknown queryId '$queryId'"))
+      .defn))
 
-  private final case class Session(df: DataFrame, orderCols: Seq[String],
-                                   running: RunningQuery,
-                                   query: String = "", syntax: String = "JEXL",
-                                   pageSize: Int = 0, table: String = "",
-                                   model: String = "",
-                                   auths: Option[Set[String]] = None,
-                                   owner: String = "")
   private val sessions = new ConcurrentHashMap[String, Session]()
   /** CachedResults alias registry: lowercased view name → owning query
     * id. `/cachedresults/sql` only resolves relations registered here
@@ -554,7 +539,7 @@ final class QueryServer(
     server.createContext("/query/predictions", handler(predictions))
     server.createContext("/query/remove", handler(remove))
     server.createContext("/query/next", handler(next))
-    server.createContext("/query/plan", handler(plan))
+    server.createContext("/query/plan", handler(explain))
     server.createContext("/query/metrics", handler(metrics))
     server.createContext("/query/metrics/summary", handler(metricsSummary))
     server.createContext("/query/close", handler(close))
@@ -671,9 +656,7 @@ final class QueryServer(
         // the session was registered by doCreate under this id; a
         // concurrent close between then and here just yields 204
         try Option(sessions.get(id)).flatMap(_.running.nextPageJson()) match {
-          case Some((rows, pageNum)) =>
-            (200, s"""{"queryId": "$id", "page": $pageNum,""" +
-              s""" "rows": [${rows.mkString(",")}]}""")
+          case Some((rows, pageNum)) => (200, firstPage(id, rows, pageNum))
           case None => reapRows(teardown(id)._2); (204, "")
         } catch {
           case e: Exception =>
@@ -706,6 +689,87 @@ final class QueryServer(
       }
     }
 
+  /** The one planning path for a user query against a served table: the
+    * definition's model, syntax and auths through [[resolveModel]] into
+    * the logic's `query`. Lazy — beyond the visibility probe its auths
+    * imply, nothing runs until the frame is paged. */
+  private def plan(d: QueryDef): DataFrame = {
+    val df0 = tableMap.getOrElse(d.table,
+      throw new IllegalArgumentException(s"unknown table '${d.table}'"))
+    val (effLogic, qp) = resolveModel(d.model,
+      QueryParams(syntax = d.syntax, auths = d.auths))
+    effLogic.query(df0, d.query, qp)
+  }
+
+  /** The definition a create/define/execute/predict/plan request names.
+    * Left = the refusal: 400 for a missing or malformed parameter, 404
+    * for an unknown table, 401/403 from [[resolveAuths]]. */
+  private def queryDef(params: Map[String, String])
+      : Either[(Int, String), QueryDef] = {
+    val table = params.getOrElse("table",
+      return Left((400, err("missing 'table'"))))
+    val q = params.getOrElse("query",
+      return Left((400, err("missing 'query'"))))
+    if (!tableMap.contains(table))
+      return Left((404, err(s"unknown table '$table'")))
+    resolveAuths(params).flatMap { auths =>
+      try Right(QueryDef(table, q, params.getOrElse("syntax", "JEXL"),
+        params.getOrElse("model", ""), auths, ownerOf(params),
+        pageSize(params, defaultPageSize),
+        params.get("orderBy").map(csv).getOrElse(Seq.empty)))
+      catch { case e: Exception => Left((400, err(e.getMessage))) }
+    }
+  }
+
+  /** `d` with its default order resolved against the planned frame. */
+  private def ordered(d: QueryDef, df: DataFrame): QueryDef =
+    if (d.orderBy.nonEmpty) d else d.copy(orderBy = Seq(df.columns.head))
+
+  /** The one way a session comes alive — create, lookup, duplicate,
+    * reset, update and restart-resume: page `df` as query `id` under `d`
+    * from `startPage` in run `attempt`, register and touch the session,
+    * and persist its definition (table-less lookups stay ephemeral).
+    * RunningQuery checks the order columns first, so a refused orderBy
+    * caches nothing; a frame no live session holds yet is cached after
+    * that, so each page reads cached partitions. */
+  private def open(id: String, d: QueryDef, df: DataFrame,
+                   startPage: Long = 0L, attempt: Long = 0L): Session = {
+    val defn = ordered(d, df)
+    val running = new RunningQuery(cursor, id, df, defn.orderBy,
+      defn.pageSize, startPage = startPage, sink = pageSink, attempt = attempt)
+    if (!shared(df)) df.persist()
+    val s = Session(defn, df, running)
+    sessions.put(id, s)
+    // a birth or resume is a use for the idle clock — and for an
+    // ephemeral lookup session, its ONLY last-use record
+    touchSession(id)
+    // page-ordinal base: pages after this write are served at THIS
+    // pageSize, so a resume recovers the true ordinal as
+    // base + (offsetNow - offsetBase) / pageSize even when an earlier
+    // pageSize produced the prior offset rows
+    if (defn.table.nonEmpty)
+      writeDef(id, Saved(defn, running.pagesServed, cursor.currentOffset(id),
+        attempt))
+    s
+  }
+
+  /** Audit-before-execute ([[Audit.audited]]) as the calling user. */
+  private def audited[A](params: Map[String, String], id: String,
+                         query: String, syntax: String, logicName: String,
+                         selectors: Option[Seq[String]] = None)(body: => A): A =
+    Audit.audited(auditor, auditType, id,
+      user = params.getOrElse("user", "anonymous"), query = query,
+      syntax = syntax, logicName = logicName,
+      timeMillis = System.currentTimeMillis(), selectors = selectors)(body)
+
+  /** The creation itself is a metric event (the reference ingests a
+    * BaseQueryMetric per created query); pages accrue to the same id. */
+  private def created(params: Map[String, String], id: String, d: QueryDef,
+                      logicName: String): Unit =
+    metricsStore.record(QueryMetric(id, d.query, d.syntax,
+      System.currentTimeMillis(), 0L, 0L,
+      user = params.getOrElse("user", "anonymous"), logicName = logicName))
+
   /** ONE parse of the proxied-entity chain, shared by enforcement
     * ([[resolveAuths]]) and introspection ([[listEffectiveAuths]]) — a
     * drifted copy would let the verb REPORT a grant computed under a
@@ -713,9 +777,8 @@ final class QueryServer(
     * mismatch the introspection verb exists to eliminate. Head = the
     * calling user, tail = the proxied entities. */
   private def principalChain(params: Map[String, String]): Seq[String] =
-    params.getOrElse("user", "anonymous") +: params.get("proxiedEntities")
-      .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
-      .getOrElse(Seq.empty)
+    params.getOrElse("user", "anonymous") +:
+      params.get("proxiedEntities").map(csv).getOrElse(Seq.empty)
 
   /** User→authorizations resolution (the reference's proxied-principal
     * chain: web-services/security DatawaveUser → Accumulo
@@ -791,12 +854,35 @@ final class QueryServer(
   private def ownerOf(params: Map[String, String]): String =
     if (users.isEmpty) "" else params.getOrElse("user", "anonymous")
 
+  /** `body` on query `id` once the caller passes its owner's gate. */
+  private def owned(params: Map[String, String])(
+      body: String => (Int, String)): (Int, String) = {
+    val id = qid(params)
+    ownerGate(params, queryOwner(id)).getOrElse(body(id))
+  }
+
+  /** `body` on the caller's session, live or resumed from its durable
+    * definition: 404 when there is none, and the owner gate's refusal
+    * for anyone but its owner (or an admin). */
+  private def withSession(params: Map[String, String])(
+      body: Session => (Int, String)): (Int, String) =
+    session(params) match {
+      case None => (404, err("unknown queryId"))
+      case Some(s) => ownerGate(params, s.defn.owner).getOrElse(body(s))
+    }
+
+  /** Tear query `id` down ([[teardown]]) for close/cancel/remove:
+    * `{"<done>": true}`, or 404 when nothing existed. */
+  private def end(id: String, done: String): (Int, String) = {
+    val (found, aliases) = teardown(id)
+    reapRows(aliases)
+    if (found) (200, s"""{"$done": true}""") else (404, err("unknown queryId"))
+  }
+
   /** The owning principal of a query id — live session first, then the
     * durable definition ("" = ownerless). */
   private def queryOwner(id: String): String =
-    Option(sessions.get(id)).map(_.owner)
-      .orElse(readDefinitionProps(id).map(_.getProperty("owner", "")))
-      .getOrElse("")
+    definition(id).fold("")(_._1.owner)
 
   /** The owning principal of a loaded CachedResults alias: the alias
     * inherits its owning QUERY's principal (CachedResultsBean.java:342 —
@@ -819,7 +905,7 @@ final class QueryServer(
       : (Int, String) = {
     val raw = params.getOrElse("visibilities",
       return (400, err("missing 'visibilities'")))
-    val exprs = raw.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
+    val exprs = csv(raw)
     if (exprs.isEmpty) return (400, err("no visibility expressions given"))
     val results = exprs.map { e =>
       // parse may refuse by Option OR by exception — both are "invalid"
@@ -869,70 +955,22 @@ final class QueryServer(
       else (200, s"""{"user": ${quote(user)}, "flushed": true}""")
     }
 
-  /** Shared create core: validate, audit, plan+persist, register the
-    * session, persist its durable definition, record the create metric.
-    * Left = the error response; Right = the new query id. */
+  /** Shared create core: validate, audit, plan, open the session, record
+    * the create metric. Left = the error response; Right = the new id. */
   private def doCreate(
-      params: Map[String, String]): Either[(Int, String), String] = {
-    val table = params.getOrElse("table",
-      return Left((400, err("missing 'table'"))))
-    val q = params.getOrElse("query",
-      return Left((400, err("missing 'query'"))))
-    val df0 = tableMap.getOrElse(table,
-      return Left((404, err(s"unknown table '$table'"))))
-    val auths = resolveAuths(params) match {
-      case Left(resp) => return Left(resp)
-      case Right(a) => a
-    }
-    val qp = QueryParams(syntax = params.getOrElse("syntax", "JEXL"),
-      auths = auths)
-    val queryId = java.util.UUID.randomUUID().toString.replace("-", "")
-    try {
-      // ALL client-input validation inside the try: a malformed pageSize
-      // or unknown orderBy column is a 400 at create, not a 500 (or a
-      // deferred failure on the first /query/next)
-      val pageSize = params.get("pageSize").map(_.toInt)
-        .getOrElse(defaultPageSize)
-      require(pageSize > 0, s"pageSize must be positive, got $pageSize")
-      val modelName = params.getOrElse("model", "")
-      val (effLogic, effQp) = resolveModel(modelName, qp)
+      params: Map[String, String]): Either[(Int, String), String] =
+    queryDef(params).flatMap { d =>
+      val id = newId()
       // audit BEFORE execution (QueryExecutorBean.java:704-740: an
-      // auditor failure fails the create — QUERY_AUDITING_ERROR); then
-      // plan eagerly (bad queries fail the create call, like the
-      // reference) and persist so each page reads cached partitions
-      val result = Audit.audited(auditor, auditType, queryId,
-        user = params.getOrElse("user", "anonymous"), query = q,
-        syntax = qp.syntax, logicName = table,
-        timeMillis = System.currentTimeMillis()) {
-        effLogic.query(df0, q, effQp).persist()
-      }
-      val orderCols = params.get("orderBy")
-        .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
-        .getOrElse(Seq(result.columns.head))
-      val missing = orderCols.filterNot(c =>
-        result.columns.exists(_.equalsIgnoreCase(c)))
-      if (missing.nonEmpty) {
-        result.unpersist()
-        return Left((400,
-          err(s"unknown orderBy column(s): ${missing.mkString(", ")}")))
-      }
-      val running = new RunningQuery(cursor, queryId, result, orderCols,
-        pageSize, sink = pageSink)
-      val sess = Session(result, orderCols, running, q, qp.syntax, pageSize,
-        table, modelName, auths, owner = ownerOf(params))
-      sessions.put(queryId, sess)
-      touchSession(queryId) // birth = first use for the idle clock
-      persistSession(queryId, sess)
-      // the create itself is a metric event (the reference ingests a
-      // BaseQueryMetric per created query); pages accrue to the same id
-      metricsStore.record(QueryMetric(queryId, q, qp.syntax,
-        System.currentTimeMillis(), 0L, 0L,
-        user = params.getOrElse("user", "anonymous"), logicName = table))
-      Right(queryId)
-    } catch {
-      case e: Exception => Left((400, err(e.getMessage)))
+      // auditor failure fails the create — QUERY_AUDITING_ERROR); plan
+      // eagerly so a bad query or orderBy fails the create call (the
+      // reference's createQuery semantics), not the first page
+      try {
+        open(id, d, audited(params, id, d.query, d.syntax, d.table)(plan(d)))
+        created(params, id, d, d.table)
+        Right(id)
+      } catch { case e: Exception => Left((400, err(e.getMessage))) }
     }
-  }
 
   /** `TYPE:value[,TYPE:value…]` terms — shared by every lookup
     * endpoint so the parse rules cannot drift between them. */
@@ -946,11 +984,11 @@ final class QueryServer(
     }
 
   /** Shared lookup-session start (createUUIDQueryAndNext shape): audit,
-    * run + persist, register the session, serve the FIRST page on the
-    * create response. Both lookup endpoints delegate here so the
-    * audit/session/first-page rules cannot drift between them. */
-  private def lookupSession(params: Map[String, String], queryId: String,
-                            query: String, syntax: String, logicName: String,
+    * run, open the session, serve the FIRST page on the create response.
+    * Both lookup endpoints delegate here so the audit/session/first-page
+    * rules cannot drift between them. */
+  private def lookupSession(params: Map[String, String], query: String,
+                            syntax: String, logicName: String,
                             selectors: Option[Seq[String]])
                            (body: Option[Set[String]] => DataFrame): (Int, String) = {
     // lookups honor the principal registry too (unknown caller = 401,
@@ -962,38 +1000,21 @@ final class QueryServer(
       case Left(resp) => return resp
       case Right(a) => a
     }
-    val pageSize = params.get("pageSize").map(_.toInt)
-      .getOrElse(defaultPageSize)
-    require(pageSize > 0, s"pageSize must be positive, got $pageSize")
-    val result = Audit.audited(auditor, auditType, queryId,
-      user = params.getOrElse("user", "anonymous"), query = query,
-      syntax = syntax, logicName = logicName,
-      timeMillis = System.currentTimeMillis(), selectors = selectors) {
-      body(auths).persist()
-    }
-    val orderCols = Seq(result.columns.head)
-    val running = new RunningQuery(cursor, queryId, result, orderCols,
-      pageSize, sink = pageSink)
-    sessions.put(queryId,
-      Session(result, orderCols, running, query, syntax, pageSize,
-        owner = ownerOf(params)))
-    // ephemeral lookup sessions have NO definition file, so the
-    // in-memory touch is their ONLY last-use record — without it a
-    // sweep on a long-lived server would evict them at birth
-    // (lastUsedOf would fall back to the server's construction time)
-    touchSession(queryId)
-    metricsStore.record(QueryMetric(queryId, query, syntax,
-      System.currentTimeMillis(), 0L, 0L,
-      user = params.getOrElse("user", "anonymous"), logicName = logicName))
+    val d = QueryDef("", query, syntax, auths = auths, owner = ownerOf(params),
+      pageSize = pageSize(params, defaultPageSize))
+    val id = newId()
+    val s = open(id, d,
+      audited(params, id, query, syntax, logicName, selectors)(body(auths)))
+    created(params, id, d, logicName)
     // the first page rides the create response
-    running.nextPageJson() match {
-      case Some((rows, pageNum)) =>
-        (200, s"""{"queryId": "$queryId", "page": $pageNum,""" +
-          s""" "rows": [${rows.mkString(",")}]}""")
-      case None =>
-        (200, s"""{"queryId": "$queryId", "page": 1, "rows": []}""")
+    s.running.nextPageJson() match {
+      case Some((rows, pageNum)) => (200, firstPage(id, rows, pageNum))
+      case None => (200, firstPage(id, Array.empty, 1))
     }
   }
+
+  private def firstPage(id: String, rows: Array[String], pageNum: Long): String =
+    s"""{"queryId": "$id", "page": $pageNum, "rows": [${rows.mkString(",")}]}"""
 
   private def lookupUuid(params: Map[String, String]): (Int, String) = {
     if (uuidTypes.isEmpty)
@@ -1005,8 +1026,7 @@ final class QueryServer(
       // audit-before-execute applies to lookups too (they run full
       // queries); the rendered LUCENE disjunction is the audited query
       val rendered = LookupUUID.queryString(reg, terms)
-      val queryId = java.util.UUID.randomUUID().toString.replace("-", "")
-      lookupSession(params, queryId, rendered, "LUCENE", "lookupUUID",
+      lookupSession(params, rendered, "LUCENE", "lookupUUID",
         selectors = None) { auths =>
         LookupUUID.lookup(reg, terms, tableMap, logic,
           QueryParams(auths = auths))
@@ -1026,11 +1046,10 @@ final class QueryServer(
       return (404, err("no content table registered on this server")))
     val raw = params.getOrElse("uids", return (400, err("missing 'uids'")))
     try {
-      val uids = raw.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
-      val queryId = java.util.UUID.randomUUID().toString.replace("-", "")
+      val uids = csv(raw)
       // the uids themselves are the audit selectors (the
       // SplitSelectorExtractor shape — not parseable as a query)
-      lookupSession(params, queryId, raw, "UID", "lookupUID",
+      lookupSession(params, raw, "UID", "lookupUID",
         selectors = Some(uids)) { auths =>
         LookupUUID.lookupUid(LookupUUID.Registry(uuidTypes),
           Seq("event" -> uids.mkString(" ")), tableMap, contentTable,
@@ -1050,7 +1069,7 @@ final class QueryServer(
     if (uuidTypes.isEmpty)
       return (404, err("no UUID types registered on this server"))
     val ids = params.get("id").map(Seq(_)).orElse(
-      params.get("ids").map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty)))
+      params.get("ids").map(csv))
       .getOrElse(return (400, err("missing 'id' or 'ids'")))
     // translations serve data rows — the registry gates them AND the
     // resolved auths filter what the translation may reveal
@@ -1059,16 +1078,10 @@ final class QueryServer(
       case Right(a) => a
     }
     try {
-      val pageSize = params.get("pageSize").map(_.toInt)
-        .getOrElse(defaultPageSize)
-      require(pageSize > 0, s"pageSize must be positive, got $pageSize")
+      val n = pageSize(params, defaultPageSize)
       val reg = LookupUUID.Registry(uuidTypes)
       val rendered = LookupUUID.translateQueryString(reg, ids)
-      val queryId = java.util.UUID.randomUUID().toString.replace("-", "")
-      val result = Audit.audited(auditor, auditType, queryId,
-        user = params.getOrElse("user", "anonymous"), query = rendered,
-        syntax = "LUCENE", logicName = "translateId",
-        timeMillis = System.currentTimeMillis()) {
+      val result = audited(params, newId(), rendered, "LUCENE", "translateId") {
         LookupUUID.translate(reg, ids, tableMap, logic,
           QueryParams(auths = auths))
       }
@@ -1077,9 +1090,9 @@ final class QueryServer(
       // reference's X-Partial-Results signal) instead of dropping hits
       // silently
       val fetched = result.orderBy(result.columns.head)
-        .limit(if (pageSize == Int.MaxValue) pageSize else pageSize + 1)
+        .limit(if (n == Int.MaxValue) n else n + 1)
         .toJSON.collect()
-      val partial = fetched.length > pageSize
+      val partial = fetched.length > n
       val rows = if (partial) fetched.dropRight(1) else fetched
       if (rows.isEmpty) (204, "")
       else (200,
@@ -1099,11 +1112,11 @@ final class QueryServer(
       return (401, err(s"unknown user '$caller'"))
     val mine = sessions.asScala.toSeq.filter { case (_, s) =>
       users.isEmpty || adminUsers.contains(caller) ||
-        s.owner.isEmpty || s.owner == caller
+        s.defn.owner.isEmpty || s.defn.owner == caller
     }
     val rows = mine.sortBy(_._1).map { case (id, s) =>
-      s"""{"queryId": ${quote(id)}, "query": ${quote(s.query)},""" +
-        s""" "syntax": ${quote(s.syntax)}, "pagesServed": ${s.running.pagesServed}}"""
+      s"""{"queryId": ${quote(id)}, "query": ${quote(s.defn.query)},""" +
+        s""" "syntax": ${quote(s.defn.syntax)}, "pagesServed": ${s.running.pagesServed}}"""
     }
     (200, rows.mkString("[", ",", "]"))
   }
@@ -1124,52 +1137,28 @@ final class QueryServer(
     * `/{id}/duplicate`). The persisted frame is shared, not re-planned. */
   private def duplicate(params: Map[String, String]): (Int, String) =
     try {
-      val requestedPageSize = params.get("pageSize").map(_.toInt)
-      requestedPageSize.foreach(p =>
-        require(p > 0, s"pageSize must be positive, got $p"))
       // the read-copy-put must be atomic vs teardown: a concurrent
       // close/cancel of the source between our read and our put would
       // see no other sharer and unpersist the frame we are about to
-      // share (the duplicate would still be correct, just uncached)
-      shareLock.synchronized {
-        session(params) match {
-          case None => (404, err("unknown queryId"))
-          case Some(s) =>
-            // only the owner may copy a session (the reference's
-            // duplicate path runs the :1146 ownership check); the COPY
-            // belongs to the caller — same principal unless an admin
-            // duplicated it for themselves
-            ownerGate(params, s.owner) match {
-              case Some(resp) => return resp
-              case None => ()
-            }
-            val pageSize = requestedPageSize
-              .getOrElse(if (s.pageSize > 0) s.pageSize else defaultPageSize)
-            val newId = java.util.UUID.randomUUID().toString.replace("-", "")
-            // a duplicate is a NEW query and audits as one (the reference
-            // re-enters createQuery with the copied definition)
-            Audit.audited(auditor, auditType, newId,
-              user = params.getOrElse("user", "anonymous"), query = s.query,
-              syntax = s.syntax, logicName = "duplicate",
-              timeMillis = System.currentTimeMillis()) { () }
-            val running = new RunningQuery(cursor, newId, s.df, s.orderCols,
-              pageSize, sink = pageSink)
-            val dupSess = s.copy(running = running, pageSize = pageSize,
-              owner = if (ownerOf(params).nonEmpty) ownerOf(params)
-                      else s.owner)
-            sessions.put(newId, dupSess)
-            touchSession(newId)
-            persistSession(newId, dupSess)
-            // the duplicate is a query of its own: without a metric row
-            // its durable pages would be orphans the summary's
-            // metric-join drops
-            metricsStore.record(QueryMetric(newId, s.query, s.syntax,
-              System.currentTimeMillis(), 0L, 0L,
-              user = params.getOrElse("user", "anonymous"),
-              logicName = s.table))
-            (200, s"""{"queryId": "$newId"}""")
-        }
-      }
+      // share (the duplicate would still be correct, just uncached).
+      // Only the owner may copy a session (the reference's duplicate
+      // path runs the :1146 ownership check); the COPY belongs to the
+      // caller — same principal unless an admin duplicated it for
+      // themselves.
+      shareLock.synchronized { withSession(params) { s =>
+        val d = s.defn.copy(pageSize = pageSize(params, s.defn.pageSize),
+          owner = if (ownerOf(params).nonEmpty) ownerOf(params)
+                  else s.defn.owner)
+        val id = newId()
+        // a duplicate is a NEW query and audits as one (the reference
+        // re-enters createQuery with the copied definition)
+        audited(params, id, d.query, d.syntax, "duplicate")(())
+        open(id, d, s.df)
+        // the duplicate is a query of its own: without a metric row its
+        // durable pages would be orphans the summary's metric-join drops
+        created(params, id, d, d.table)
+        (200, s"""{"queryId": "$id"}""")
+      } }
     } catch { case e: Exception => (400, err(e.getMessage)) }
 
   /** `POST /query/reset?id=…` — same query id, paging restarted
@@ -1182,73 +1171,53 @@ final class QueryServer(
     // definition and leaking the update's newly persisted frame (no
     // session would reference it, so release could never unpersist it).
     // The monitor is reentrant, so session()'s resumeSession is fine.
-    shareLock.synchronized { session(params) match {
-      case None => (404, err("unknown queryId"))
-      case Some(s) =>
-        ownerGate(params, s.owner) match {
-          case Some(resp) => return resp
-          case None => ()
-        }
-        val id = qid(params)
-        touchSession(id)
-        try {
-          // a reset is a fresh run and RE-audits as one (the reference
-          // re-enters the audit path on reset, QueryExecutorBean.java:
-          // 1235-1266, and fails the reset on audit error) — otherwise
-          // a caller under ACTIVE auditing could replay the full result
-          // set via reset with no audit record
-          Audit.audited(auditor, auditType, id,
-            user = params.getOrElse("user", "anonymous"), query = s.query,
-            syntax = s.syntax, logicName = "reset",
-            timeMillis = System.currentTimeMillis()) { () }
-        } catch { case e: Exception => return (400, err(e.getMessage)) }
+    shareLock.synchronized { withSession(params) { s =>
+      val id = qid(params)
+      try {
+        // a reset is a fresh run and RE-audits as one (the reference
+        // re-enters the audit path on reset, QueryExecutorBean.java:
+        // 1235-1266, and fails the reset on audit error) — otherwise a
+        // caller under ACTIVE auditing could replay the full result set
+        // via reset with no audit record
+        audited(params, id, s.defn.query, s.defn.syntax, "reset")(())
         cursor.close(id)
-        val pageSize = if (s.pageSize > 0) s.pageSize else defaultPageSize
-        val fresh = s.copy(
-          running = new RunningQuery(cursor, id, s.df, s.orderCols, pageSize,
-            sink = pageSink,
-            // ALL pages of earlier runs stay in the ledger (served is
-            // served — summary totals must not depend on flush timing);
-            // the fresh run numbers its pages under the NEXT attempt so
-            // two runs never collide, and the per-id view shows only
-            // the latest attempt
-            attempt = s.running.attempt + 1))
-        sessions.put(id, fresh)
-        // re-persist so the durable (pagesServedBase, offsetBase) track
-        // the RESTARTED run — a stale base after a pageSize-changing
-        // update would make a later resume compute a negative ordinal
-        persistSession(id, fresh)
+        // ALL pages of earlier runs stay in the ledger (served is
+        // served — summary totals must not depend on flush timing); the
+        // fresh run numbers its pages under the NEXT attempt so two runs
+        // never collide, and the per-id view shows only the latest
+        // attempt. The re-persisted (pagesServedBase, offsetBase) track
+        // the RESTARTED run.
+        open(id, s.defn, s.df, attempt = s.running.attempt + 1)
         (200, """{"reset": true}""")
+      } catch { case e: Exception => (400, err(e.getMessage)) }
     } }
 
-  /** `GET /query/predict?table=T&query=Q[&syntax=…]` — the reference's
-    * `/{logicName}/predict` (QueryExecutorBean.java:990-1054): validate
-    * and PLAN the query, then ask the configured predictors for named
-    * cost predictions without running a single job. No predictors →
-    * `hasResults=false` (NoOpQueryPredictor deployment). */
-  private def predict(params: Map[String, String]): (Int, String) = {
-    resolveAuths(params) match {
-      case Left(resp) => return resp
-      case Right(_) => ()
+  /** `GET /query/predict?table=T&query=Q[&syntax=…][&model=M]` — the
+    * reference's `/{logicName}/predict` (QueryExecutorBean.java:990-1054):
+    * validate and PLAN the query, then ask the configured predictors for
+    * named cost predictions without running a single job: the registry
+    * gates the caller, but the plan carries no auths, so no visibility
+    * probe runs. No predictors → `hasResults=false` (NoOpQueryPredictor
+    * deployment). */
+  private def predict(params: Map[String, String]): (Int, String) =
+    queryDef(params) match {
+      case Left(resp) => resp
+      case Right(d) =>
+        try predicted(plan(d.copy(auths = None)), d.table)
+        catch { case e: Exception => (400, err(e.getMessage)) }
     }
-    val table = params.getOrElse("table",
-      return (400, err("missing 'table'")))
-    val q = params.getOrElse("query", return (400, err("missing 'query'")))
-    val df0 = tableMap.getOrElse(table,
-      return (404, err(s"unknown table '$table'")))
-    try {
-      val planned = logic.query(df0, q,
-        QueryParams(syntax = params.getOrElse("syntax", "JEXL")))
-      // logic-aware: the history predictor prices THIS logic off its
-      // own past runs, never a cross-logic mean
-      val preds = Predict.predict(planned, table, effectivePredictors)
-      if (preds.isEmpty) (200, """{"hasResults": false}""")
-      else {
-        val items = preds.map(p =>
-          s"""{"name": ${quote(p.name)}, "value": ${p.value}}""")
-        (200, s"""{"hasResults": true, "predictions": [${items.mkString(",")}]}""")
-      }
-    } catch { case e: Exception => (400, err(e.getMessage)) }
+
+  /** The configured predictors' answer for a planned frame — logic-aware:
+    * the history predictor prices `table` off its own past runs, never a
+    * cross-logic mean. */
+  private def predicted(df: DataFrame, table: String): (Int, String) = {
+    val preds = Predict.predict(df, table, effectivePredictors)
+    if (preds.isEmpty) (200, """{"hasResults": false}""")
+    else {
+      val items = preds.map(p =>
+        s"""{"name": ${quote(p.name)}, "value": ${p.value}}""")
+      (200, s"""{"hasResults": true, "predictions": [${items.mkString(",")}]}""")
+    }
   }
 
   /** `POST /query/update?id=…[&pageSize=N][&orderBy=…][&query=Q]` — the
@@ -1256,92 +1225,50 @@ final class QueryServer(
     * pageSize/orderBy take effect on SUBSEQUENT pages (paging position
     * kept — pages served stay served); a query-TEXT change is auditable
     * and must pass the auditor first (audit failure fails the update),
-    * then updates the stored DEFINITION — the one reset/duplicate/
-    * restart-resume re-plan from — without disturbing the in-flight
-    * frame, matching the reference's settings-mutation semantics. */
+    * then re-plans under the session's model and auths and updates the
+    * stored DEFINITION — the one reset/duplicate/restart-resume re-plan
+    * from — matching the reference's settings-mutation semantics. */
   private def update(params: Map[String, String]): (Int, String) =
-    session(params) match {
-      case None => (404, err("unknown queryId"))
-      case Some(s) =>
-        ownerGate(params, s.owner) match {
-          case Some(resp) => return resp
-          case None => ()
-        }
-        try {
-          val id = qid(params)
-          touchSession(id)
-          val pageSize = params.get("pageSize").map(_.toInt)
-            .getOrElse(if (s.pageSize > 0) s.pageSize else defaultPageSize)
-          require(pageSize > 0, s"pageSize must be positive, got $pageSize")
-          val orderCols = params.get("orderBy")
-            .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
-            .getOrElse(s.orderCols)
-          val newQuery = params.get("query")
-          // the CAS identity check runs BEFORE the audit: under ACTIVE
-          // auditing the trail must never record a definition change the
-          // 409 path then refuses to apply (the reference audits exactly
-          // the updates it applies). Every session-map mutator holds
-          // shareLock, so once the identity holds here nothing can change
-          // it before our put — audit-then-apply is atomic. The re-plan
-          // under the lock is schema resolution only (no jobs run).
-          shareLock.synchronized {
-            if (!(sessions.get(id).asInstanceOf[AnyRef] eq
-                s.asInstanceOf[AnyRef]))
-              return (409, err("query changed concurrently; retry the update"))
-            val newDf = newQuery match {
-              case None => s.df
-              case Some(q2) =>
-                // the reference audits BEFORE applying an auditable
-                // update and fails the update on audit error; then the
-                // new text re-plans (a bad query fails the update, not a
-                // later page)
-                val df0 = tableMap.getOrElse(s.table,
-                  return (400, err("query update requires a table-backed session")))
-                Audit.audited(auditor, auditType, id,
-                  user = params.getOrElse("user", "anonymous"), query = q2,
-                  syntax = s.syntax, logicName = "update",
-                  timeMillis = System.currentTimeMillis()) {
-                  // the session's resolved auths survive a text update —
-                  // re-planning must not shed server-side enforcement
-                  logic.query(df0, q2,
-                    QueryParams(syntax = s.syntax, auths = s.auths)).persist()
-                }
-            }
-            val missing = orderCols.filterNot(c =>
-              newDf.columns.exists(_.equalsIgnoreCase(c)))
-            if (missing.nonEmpty) {
-              if (!(newDf eq s.df)) newDf.unpersist()
-              return (400, err(s"unknown orderBy column(s): ${missing.mkString(", ")}"))
-            }
-            // paging position is KEPT (the durable cursor offset survives
-            // the swap); subsequent pages read the updated definition
-            val running = new RunningQuery(cursor, id, newDf, orderCols,
-              pageSize, startPage = s.running.pagesServed, sink = pageSink,
-              attempt = s.running.attempt) // same run, position kept
-            val updated = s.copy(df = newDf, running = running,
-              orderCols = orderCols, pageSize = pageSize,
-              query = newQuery.getOrElse(s.query))
-            sessions.put(id, updated)
-            if (!(newDf eq s.df)) release(s) // ref-counted old frame drop
-            persistSession(id, updated)
+    withSession(params) { s =>
+      try {
+        val id = qid(params)
+        touchSession(id)
+        val d = s.defn.copy(query = params.getOrElse("query", s.defn.query),
+          pageSize = pageSize(params, s.defn.pageSize),
+          orderBy = params.get("orderBy").map(csv).getOrElse(s.defn.orderBy))
+        // the CAS identity check runs BEFORE the audit: under ACTIVE
+        // auditing the trail must never record a definition change the
+        // 409 path then refuses to apply (the reference audits exactly
+        // the updates it applies). Every session-map mutator holds
+        // shareLock, so once the identity holds here nothing can change
+        // it before our put — audit-then-apply is atomic. The re-plan
+        // under the lock is schema resolution only (no jobs run).
+        shareLock.synchronized {
+          if (!(sessions.get(id) eq s))
+            (409, err("query changed concurrently; retry the update"))
+          else if (params.contains("query") && !tableMap.contains(d.table))
+            (400, err("query update requires a table-backed session"))
+          else {
+            val df =
+              if (params.contains("query"))
+                audited(params, id, d.query, d.syntax, "update")(plan(d))
+              else s.df
+            // paging position is KEPT: same run, and the durable cursor
+            // offset survives the swap
+            open(id, d, df, startPage = s.running.pagesServed,
+              attempt = s.running.attempt)
+            if (!(df eq s.df)) release(s) // ref-counted old frame drop
+            (200, """{"updated": true}""")
           }
-          (200, """{"updated": true}""")
-        } catch { case e: Exception => (400, err(e.getMessage)) }
+        }
+      } catch { case e: Exception => (400, err(e.getMessage)) }
     }
 
   /** `POST /query/cancel?id=…` — abort + release (QueryExecutorBean
     * `/{id}/cancel`; pages already served stay served). */
-  private def cancel(params: Map[String, String]): (Int, String) = {
+  private def cancel(params: Map[String, String]): (Int, String) =
     // owner-gated (QueryExecutorBean adminCancel is the admin override)
-    ownerGate(params, queryOwner(qid(params))) match {
-      case Some(resp) => return resp
-      case None => ()
-    }
-    val (found, owned) = teardown(qid(params))
-    reapRows(owned)
-    if (found) (200, """{"canceled": true}""")
-    else (404, err("unknown queryId"))
-  }
+    owned(params)(end(_, "canceled"))
 
   /** `POST /query/define?table=T&query=Q[&syntax=…][&pageSize=N]
     * [&orderBy=…]` — the reference's `/{logicName}/define`
@@ -1354,130 +1281,64 @@ final class QueryServer(
     * audit-before-execute discipline needs the caller's user context,
     * which the lazy resume no longer has; the reference defers the
     * audit to its execute verbs). */
-  private def define(params: Map[String, String]): (Int, String) = {
-    val table = params.getOrElse("table",
-      return (400, err("missing 'table'")))
-    val q = params.getOrElse("query", return (400, err("missing 'query'")))
-    val df0 = tableMap.getOrElse(table,
-      return (404, err(s"unknown table '$table'")))
-    val auths = resolveAuths(params) match {
-      case Left(resp) => return resp
-      case Right(a) => a
+  private def define(params: Map[String, String]): (Int, String) =
+    queryDef(params) match {
+      case Left(resp) => resp
+      case Right(d) =>
+        try {
+          val id = newId()
+          // schema resolution only — a bad query or unknown orderBy fails
+          // the define, but nothing executes and nothing caches
+          val planned = audited(params, id, d.query, d.syntax, d.table)(plan(d))
+          val defn = ordered(d, planned)
+          RunningQuery.checkOrder(planned, defn.orderBy)
+          writeDef(id, Saved(defn))
+          created(params, id, defn, d.table)
+          (200, s"""{"queryId": "$id"}""")
+        } catch { case e: Exception => (400, err(e.getMessage)) }
     }
-    val qp = QueryParams(syntax = params.getOrElse("syntax", "JEXL"),
-      auths = auths)
-    try {
-      val pageSize = params.get("pageSize").map(_.toInt)
-        .getOrElse(defaultPageSize)
-      require(pageSize > 0, s"pageSize must be positive, got $pageSize")
-      val queryId = java.util.UUID.randomUUID().toString.replace("-", "")
-      val modelName = params.getOrElse("model", "")
-      val (effLogic, effQp) = resolveModel(modelName, qp)
-      // schema resolution only — a bad query or unknown orderBy fails
-      // the define, but nothing executes and nothing caches
-      val planned = Audit.audited(auditor, auditType, queryId,
-        user = params.getOrElse("user", "anonymous"), query = q,
-        syntax = qp.syntax, logicName = table,
-        timeMillis = System.currentTimeMillis()) {
-        effLogic.query(df0, q, effQp)
-      }
-      val orderCols = params.get("orderBy")
-        .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
-        .getOrElse(Seq(planned.columns.head))
-      val missing = orderCols.filterNot(c =>
-        planned.columns.exists(_.equalsIgnoreCase(c)))
-      if (missing.nonEmpty)
-        return (400, err(s"unknown orderBy column(s): ${missing.mkString(", ")}"))
-      writeDefinition(queryId, table, q, qp.syntax, pageSize, orderCols,
-        pagesServedBase = 0L, offsetBase = 0L, attempt = 0L,
-        model = modelName, auths = auths, owner = ownerOf(params))
-      metricsStore.record(QueryMetric(queryId, q, qp.syntax,
-        System.currentTimeMillis(), 0L, 0L,
-        user = params.getOrElse("user", "anonymous"), logicName = table))
-      (200, s"""{"queryId": "$queryId"}""")
-    } catch { case e: Exception => (400, err(e.getMessage)) }
-  }
 
   /** `GET /query/get?id=…` — the reference's `GET /{id}`
     * (listQueryByID): the stored definition of a live OR defined query. */
-  private def getDefinition(params: Map[String, String]): (Int, String) = {
+  private def getDefinition(params: Map[String, String]): (Int, String) =
     // READ verb: must not resume — inspecting a defined-but-never-
     // executed query leaves it session-less and frame-less (define's
     // contract), so absent a live session the durable record is read
-    // directly instead of through session()/resumeSession().
-    val id = qid(params)
-    // the stored definition (query text, table) is the owner's —
-    // reading it is gated like the reference's listQueryByID
-    ownerGate(params, queryOwner(id)) match {
-      case Some(resp) => return resp
-      case None => ()
-    }
-    Option(sessions.get(id)) match {
-      case Some(s) =>
+    // directly instead of through session()/resumeSession(). The stored
+    // definition (query text, table) is the owner's — reading it is
+    // gated like the reference's listQueryByID.
+    owned(params) { id => definition(id) match {
+      case None => (404, err("unknown queryId"))
+      case Some((d, served)) =>
         (200, s"""{"queryId": ${quote(id)},""" +
-          s""" "table": ${quote(s.table)}, "query": ${quote(s.query)},""" +
-          s""" "syntax": ${quote(s.syntax)}, "pageSize": ${s.pageSize},""" +
-          s""" "orderBy": ${quote(s.orderCols.mkString(","))},""" +
-          s""" "pagesServed": ${s.running.pagesServed}}""")
-      case None => readDefinitionProps(id) match {
-        case None => (404, err("unknown queryId"))
-        case Some(p) =>
-          (200, s"""{"queryId": ${quote(id)},""" +
-            s""" "table": ${quote(p.getProperty("table", ""))},""" +
-            s""" "query": ${quote(p.getProperty("query", ""))},""" +
-            s""" "syntax": ${quote(p.getProperty("syntax", "JEXL"))},""" +
-            s""" "pageSize": ${p.getProperty("pageSize", "0")},""" +
-            s""" "orderBy": ${quote(p.getProperty("orderBy", ""))},""" +
-            s""" "pagesServed": ${p.getProperty("pagesServedBase", "0")}}""")
-      }
-    }
-  }
+          s""" "table": ${quote(d.table)}, "query": ${quote(d.query)},""" +
+          s""" "syntax": ${quote(d.syntax)}, "pageSize": ${d.pageSize},""" +
+          s""" "orderBy": ${quote(d.orderBy.mkString(","))},""" +
+          s""" "pagesServed": $served}""")
+    } }
 
   /** `GET /query/predictions?id=…` — the reference's `/{id}/predictions`:
     * the configured predictors run against the CREATED query's planned
     * frame (no execution beyond what the session already did). */
-  private def predictions(params: Map[String, String]): (Int, String) = {
+  private def predictions(params: Map[String, String]): (Int, String) =
     // READ verb: like /query/get, resolves the durable definition
     // directly when no live session exists — the prediction plans the
     // frame (definitionFrame) but registers no session and persists
     // nothing, so a defined query does not appear in /query/list after.
-    val id = qid(params)
-    ownerGate(params, queryOwner(id)) match {
-      case Some(resp) => return resp
-      case None => ()
-    }
-    Option(sessions.get(id)).map(s =>
-        (s.df, if (s.table.nonEmpty) s.table else "unknown"))
-      .orElse(readDefinitionProps(id).map(p =>
-        (definitionFrame(id), p.getProperty("table", "unknown")))) match {
+    owned(params) { id => definition(id) match {
       case None => (404, err("unknown queryId"))
-      case Some((df, table)) =>
-        try {
-          val preds = Predict.predict(df, table, effectivePredictors)
-          if (preds.isEmpty) (200, """{"hasResults": false}""")
-          else {
-            val items = preds.map(p =>
-              s"""{"name": ${quote(p.name)}, "value": ${p.value}}""")
-            (200, s"""{"hasResults": true, "predictions": [${items.mkString(",")}]}""")
-          }
-        } catch { case e: Exception => (400, err(e.getMessage)) }
-    }
-  }
+      case Some((d, _)) =>
+        try predicted(definitionFrame(id),
+          if (d.table.nonEmpty) d.table else "unknown")
+        catch { case e: Exception => (400, err(e.getMessage)) }
+    } }
 
   /** `POST /query/remove?id=…` — the reference's `/{id}/remove`: close
     * if running AND delete the persisted definition (close + persister
     * remove, QueryExecutorBean.java:2616). [[teardown]] already does
     * both for this storage model. */
-  private def remove(params: Map[String, String]): (Int, String) = {
-    ownerGate(params, queryOwner(qid(params))) match {
-      case Some(resp) => return resp
-      case None => ()
-    }
-    val (found, owned) = teardown(qid(params))
-    reapRows(owned)
-    if (found) (200, """{"removed": true}""")
-    else (404, err("unknown queryId"))
-  }
+  private def remove(params: Map[String, String]): (Int, String) =
+    owned(params)(end(_, "removed"))
 
   /** `POST /query/execute?table=T&query=Q[&syntax=…][&orderBy=…]` — the
     * reference's `/{logicName}/execute`: run the query and STREAM every
@@ -1489,78 +1350,48 @@ final class QueryServer(
     * the 200 committed (the reference's attachment stream shares this).
     * Validation/audit failures, arriving before the stream opens, are
     * proper error statuses. */
-  private val executeHandler: HttpHandler = new HttpHandler {
-    override def handle(ex: HttpExchange): Unit = {
-      def fail(status: Int, body: String): Unit = {
-        val bytes = body.getBytes(StandardCharsets.UTF_8)
-        ex.getResponseHeaders.set("Content-Type", "application/json")
-        ex.sendResponseHeaders(status, bytes.length)
-        ex.getResponseBody.write(bytes)
-        ex.close()
-      }
-      try {
-        val params = parseQuery(ex.getRequestURI.getRawQuery)
-        val table = params.getOrElse("table", { fail(400, err("missing 'table'")); return })
-        val q = params.getOrElse("query", { fail(400, err("missing 'query'")); return })
-        val df0 = tableMap.getOrElse(table, { fail(404, err(s"unknown table '$table'")); return })
-        // execute streams data — same registry gate + resolved-auths
-        // enforcement as /query/create (the reference's execute verb
-        // runs under the caller's principal exactly like create)
-        val auths = resolveAuths(params) match {
-          case Left((status, body)) => fail(status, body); return
-          case Right(a) => a
-        }
-        val qp = QueryParams(syntax = params.getOrElse("syntax", "JEXL"),
-          auths = auths)
-        val queryId = java.util.UUID.randomUUID().toString.replace("-", "")
-        val (effLogic, effQp) = resolveModel(params.getOrElse("model", ""), qp)
-        val result = Audit.audited(auditor, auditType, queryId,
-          user = params.getOrElse("user", "anonymous"), query = q,
-          syntax = qp.syntax, logicName = table,
-          timeMillis = System.currentTimeMillis()) {
-          effLogic.query(df0, q, effQp)
-        }
-        val ordered = params.get("orderBy")
-          .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty)) match {
-          case Some(cols) =>
-            val missing = cols.filterNot(c =>
-              result.columns.exists(_.equalsIgnoreCase(c)))
-            if (missing.nonEmpty) {
-              fail(400, err(s"unknown orderBy column(s): ${missing.mkString(", ")}"))
-              return
+  private val executeHandler: HttpHandler = ex =>
+    try {
+      // execute streams data — same registry gate + resolved-auths
+      // enforcement as /query/create (the reference's execute verb
+      // runs under the caller's principal exactly like create)
+      parsed(ex).flatMap(p => queryDef(p).map(p -> _)) match {
+        case Left((status, body)) => respond(ex, status, body)
+        case Right((params, d)) =>
+          val id = newId()
+          val result = audited(params, id, d.query, d.syntax, d.table)(plan(d))
+          val rows =
+            if (d.orderBy.isEmpty) result
+            else {
+              RunningQuery.checkOrder(result, d.orderBy)
+              result.orderBy(d.orderBy.map(result.col): _*)
             }
-            result.orderBy(cols.map(result.col): _*)
-          case None => result
-        }
-        metricsStore.record(QueryMetric(queryId, q, qp.syntax,
-          System.currentTimeMillis(), 0L, 0L,
-          user = params.getOrElse("user", "anonymous"), logicName = table))
-        // chunked from here on: partitions stream through the driver
-        // one at a time
-        ex.getResponseHeaders.set("Content-Type", "application/json")
-        ex.sendResponseHeaders(200, 0)
-        val os = ex.getResponseBody
-        try {
-          os.write(s"""{"queryId": "$queryId", "rows": ["""
-            .getBytes(StandardCharsets.UTF_8))
-          val it = ordered.toJSON.toLocalIterator()
-          var first = true
-          while (it.hasNext) {
-            if (!first) os.write(','.toInt)
-            os.write(it.next().getBytes(StandardCharsets.UTF_8))
-            first = false
-          }
-          os.write("]}".getBytes(StandardCharsets.UTF_8))
-        } finally { os.close(); ex.close() }
-      } catch {
-        case e: Exception =>
-          // response not yet committed → proper error; committed →
-          // close truncates (documented above)
-          try fail(400, err(e.getMessage))
-          catch { case _: Exception => ex.close() }
+          created(params, id, d, d.table)
+          // chunked from here on: partitions stream through the driver
+          // one at a time
+          ex.getResponseHeaders.set("Content-Type", "application/json")
+          ex.sendResponseHeaders(200, 0)
+          val os = ex.getResponseBody
+          try {
+            os.write(s"""{"queryId": "$id", "rows": ["""
+              .getBytes(StandardCharsets.UTF_8))
+            val it = rows.toJSON.toLocalIterator()
+            var first = true
+            while (it.hasNext) {
+              if (!first) os.write(','.toInt)
+              os.write(it.next().getBytes(StandardCharsets.UTF_8))
+              first = false
+            }
+            os.write("]}".getBytes(StandardCharsets.UTF_8))
+          } finally { os.close(); ex.close() }
       }
+    } catch {
+      case e: Exception =>
+        // response not yet committed → proper error; committed →
+        // close truncates (documented above)
+        try respond(ex, 400, err(e.getMessage))
+        catch { case _: Exception => ex.close() }
     }
-  }
 
   /** Shared close/cancel teardown: remove the session, release its
     * frame (ref-counted), drop cursor state AND the durable definition.
@@ -1576,19 +1407,19 @@ final class QueryServer(
   private def teardown(id: String): (Boolean, Seq[String]) =
     shareLock.synchronized {
       import scala.jdk.CollectionConverters._
-      val owned =
+      val aliases =
         loadedAliases.asScala.collect { case (a, q) if q == id => a }.toSeq
-      owned.foreach(unbindAlias) // durable: reapRows deletes the stores
-      if (owned.nonEmpty) persistAliases()
+      aliases.foreach(unbindAlias) // durable: reapRows deletes the stores
+      if (aliases.nonEmpty) persistAliases()
       lastUsed.remove(id)
       lastDiskTouch.remove(id)
       Option(sessions.remove(id)) match {
         case Some(s) =>
-          release(s); cursor.close(id); dropSessionFile(id); (true, owned)
+          release(s); cursor.close(id); dropSessionFile(id); (true, aliases)
         case None =>
           val hadFile = java.nio.file.Files.exists(sessionFile(id))
           if (hadFile) { cursor.close(id); dropSessionFile(id) }
-          (hadFile, owned)
+          (hadFile, aliases)
       }
     }
 
@@ -1614,12 +1445,9 @@ final class QueryServer(
       val terms = parseTerms(raw)
       val reg = LookupUUID.Registry(uuidTypes)
       val rendered = LookupUUID.queryString(reg, terms)
-      val queryId = java.util.UUID.randomUUID().toString.replace("-", "")
       val qp = QueryParams(auths = auths)
-      val docs = Audit.audited(auditor, auditType, queryId,
-        user = params.getOrElse("user", "anonymous"), query = rendered,
-        syntax = "LUCENE", logicName = "lookupContentUUID",
-        timeMillis = System.currentTimeMillis()) {
+      val docs = audited(params, newId(), rendered, "LUCENE",
+        "lookupContentUUID") {
         LookupUUID.contentLookup(contentTable,
           LookupUUID.lookup(reg, terms, tableMap, logic, qp),
           uidCol = params.getOrElse("uidField", "uid"), params = qp)
@@ -1631,97 +1459,69 @@ final class QueryServer(
     }
   }
 
-  private def next(params: Map[String, String]): (Int, String) = {
-    val s = session(params).getOrElse(return (404, err("unknown queryId")))
+  private def next(params: Map[String, String]): (Int, String) =
     // paging is principal-bound: only the creating owner (or an admin)
     // may drain a session (QueryExecutorBean.java:1094 next-path
     // QUERY_OWNER_MISMATCH)
-    ownerGate(params, s.owner) match {
-      case Some(resp) => return resp
-      case None => ()
+    withSession(params) { s =>
+      touchSession(qid(params)) // paging resets the idle-eviction clock
+      // one job per page; "page" is the 1-based page NUMBER, matching
+      // the pageNum the /query/metrics endpoint reports for the same page
+      s.running.nextPageJson() match {
+        case Some((rows, pageNum)) =>
+          (200, s"""{"page": $pageNum, "rows": [${rows.mkString(",")}]}""")
+        case None => (204, "")
+      }
     }
-    touchSession(qid(params)) // paging resets the idle-eviction clock
-    // one job per page; "page" is the 1-based page NUMBER, matching the
-    // pageNum the /query/metrics endpoint reports for the same page
-    s.running.nextPageJson() match {
-      case Some((rows, pageNum)) =>
-        (200, s"""{"page": $pageNum, "rows": [${rows.mkString(",")}]}""")
-      case None => (204, "")
-    }
-  }
 
   /** Like the reference's plan response, leads with the canonical JEXL
     * rendering of the (translated) query, then the physical plan.
     * Two forms, mirroring the reference's two plan verbs:
     *  - `?id=…` — the plan of a CREATED query (GET `/{id}/plan`);
-    *  - `?table=T&query=Q[&syntax=…]` — plan WITHOUT creating
+    *  - `?table=T&query=Q[&syntax=…][&model=M]` — plan WITHOUT creating
     *    (POST `/{logicName}/plan`, QueryExecutorBean.java:848-851):
     *    validate + optimize only, no session, no jobs, nothing cached —
-    *    a planning probe can run thousands of these without residue. */
-  private def plan(params: Map[String, String]): (Int, String) = {
-    def render(query: String, syntax: String, df: DataFrame): String = {
+    *    a planning probe can run thousands of these without residue. It
+    *    reveals schema + plan structure, so the registry gates the
+    *    caller (401 unknown), but the plan carries no auths: no
+    *    visibility probe runs. */
+  private def explain(params: Map[String, String]): (Int, String) = {
+    def render(d: QueryDef, df: DataFrame): String = {
       val jexl =
         try graft.jexl.JexlRender.render(
-          if (syntax.equalsIgnoreCase("LUCENE")) graft.jexl.LuceneParser.parse(query)
-          else graft.jexl.JexlParser.parse(query))
-        catch { case _: Exception => query }
+          if (d.syntax.equalsIgnoreCase("LUCENE")) graft.jexl.LuceneParser.parse(d.query)
+          else graft.jexl.JexlParser.parse(d.query))
+        catch { case _: Exception => d.query }
       s"JEXL: $jexl\n" + df.queryExecution.executedPlan.toString
     }
-    if (params.contains("id")) {
-      val s = session(params).getOrElse(return (404, err("unknown queryId")))
-      ownerGate(params, s.owner) match {
-        case Some(resp) => return resp
-        case None => ()
-      }
-      (200, render(s.query, s.syntax, s.df))
-    } else {
-      // plan-without-create reveals schema + plan structure — a
-      // registry gates it like every other verb (401 unknown caller)
-      resolveAuths(params) match {
-        case Left(resp) => return resp
-        case Right(_) => ()
-      }
-      val table = params.getOrElse("table",
-        return (400, err("need 'id', or 'table' + 'query'")))
-      val q = params.getOrElse("query", return (400, err("missing 'query'")))
-      val df0 = tableMap.getOrElse(table,
-        return (404, err(s"unknown table '$table'")))
-      val syntax = params.getOrElse("syntax", "JEXL")
-      try (200, render(q, syntax,
-        logic.query(df0, q, QueryParams(syntax = syntax))))
-      catch { case e: Exception => (400, err(e.getMessage)) }
+    if (params.contains("id"))
+      withSession(params)(s => (200, render(s.defn, s.df)))
+    else queryDef(params) match {
+      case Left(resp) => resp
+      case Right(d) =>
+        try (200, render(d, plan(d.copy(auths = None))))
+        catch { case e: Exception => (400, err(e.getMessage)) }
     }
   }
 
-  private def metrics(params: Map[String, String]): (Int, String) = {
-    val id = qid(params)
+  private def metrics(params: Map[String, String]): (Int, String) =
     // a query's page history is the owner's (QueryMetricsBean serves
     // the caller's own metrics; admins see all)
-    ownerGate(params, queryOwner(id)) match {
-      case Some(resp) => return resp
-      case None => ()
+    owned(params) { id =>
+      // durable history outlives the session (a restarted server or a
+      // closed query keeps its recorded pages); a table-less server has
+      // no ledger at all
+      val ledger = sparkOf.fold(Seq.empty[PageMetric])(metricsStore.pages(_, id))
+      if (ledger.isEmpty && !sessions.containsKey(id) &&
+          !java.nio.file.Files.exists(sessionFile(id)))
+        (404, err("unknown queryId"))
+      else {
+        val pages = ledger.map(p =>
+          s"""{"page": ${p.pageNum}, "rows": ${p.rows},""" +
+            s""" "elapsedMillis": ${p.elapsedMillis}, "status": ${quote(p.status)}}""")
+        (200, s"""{"queryId": ${quote(id)}, "pages": [${pages.mkString(",")}]}""")
+      }
     }
-    // cheap existence checks FIRST; the ledger scan is the last resort
-    // so durable history still outlives the session (a restarted server
-    // or a closed query keeps its recorded pages) without every unknown
-    // id paying a table scan when no ledger could know it
-    val known = sessions.containsKey(id) ||
-      java.nio.file.Files.exists(sessionFile(id))
-    val spark = sparkOf match {
-      case Some(sp) => sp
-      case None => // table-less server: no ledger exists either way
-        return if (known)
-          (200, s"""{"queryId": ${quote(id)}, "pages": []}""")
-        else (404, err("unknown queryId"))
-    }
-    val ledger = metricsStore.pages(spark, id)
-    if (ledger.isEmpty && !known)
-      return (404, err("unknown queryId"))
-    val pages = ledger.map(p =>
-      s"""{"page": ${p.pageNum}, "rows": ${p.rows},""" +
-        s""" "elapsedMillis": ${p.elapsedMillis}, "status": ${quote(p.status)}}""")
-    (200, s"""{"queryId": ${quote(id)}, "pages": [${pages.mkString(",")}]}""")
-  }
 
   /** `POST /cachedresults/load?id=…&alias=A` — the reference's
     * CachedResults `load` (CachedResultsBean: materialize a finished
@@ -1812,94 +1612,78 @@ final class QueryServer(
 
   /** `POST /mapreduce/cancel?jobId=…` — abort the job group's running
     * Spark stages (the reference kills the running application). */
-  private def mrCancel(params: Map[String, String]): (Int, String) = {
+  private def mrCancel(params: Map[String, String]): (Int, String) =
     // owner-gated; adminUsers retain the reference's adminCancel
     // override (MapReduceBean.java:2409 adminCancel)
-    ownerGate(params, bulkJobs.jobOwner(params.getOrElse("jobId", ""))) match {
-      case Some(resp) => return resp
-      case None => ()
+    ownedJob(params) { jobId =>
+      if (bulkJobs.cancel(jobId)) (200, """{"canceled": true}""")
+      else (404, err("unknown jobId"))
     }
-    if (bulkJobs.cancel(params.getOrElse("jobId", "")))
-      (200, """{"canceled": true}""")
-    else (404, err("unknown jobId"))
-  }
 
   /** `POST /mapreduce/restart?jobId=…` — cancel + resubmit the same
     * definition as a NEW job id (MapReduceBean.restart:669-690). */
-  private def mrRestart(params: Map[String, String]): (Int, String) = {
-    ownerGate(params, bulkJobs.jobOwner(params.getOrElse("jobId", ""))) match {
-      case Some(resp) => return resp
-      case None => ()
+  private def mrRestart(params: Map[String, String]): (Int, String) =
+    ownedJob(params) { jobId =>
+      bulkJobs.restart(jobId) match {
+        case Left((st, msg)) => (st, err(msg))
+        case Right(id) => (200, s"""{"jobId": "$id"}""")
+      }
     }
-    bulkJobs.restart(params.getOrElse("jobId", "")) match {
-      case Left((st, msg)) => (st, err(msg))
-      case Right(id) => (200, s"""{"jobId": "$id"}""")
-    }
-  }
 
   /** `POST /mapreduce/remove?jobId=…` — cancel if running, drop state
     * and result files (MapReduceBean.remove:983-1010). */
-  private def mrRemove(params: Map[String, String]): (Int, String) = {
-    ownerGate(params, bulkJobs.jobOwner(params.getOrElse("jobId", ""))) match {
-      case Some(resp) => return resp
-      case None => ()
+  private def mrRemove(params: Map[String, String]): (Int, String) =
+    ownedJob(params) { jobId =>
+      if (bulkJobs.remove(jobId)) (200, """{"removed": true}""")
+      else (404, err("unknown jobId"))
     }
-    if (bulkJobs.remove(params.getOrElse("jobId", "")))
-      (200, """{"removed": true}""")
-    else (404, err("unknown jobId"))
+
+  /** `body` on bulk job `jobId` once the caller passes its owner's gate. */
+  private def ownedJob(params: Map[String, String])(
+      body: String => (Int, String)): (Int, String) = {
+    val jobId = params.getOrElse("jobId", "")
+    ownerGate(params, bulkJobs.jobOwner(jobId)).getOrElse(body(jobId))
   }
 
   /** `GET /mapreduce/getFile?jobId=…&fileName=…` — stream one result
     * file's bytes (MapReduceBean.getResultFile:753; path-confined to
     * the job's results directory). */
-  private val mrGetFileHandler: HttpHandler = new HttpHandler {
-    override def handle(ex: HttpExchange): Unit = {
-      try {
-        val params = parseQuery(ex.getRequestURI.getRawQuery)
-        // result files hold rows materialized under the SUBMITTER'S
-        // auths — streaming them is owner-gated like every data verb
-        // (MapReduceBean.getResultFile serves the caller's own job)
-        ownerGate(params,
-            bulkJobs.jobOwner(params.getOrElse("jobId", ""))) match {
-          case Some((status, body)) =>
-            val b = body.getBytes(StandardCharsets.UTF_8)
-            ex.getResponseHeaders.set("Content-Type", "application/json")
-            ex.sendResponseHeaders(status, b.length)
-            ex.getResponseBody.write(b)
-            return
-          case None => ()
-        }
-        bulkJobs.resultFile(params.getOrElse("jobId", ""),
-          params.getOrElse("fileName", "")) match {
-          case None =>
-            val b = err("unknown jobId or fileName")
-              .getBytes(StandardCharsets.UTF_8)
-            ex.sendResponseHeaders(404, b.length)
-            ex.getResponseBody.write(b)
-          case Some(path) =>
-            // size+copy can race a concurrent /mapreduce/remove — answer
-            // a structured 404 like every handler()-wrapped endpoint
-            // rather than dropping the exchange
-            try {
-              val size = java.nio.file.Files.size(path)
-              ex.getResponseHeaders.set("Content-Type",
-                "application/octet-stream")
-              ex.sendResponseHeaders(200, size)
-              val os = ex.getResponseBody
-              try java.nio.file.Files.copy(path, os) finally os.close()
-            } catch {
-              case _: java.io.IOException =>
-                val b = err("result file no longer available")
-                  .getBytes(StandardCharsets.UTF_8)
+  private val mrGetFileHandler: HttpHandler = ex =>
+    try {
+      val refusal = parsed(ex) match {
+        case Left(resp) => Some(resp)
+        case Right(params) =>
+          val jobId = params.getOrElse("jobId", "")
+          // result files hold rows materialized under the SUBMITTER'S
+          // auths — streaming them is owner-gated like every data verb
+          // (MapReduceBean.getResultFile serves the caller's own job)
+          ownerGate(params, bulkJobs.jobOwner(jobId)).orElse {
+            bulkJobs.resultFile(jobId, params.getOrElse("fileName", "")) match {
+              case None => Some((404, err("unknown jobId or fileName")))
+              case Some(path) =>
+                // size+copy can race a concurrent /mapreduce/remove —
+                // answer a structured 404 like every handler()-wrapped
+                // endpoint rather than dropping the exchange
                 try {
-                  ex.sendResponseHeaders(404, b.length)
-                  ex.getResponseBody.write(b)
-                } catch { case _: java.io.IOException => () } // headers sent
+                  val size = java.nio.file.Files.size(path)
+                  ex.getResponseHeaders.set("Content-Type",
+                    "application/octet-stream")
+                  ex.sendResponseHeaders(200, size)
+                  val os = ex.getResponseBody
+                  try java.nio.file.Files.copy(path, os) finally os.close()
+                  None
+                } catch {
+                  case _: java.io.IOException =>
+                    Some((404, err("result file no longer available")))
+                }
             }
-        }
-      } finally ex.close()
-    }
-  }
+          }
+      }
+      refusal.foreach { case (status, body) =>
+        try respond(ex, status, body)
+        catch { case _: java.io.IOException => () } // headers already sent
+      }
+    } finally ex.close()
 
   // ---- modification service (ModificationBean.java:88-134) -----------
 
@@ -2180,7 +1964,7 @@ final class QueryServer(
         // only the query's owner may export it as a view
         // (CachedResultsBean.java:342: the CachedResults row is keyed
         // by getOwnerFromPrincipal)
-        ownerGate(params, s.owner) match {
+        ownerGate(params, s.defn.owner) match {
           case Some(resp) => return resp
           case None => ()
         }
@@ -2239,7 +2023,7 @@ final class QueryServer(
     val staged = shareLock.synchronized { session(params) match {
       case None => Left((404, err("unknown queryId")))
       case Some(s) =>
-        ownerGate(params, s.owner) match {
+        ownerGate(params, s.defn.owner) match {
           case Some(resp) => return resp
           case None => ()
         }
@@ -2286,11 +2070,8 @@ final class QueryServer(
   private def cachedSql(params: Map[String, String]): (Int, String) = {
     val sql = params.getOrElse("sql", return (400, err("missing 'sql'")))
     try {
-      val pageSize = params.get("pageSize").map(_.toInt)
-        .getOrElse(defaultPageSize)
-      require(pageSize > 0, s"pageSize must be positive, got $pageSize")
-      val spark = tableMap.values.headOption.map(_.sparkSession)
-        .getOrElse(return (500, err("no tables registered")))
+      val n = pageSize(params, defaultPageSize)
+      val spark = sparkOf.getOrElse(return (500, err("no tables registered")))
       // the reference's CachedRunningQuery only ever builds SELECTs —
       // gate on the PARSED plan, not string prefixes: a WITH-prefixed
       // INSERT parses fine and a head-keyword check would let it mutate
@@ -2320,7 +2101,7 @@ final class QueryServer(
         }
       }
       guardSelect(spark, sql)
-      val rows = spark.sql(sql).limit(pageSize).toJSON.collect()
+      val rows = spark.sql(sql).limit(n).toJSON.collect()
       (200, s"""{"rows": [${rows.mkString(",")}]}""")
     } catch { case e: Exception => (400, err(e.getMessage)) }
   }
@@ -2767,26 +2548,22 @@ final class QueryServer(
       (200, s"""{"buckets": [${rows.mkString(",")}]}""")
     } catch { case e: Exception => (400, err(e.getMessage)) }
 
-  private def close(params: Map[String, String]): (Int, String) = {
+  private def close(params: Map[String, String]): (Int, String) =
     // close is owner-gated like next (QueryExecutorBean.java:1773);
     // adminUsers retain the reference's adminClose override
-    ownerGate(params, queryOwner(qid(params))) match {
-      case Some(resp) => return resp
-      case None => ()
-    }
-    val (found, owned) = teardown(qid(params))
-    reapRows(owned)
-    if (found) (200, """{"closed": true}""")
-    else (404, err("unknown queryId"))
-  }
+    owned(params)(end(_, "closed"))
 
   /** Unpersist a removed session's frame ONLY when no live session
     * still shares it (`/query/duplicate` shares the persisted frame by
     * reference — closing the original must not de-cache the sibling's
     * pages). */
-  private def release(s: Session): Unit = {
+  private def release(s: Session): Unit =
+    if (!shared(s.df)) s.df.unpersist()
+
+  /** Whether a live session pages `df` (duplicates share frames). */
+  private def shared(df: DataFrame): Boolean = {
     import scala.jdk.CollectionConverters._
-    if (!sessions.values.asScala.exists(_.df eq s.df)) s.df.unpersist()
+    sessions.values.asScala.exists(_.df eq df)
   }
 
   // ---- durable session definitions -----------------------------------
@@ -2802,59 +2579,49 @@ final class QueryServer(
   private def sessionFile(id: String): java.nio.file.Path =
     java.nio.file.Paths.get(stateDir, "sessions", s"$id.properties")
 
-  /** The durable definition record of `id`, if one exists — a plain
-    * read with NO session side effects (backs the read verbs
-    * /query/get and /query/predictions). */
-  private def readDefinitionProps(id: String): Option[java.util.Properties] = {
+  /** The durable definition of `id`, if one exists — a plain read with
+    * NO session side effects. The one reader of the file's keys. */
+  private def readDef(id: String): Option[Saved] = {
     val f = sessionFile(id)
     if (!java.nio.file.Files.exists(f)) None
     else {
       val p = new java.util.Properties()
       val in = java.nio.file.Files.newInputStream(f)
       try p.load(in) finally in.close()
-      Some(p)
+      def get(key: String, default: String) = p.getProperty(key, default)
+      Some(Saved(
+        QueryDef(get("table", ""), get("query", ""), get("syntax", "JEXL"),
+          get("model", ""),
+          // absent = created with no server-side enforcement
+          Option(p.getProperty("auths")).map(_.split(',').toSet.filter(_.nonEmpty)),
+          get("owner", ""), get("pageSize", defaultPageSize.toString).toInt,
+          csv(get("orderBy", ""))),
+        get("pagesServedBase", "0").toLong, get("offsetBase", "0").toLong,
+        get("attempt", "0").toLong))
     }
   }
 
-  private def persistSession(id: String, s: Session): Unit =
-    if (s.table.nonEmpty)
-      // page-ordinal base: pages after this persist are served at THIS
-      // pageSize, so a resume recovers the true ordinal as
-      // base + (offsetNow - offsetBase) / pageSize even when an earlier
-      // pageSize produced the prior offset rows. The run ordinal
-      // travels WITH the definition (inferring it from the page ledger
-      // fails for a reset that served no page before the restart — the
-      // resumed run would re-collide page numbers).
-      writeDefinition(id, s.table, s.query, s.syntax, s.pageSize,
-        s.orderCols, s.running.pagesServed, cursor.currentOffset(id),
-        s.running.attempt, s.model, s.auths, s.owner)
-
-  /** The durable definition record itself — written by [[persistSession]]
-    * for live sessions and by [[define]] for defined-but-not-executed
-    * queries (both resume through [[resumeSession]]). */
-  private def writeDefinition(id: String, table: String, query: String,
-                              syntax: String, pageSize: Int,
-                              orderCols: Seq[String], pagesServedBase: Long,
-                              offsetBase: Long, attempt: Long,
-                              model: String = "",
-                              auths: Option[Set[String]] = None,
-                              owner: String = ""): Unit = {
+  /** Write the durable definition — the one writer of the file's keys,
+    * for live sessions ([[open]]) and defined-but-not-executed queries
+    * ([[define]]); both resume through [[resumeSession]]. */
+  private def writeDef(id: String, saved: Saved): Unit = {
+    val d = saved.defn
     val p = new java.util.Properties()
-    p.setProperty("table", table)
-    p.setProperty("query", query)
-    p.setProperty("syntax", syntax)
+    p.setProperty("table", d.table)
+    p.setProperty("query", d.query)
+    p.setProperty("syntax", d.syntax)
     // resolved auths travel WITH the definition: a restart-resumed (or
     // duplicated/reset) session keeps its server-side enforcement
-    auths.foreach(a => p.setProperty("auths", a.toSeq.sorted.mkString(",")))
+    d.auths.foreach(a => p.setProperty("auths", a.toSeq.sorted.mkString(",")))
     // ... and so does the owning principal — ownership survives restart
     // (the reference's persister keys query rows by owner)
-    if (owner.nonEmpty) p.setProperty("owner", owner)
-    p.setProperty("pageSize", pageSize.toString)
-    p.setProperty("orderBy", orderCols.mkString(","))
-    p.setProperty("model", model)
-    p.setProperty("pagesServedBase", pagesServedBase.toString)
-    p.setProperty("offsetBase", offsetBase.toString)
-    p.setProperty("attempt", attempt.toString)
+    if (d.owner.nonEmpty) p.setProperty("owner", d.owner)
+    p.setProperty("pageSize", d.pageSize.toString)
+    p.setProperty("orderBy", d.orderBy.mkString(","))
+    p.setProperty("model", d.model)
+    p.setProperty("pagesServedBase", saved.pagesServed.toString)
+    p.setProperty("offsetBase", saved.offset.toString)
+    p.setProperty("attempt", saved.attempt.toString)
     java.nio.file.Files.createDirectories(sessionFile(id).getParent)
     val out = java.nio.file.Files.newOutputStream(sessionFile(id))
     try p.store(out, null) finally out.close()
@@ -2864,63 +2631,31 @@ final class QueryServer(
     java.nio.file.Files.deleteIfExists(sessionFile(id))
 
   /** Rebuild a session from its persisted definition: re-plan the query
-    * (fresh persisted frame) and resume from the DURABLE cursor offset —
-    * pages served by the dead server stay served. Runs under the share
-    * lock so two concurrent resumes of one id cannot each persist a
-    * frame (the loser's cached frame would leak), and a resume cannot
-    * race a teardown's file delete. */
+    * (under its model and auths — both durable beside the definitions)
+    * and resume from the DURABLE cursor offset — pages served by the
+    * dead server stay served. Runs under the share lock so two
+    * concurrent resumes of one id cannot each persist a frame (the
+    * loser's cached frame would leak), and a resume cannot race a
+    * teardown's file delete. */
   private def resumeSession(id: String): Option[Session] =
     shareLock.synchronized {
-      Option(sessions.get(id)).orElse {
-        val f = sessionFile(id)
-        if (!java.nio.file.Files.exists(f)) None
-        else {
-          val p = new java.util.Properties()
-          val in = java.nio.file.Files.newInputStream(f)
-          try p.load(in) finally in.close()
-          val table = p.getProperty("table", "")
-          tableMap.get(table).map { df0 =>
-            val qp = QueryParams(syntax = p.getProperty("syntax", "JEXL"),
-              auths = definitionAuths(p))
-            // a definition created under a model must resume under it —
-            // the model store is durable beside the definitions
-            val modelName = p.getProperty("model", "")
-            val (effLogic, effQp) = resolveModel(modelName, qp)
-            val result = effLogic.query(df0, p.getProperty("query", ""), effQp)
-              .persist()
-            val orderCols = p.getProperty("orderBy", "").split(',').toSeq
-              .map(_.trim).filter(_.nonEmpty)
-            val pageSize =
-              p.getProperty("pageSize", defaultPageSize.toString).toInt
-            val base = p.getProperty("pagesServedBase", "0").toLong
-            val offBase = p.getProperty("offsetBase", "0").toLong
-            // never negative even if a crash raced the reset's
-            // offset-delete/file-rewrite pair
-            val running = new RunningQuery(cursor, id, result, orderCols,
-              pageSize,
-              startPage = math.max(0L, base +
-                (cursor.currentOffset(id) - offBase) / pageSize),
-              sink = pageSink,
-              // resume CONTINUES the dead server's run: same attempt,
-              // so its pages extend that run's ledger (a later reset
-              // bumps past it)
-              attempt = p.getProperty("attempt", "0").toLong)
-            val s = Session(result, orderCols, running,
-              p.getProperty("query", ""), qp.syntax, pageSize, table,
-              modelName, qp.auths, owner = p.getProperty("owner", ""))
-            sessions.put(id, s)
-            touchSession(id) // a resume IS a use
-            s
-          }
-        }
-      }
+      Option(sessions.get(id)).orElse(
+        readDef(id).filter(r => tableMap.contains(r.defn.table)).map { r =>
+          // never negative even if a crash raced the reset's
+          // offset-delete/file-rewrite pair; the SAME attempt continues
+          // the dead server's run, so its pages extend that run's ledger
+          // (a later reset bumps past it)
+          open(id, r.defn, plan(r.defn), startPage = math.max(0L,
+            r.pagesServed + (cursor.currentOffset(id) - r.offset) / r.defn.pageSize),
+            attempt = r.attempt)
+        })
     }
 
-  /** The auths a durable definition was created under (absent property
-    * = created with no server-side enforcement). */
-  private def definitionAuths(p: java.util.Properties): Option[Set[String]] =
-    Option(p.getProperty("auths"))
-      .map(_.split(',').toSet.filter(_.nonEmpty))
+  /** The definition of `id` — a live session's, else the durable one —
+    * with the pages served under it. */
+  private def definition(id: String): Option[(QueryDef, Long)] =
+    Option(sessions.get(id)).map(s => (s.defn, s.running.pagesServed))
+      .orElse(readDef(id).map(r => (r.defn, r.pagesServed)))
 
   // ---- plumbing ------------------------------------------------------
 
@@ -2938,19 +2673,47 @@ final class QueryServer(
       case c => c.toString
     } + "\""
 
+  private def newId(): String =
+    java.util.UUID.randomUUID().toString.replace("-", "")
+
+  /** A comma-separated list, trimmed, blanks dropped. */
+  private def csv(raw: String): Seq[String] =
+    raw.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
+
+  /** `pageSize=` (else `default`), refused unless positive. */
+  private def pageSize(params: Map[String, String], default: Int): Int = {
+    val n = params.get("pageSize").map(_.toInt).getOrElse(default)
+    require(n > 0, s"pageSize must be positive, got $n")
+    n
+  }
+
+  /** The one JSON response writer, shared by every handler. */
+  private def respond(ex: HttpExchange, status: Int, body: String): Unit = {
+    val bytes = body.getBytes(StandardCharsets.UTF_8)
+    ex.getResponseHeaders.set("Content-Type", "application/json")
+    // 204 must not carry a body
+    ex.sendResponseHeaders(status, if (status == 204) -1 else bytes.length)
+    if (status != 204) ex.getResponseBody.write(bytes)
+    ex.close()
+  }
+
+  /** The request's query-string parameters; a malformed one (a bad
+    * percent-escape) is the caller's error, a 400. */
+  private def parsed(ex: HttpExchange): Either[(Int, String), Map[String, String]] =
+    try Right(parseQuery(ex.getRequestURI.getRawQuery))
+    catch {
+      case e: IllegalArgumentException =>
+        Left((400, err(s"malformed query string: ${e.getMessage}")))
+    }
+
   private def handler(f: Map[String, String] => (Int, String)): HttpHandler =
-    new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        val (status, body) =
-          try f(parseQuery(ex.getRequestURI.getRawQuery))
-          catch { case e: Exception => (500, err(e.getMessage)) }
-        val bytes = body.getBytes(StandardCharsets.UTF_8)
-        ex.getResponseHeaders.set("Content-Type", "application/json")
-        // 204 must not carry a body
-        ex.sendResponseHeaders(status, if (status == 204) -1 else bytes.length)
-        if (status != 204) ex.getResponseBody.write(bytes)
-        ex.close()
+    ex => {
+      val (status, body) = parsed(ex) match {
+        case Left(resp) => resp
+        case Right(params) =>
+          try f(params) catch { case e: Exception => (500, err(e.getMessage)) }
       }
+      respond(ex, status, body)
     }
 
   private def parseQuery(raw: String): Map[String, String] =
@@ -2963,6 +2726,30 @@ final class QueryServer(
 }
 
 object QueryServer {
+  /** One query definition: what create/define/execute/predict/plan read
+    * from a request (`queryDef`), what a live session pages under, and
+    * what the durable `sessions/<id>.properties` record holds
+    * (`readDef`/`writeDef`). Lookup sessions have no `table` and no
+    * definition file. An empty `orderBy` means the planned frame's first
+    * column. */
+  private final case class QueryDef(table: String, query: String,
+                                    syntax: String, model: String = "",
+                                    auths: Option[Set[String]] = None,
+                                    owner: String = "", pageSize: Int,
+                                    orderBy: Seq[String] = Seq.empty)
+
+  private final case class Session(defn: QueryDef, df: DataFrame,
+                                   running: RunningQuery)
+
+  /** A durable definition with the paging position it was saved at:
+    * `pagesServed` pages served when the cursor stood at `offset`, in
+    * run `attempt`. The run ordinal travels WITH the definition
+    * (inferring it from the page ledger fails for a reset that served no
+    * page before a restart — the resumed run would re-collide page
+    * numbers). */
+  private final case class Saved(defn: QueryDef, pagesServed: Long = 0L,
+                                 offset: Long = 0L, attempt: Long = 0L)
+
   /** The stock predictor set. Referenced by IDENTITY in the
     * constructor default: a server left on the default swaps in a
     * store-backed history predictor (so predictions survive restarts);

@@ -76,6 +76,19 @@ class PredictSpec extends SparkSpec {
       assert(bad.statusCode() == 400, bad.body())
       assert(get(s"http://127.0.0.1:$port/query/predict?table=nope&query=$enc")
         .statusCode() == 404)
+      // model= resolves a stored model's aliases, as create does
+      val area = java.net.URLEncoder.encode("AREA == 'A'", "UTF-8")
+      assert(client.send(HttpRequest.newBuilder(URI.create(
+          s"http://127.0.0.1:$port/model/import?name=M3&mappings=" +
+            java.net.URLEncoder.encode("AREA:GRP:FORWARD", "UTF-8")))
+          .POST(HttpRequest.BodyPublishers.noBody()).build(),
+        HttpResponse.BodyHandlers.ofString()).statusCode() == 200)
+      assert(get(s"http://127.0.0.1:$port/query/predict?table=people&query=$area")
+        .statusCode() == 400)
+      val m = get(s"http://127.0.0.1:$port/query/predict?table=people&model=M3" +
+        s"&query=$area")
+      assert(m.statusCode() == 200 && m.body().contains("PLAN_SIZE_BYTES"),
+        m.body())
     } finally srv.stop()
     val noop = new QueryServer(tables = Map("people" -> df),
       predictors = Seq.empty)

@@ -70,6 +70,21 @@ class QueryServerSpec extends SparkSpec {
         java.net.URLEncoder.encode("NO_SUCH_FIELD == 'x'", "UTF-8"))
       assert(bad.statusCode() == 400, bad.body())
       assert(post(s"$base/create?table=nope&query=x").statusCode() == 404)
+
+      // a malformed query string is a 400 on every kind of handler; raw
+      // request lines, as a client-side URI parser refuses the escape
+      def status(target: String): String = {
+        val sock = new java.net.Socket("127.0.0.1", port)
+        try {
+          sock.getOutputStream.write((s"GET $target HTTP/1.1\r\n" +
+            "Host: localhost\r\nConnection: close\r\n\r\n").getBytes("UTF-8"))
+          new java.io.BufferedReader(new java.io.InputStreamReader(
+            sock.getInputStream, "UTF-8")).readLine()
+        } finally sock.close()
+      }
+      assert(status("/query/next?id=%zz").contains(" 400 "))
+      assert(status("/query/execute?table=people&query=%zz").contains(" 400 "))
+      assert(status("/mapreduce/getFile?jobId=%zz&fileName=x").contains(" 400 "))
     } finally srv.stop()
   }
 
@@ -121,6 +136,16 @@ class QueryServerSpec extends SparkSpec {
         java.net.URLEncoder.encode("NOPE == 1", "UTF-8")).statusCode() == 400)
       assert(get(s"$base/plan?table=absent&query=x").statusCode() == 404)
       assert(get(s"$base/plan").statusCode() == 400)
+      // model= resolves a stored model's aliases, as create does
+      val who = java.net.URLEncoder.encode("WHO == 'n3'", "UTF-8")
+      assert(post(s"http://127.0.0.1:$port/model/import?name=M3&mappings=" +
+        java.net.URLEncoder.encode("WHO:NAME:FORWARD", "UTF-8"))
+        .statusCode() == 200)
+      assert(get(s"$base/plan?table=people&query=$who").statusCode() == 400)
+      val pm = get(s"$base/plan?table=people&model=M3&query=$who")
+      assert(pm.statusCode() == 200 && pm.body().startsWith("JEXL: "),
+        pm.body().take(300))
+      assert(get(s"$base/list").body() == "[]")
     } finally srv.stop()
   }
 
@@ -219,6 +244,18 @@ class QueryServerSpec extends SparkSpec {
       // M1 is gone → the model param refuses the query
       assert(post(s"$base/query/execute?table=people&model=M1" +
         s"&query=${enc("AREA == 'EAST'")}").statusCode() == 400)
+      // a query-TEXT update re-plans under the session's model
+      val made = post(s"$base/query/create?table=people&model=M2" +
+        s"&query=${enc("AREA == 'EAST'")}&pageSize=10&orderBy=id")
+      assert(made.statusCode() == 200, made.body())
+      val madeId = "\"queryId\": \"([0-9a-f]+)\"".r
+        .findFirstMatchIn(made.body()).get.group(1)
+      val upd = post(s"$base/query/update?id=$madeId" +
+        s"&query=${enc("AREA == 'WEST'")}")
+      assert(upd.statusCode() == 200, upd.body())
+      val west = get(s"$base/query/next?id=$madeId")
+      assert(west.statusCode() == 200 &&
+        west.body().contains("\"display_bal\":200"), west.body().take(300))
       // a model-bound definition survives a server RESTART: the model
       // store and the definition are both durable under stateDir
       val defd = post(s"$base/query/define?table=people&model=M2" +

@@ -138,6 +138,15 @@ class RunningQuerySpec extends SparkSpec {
       new RunningQuery(cb2, "rqB2", df, Seq("n"), pageSize = 10,
         startPage = 2).runPerPage())
     assert(ca2.currentOffset("rqA2") == cb2.currentOffset("rqB2"))
+    // each page is timed from the end of the one before it, so a
+    // drain's page times add up to no more than the run's wall time
+    val t0 = System.currentTimeMillis()
+    assert(new RunningQuery(freshCursor(), "rqT", df, Seq("n"),
+      pageSize = 10).run() == 3)
+    val wall = System.currentTimeMillis() - t0
+    val paged = QueryMetrics.pagesDF(spark).filter(col("queryId") === "rqT")
+      .select("elapsedMillis").collect().map(_.getLong(0)).toSeq
+    assert(paged.size == 3 && paged.sum <= wall, s"pages $paged, run $wall ms")
     QueryMetrics.clear()
   }
 

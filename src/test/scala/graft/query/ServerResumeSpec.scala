@@ -60,6 +60,47 @@ class ServerResumeSpec extends SparkSpec {
     } finally srv2.stop()
   }
 
+  test("a definition file in the original format resumes: owner, auths and paging position") {
+    val stateDir =
+      java.nio.file.Files.createTempDirectory("graft-resume-fmt").toString
+    val df = (1 to 30).map(i => (i.toLong, if (i % 2 == 0) "A" else "B", "A"))
+      .toDF("id", "grp", "visibility")
+    val id = "0123456789abcdef0123456789abcdef"
+    // exactly what the definition writer has always stored (keys in
+    // Properties hash order, `=` escaped): one page of 5 served
+    val props = Seq("#Sat Oct 17 21:06:20 UTC 2026", "owner=alice", "auths=A",
+      "query=GRP \\=\\= 'A'", "offsetBase=5", "syntax=JEXL", "pageSize=5",
+      "orderBy=id", "model=", "pagesServedBase=1", "attempt=0", "table=t")
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(stateDir, "sessions"))
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(stateDir, "sessions", s"$id.properties"),
+      props.mkString("", "\n", "\n").getBytes("ISO-8859-1"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(stateDir, s"$id.offset"),
+      "5".getBytes("UTF-8"))
+    val srv = new QueryServer(Map("t" -> df), stateDir = stateDir,
+      users = Map("alice" -> Set("A"), "bob" -> Set("A")))
+    val port = srv.start()
+    try {
+      val base = s"http://127.0.0.1:$port/query"
+      val got = get(s"$base/get?id=$id&user=alice")
+      assert(got.statusCode() == 200 &&
+        got.body().contains("\"query\": \"GRP == 'A'\"") &&
+        got.body().contains("\"pagesServed\": 1"), got.body())
+      // the stored owner still gates the query
+      assert(get(s"$base/next?id=$id&user=bob").statusCode() == 401)
+      val p2 = get(s"$base/next?id=$id&user=alice")
+      assert(p2.statusCode() == 200, p2.body())
+      assert("\"id\":(\\d+)".r.findAllMatchIn(p2.body())
+        .map(_.group(1).toInt).toSeq == Seq(12, 14, 16, 18, 20),
+        p2.body().take(400))
+      assert(p2.body().contains("\"page\": 2"), p2.body().take(200))
+    } finally {
+      srv.stop()
+      graft.core.Fs.deleteRecursively(stateDir)
+    }
+  }
+
   test("update: pageSize applies to subsequent pages; query text audits, re-plans, keeps position") {
     val df = (1 to 40).map(i => (i.toLong, if (i % 2 == 0) "A" else "B"))
       .toDF("id", "grp")
