@@ -1,6 +1,19 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
+  /** Seconds `gate` took, or None when it threw: a gate that failed gets
+    * no time, and its cause goes to stderr. */
+  def timeGate(name: String)(gate: => Unit): Option[Double] = {
+    val t0 = System.nanoTime()
+    try { gate; Some((System.nanoTime() - t0) / 1e9) }
+    catch {
+      case NonFatal(e) =>
+        System.err.println(s"[bench] $name FAILED: $e")
+        None
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -46,7 +59,9 @@ object Bench {
           SparkEntry.queries(name)(spark, warmDir).count()
           if (warmDebug)
             System.err.println(f"[warm] $name%-24s ${(System.nanoTime() - tq) / 1e9}%6.2f s")
-        } catch { case _: Throwable => () }
+        } catch {
+          case NonFatal(e) => System.err.println(s"[warm] $name failed: $e")
+        }
       }
       spark.conf.set("spark.sql.shuffle.partitions", cpus)
       spark.catalog.clearCache()
@@ -65,10 +80,8 @@ object Bench {
     // adjacent re-run; pass-separated samples rarely eat the same pause
     // and the min makes consecutive suites (and the driver's run vs a
     // clean run) agree per-query.
-    def timedPass(): Map[String, Double] = SparkEntry.queries.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-      val dt = (System.nanoTime() - t0) / 1e9
+    def timedPass(): Map[String, Option[Double]] = SparkEntry.queries.map { case (name, fn) =>
+      val dt = timeGate(name)(fn(spark, sfDir).count())
       // drop per-query persisted frames: honest isolated timings, no
       // cache accumulation; the GC + pause keeps late-suite queries from
       // paying earlier queries' heap debt (measured 3-10× inflation)
@@ -79,16 +92,24 @@ object Bench {
     }
     val pass1 = timedPass()
     val pass2 = timedPass()
-    val results = pass1.map { case (name, t1) =>
-      val dt = math.min(t1, pass2(name))
-      System.err.println(f"[bench] $name%-24s $dt%8.2f s")
-      name -> dt
+    // a gate that threw in either pass is failed: listed, never timed
+    val (timed, failed) = pass1.keys.toSeq.sorted.partitionMap { name =>
+      pass1(name).zip(pass2(name)).map { case (t1, t2) => math.min(t1, t2) } match {
+        case Some(dt) =>
+          System.err.println(f"[bench] $name%-24s $dt%8.2f s")
+          Left(name -> dt)
+        case None =>
+          System.err.println(f"[bench] $name%-24s   FAILED")
+          Right(name)
+      }
     }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
+    val qs = timed.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
+    val total = timed.map(_._2).sum
+    val failedJson = failed.map(n => s"\"$n\"").mkString("[", ",", "]")
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+        s""""failed":$failedJson,"sf":"$sfDir"}"""
     // The one-line JSON contract. The stdout println alone has never
     // reached the stream the driver parses (BENCH_r01..r13 all have
     // parsed:null — under a forked sbt run the stdout line is lost while
@@ -104,7 +125,9 @@ object Bench {
       java.nio.file.Paths.get(
         sys.env.getOrElse("SPARK_GRAFT_BENCH_JSON", "bench_result.json")),
       json.getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    catch {
+      case NonFatal(e) => System.err.println(s"[bench] result file not written: $e")
+    }
     spark.stop()
   }
 }

@@ -203,7 +203,9 @@ final class RunningQuery(
   // startPage seeds the 1-based numbering when a restarted server
   // resumes a durable cursor mid-query: the next served page keeps its
   // true ordinal instead of restarting at 1
-  private var pageNum = startPage
+  // volatile: a server reads the position from other threads than the
+  // one paging (which holds the session's monitor)
+  @volatile private var pageNum = startPage
 
   /** Pages served so far (the `/query/list` position). */
   def pagesServed: Long = pageNum

@@ -4,7 +4,9 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, ExecutorService, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.util.control.NonFatal
 
 /** Thin HTTP façade over the query lifecycle — the REST tier of the
   * reference (QueryExecutorBean.java:616-1383 create/next/close/plan)
@@ -55,6 +57,21 @@ import java.util.concurrent.ConcurrentHashMap
   *    one call) — `{"queryId": …, "page": 1, "rows": [...]}`; follow
   *    with `/query/next` for more pages. Types come from the server's
   *    registered [[LookupUUID.UuidType]]s; `logic` names a table.
+  *
+  * Threading: exchanges run on one pool of daemon threads named
+  * `graft-http-N`, one per core and at least two, so the verbs of
+  * different sessions overlap (each DataWave REST call runs on its own
+  * container thread too). The pages of one session run one at a time:
+  * every verb that pages, replaces, copies or ends a live session, and
+  * every job over its frame, runs under that session's monitor ([[live]],
+  * [[reading]]) after re-checking that the session is still the live
+  * one; the pages of different sessions never wait for each other.
+  * [[shareLock]] is taken before a session's monitor, never after it,
+  * and no code holding it runs a Spark job: a restart-resume plans
+  * before taking it. Two waits remain under it: a close waits for the
+  * job in flight on its own session (a page, or a CachedResults row
+  * write), and `/cachedresults/create` restoring a source alias after a
+  * restart re-plans the alias's owning query.
   */
 final class QueryServer(
     tables: Map[String, DataFrame],
@@ -156,10 +173,12 @@ final class QueryServer(
           sparkOf.map(metricsStore.history(_)).getOrElse(Seq.empty)))
     else predictors
   private var server: HttpServer = _
-  /** Guards the duplicate read-copy-put against a concurrent
-    * close/cancel of the source: without it, teardown can observe "no
-    * other sharer" in [[release]] during duplicate's window and
-    * unpersist the frame the new session is about to share. */
+  /** The exchange pool [[start]] gives the server; [[stop]] drains it. */
+  private var workers: ExecutorService = _
+  /** Serializes the CachedResults alias registry, [[teardown]] (which
+    * unbinds a query's aliases with it) and a restart-resume's
+    * register-if-absent. A session's own state is guarded by its monitor
+    * ([[live]]), taken after this lock when both are needed. */
   private val shareLock = new Object
 
   // ---- state expiration ----------------------------------------------
@@ -214,7 +233,10 @@ final class QueryServer(
         if (java.nio.file.Files.exists(f))
           java.nio.file.Files.setLastModifiedTime(f,
             java.nio.file.attribute.FileTime.fromMillis(now))
-      } catch { case _: Exception => () }
+      } catch {
+        case NonFatal(e) =>
+          System.err.println(s"[graft] query $id: idle-clock touch failed: $e")
+      }
     }
   }
 
@@ -531,6 +553,15 @@ final class QueryServer(
   /** Start on `port` (0 = ephemeral); returns the bound port. */
   def start(port: Int = 0): Int = {
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+    // without an executor the JDK runs every exchange on the one
+    // dispatcher thread, so each client's verb would wait for the others
+    val n = new AtomicInteger()
+    workers = Executors.newFixedThreadPool(
+      math.max(2, Runtime.getRuntime.availableProcessors), r => {
+        val t = new Thread(r, s"graft-http-${n.incrementAndGet()}")
+        t.setDaemon(true); t
+      })
+    server.setExecutor(workers)
     server.createContext("/query/create", handler(create))
     server.createContext("/query/createAndNext", handler(createAndNext))
     server.createContext("/query/define", handler(define))
@@ -603,7 +634,10 @@ final class QueryServer(
           val t = new Thread(r, "graft-expiration"); t.setDaemon(true); t
         })
       sweeper.scheduleAtFixedRate(
-        () => try expire() catch { case _: Exception => () },
+        () => try expire() catch {
+          case NonFatal(e) =>
+            System.err.println(s"[graft] expiration sweep failed: $e")
+        },
         period, period, java.util.concurrent.TimeUnit.MILLISECONDS)
     }
     server.getAddress.getPort
@@ -612,10 +646,16 @@ final class QueryServer(
   def stop(): Unit = {
     // the sweep timer must not fire into a stopping server
     if (sweeper != null) sweeper.shutdownNow()
-    // delay 1: lets in-flight exchange handlers finish BEFORE the
-    // flush below, so a page recorded by a racing /query/next still
-    // makes the durable ledger (an idle server returns immediately)
+    // stop accepting, then let in-flight handlers finish BEFORE the
+    // flush and the unpersist below: a page recorded by a racing
+    // /query/next still makes the durable ledger, and no handler can
+    // register a session after sessions.clear() and leak its frame
     if (server != null) server.stop(1)
+    if (workers != null) {
+      workers.shutdown()
+      if (!workers.awaitTermination(30, TimeUnit.SECONDS))
+        System.err.println("[graft] handlers still running 30 s after stop")
+    }
     // cancel live bulk exports so no thread keeps writing under a
     // state directory the caller may be about to delete, and their
     // state rows record CANCELED instead of a dangling RUNNING
@@ -655,7 +695,8 @@ final class QueryServer(
       case Right(id) =>
         // the session was registered by doCreate under this id; a
         // concurrent close between then and here just yields 204
-        try Option(sessions.get(id)).flatMap(_.running.nextPageJson()) match {
+        try Option(sessions.get(id))
+          .flatMap(s => live(id, s)(s.running.nextPageJson()).flatten) match {
           case Some((rows, pageNum)) => (200, firstPage(id, rows, pageNum))
           case None => reapRows(teardown(id)._2); (204, "")
         } catch {
@@ -737,9 +778,8 @@ final class QueryServer(
     val defn = ordered(d, df)
     val running = new RunningQuery(cursor, id, df, defn.orderBy,
       defn.pageSize, startPage = startPage, sink = pageSink, attempt = attempt)
-    if (!shared(df)) df.persist()
     val s = Session(defn, df, running)
-    sessions.put(id, s)
+    frameLock.synchronized { if (!shared(df)) df.persist(); sessions.put(id, s) }
     // a birth or resume is a use for the idle clock — and for an
     // ephemeral lookup session, its ONLY last-use record
     touchSession(id)
@@ -862,13 +902,44 @@ final class QueryServer(
   }
 
   /** `body` on the caller's session, live or resumed from its durable
-    * definition: 404 when there is none, and the owner gate's refusal
-    * for anyone but its owner (or an admin). */
+    * definition, under the session's monitor ([[live]]): 404 when there
+    * is none, and the owner gate's refusal for anyone but its owner (or
+    * an admin). A session closed or replaced while we waited for its
+    * monitor is looked up again. */
   private def withSession(params: Map[String, String])(
       body: Session => (Int, String)): (Int, String) =
     session(params) match {
       case None => (404, err("unknown queryId"))
-      case Some(s) => ownerGate(params, s.defn.owner).getOrElse(body(s))
+      case Some(s) => ownerGate(params, s.defn.owner).getOrElse(
+        live(qid(params), s)(body(s)).getOrElse(withSession(params)(body)))
+    }
+
+  /** `body` under session `s`'s monitor if `s` is still `id`'s live
+    * session; None when it was closed or replaced meanwhile. Every verb
+    * that pages, replaces, copies or ends a live session runs here, so
+    * one session's pages run one at a time ([[RunningQuery]]'s page
+    * counter and the cursor's read-then-write offset file are not
+    * thread-safe) and a close cannot slip between a page's offset read
+    * and its write. Nothing under the monitor takes [[shareLock]]. */
+  private def live[A](id: String, s: Session)(body: => A): Option[A] =
+    s.running.synchronized { if (sessions.get(id) eq s) Some(body) else None }
+
+  /** `body` under the monitors of the live sessions among `ids` (taken
+    * in id order): a job reading their frames through a CachedResults
+    * view runs while none of them can be released. Spark re-persists a
+    * cached frame's buffers when a scan planned before its unpersist
+    * runs after it, and nothing would ever drop those again — so every
+    * job the server runs over a session's frame (pages, row writes, view
+    * reads) holds that session's monitor, and [[release]] runs only
+    * under it. */
+  private def reading[A](ids: Seq[String])(body: => A): A =
+    ids.distinct.sorted match {
+      case Seq() => body
+      case id +: rest => Option(sessions.get(id)) match {
+        case None => reading(rest)(body)
+        case Some(s) =>
+          live(id, s)(reading(rest)(body)).getOrElse(reading(id +: rest)(body))
+      }
     }
 
   /** Tear query `id` down ([[teardown]]) for close/cancel/remove:
@@ -1007,7 +1078,7 @@ final class QueryServer(
       audited(params, id, query, syntax, logicName, selectors)(body(auths)))
     created(params, id, d, logicName)
     // the first page rides the create response
-    s.running.nextPageJson() match {
+    live(id, s)(s.running.nextPageJson()).flatten match {
       case Some((rows, pageNum)) => (200, firstPage(id, rows, pageNum))
       case None => (200, firstPage(id, Array.empty, 1))
     }
@@ -1137,15 +1208,15 @@ final class QueryServer(
     * `/{id}/duplicate`). The persisted frame is shared, not re-planned. */
   private def duplicate(params: Map[String, String]): (Int, String) =
     try {
-      // the read-copy-put must be atomic vs teardown: a concurrent
-      // close/cancel of the source between our read and our put would
-      // see no other sharer and unpersist the frame we are about to
-      // share (the duplicate would still be correct, just uncached).
-      // Only the owner may copy a session (the reference's duplicate
-      // path runs the :1146 ownership check); the COPY belongs to the
-      // caller — same principal unless an admin duplicated it for
-      // themselves.
-      shareLock.synchronized { withSession(params) { s =>
+      // the read-copy-put runs under the source's monitor, so it is
+      // atomic vs teardown: a concurrent close/cancel of the source
+      // between our read and our put would see no other sharer and
+      // unpersist the frame we are about to share (the duplicate would
+      // still be correct, just uncached). Only the owner may copy a
+      // session (the reference's duplicate path runs the :1146
+      // ownership check); the COPY belongs to the caller — same
+      // principal unless an admin duplicated it for themselves.
+      withSession(params) { s =>
         val d = s.defn.copy(pageSize = pageSize(params, s.defn.pageSize),
           owner = if (ownerOf(params).nonEmpty) ownerOf(params)
                   else s.defn.owner)
@@ -1158,20 +1229,20 @@ final class QueryServer(
         // durable pages would be orphans the summary's metric-join drops
         created(params, id, d, d.table)
         (200, s"""{"queryId": "$id"}""")
-      } }
+      }
     } catch { case e: Exception => (400, err(e.getMessage)) }
 
   /** `POST /query/reset?id=…` — same query id, paging restarted
     * (QueryExecutorBean `/{id}/reset`: releases resources and re-runs;
     * the persisted frame survives, the cursor state does not). */
   private def reset(params: Map[String, String]): (Int, String) =
-    // the read-copy-put below must be atomic vs a concurrent /query/
-    // update: reset racing outside the lock could put a Session built
-    // from the stale pre-update snapshot, clobbering the updated
-    // definition and leaking the update's newly persisted frame (no
-    // session would reference it, so release could never unpersist it).
-    // The monitor is reentrant, so session()'s resumeSession is fine.
-    shareLock.synchronized { withSession(params) { s =>
+    // the read-copy-put below runs under the session's monitor, so it
+    // is atomic vs a concurrent /query/update: a reset racing it could
+    // put a Session built from the stale pre-update snapshot, clobbering
+    // the updated definition and leaking the update's newly persisted
+    // frame (no session would reference it, so release could never
+    // unpersist it)
+    withSession(params) { s =>
       val id = qid(params)
       try {
         // a reset is a fresh run and RE-audits as one (the reference
@@ -1190,7 +1261,7 @@ final class QueryServer(
         open(id, s.defn, s.df, attempt = s.running.attempt + 1)
         (200, """{"reset": true}""")
       } catch { case e: Exception => (400, err(e.getMessage)) }
-    } }
+    }
 
   /** `GET /query/predict?table=T&query=Q[&syntax=…][&model=M]` — the
     * reference's `/{logicName}/predict` (QueryExecutorBean.java:990-1054):
@@ -1236,30 +1307,24 @@ final class QueryServer(
         val d = s.defn.copy(query = params.getOrElse("query", s.defn.query),
           pageSize = pageSize(params, s.defn.pageSize),
           orderBy = params.get("orderBy").map(csv).getOrElse(s.defn.orderBy))
-        // the CAS identity check runs BEFORE the audit: under ACTIVE
-        // auditing the trail must never record a definition change the
-        // 409 path then refuses to apply (the reference audits exactly
-        // the updates it applies). Every session-map mutator holds
-        // shareLock, so once the identity holds here nothing can change
-        // it before our put — audit-then-apply is atomic. The re-plan
-        // under the lock is schema resolution only (no jobs run).
-        shareLock.synchronized {
-          if (!(sessions.get(id) eq s))
-            (409, err("query changed concurrently; retry the update"))
-          else if (params.contains("query") && !tableMap.contains(d.table))
-            (400, err("query update requires a table-backed session"))
-          else {
-            val df =
-              if (params.contains("query"))
-                audited(params, id, d.query, d.syntax, "update")(plan(d))
-              else s.df
-            // paging position is KEPT: same run, and the durable cursor
-            // offset survives the swap
-            open(id, d, df, startPage = s.running.pagesServed,
-              attempt = s.running.attempt)
-            if (!(df eq s.df)) release(s) // ref-counted old frame drop
-            (200, """{"updated": true}""")
-          }
+        // withSession holds the session's monitor and every verb that
+        // replaces or ends a live session takes it, so nothing changes
+        // the session between here and our put — audit-then-apply is
+        // atomic (the reference audits exactly the updates it applies),
+        // and the re-plan's visibility probe holds no server-wide lock
+        if (params.contains("query") && !tableMap.contains(d.table))
+          (400, err("query update requires a table-backed session"))
+        else {
+          val df =
+            if (params.contains("query"))
+              audited(params, id, d.query, d.syntax, "update")(plan(d))
+            else s.df
+          // paging position is KEPT: same run, and the durable cursor
+          // offset survives the swap
+          open(id, d, df, startPage = s.running.pagesServed,
+            attempt = s.running.attempt)
+          if (!(df eq s.df)) release(s) // ref-counted old frame drop
+          (200, """{"updated": true}""")
         }
       } catch { case e: Exception => (400, err(e.getMessage)) }
     }
@@ -1411,17 +1476,28 @@ final class QueryServer(
         loadedAliases.asScala.collect { case (a, q) if q == id => a }.toSeq
       aliases.foreach(unbindAlias) // durable: reapRows deletes the stores
       if (aliases.nonEmpty) persistAliases()
+      val existed = endLive(id) || {
+        val hadFile = java.nio.file.Files.exists(sessionFile(id))
+        if (hadFile) { cursor.close(id); dropSessionFile(id) }
+        hadFile
+      }
+      // after endLive: a page in flight may still have touched the clock
       lastUsed.remove(id)
       lastDiskTouch.remove(id)
-      Option(sessions.remove(id)) match {
-        case Some(s) =>
-          release(s); cursor.close(id); dropSessionFile(id); (true, aliases)
-        case None =>
-          val hadFile = java.nio.file.Files.exists(sessionFile(id))
-          if (hadFile) { cursor.close(id); dropSessionFile(id) }
-          (hadFile, aliases)
-      }
+      (existed, aliases)
     }
+
+  /** End `id`'s live session under its monitor ([[live]]): a page in
+    * flight finishes first and none starts after; the frame is released
+    * and the cursor state and definition dropped. False when no session
+    * is live. */
+  private def endLive(id: String): Boolean = Option(sessions.get(id)) match {
+    case None => false
+    case Some(s) =>
+      live(id, s) {
+        sessions.remove(id); release(s); cursor.close(id); dropSessionFile(id)
+      }.isDefined || endLive(id)
+  }
 
   /** `GET /lookupContentUUID?terms=TYPE:value[,…][&uidField=c]` — the
     * reference's content-returning UUID lookup (`/lookupContentUUID`,
@@ -1958,6 +2034,7 @@ final class QueryServer(
     // OUTSIDE the lock — it is a full Spark job writing every result
     // row, and holding shareLock for its duration would stall every
     // other verb (create/close/loadAsync) behind one big load.
+    session(params) // a restart-resume plans before the lock is taken
     val staged = shareLock.synchronized { session(params) match {
       case None => Left((404, err("unknown queryId")))
       case Some(s) =>
@@ -1990,11 +2067,11 @@ final class QueryServer(
           java.lang.Long.valueOf(System.currentTimeMillis()))
         touchSession(id) // exporting is a use of the owning query
         persistAliases()
-        Right((s.df, alias, id))
+        Right((s, alias, id))
     } }
     staged match {
       case Left(resp) => resp
-      case Right((df, alias, id)) =>
+      case Right((s, alias, id)) =>
         // Phase 2 (outside shareLock, under the per-alias writer lock):
         // materialize the rows durably (the reference's MySQL insert at
         // load, CachedResultsBean.load) so a restarted server serves
@@ -2002,7 +2079,7 @@ final class QueryServer(
         // a raced close/re-point degrades durability only — the live
         // view serves, and a restart takes the resume path (the
         // uncommitted/absent store reads as absent).
-        val durable = writeRowsFor(df, alias, id)
+        val durable = live(id, s)(writeRowsFor(s.df, alias, id)).getOrElse(false)
         (200, s"""{"view": ${quote(alias)}, "durable": $durable}""")
     }
   }
@@ -2020,6 +2097,7 @@ final class QueryServer(
     // registration commit under the lock, the row materialization runs
     // outside it (a multi-second Spark job must not stall the server),
     // and a raced teardown drops the orphan store afterwards
+    session(params) // a restart-resume plans before the lock is taken
     val staged = shareLock.synchronized { session(params) match {
       case None => Left((404, err("unknown queryId")))
       case Some(s) =>
@@ -2049,15 +2127,15 @@ final class QueryServer(
           java.lang.Long.valueOf(System.currentTimeMillis()))
         touchSession(id)
         persistAliases()
-        Right((s.df, alias, id))
+        Right((s, alias, id))
     } }
     staged match {
       case Left(resp) => resp
-      case Right((df, alias, id)) =>
+      case Right((s, alias, id)) =>
         // the re-point replaces the durable rows too — a restart must
         // serve the NEW query's materialization; a failed write or a
         // raced close/re-point degrades to the resume path
-        val durable = writeRowsFor(df, alias, id)
+        val durable = live(id, s)(writeRowsFor(s.df, alias, id)).getOrElse(false)
         (200, s"""{"view": ${quote(alias)}, "durable": $durable}""")
     }
   }
@@ -2101,7 +2179,9 @@ final class QueryServer(
         }
       }
       guardSelect(spark, sql)
-      val rows = spark.sql(sql).limit(n).toJSON.collect()
+      val rows = reading(refs.flatMap(r => Option(loadedAliases.get(r)))) {
+        spark.sql(sql).limit(n).toJSON.collect()
+      }
       (200, s"""{"rows": [${rows.mkString(",")}]}""")
     } catch { case e: Exception => (400, err(e.getMessage)) }
   }
@@ -2218,7 +2298,8 @@ final class QueryServer(
         }
         try session(Map("id" -> id)) match {
           case Some(s) =>
-            writeRowsFor(s.df, alias, id) // serialized per alias
+            // serialized per alias, and under the session's monitor
+            live(id, s)(writeRowsFor(s.df, alias, id))
             ifStillOurs {
               s.df.createOrReplaceTempView(alias)
               asyncLoads.put(alias.toLowerCase, "LOADED")
@@ -2407,8 +2488,10 @@ final class QueryServer(
       // Each page re-sorts the view; a deployment paging huge results
       // materializes a row-id column at load time instead (the
       // reference's MySQL table has its row id for exactly this).
-      val rows = view.orderBy(view.columns.map(view.col): _*)
-        .offset((rowBegin - 1).toInt).limit(n.toInt).toJSON.collect()
+      val rows = reading(Option(loadedAliases.get(alias.toLowerCase)).toSeq) {
+        view.orderBy(view.columns.map(view.col): _*)
+          .offset((rowBegin - 1).toInt).limit(n.toInt).toJSON.collect()
+      }
       (200, s"""{"rowBegin": $rowBegin, "rowEnd": $rowEnd,""" +
         s""" "rows": [${rows.mkString(",")}]}""")
     } catch { case e: Exception => (400, err(e.getMessage)) }
@@ -2556,14 +2639,24 @@ final class QueryServer(
   /** Unpersist a removed session's frame ONLY when no live session
     * still shares it (`/query/duplicate` shares the persisted frame by
     * reference — closing the original must not de-cache the sibling's
-    * pages). */
+    * pages). Runs under the session's monitor ([[reading]]). */
   private def release(s: Session): Unit =
-    if (!shared(s.df)) s.df.unpersist()
+    frameLock.synchronized { if (!shared(s.df)) s.df.unpersist() }
 
-  /** Whether a live session pages `df` (duplicates share frames). */
+  /** Makes [[open]]'s check-persist-register and [[release]]'s
+    * check-unpersist atomic with each other: a session opening over a
+    * frame another is releasing either keeps its cache entry or caches
+    * it afresh. Nothing is taken while it is held. */
+  private val frameLock = new Object
+
+  /** Whether a live session pages a frame cached under the same entry as
+    * `df`: duplicates share a frame, and two sessions of one query under
+    * one set of auths plan equal frames, which Spark caches once. */
   private def shared(df: DataFrame): Boolean = {
     import scala.jdk.CollectionConverters._
-    sessions.values.asScala.exists(_.df eq df)
+    val plan = df.queryExecution.analyzed
+    sessions.values.asScala.exists(o =>
+      (o.df eq df) || o.df.queryExecution.analyzed.sameResult(plan))
   }
 
   // ---- durable session definitions -----------------------------------
@@ -2622,9 +2715,16 @@ final class QueryServer(
     p.setProperty("pagesServedBase", saved.pagesServed.toString)
     p.setProperty("offsetBase", saved.offset.toString)
     p.setProperty("attempt", saved.attempt.toString)
-    java.nio.file.Files.createDirectories(sessionFile(id).getParent)
-    val out = java.nio.file.Files.newOutputStream(sessionFile(id))
+    // written aside and moved into place: a reader of another thread
+    // (a resume, /query/get) sees the old file or the new, never a torn one
+    val f = sessionFile(id)
+    java.nio.file.Files.createDirectories(f.getParent)
+    val tmp = f.resolveSibling(s"$id.properties.tmp")
+    val out = java.nio.file.Files.newOutputStream(tmp)
     try p.store(out, null) finally out.close()
+    java.nio.file.Files.move(tmp, f,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
   private def dropSessionFile(id: String): Unit =
@@ -2633,23 +2733,28 @@ final class QueryServer(
   /** Rebuild a session from its persisted definition: re-plan the query
     * (under its model and auths — both durable beside the definitions)
     * and resume from the DURABLE cursor offset — pages served by the
-    * dead server stay served. Runs under the share lock so two
-    * concurrent resumes of one id cannot each persist a frame (the
-    * loser's cached frame would leak), and a resume cannot race a
-    * teardown's file delete. */
+    * dead server stay served. The plan (and its visibility probe job)
+    * runs outside the share lock; under it the session opens only if it
+    * is still absent and its definition unchanged, so two concurrent
+    * resumes of one id cannot each persist a frame (the loser caches
+    * nothing: [[open]] is the only place a frame is persisted), and a
+    * resume cannot resurrect a query a teardown deleted meanwhile. */
   private def resumeSession(id: String): Option[Session] =
-    shareLock.synchronized {
-      Option(sessions.get(id)).orElse(
-        readDef(id).filter(r => tableMap.contains(r.defn.table)).map { r =>
-          // never negative even if a crash raced the reset's
-          // offset-delete/file-rewrite pair; the SAME attempt continues
-          // the dead server's run, so its pages extend that run's ledger
-          // (a later reset bumps past it)
-          open(id, r.defn, plan(r.defn), startPage = math.max(0L,
-            r.pagesServed + (cursor.currentOffset(id) - r.offset) / r.defn.pageSize),
-            attempt = r.attempt)
-        })
-    }
+    Option(sessions.get(id)).orElse(
+      readDef(id).filter(r => tableMap.contains(r.defn.table)).flatMap { r =>
+        val df = plan(r.defn)
+        shareLock.synchronized {
+          Option(sessions.get(id)).orElse(readDef(id).filter(_ == r).map { _ =>
+            // never negative even if a crash raced the reset's
+            // offset-delete/file-rewrite pair; the SAME attempt continues
+            // the dead server's run, so its pages extend that run's
+            // ledger (a later reset bumps past it)
+            open(id, r.defn, df, startPage = math.max(0L,
+              r.pagesServed + (cursor.currentOffset(id) - r.offset) / r.defn.pageSize),
+              attempt = r.attempt)
+          })
+        }
+      })
 
   /** The definition of `id` — a live session's, else the durable one —
     * with the pages served under it. */

@@ -1,13 +1,17 @@
 package graft.query
 
 import graft.SparkSpec
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+import scala.jdk.CollectionConverters._
 
 /** Concurrency: parallel sessions over one live server — create,
   * duplicate, drain, close interleaving across threads. Pins the
   * share-lock contract (closing the ORIGINAL while its duplicate is
   * still draining must never corrupt the duplicate's pages — worst case
   * it de-caches them) and per-session isolation of cursor state and
-  * page ledgers. */
+  * page ledgers. The server runs its handlers on a worker pool, so these
+  * requests really overlap; the later cases pin that, the per-session
+  * paging monitor, and that stop() ends the pool. */
 class ServerConcurrencySpec extends SparkSpec {
   import spark.implicits._
 
@@ -51,5 +55,124 @@ class ServerConcurrencySpec extends SparkSpec {
         assert(dupRows == expected, s"grp $g duplicate drain after source close")
       }
     } finally { pool.shutdownNow(); srv.stop() }
+  }
+
+  private def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+  private val idRe = "\"id\":(\\d+)".r
+  private def pageOf(body: String): Long =
+    "\"page\": (\\d+)".r.findFirstMatchIn(body).get.group(1).toLong
+
+  /** `f(i)` on `n` threads at once; the results in thread order. */
+  private def onThreads[A](n: Int)(f: Int => A): Seq[A] = {
+    val pool = Executors.newFixedThreadPool(n)
+    try (0 until n).map(i => pool.submit(new Callable[A] { def call(): A = f(i) }))
+      .map(_.get(60, TimeUnit.SECONDS))
+    finally pool.shutdownNow()
+  }
+
+  private def workerThreads(): Set[Thread] =
+    Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith("graft-http-") && t.isAlive).toSet
+
+  test("two creates run their handlers at the same time") {
+    val df = (1 to 20).map(i => (i.toLong, (i % 2).toLong)).toDF("id", "grp")
+    // each audit waits for the other: on one dispatcher thread the first
+    // create's audit times out, and an audit failure fails the create
+    val met = new CountDownLatch(2)
+    val auditor = new Audit.Auditor {
+      def audit(rec: Audit.AuditRecord): Unit = {
+        met.countDown()
+        if (!met.await(10, TimeUnit.SECONDS))
+          throw new IllegalStateException("the other create never reached its handler")
+      }
+    }
+    val srv = new QueryServer(tables = Map("t" -> df), auditor = auditor,
+      auditType = Audit.Active, metricsFlush = false)
+    val svc = new RemoteQueryService(s"http://127.0.0.1:${srv.start()}")
+    try onThreads(2)(_ => svc.httpStatus("POST",
+        s"/query/create?table=t&query=${enc("GRP == 1")}"))
+      .foreach { case (st, body) => assert(st == 200, body) }
+    finally srv.stop()
+  }
+
+  test("four threads paging one session serve each page exactly once") {
+    val df = (1 to 500).map(i => (i.toLong, (i % 3).toLong)).toDF("id", "grp")
+    val srv = new QueryServer(tables = Map("t" -> df), metricsFlush = false)
+    val svc = new RemoteQueryService(s"http://127.0.0.1:${srv.start()}")
+    try {
+      val id = svc.createQuery("t", "GRP == 1", pageSize = 17, orderBy = Seq("id"))
+      val served = onThreads(4) { _ =>
+        val out = Seq.newBuilder[(Long, Seq[Long])]
+        var st = 200
+        while (st == 200) {
+          val (s, body) = svc.httpStatus("GET", s"/query/next?id=$id")
+          st = s
+          if (s == 200)
+            out += pageOf(body) -> idRe.findAllMatchIn(body).map(_.group(1).toLong).toSeq
+          else assert(s == 204, body)
+        }
+        out.result()
+      }.flatten
+      val expected = (1L to 500L).filter(_ % 3 == 1)
+      assert(served.map(_._1).sorted == (1L to (expected.size + 16) / 17))
+      assert(served.flatMap(_._2).sorted == expected)
+      svc.close(id)
+    } finally srv.stop()
+  }
+
+  test("a close racing a stream of nexts leaves no cursor or definition behind") {
+    val df = (1 to 400).map(i => (i.toLong, (i % 3).toLong)).toDF("id", "grp")
+    val stateDir = java.nio.file.Files.createTempDirectory("graft-close-race")
+    val srv = new QueryServer(tables = Map("t" -> df),
+      stateDir = stateDir.toString, metricsFlush = false)
+    val svc = new RemoteQueryService(s"http://127.0.0.1:${srv.start()}")
+    // a page's offset read and write are a few milliseconds apart, so
+    // one race rarely lands a close between them: run several
+    try (1 to 12).foreach { round =>
+      val id = svc.createQuery("t", "GRP == 1", pageSize = 1, orderBy = Seq("id"))
+      val paging = new CountDownLatch(3)
+      val statuses = onThreads(4) {
+        case 0 =>
+          // close while pages are flowing, so that one is likely in flight
+          paging.await(30, TimeUnit.SECONDS)
+          Thread.sleep(round * 5L)
+          Seq(svc.httpStatus("POST", s"/query/close?id=$id")._1)
+        case _ =>
+          val out = Seq.newBuilder[Int]
+          var st = 200
+          while (st == 200) {
+            st = svc.httpStatus("GET", s"/query/next?id=$id")._1
+            out += st
+            paging.countDown()
+          }
+          out.result()
+      }
+      assert(statuses.head == Seq(200), s"close, round $round")
+      assert(statuses.tail.flatten.forall(Set(200, 204, 404)), statuses)
+      assert(!java.nio.file.Files.exists(stateDir.resolve(s"$id.offset")),
+        s"a page wrote its offset after the close, round $round")
+      assert(!java.nio.file.Files.exists(
+        stateDir.resolve("sessions").resolve(s"$id.properties")))
+      assert(svc.httpStatus("GET", s"/query/next?id=$id")._1 == 404)
+    } finally srv.stop()
+  }
+
+  test("stop() ends the worker threads of every server") {
+    val df = (1 to 20).map(i => (i.toLong, (i % 2).toLong)).toDF("id", "grp")
+    val baseline = workerThreads()
+    val srvs = Seq.fill(2)(new QueryServer(tables = Map("t" -> df), metricsFlush = false))
+    srvs.foreach { srv =>
+      val svc = new RemoteQueryService(s"http://127.0.0.1:${srv.start()}")
+      onThreads(2)(_ => svc.httpStatus("GET", "/query/list")._1)
+        .foreach(st => assert(st == 200))
+    }
+    val mine = workerThreads() -- baseline
+    assert(mine.nonEmpty)
+    srvs.foreach(_.stop())
+    val deadline = System.currentTimeMillis() + 10000
+    while (mine.exists(_.isAlive) && System.currentTimeMillis() < deadline)
+      Thread.sleep(20)
+    assert(!mine.exists(_.isAlive), mine.filter(_.isAlive).map(_.getName))
+    assert(workerThreads().size == baseline.size)
   }
 }
