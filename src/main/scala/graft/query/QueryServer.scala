@@ -63,15 +63,18 @@ import scala.util.control.NonFatal
   * different sessions overlap (each DataWave REST call runs on its own
   * container thread too). The pages of one session run one at a time:
   * every verb that pages, replaces, copies or ends a live session, and
-  * every job over its frame, runs under that session's monitor ([[live]],
-  * [[reading]]) after re-checking that the session is still the live
-  * one; the pages of different sessions never wait for each other.
-  * [[shareLock]] is taken before a session's monitor, never after it,
-  * and no code holding it runs a Spark job: a restart-resume plans
-  * before taking it. Two waits remain under it: a close waits for the
-  * job in flight on its own session (a page, or a CachedResults row
-  * write), and `/cachedresults/create` restoring a source alias after a
-  * restart re-plans the alias's owning query.
+  * every job over its frame, runs under that session's monitor
+  * ([[onLive]], [[reading]]) after re-checking that the session is still
+  * the live one; the pages of different sessions never wait for each
+  * other. A session comes alive ([[open]]) under its own monitor, so no
+  * verb sees it before its definition is on disk. [[shareLock]] may be
+  * taken under a session's monitor, never the other way round (the
+  * fresh monitor [[open]] takes is free by construction), and no code
+  * holding it runs a Spark job or waits for one: a restart-resume plans
+  * before taking it, and a close waits for the job in flight on its
+  * session before. One wait remains under it: `/cachedresults/create`
+  * restoring a source alias after a restart re-plans the alias's owning
+  * query.
   */
 final class QueryServer(
     tables: Map[String, DataFrame],
@@ -175,10 +178,10 @@ final class QueryServer(
   private var server: HttpServer = _
   /** The exchange pool [[start]] gives the server; [[stop]] drains it. */
   private var workers: ExecutorService = _
-  /** Serializes the CachedResults alias registry, [[teardown]] (which
-    * unbinds a query's aliases with it) and a restart-resume's
-    * register-if-absent. A session's own state is guarded by its monitor
-    * ([[live]]), taken after this lock when both are needed. */
+  /** Serializes the CachedResults alias registry, [[teardown]]'s
+    * unbind-and-remove step and a restart-resume's register-if-absent. A
+    * session's own state is guarded by its monitor ([[onLive]]), taken
+    * before this lock when both are needed. */
   private val shareLock = new Object
 
   // ---- state expiration ----------------------------------------------
@@ -271,12 +274,13 @@ final class QueryServer(
 
   /** One expiration sweep as of `now` — the library entry point the
     * timer (`expirationSweepMillis`) and `/admin/expire` both call.
-    * Two passes under the share lock, each DURABLE (the evicted state
-    * is deleted from stateDir, so a restart stays expired):
+    * Two passes, each DURABLE (the evicted state is deleted from
+    * stateDir, so a restart stays expired):
     *
-    *  1. CachedResults TTL: every alias whose last load/update is older
-    *     than `cachedResultsTtlMillis` drops — view, binding, async
-    *     state, materialized rows (the reference's daysToLive cleanup).
+    *  1. CachedResults TTL, under the share lock: every alias whose last
+    *     load/update is older than `cachedResultsTtlMillis` drops — view,
+    *     binding, async state, materialized rows (the reference's
+    *     daysToLive cleanup).
     *  2. Idle sessions: every session (live or definition-only) whose
     *     last use is older than `queryIdleTimeoutMillis` tears down
     *     exactly as close does — EXCEPT sessions still holding a loaded
@@ -296,40 +300,39 @@ final class QueryServer(
     // Candidate scan OUTSIDE the lock: listing the sessions dir and
     // stat-ing a last-use time per id is O(every session) filesystem
     // work — largest on exactly the accumulated-state servers this
-    // tier exists for — and must not stall every verb behind it. The
-    // locked pass below re-checks each CANDIDATE (O(expired), not
-    // O(all)): a session touched between scan and lock stays.
+    // tier exists for — and must not stall every verb behind it. Each
+    // teardown below re-checks its CANDIDATE (O(expired), not O(all)).
     val idleCandidates =
       (sessions.keySet.asScala.toSet ++ durableSessionIds)
         .filter(id => now - lastUsedOf(id) > queryIdleTimeoutMillis)
-    val (nSessions, nAliases, reap) = shareLock.synchronized {
-      val deadAliases = loadedAliases.keySet.asScala.toSeq
+    val deadAliases = shareLock.synchronized {
+      val dead = loadedAliases.keySet.asScala.toSeq
         .filter(a => now - aliasTsOf(a) > cachedResultsTtlMillis)
-      deadAliases.foreach { a =>
+      dead.foreach { a =>
         auditor.audit(Audit.AuditRecord(a, "<expiration>",
           s"expired cachedresults alias '$a' (ttl ${cachedResultsTtlMillis}ms)",
           "", "expire", auditType.name, Seq.empty, now))
         unbindAlias(a)
       }
-      if (deadAliases.nonEmpty) persistAliases()
-      val held = loadedAliases.values.asScala.toSet
-      val deadSessions = idleCandidates.diff(held)
-        .toSeq.filter(id => now - lastUsedOf(id) > queryIdleTimeoutMillis)
-      // teardown first, audit only REAL evictions (a candidate closed
-      // between scan and lock tears down to a no-op and is not counted)
-      val torn = deadSessions.map(id => id -> teardown(id))
-      torn.foreach { case (id, (existed, _)) =>
-        if (existed) auditor.audit(Audit.AuditRecord(id, "<expiration>",
-          s"expired idle query '$id' (idle ${queryIdleTimeoutMillis}ms)",
-          "", "expire", auditType.name, Seq.empty, now))
-      }
-      (torn.count(_._2._1), deadAliases.size,
-        deadAliases ++ torn.flatMap(_._2._2))
+      if (dead.nonEmpty) persistAliases()
+      dead
+    }
+    // each candidate is re-checked inside its teardown's locked step: a
+    // session touched since the scan, or holding a loaded alias, stays.
+    // Only REAL evictions are audited (a candidate closed meanwhile
+    // tears down to a no-op and is not counted)
+    val torn = idleCandidates.toSeq.map(id => id -> teardown(id,
+      evict = !loadedAliases.containsValue(id) &&
+        now - lastUsedOf(id) > queryIdleTimeoutMillis))
+    torn.foreach { case (id, (existed, _)) =>
+      if (existed) auditor.audit(Audit.AuditRecord(id, "<expiration>",
+        s"expired idle query '$id' (idle ${queryIdleTimeoutMillis}ms)",
+        "", "expire", auditType.name, Seq.empty, now))
     }
     // the heavy filesystem deletes run after the lock released — the
     // sweep must not stall every verb for their duration
-    reapRows(reap)
-    (nSessions, nAliases)
+    reapRows(deadAliases ++ torn.flatMap(_._2._2))
+    (torn.count(_._2._1), deadAliases.size)
   }
 
   /** `POST /admin/expire[?asOf=millis]` — run the expiration sweep on
@@ -361,7 +364,12 @@ final class QueryServer(
     * work too heavy for the share lock. Callers pass the unbound names
     * to [[reapRows]] AFTER releasing it. */
   private def unbindAlias(a: String): Unit = {
-    sparkOf.foreach(_.catalog.dropTempView(a))
+    // the session catalog's drop, not `catalog.dropTempView`: that one
+    // also uncaches every cached plan with the view's result — the
+    // owning session's frame, which other live sessions of the same
+    // query share and may be scanning right now. Frames are cached and
+    // released by [[open]] and [[release]] alone.
+    sparkOf.foreach(_.sessionState.catalog.dropTempView(a))
     loadedAliases.remove(a)
     asyncLoads.remove(a)
     aliasSql.remove(a)
@@ -485,6 +493,16 @@ final class QueryServer(
         } else ok
       }
     }
+
+  /** The write phase of load, update and loadAsync: `alias`'s rows from
+    * `s`'s frame, the one its view was registered over, under the monitor
+    * of `id`'s live session ([[onLive]]) — `s` itself, or the session a
+    * reset or a settings update put in its place over the same frame.
+    * False when the query was closed meanwhile, or an update re-planned
+    * it: the view's frame then belongs to no session. */
+  private def writeStaged(id: String, s: Session, alias: String): Boolean =
+    onLive(id)(cur => (cur.df eq s.df) && writeRowsFor(s.df, alias, id))
+      .getOrElse(false)
 
   private def loadAliases(): Unit = {
     if (!java.nio.file.Files.exists(aliasFile)) return
@@ -695,8 +713,7 @@ final class QueryServer(
       case Right(id) =>
         // the session was registered by doCreate under this id; a
         // concurrent close between then and here just yields 204
-        try Option(sessions.get(id))
-          .flatMap(s => live(id, s)(s.running.nextPageJson()).flatten) match {
+        try onLive(id)(_.running.nextPageJson()).flatten match {
           case Some((rows, pageNum)) => (200, firstPage(id, rows, pageNum))
           case None => reapRows(teardown(id)._2); (204, "")
         } catch {
@@ -779,17 +796,24 @@ final class QueryServer(
     val running = new RunningQuery(cursor, id, df, defn.orderBy,
       defn.pageSize, startPage = startPage, sink = pageSink, attempt = attempt)
     val s = Session(defn, df, running)
-    frameLock.synchronized { if (!shared(df)) df.persist(); sessions.put(id, s) }
-    // a birth or resume is a use for the idle clock — and for an
-    // ephemeral lookup session, its ONLY last-use record
-    touchSession(id)
-    // page-ordinal base: pages after this write are served at THIS
-    // pageSize, so a resume recovers the true ordinal as
-    // base + (offsetNow - offsetBase) / pageSize even when an earlier
-    // pageSize produced the prior offset rows
-    if (defn.table.nonEmpty)
-      writeDef(id, Saved(defn, running.pagesServed, cursor.currentOffset(id),
-        attempt))
+    // under the new session's monitor, which no other thread can hold
+    // yet: a verb that finds it registered ([[onLive]]) waits until its
+    // definition is written, so a close cannot delete the file before
+    // this write recreates it, and two replacements of one id never
+    // write it at once
+    running.synchronized {
+      frameLock.synchronized { if (!shared(df)) df.persist(); sessions.put(id, s) }
+      // a birth or resume is a use for the idle clock — and for an
+      // ephemeral lookup session, its ONLY last-use record
+      touchSession(id)
+      // page-ordinal base: pages after this write are served at THIS
+      // pageSize, so a resume recovers the true ordinal as
+      // base + (offsetNow - offsetBase) / pageSize even when an earlier
+      // pageSize produced the prior offset rows
+      if (defn.table.nonEmpty)
+        writeDef(id, Saved(defn, running.pagesServed, cursor.currentOffset(id),
+          attempt))
+    }
     s
   }
 
@@ -902,45 +926,53 @@ final class QueryServer(
   }
 
   /** `body` on the caller's session, live or resumed from its durable
-    * definition, under the session's monitor ([[live]]): 404 when there
+    * definition, under the session's monitor ([[onLive]]): 404 when there
     * is none, and the owner gate's refusal for anyone but its owner (or
-    * an admin). A session closed or replaced while we waited for its
-    * monitor is looked up again. */
+    * an admin). */
   private def withSession(params: Map[String, String])(
-      body: Session => (Int, String)): (Int, String) =
-    session(params) match {
-      case None => (404, err("unknown queryId"))
-      case Some(s) => ownerGate(params, s.defn.owner).getOrElse(
-        live(qid(params), s)(body(s)).getOrElse(withSession(params)(body)))
+      body: Session => (Int, String)): (Int, String) = {
+    session(params) // resumes a defined or restarted query
+    onLive(qid(params))(s => ownerGate(params, s.defn.owner).getOrElse(body(s)))
+      .getOrElse((404, err("unknown queryId")))
+  }
+
+  /** `body` on `id`'s live session under that session's monitor, looked
+    * up again whenever it was replaced (reset, update) while we waited
+    * for the monitor; None when no session is live. Every verb that
+    * pages, replaces, copies or ends a live session runs here, so one
+    * session's pages run one at a time ([[RunningQuery]]'s page counter
+    * and the cursor's read-then-write offset file are not thread-safe)
+    * and a close cannot slip between a page's offset read and its write.
+    * [[shareLock]] may be taken under the monitor, never the reverse. */
+  @annotation.tailrec
+  private def onLive[A](id: String)(body: Session => A): Option[A] =
+    Option(sessions.get(id)) match {
+      case None => None
+      case Some(s) =>
+        s.running.synchronized {
+          if (sessions.get(id) eq s) Some(body(s)) else None
+        } match {
+          case None => onLive(id)(body)
+          case done => done
+        }
     }
 
-  /** `body` under session `s`'s monitor if `s` is still `id`'s live
-    * session; None when it was closed or replaced meanwhile. Every verb
-    * that pages, replaces, copies or ends a live session runs here, so
-    * one session's pages run one at a time ([[RunningQuery]]'s page
-    * counter and the cursor's read-then-write offset file are not
-    * thread-safe) and a close cannot slip between a page's offset read
-    * and its write. Nothing under the monitor takes [[shareLock]]. */
-  private def live[A](id: String, s: Session)(body: => A): Option[A] =
-    s.running.synchronized { if (sessions.get(id) eq s) Some(body) else None }
-
-  /** `body` under the monitors of the live sessions among `ids` (taken
-    * in id order): a job reading their frames through a CachedResults
-    * view runs while none of them can be released. Spark re-persists a
-    * cached frame's buffers when a scan planned before its unpersist
-    * runs after it, and nothing would ever drop those again — so every
-    * job the server runs over a session's frame (pages, row writes, view
-    * reads) holds that session's monitor, and [[release]] runs only
-    * under it. */
-  private def reading[A](ids: Seq[String])(body: => A): A =
-    ids.distinct.sorted match {
-      case Seq() => body
-      case id +: rest => Option(sessions.get(id)) match {
-        case None => reading(rest)(body)
-        case Some(s) =>
-          live(id, s)(reading(rest)(body)).getOrElse(reading(id +: rest)(body))
-      }
+  /** `body` under the monitors of the live sessions among `owners`
+    * (taken in id order, and taken again if the owners changed while we
+    * waited): a job reading their frames through CachedResults views
+    * runs while none of them can be released. Spark re-persists a cached
+    * frame's buffers when a scan planned before its unpersist runs after
+    * it, and nothing would ever drop those again — so every job the
+    * server runs over a session's frame (pages, row writes, view reads)
+    * holds that session's monitor, and [[release]] runs only under it. */
+  private def reading[A](owners: => Seq[String])(body: => A): A = {
+    val ids = owners.distinct.sorted
+    def holding(held: Seq[String]): Option[A] = held match {
+      case Seq() => if (owners.distinct.sorted == ids) Some(body) else None
+      case id +: rest => onLive(id)(_ => holding(rest)).getOrElse(holding(rest))
     }
+    holding(ids).getOrElse(reading(owners)(body))
+  }
 
   /** Tear query `id` down ([[teardown]]) for close/cancel/remove:
     * `{"<done>": true}`, or 404 when nothing existed. */
@@ -1074,11 +1106,11 @@ final class QueryServer(
     val d = QueryDef("", query, syntax, auths = auths, owner = ownerOf(params),
       pageSize = pageSize(params, defaultPageSize))
     val id = newId()
-    val s = open(id, d,
+    open(id, d,
       audited(params, id, query, syntax, logicName, selectors)(body(auths)))
     created(params, id, d, logicName)
     // the first page rides the create response
-    live(id, s)(s.running.nextPageJson()).flatten match {
+    onLive(id)(_.running.nextPageJson()).flatten match {
       case Some((rows, pageNum)) => (200, firstPage(id, rows, pageNum))
       case None => (200, firstPage(id, Array.empty, 1))
     }
@@ -1458,45 +1490,62 @@ final class QueryServer(
         catch { case _: Exception => ex.close() }
     }
 
-  /** Shared close/cancel teardown: remove the session, release its
-    * frame (ref-counted), drop cursor state AND the durable definition.
-    * A session may exist only on disk (server restarted, nothing paged
-    * since) — close must still delete the stored definition + cursor,
-    * matching the reference storage-service delete-on-close, or the
-    * file leaks and a later `/query/next` silently resurrects the
-    * supposedly-closed query. Aliases the query loaded via
-    * `/cachedresults/load` UNBIND with it; the returned names must be
-    * handed to [[reapRows]] once the caller is outside the share lock
-    * (the rows deletes are too heavy to hold it through). Returns
-    * (session existed, unbound aliases). */
-  private def teardown(id: String): (Boolean, Seq[String]) =
-    shareLock.synchronized {
-      import scala.jdk.CollectionConverters._
+  /** Shared close/cancel/expire teardown: remove the session, release
+    * its frame (ref-counted), drop cursor state AND the durable
+    * definition. A session may exist only on disk (server restarted,
+    * nothing paged since) — close must still delete the stored
+    * definition + cursor, matching the reference storage-service
+    * delete-on-close, or the file leaks and a later `/query/next`
+    * silently resurrects the supposedly-closed query. Aliases the query
+    * loaded via `/cachedresults/load` UNBIND with it; the returned names
+    * must be handed to [[reapRows]] (the rows deletes are too heavy for
+    * the share lock). A live session ends under its monitor: a page or
+    * row write in flight finishes first, none starts after, and the
+    * wait holds no server-wide lock. The unbind, the definition delete
+    * and the removal from `sessions` then run as one step under
+    * [[shareLock]], so a load either binds its alias before (and sees
+    * it unbound) or finds no query, and a restart-resume finds the
+    * session or no definition. `evict` is checked in that step; when it
+    * is false nothing is torn down. Returns (session existed, unbound
+    * aliases). */
+  private def teardown(id: String, evict: => Boolean = true)
+      : (Boolean, Seq[String]) = {
+    import scala.jdk.CollectionConverters._
+    def unbind(): Seq[String] = {
       val aliases =
         loadedAliases.asScala.collect { case (a, q) if q == id => a }.toSeq
       aliases.foreach(unbindAlias) // durable: reapRows deletes the stores
       if (aliases.nonEmpty) persistAliases()
-      val existed = endLive(id) || {
-        val hadFile = java.nio.file.Files.exists(sessionFile(id))
-        if (hadFile) { cursor.close(id); dropSessionFile(id) }
-        hadFile
-      }
-      // after endLive: a page in flight may still have touched the clock
-      lastUsed.remove(id)
-      lastDiskTouch.remove(id)
-      (existed, aliases)
+      aliases
     }
-
-  /** End `id`'s live session under its monitor ([[live]]): a page in
-    * flight finishes first and none starts after; the frame is released
-    * and the cursor state and definition dropped. False when no session
-    * is live. */
-  private def endLive(id: String): Boolean = Option(sessions.get(id)) match {
-    case None => false
-    case Some(s) =>
-      live(id, s) {
-        sessions.remove(id); release(s); cursor.close(id); dropSessionFile(id)
-      }.isDefined || endLive(id)
+    def forget(): Unit = { lastUsed.remove(id); lastDiskTouch.remove(id) }
+    onLive(id) { s =>
+      val ended = shareLock.synchronized {
+        if (!evict) None
+        else {
+          val aliases = unbind()
+          dropSessionFile(id)
+          sessions.remove(id)
+          Some(aliases)
+        }
+      }
+      ended.foreach { _ => release(s); cursor.close(id); forget() }
+      ended.fold((false, Seq.empty[String]))((true, _))
+    }.getOrElse {
+      // no live session: the definition alone, unless a resume opened
+      // one since we looked
+      shareLock.synchronized {
+        if (sessions.containsKey(id)) None
+        else if (!evict) Some((false, Seq.empty[String]))
+        else {
+          val hadFile = java.nio.file.Files.exists(sessionFile(id))
+          if (hadFile) { cursor.close(id); dropSessionFile(id) }
+          val aliases = unbind()
+          forget()
+          Some((hadFile, aliases))
+        }
+      }.getOrElse(teardown(id, evict))
+    }
   }
 
   /** `GET /lookupContentUUID?terms=TYPE:value[,…][&uidField=c]` — the
@@ -2079,7 +2128,7 @@ final class QueryServer(
         // a raced close/re-point degrades durability only — the live
         // view serves, and a restart takes the resume path (the
         // uncommitted/absent store reads as absent).
-        val durable = live(id, s)(writeRowsFor(s.df, alias, id)).getOrElse(false)
+        val durable = writeStaged(id, s, alias)
         (200, s"""{"view": ${quote(alias)}, "durable": $durable}""")
     }
   }
@@ -2135,7 +2184,7 @@ final class QueryServer(
         // the re-point replaces the durable rows too — a restart must
         // serve the NEW query's materialization; a failed write or a
         // raced close/re-point degrades to the resume path
-        val durable = live(id, s)(writeRowsFor(s.df, alias, id)).getOrElse(false)
+        val durable = writeStaged(id, s, alias)
         (200, s"""{"view": ${quote(alias)}, "durable": $durable}""")
     }
   }
@@ -2298,8 +2347,7 @@ final class QueryServer(
         }
         try session(Map("id" -> id)) match {
           case Some(s) =>
-            // serialized per alias, and under the session's monitor
-            live(id, s)(writeRowsFor(s.df, alias, id))
+            writeStaged(id, s, alias)
             ifStillOurs {
               s.df.createOrReplaceTempView(alias)
               asyncLoads.put(alias.toLowerCase, "LOADED")
@@ -2481,7 +2529,6 @@ final class QueryServer(
       val n = rowEnd - rowBegin + 1
       require(n <= 100000, s"row range too large ($n; max 100000)")
       val spark = sparkOf.getOrElse(return (500, err("no tables registered")))
-      val view = spark.table(alias)
       // TOTAL order: every column participates, so tied leading values
       // cannot shuffle rows across page boundaries between requests
       // (only fully-identical rows are interchangeable — unobservable).
@@ -2489,6 +2536,7 @@ final class QueryServer(
       // materializes a row-id column at load time instead (the
       // reference's MySQL table has its row id for exactly this).
       val rows = reading(Option(loadedAliases.get(alias.toLowerCase)).toSeq) {
+        val view = spark.table(alias)
         view.orderBy(view.columns.map(view.col): _*)
           .offset((rowBegin - 1).toInt).limit(n.toInt).toJSON.collect()
       }

@@ -157,6 +157,69 @@ class ServerConcurrencySpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("an update or reset racing a close leaves no definition behind") {
+    val df = (1 to 200).map(i => (i.toLong, (i % 3).toLong)).toDF("id", "grp")
+    val stateDir = java.nio.file.Files.createTempDirectory("graft-replace-race")
+    val srv = new QueryServer(tables = Map("t" -> df),
+      stateDir = stateDir.toString, metricsFlush = false)
+    val svc = new RemoteQueryService(s"http://127.0.0.1:${srv.start()}")
+    // a replacement registers the new session and then writes its
+    // definition; a close landing between the two must not leave the
+    // file behind for a later /query/next to resume
+    try (1 to 12).foreach { round =>
+      val id = svc.createQuery("t", "GRP == 1", pageSize = 5, orderBy = Seq("id"))
+      val replacing = new CountDownLatch(3)
+      val statuses = onThreads(4) {
+        case 0 =>
+          replacing.await(30, TimeUnit.SECONDS)
+          Thread.sleep(round * 3L)
+          Seq(svc.httpStatus("POST", s"/query/close?id=$id")._1)
+        case t =>
+          val out = Seq.newBuilder[Int]
+          var (st, n) = (200, 0)
+          // bounded: a close that did not take would keep these at 200
+          while (st == 200 && n < 300) {
+            st = svc.httpStatus("POST",
+              if ((t + n) % 2 == 0) s"/query/reset?id=$id"
+              else s"/query/update?id=$id&query=${enc(s"GRP == ${n % 3}")}")._1
+            out += st
+            n += 1
+            replacing.countDown()
+          }
+          out.result()
+      }
+      assert(statuses.head == Seq(200), s"close, round $round")
+      // a replacement never fails half-way: it applies, or finds no query
+      assert(statuses.tail.flatten.forall(Set(200, 404)), statuses)
+      assert(!java.nio.file.Files.exists(
+        stateDir.resolve("sessions").resolve(s"$id.properties")),
+        s"a replacement rewrote the definition after the close, round $round")
+      assert(svc.httpStatus("GET", s"/query/next?id=$id")._1 == 404)
+    } finally srv.stop()
+  }
+
+  test("closing a query that exported an alias keeps its sibling's frame cached") {
+    val df = (1 to 60).map(i => (i.toLong, (i % 3).toLong)).toDF("id", "grp")
+    val srv = new QueryServer(tables = Map("t" -> df), metricsFlush = false)
+    val svc = new RemoteQueryService(s"http://127.0.0.1:${srv.start()}")
+    def cachedRdds = spark.sparkContext.getPersistentRDDs.size
+    try {
+      val before = cachedRdds
+      // one query twice: the two frames share one cache entry
+      val a = svc.createQuery("t", "GRP == 1", pageSize = 5, orderBy = Seq("id"))
+      val b = svc.createQuery("t", "GRP == 1", pageSize = 5, orderBy = Seq("id"))
+      assert(svc.httpStatus("GET", s"/query/next?id=$b")._1 == 200)
+      val cached = cachedRdds
+      assert(cached > before)
+      assert(svc.httpStatus("POST", s"/cachedresults/load?id=$a&alias=sib_a")._1 == 200)
+      // the close drops a's alias view; b still pages the shared entry
+      assert(svc.httpStatus("POST", s"/query/close?id=$a")._1 == 200)
+      assert(cachedRdds == cached, "closing a de-cached its sibling's frame")
+      svc.close(b)
+      assert(cachedRdds == before)
+    } finally srv.stop()
+  }
+
   test("stop() ends the worker threads of every server") {
     val df = (1 to 20).map(i => (i.toLong, (i % 2).toLong)).toDF("id", "grp")
     val baseline = workerThreads()
