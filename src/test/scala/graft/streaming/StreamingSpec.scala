@@ -354,6 +354,56 @@ class StreamingSpec extends SparkSpec {
     assert(storeIds == 0)
   }
 
+  test("nearDupStream killed after its pairs, bands or shingles write replays to the one-shot pair set") {
+    // the real stream path, killed at each step of its write sequence
+    // for batch 1: before the bands write (pairs landed), before the
+    // shingles write (bands registered) and before the checkpoint
+    // commit (all three landed). The restart replays batch 1.
+    val docs = nearDupCorpus
+    val oneShot = pairSet(graft.operators.Dedup.minhashLshPairs(docs, n = 3,
+      threshold = 0.8))
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val fmKey = "spark.sql.streaming.checkpointFileManagerClass"
+    for ((killed, pattern) <- Seq(
+        "pairs" -> "/store/bands/batch=1(/|$)",
+        "bands" -> "/store/shingles/batch=1(/|$)",
+        "shingles" -> "/ck/commits/\\.?1(\\.|$)")) {
+      val tmp = java.nio.file.Files.createTempDirectory("graft-sndk").toString
+      docs.repartition(3).write.parquet(s"$tmp/in")
+      graft.operators.Dedup.seedDedupStoreBatched(docs, s"$tmp/store", n = 3)
+      def start() = StreamingIngest.nearDupStream(
+        spark.readStream.schema("doc_id BIGINT, text STRING")
+          .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in"),
+        s"$tmp/store", s"$tmp/pairs", s"$tmp/ck", threshold = 0.8).start()
+      hconf.set("fs.file.impl", classOf[ChaosFs].getName)
+      hconf.setBoolean("fs.file.impl.disable.cache", true)
+      // commit-log writes go through the FileSystem API, so the last
+      // kill point is reachable through the same injected file system
+      spark.conf.set(fmKey, "org.apache.spark.sql.execution.streaming" +
+        ".checkpointing.FileSystemBasedCheckpointFileManager")
+      try {
+        ChaosFs.arm(pattern)
+        intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+          start().awaitTermination(120000)
+        }
+        assert(ChaosFs.fired, s"kill after $killed never fired")
+        start().awaitTermination(120000)
+      } finally {
+        ChaosFs.disarm()
+        hconf.unset("fs.file.impl")
+        hconf.unset("fs.file.impl.disable.cache")
+        spark.conf.unset(fmKey)
+      }
+      val streamed = pairSet(spark.read.parquet(s"$tmp/pairs")
+        .select("id_a", "id_b", "inter", "uni"))
+      assert(streamed == oneShot, s"killed after $killed")
+      val dupShingles = spark.read.parquet(s"$tmp/store/shingles")
+        .groupBy("doc_id").count().filter(col("count") > 1).count()
+      assert(dupShingles == 0, s"killed after $killed")
+      graft.core.Fs.deleteRecursively(java.nio.file.Paths.get(tmp))
+    }
+  }
+
   test("streamed composed curation equals the batch pipeline under any split, replay-idempotent") {
     // corpus shaped to exercise every stage: quality drops some rows,
     // duplicates span batches (later batch carries the SMALLER id so
