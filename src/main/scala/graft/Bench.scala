@@ -110,15 +110,13 @@ object Bench {
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
         s""""failed":$failedJson,"sf":"$sfDir"}"""
-    // The one-line JSON contract. The stdout println alone has never
-    // reached the stream the driver parses (BENCH_r01..r13 all have
-    // parsed:null — under a forked sbt run the stdout line is lost while
-    // stderr survives), so emit the SAME line on every channel the
-    // driver might capture: stdout (the original contract), stderr
-    // (tagged, like the per-query lines above), and a file next to the
-    // build. Numbers and methodology are unchanged.
-    println(json)
-    System.out.flush()
+    // The one-line JSON contract, on every channel the driver might
+    // capture: stderr (tagged, like the per-query lines above), a file
+    // next to the build, and stdout. The stdout line comes LAST, after
+    // the session stops, so it is the final line the program prints
+    // (build.sbt passes the forked run's stdout through untagged, and an
+    // archived tail keeps the end of the stream). Numbers and
+    // methodology are unchanged.
     System.err.println(s"[bench-json] $json")
     System.err.flush()
     try java.nio.file.Files.write(
@@ -129,5 +127,7 @@ object Bench {
       case NonFatal(e) => System.err.println(s"[bench] result file not written: $e")
     }
     spark.stop()
+    println(json)
+    System.out.flush()
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 import graft.content.{AnalyzedContent, Analyzer}
 import graft.operators.{Dedup, VectorOps}
 
@@ -48,6 +49,10 @@ object Warmup {
       "ngram" -> Dedup.ngramJaccardPairs(docs, n = 3, threshold = 0.8),
       // dedup_minhash_lsh: transform(|aggregate(|filter(|explode|posexplode|generate
       "minhash" -> Dedup.minhashLshPairs(docs, n = 3, threshold = 0.8),
+      // dedup_incremental: transform( (the batch's shingle hashes — the
+      // driver-side probe builds candidates without an explode)
+      "shingle_hashes" -> docs.select(col("doc_id"),
+        Dedup.hashedShingles(col("text"), 3).as("sh")),
       // ann_lsh: aggregate(|zip_with(|explode|generate
       "ann_lsh" -> VectorOps.lshTopK(emb, probeId = 0L, k = 5).select("vec_id"),
       // emb_neardup_cell: transform(|aggregate(|zip_with(|explode|generate
@@ -106,6 +111,11 @@ object Warmup {
         df.count()
         if (debug) System.err.println(
           f"[warm] kernel:$name%-17s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      } catch { case _: Throwable => () }
+      } catch {
+        // a warm pass is best-effort: a kernel that fails here fails
+        // again, with its cause, in the gate that runs it
+        case NonFatal(e) =>
+          System.err.println(s"[warm] kernel:$name failed: $e")
+      }
     }
 }

@@ -58,13 +58,19 @@ object BatchStore {
   /** Register a processed batch's rows under `batch=batchId` —
     * overwrite, so retries and crash-replays of the same id replace
     * rather than duplicate; a no-op at or below the compaction horizon
-    * (the rows already live in `batch=compacted`). */
+    * (the rows already live in `batch=compacted`). `files` > 0 writes
+    * that many files (a caller that knows the row count sizes them with
+    * [[DriverSet.files]]); 0 keeps one file per writing task. */
   def registerBatch(rows: DataFrame, tableDir: String,
-                    batchId: Long): Unit = {
+                    batchId: Long, files: Int = 0): Unit = {
     if (batchId <= compactedThrough(tableDir)) return
     Fs.recoverSwap(tableDir)
-    rows.write.mode("overwrite").parquet(s"$tableDir/batch=$batchId")
+    sized(rows, files).write.mode("overwrite")
+      .parquet(s"$tableDir/batch=$batchId")
   }
+
+  private def sized(df: DataFrame, files: Int): DataFrame =
+    if (files > 0) df.coalesce(files) else df
 
   /** Offline compaction (run only while the stream is STOPPED): every
     * partition collapses into `batch=compacted` — keeping the `batch=`
@@ -226,15 +232,18 @@ object BatchStore {
     * tier: materialize the pair frame once, emit it under
     * `pairsDir/batch_id=N` (overwrite — replay replaces), then register
     * the batch's store rows. The caller computes `pairs` and `rows`
-    * from ONE signature pass and owns unpersisting any inputs. */
+    * from ONE signature pass and owns unpersisting any inputs; the file
+    * counts follow [[registerBatch]]. */
   def emitAndRegister(pairs: DataFrame, rows: DataFrame, tableDir: String,
-                      pairsDir: String, batchId: Long): Unit = {
+                      pairsDir: String, batchId: Long, pairFiles: Int = 0,
+                      rowFiles: Int = 0): Unit = {
     // the pair frame is consumed by exactly ONE action (the parquet
     // write), so no persist/count round-trip — those were a second full
     // job per trigger on the hot streaming path. The caller persists
     // the SHARED inputs (signature frames feeding both the pair plan
     // and the registration) and owns their unpersist.
-    pairs.write.mode("overwrite").parquet(s"$pairsDir/batch_id=$batchId")
-    registerBatch(rows, tableDir, batchId)
+    sized(pairs, pairFiles).write.mode("overwrite")
+      .parquet(s"$pairsDir/batch_id=$batchId")
+    registerBatch(rows, tableDir, batchId, rowFiles)
   }
 }

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Deduplication operators for a training-data pipeline:
   *
@@ -651,7 +652,8 @@ object Dedup {
 
   private def storeParams(spark: org.apache.spark.sql.SparkSession,
                           dir: String): (Int, Int, Int) = {
-    val r = spark.read.parquet(s"$dir/params").head()
+    val r = spark.read.schema("n INT, num_hashes INT, bands INT")
+      .parquet(s"$dir/params").head()
     (r.getAs[Int]("n"), r.getAs[Int]("num_hashes"), r.getAs[Int]("bands"))
   }
 
@@ -734,7 +736,7 @@ object Dedup {
     * its registration instead of duplicating shingle rows (the flat
     * [[appendDedupStore]] is append-mode and relies on the caller never
     * re-appending). Readers see one extra `batch` partition column;
-    * [[incrementalPairsPlan]] projects it away. `docs` contributes only
+    * [[storedBands]] projects it away. `docs` contributes only
     * its SCHEMA (zero rows are written from it). */
   def seedDedupStoreBatched(docs: DataFrame, dir: String, n: Int = 3,
                             numHashes: Int = 128, bands: Int = 32): Unit = {
@@ -769,127 +771,198 @@ object Dedup {
     * ([[graft.streaming.StreamingIngest.nearDupStream]] delegates here):
     * emit the batch's pairs vs the store-so-far plus itself into
     * `pairsDir/batch_id=N` (overwrite — replay-safe), then register the
-    * batch under `batch=N`. The batch's shingles and band table are
-    * computed ONCE — the pair plan's cached frames are reused for the
-    * registration instead of re-deriving the interpreted MinHash
-    * signatures a second time. */
+    * batch under `batch=N`, bands before shingles. The registration
+    * writes the probe's cached signature frames, so the MinHash
+    * signatures are computed once per trigger. A batch without band rows
+    * (zero rows, or every doc shorter than `n` tokens) writes nothing:
+    * the probe's batch-side job already saw that, so no separate
+    * emptiness job runs. On the driver path each write's file count
+    * follows the row count the driver holds ([[graft.core.DriverSet
+    * .files]]) instead of one file per task. */
   private[graft] def streamBatchNearDup(batch: DataFrame, storeDir: String,
                                         pairsDir: String, batchId: Long,
                                         threshold: Double,
                                         params: Option[(Int, Int, Int)] = None)
       : Unit = {
-    val (pairs, cached) = incrementalPairsPlan(batch, storeDir, threshold,
-      params)
-    // cached = (newSh, newBands, …) — the batch's signature frames are
-    // reused for the store registration instead of re-deriving the
-    // interpreted MinHash signatures a second time
-    graft.core.BatchStore.emitAndRegister(pairs, cached(1),
-      s"$storeDir/bands", pairsDir, batchId)
-    graft.core.BatchStore.registerBatch(cached.head,
-      s"$storeDir/shingles", batchId)
-    cached.foreach(_.unpersist())
+    val p = nearDupProbe(batch, storeDir, threshold, params)
+    try if (!p.empty) {
+      val spark = batch.sparkSession
+      def files(rows: Option[Long], of: DataFrame): Int =
+        rows.fold(0)(graft.core.DriverSet.files(spark, _,
+          graft.core.DriverSet.rowBytes(of)))
+      graft.core.BatchStore.emitAndRegister(p.pairs, p.newBands,
+        s"$storeDir/bands", pairsDir, batchId,
+        files(p.candRows, p.pairs), files(p.bandRows, p.newBands))
+      graft.core.BatchStore.registerBatch(p.newSh, s"$storeDir/shingles",
+        batchId, files(p.docRows, p.newSh))
+    } finally p.release()
   }
 
-  /** Lazy plan behind [[incrementalNearDupPairs]] — split out so specs
-    * can assert the join shapes (the public op materializes eagerly,
-    * hiding the plan behind a checkpoint scan). The cached seq is
-    * positional by contract: (newSh, newBands, cand, allSh) — callers
-    * unpersist all of them, and [[streamBatchNearDup]] reuses the first
-    * two for the store registration. */
-  private[graft] def incrementalPairsPlan(newDocs: DataFrame, dir: String,
-                                          threshold: Double,
-                                          params: Option[(Int, Int, Int)] = None)
-      : (DataFrame, Seq[DataFrame]) = {
+  /** One incremental probe of a batch against the signature store:
+    * `pairs` (lazy, the verified pair frame), the batch's persisted
+    * signature frames, and — on the driver path — the row counts the
+    * driver already holds (band rows, docs, candidate pairs). Callers
+    * [[release]] the cached frames once `pairs` has been consumed. */
+  private[graft] final class NearDupProbe(val pairs: DataFrame,
+                                          val newSh: DataFrame,
+                                          val newBands: DataFrame,
+                                          val bandRows: Option[Long],
+                                          val docRows: Option[Long],
+                                          val candRows: Option[Long],
+                                          cached: Seq[DataFrame]) {
+    def empty: Boolean = bandRows.contains(0L)
+    def release(): Unit = cached.foreach(_.unpersist())
+  }
+
+  /** Stored band rows, read with an explicit schema (no footer-inference
+    * job) in the batch's id type; with `buckets`, only rows whose bucket
+    * is one of the batch's — a filter pushed into the parquet scan, so
+    * the probe reads what can collide with the batch, not the store.
+    * Both store layouts read alike: the batch-partitioned one's `batch`
+    * column is projected away. */
+  private[graft] def storedBands(spark: org.apache.spark.sql.SparkSession,
+                                 dir: String, idType: DataType,
+                                 buckets: Option[Seq[Int]]): DataFrame = {
+    val all = storeTable(spark, s"$dir/bands", StructField("doc_id", idType),
+      StructField("band", IntegerType), StructField("bucket", IntegerType))
+    buckets.fold(all)(b => all.filter(col("bucket").isin(b: _*)))
+  }
+
+  private def storeTable(spark: org.apache.spark.sql.SparkSession,
+                         path: String, fields: StructField*): DataFrame =
+    spark.read.schema(StructType(fields)).parquet(path)
+      .select(fields.map(f => col(f.name)): _*)
+
+  /** Candidate pairs from band rows on the driver: every two batch docs
+    * sharing a (band, bucket), and every batch doc with each stored doc
+    * sharing one. Stored rows of the batch's own ids (a batch replayed
+    * after its registration) are skipped, so a replay finds the same
+    * candidates; a null id pairs with nothing, as in the join form.
+    * Unordered and distinct; the caller orders each pair with Spark's
+    * own `least`/`greatest`. */
+  private def candidatePairs(batch: Array[Row],
+                             stored: Array[Row]): Seq[(Any, Any)] = {
+    val byKey = batch.groupBy(r => (r.getInt(1), r.getInt(2)))
+    val batchIds = batch.iterator.map(_.get(0)).toSet
+    val out = scala.collection.mutable.LinkedHashSet.empty[(Any, Any)]
+    def add(a: Any, b: Any): Unit =
+      if (a != null && b != null && a != b && !out.contains((b, a)))
+        out += ((a, b))
+    byKey.valuesIterator.foreach { rs =>
+      for (i <- rs.indices; j <- i + 1 until rs.length)
+        add(rs(i).get(0), rs(j).get(0))
+    }
+    stored.foreach { s =>
+      if (!batchIds(s.get(0)))
+        byKey.get((s.getInt(1), s.getInt(2)))
+          .foreach(_.foreach(x => add(x.get(0), s.get(0))))
+    }
+    out.toSeq
+  }
+
+  /** The one implementation of incremental pair computation, behind
+    * [[streamBatchNearDup]] and [[incrementalNearDupPairs]]. Its cost
+    * follows the batch, not the store:
+    *
+    *  - batch side: ONE job fills the persisted `newSh`/`newBands`
+    *    caches and brings the batch's (doc_id, band, bucket) rows to the
+    *    driver;
+    *  - store side: the stored bands are read with the batch's bucket
+    *    set pushed into the scan, and the matching rows come to the
+    *    driver too; candidates and partner ids are built there;
+    *  - verify: [[verifyJaccard]] against the stored shingles of those
+    *    partner ids only (a pushed `doc_id` filter) plus the batch's own.
+    *
+    * Both driver-side sets obey [[graft.core.DriverSet]]'s ceiling. When
+    * either is over it, the same candidates come from plain Spark joins
+    * (no hints: AQE picks the sides), exactly as the rows would. */
+  private[graft] def nearDupProbe(newDocs: DataFrame, dir: String,
+                                  threshold: Double,
+                                  params: Option[(Int, Int, Int)] = None)
+      : NearDupProbe = {
+    import graft.core.DriverSet
     val spark = newDocs.sparkSession
     // restore a half-swapped compaction before reading either table
     graft.core.Fs.recoverSwap(s"$dir/bands")
     graft.core.Fs.recoverSwap(s"$dir/shingles")
-    // params are written once at seed time and immutable for the store's
-    // life, so a long-running stream resolves them ONCE at start and
-    // passes them down — re-reading the 1-row table was one extra job
-    // per micro-batch (guide §1.2: remove work per trigger)
+    // params are immutable for the store's life: a stream resolves them
+    // once at start and passes them down
     val (n, numHashes, bands) = params.getOrElse(storeParams(spark, dir))
     val newSh = shingled(newDocs, n).persist()
     val newBands = bandTable(newSh, numHashes, bands).persist()
-    val oldBands = spark.read.parquet(s"$dir/bands")
-    // stored side scanned once; the new batch is the broadcast side
-    val candCross = oldBands.as("y")
-      .join(broadcast(newBands.as("x")),
-        col("x.band") === col("y.band") &&
-          col("x.bucket") === col("y.bucket") &&
-          col("x.doc_id") =!= col("y.doc_id"))
-      .select(least(col("x.doc_id"), col("y.doc_id")).as("id_a"),
-        greatest(col("x.doc_id"), col("y.doc_id")).as("id_b"))
-    // the batch's own band table is broadcast-bounded BY DEFINITION (a
-    // micro-batch is small — it already broadcasts in candCross above);
-    // the size-blind planner otherwise schedules a SortMergeJoin with
-    // two exchanges+sorts for the self-join, and under AQE every
-    // materialized exchange is one more driver-sequenced job per
-    // trigger (guide §3.1 + §1.2; measured 81 jobs / 3 batches on
-    // stream_neardup before this wave)
-    val candSelf = newBands.as("x").join(broadcast(newBands.as("y")),
-        col("x.band") === col("y.band") &&
-          col("x.bucket") === col("y.bucket") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
-    // NO eager count here: the racing duplicate evaluations of the
-    // cold caches run on otherwise-idle task slots, while an extra
-    // materializing job per micro-batch is pure serial wall time —
-    // measured on the r13 bench pair: adding one count per batch cost
-    // stream_neardup +0.5 s and dedup_incremental +0.76 s (the batch
-    // ops whose subtrees DON'T saturate the cores keep the lazy shape;
-    // the corpus-wide ops with CPU-bill subtrees get the count — see
-    // ngramJaccardPairs).
-    val cand = candCross.unionByName(candSelf).distinct().persist()
-    // verify touches stored shingles for candidate PARTNERS only: one
-    // full scan of the store semi-join-pruned to candidate ids (AQE
-    // broadcasts the id side when small), persisted so the id_a and
-    // id_b branches of the verify join share the single pruned pass
-    // no .distinct(): a LEFT SEMI join's result is insensitive to
-    // duplicate build-side keys, so the dedup exchange was one pure
-    // extra shuffle (and one AQE job) per trigger; the exploded frame
-    // stays bounded by the batch's candidate pairs
-    val candIds = cand
-      .select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))
-    // the anti-join vs the batch's own ids makes the op idempotent
-    // under crash-replay AFTER a store append (the batched streaming
-    // layout): a doc whose shingles are already stored must not appear
-    // twice in the verify side. The select pins the shingle columns so
-    // a batch-partitioned store (extra `batch` partition column) unions
-    // cleanly with the fresh side.
-    // no .distinct() here either: newSh is one row per doc already and a
-    // LEFT ANTI join is insensitive to duplicate build-side keys
-    val newIds = newSh.select("doc_id")
-    val allSh = spark.read.parquet(s"$dir/shingles")
-      .select(newSh.columns.map(col).toIndexedSeq: _*)
-      .join(broadcast(candIds), Seq("doc_id"), "left_semi")
-      .join(broadcast(newIds), Seq("doc_id"), "left_anti")
-      .unionByName(newSh)
-      .persist()
-    // cand is bounded by the batch's candidate pairs — broadcast it into
-    // the verify join (two SMJ exchange+sort pairs otherwise); the
-    // corpus-wide callers of verifyJaccard keep their unhinted shape
-    (verifyJaccard(broadcast(cand), allSh, threshold),
-      Seq(newSh, newBands, cand, allSh))
+    val idType = newSh.schema("doc_id").dataType
+    val batchRows = DriverSet.collect(newBands)
+    val oldBands = storedBands(spark, dir, idType,
+      batchRows.map(_.iterator.map(_.getInt(2)).toSeq.distinct))
+    val storeRows = batchRows.flatMap(b =>
+      if (b.isEmpty) Some(Array.empty[Row]) else DriverSet.collect(oldBands))
+    val storedSh = storeTable(spark, s"$dir/shingles",
+      StructField("doc_id", idType), StructField("sh", ArrayType(LongType)))
+    (batchRows, storeRows) match {
+      case (Some(b), Some(s)) =>
+        val pairs = candidatePairs(b, s)
+        val batchIds = b.iterator.map(_.get(0)).toSet
+        val partners = pairs.iterator.flatMap(p => Iterator(p._1, p._2))
+          .filterNot(batchIds).toSeq.distinct
+        val cand = spark.createDataFrame(
+            java.util.Arrays.asList(pairs.map(p => Row(p._1, p._2)): _*),
+            StructType(Seq(StructField("x", idType, nullable = false),
+              StructField("y", idType, nullable = false))))
+          .select(least(col("x"), col("y")).as("id_a"),
+            greatest(col("x"), col("y")).as("id_b"))
+        val allSh =
+          if (partners.isEmpty) newSh
+          else storedSh.filter(col("doc_id").isin(partners: _*))
+            .unionByName(newSh)
+        new NearDupProbe(verifyJaccard(cand, allSh, threshold), newSh,
+          newBands, Some(b.length.toLong), Some(b.length.toLong / bands),
+          Some(pairs.size.toLong), Seq(newSh, newBands))
+      case _ =>
+        val candCross = oldBands.as("y").join(newBands.as("x"),
+            col("x.band") === col("y.band") &&
+              col("x.bucket") === col("y.bucket") &&
+              col("x.doc_id") =!= col("y.doc_id"))
+          .select(least(col("x.doc_id"), col("y.doc_id")).as("id_a"),
+            greatest(col("x.doc_id"), col("y.doc_id")).as("id_b"))
+        val candSelf = newBands.as("x").join(newBands.as("y"),
+            col("x.band") === col("y.band") &&
+              col("x.bucket") === col("y.bucket") &&
+              col("x.doc_id") < col("y.doc_id"))
+          .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
+        // cand feeds the verify join and the partner-id prune; allSh
+        // feeds both verify sides — each persisted to evaluate once
+        val cand = candCross.unionByName(candSelf).distinct().persist()
+        val candIds = cand
+          .select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))
+        // the anti-join on the batch's own ids keeps a replay after
+        // registration from seeing its shingles twice
+        val allSh = storedSh.join(candIds, Seq("doc_id"), "left_semi")
+          .join(newSh.select("doc_id"), Seq("doc_id"), "left_anti")
+          .unionByName(newSh)
+          .persist()
+        new NearDupProbe(verifyJaccard(cand, allSh, threshold), newSh,
+          newBands, None, None, None, Seq(newSh, newBands, cand, allSh))
+    }
   }
 
   /** Near-dup pairs a NEW batch forms with the stored corpus and with
     * itself — (id_a, id_b, inter, uni), id_a < id_b, the same verified
     * contract as [[ngramJaccardPairs]]/[[minhashLshPairs]]. Candidates
-    * come from the LSH band join (new × stored + new × new); signature
-    * params come from the store. EAGER: the result (bounded by the new
-    * batch's candidate pairs) is persisted and counted so the four
+    * come from the LSH band keys (new × stored + new × new); signature
+    * params come from the store. Computed by [[nearDupProbe]], the same
+    * code the live stream runs. EAGER: the result (bounded by the new
+    * batch's candidate pairs) is persisted and counted so the
     * intermediate caches release in-op — a per-batch ingest loop holds
     * exactly one cached frame per outstanding result, released by
-    * `result.unpersist()` (or `catalog.clearCache`), NOT a
-    * localCheckpoint whose blocks only garbage collection can free. */
+    * `result.unpersist()` (or `catalog.clearCache`). */
   def incrementalNearDupPairs(newDocs: DataFrame, dir: String,
                               threshold: Double): DataFrame = {
-    val (pairs, cached) = incrementalPairsPlan(newDocs, dir, threshold)
-    val out = pairs.persist()
-    out.count()
-    cached.foreach(_.unpersist())
-    out
+    val p = nearDupProbe(newDocs, dir, threshold)
+    try {
+      val out = p.pairs.persist()
+      out.count()
+      out
+    } finally p.release()
   }
 
   /** C4-style GLOBAL line deduplication (Raffel et al. 2020 §2.2: "we

@@ -16,7 +16,11 @@ import org.apache.spark.sql.types._
   * a real motion/complexity proxy derived from the `stsz` table /
   * Matroska block sizes, no codec required. Containers we cannot parse
   * return the explicit could-not-decode signal `(0, 0, 0)` / zero
-  * vector — never pseudo-data.
+  * vector — never pseudo-data. The decode `catch`es below are these
+  * DATA-LEVEL defaults: bytes a codec rejects are a property of the row
+  * (dead-lettered downstream), not a fault of the program, so they map
+  * to the documented signal instead of failing the task. Only
+  * `Exception`s are caught; fatal JVM errors still propagate.
   */
 object Multimodal {
 
@@ -93,7 +97,7 @@ object Multimodal {
         // error that kills the task (callers dead-letter these rows)
         return try videoTrack(bytes, format)
           .map(t => (t.width, t.height, t.frames)).getOrElse((0, 0, 0))
-        catch { case _: Exception => (0, 0, 0) }
+        catch { case _: Exception => (0, 0, 0) } // data-level default
       try {
         if (isAudio(format)) {
           val in = AudioSystem.getAudioInputStream(new ByteArrayInputStream(bytes))
@@ -116,7 +120,7 @@ object Multimodal {
             finally r.dispose()
           } finally iis.close()
         }
-      } catch { case _: Exception => (0, 0, 0) }
+      } catch { case _: Exception => (0, 0, 0) } // data-level default
     }
 
     def features(bytes: Array[Byte], format: String, dim: Int): Array[Float] = {
@@ -125,11 +129,11 @@ object Multimodal {
         return try videoTrack(bytes, format)
           .map(t => sizeEnvelope(t.sampleSizes, dim))
           .getOrElse(Array.fill(dim)(0f))
-        catch { case _: Exception => Array.fill(dim)(0f) }
+        catch { case _: Exception => Array.fill(dim)(0f) } // data-level default
       try {
         if (isAudio(format)) audioEnvelope(bytes, dim)
         else imageHistogram(bytes, dim)
-      } catch { case _: Exception => Array.fill(dim)(0f) }
+      } catch { case _: Exception => Array.fill(dim)(0f) } // data-level default
     }
 
     /** Pure-JDK image resize: decode, scale the long edge down to
@@ -157,7 +161,7 @@ object Multimodal {
         val baos = new java.io.ByteArrayOutputStream()
         ImageIO.write(out, "png", baos)
         Some((nw, nh, baos.toByteArray))
-      } catch { case _: Exception => None }
+      } catch { case _: Exception => None } // data-level default
     }
 
     /** L1-normalized luminance histogram of the decoded pixels. */
@@ -642,7 +646,7 @@ object Multimodal {
     val img =
       try Option(javax.imageio.ImageIO.read(
         new java.io.ByteArrayInputStream(bytes)))
-      catch { case _: Exception => None }
+      catch { case _: Exception => None } // data-level default
     img.map(phashOfImage)
   }
 
@@ -730,7 +734,7 @@ object Multimodal {
   def vfp64(bytes: Array[Byte], format: String): Option[Long] = {
     val track =
       try JdkDecoder.videoTrack(bytes, Option(format).getOrElse(""))
-      catch { case _: Exception => None }
+      catch { case _: Exception => None } // data-level default
     track.filter(_.sampleSizes.length >= 65).map { t =>
       val s = t.sampleSizes
       val wins = 65
@@ -787,7 +791,7 @@ object Multimodal {
           }
         } finally in.close()
       } finally raw.close()
-    } catch { case _: Exception => None }
+    } catch { case _: Exception => None } // data-level default
   }
 
   /** Goertzel power of one normalized frequency (cycles/sample) over a
@@ -909,7 +913,7 @@ object Multimodal {
         val img =
           try Option(javax.imageio.ImageIO.read(
             new java.io.ByteArrayInputStream(bytes)))
-          catch { case _: Exception => None }
+          catch { case _: Exception => None } // data-level default
         img match {
           case Some(im) => Row(r.getAs[Long]("media_id"),
             im.getWidth, im.getHeight, java.lang.Long.valueOf(phashOfImage(im)))
@@ -1092,24 +1096,27 @@ object Multimodal {
       s"pigeonhole guarantee covers maxHamming <= 15, got $maxHamming")
     val spark = newPh.sparkSession
     graft.core.Fs.recoverSwap(s"$dir/phashes")
-    // the batch side is broadcast-bounded by definition (it already
-    // broadcasts in the cross join below); hint the anti-join and the
-    // self-join too — the size-blind planner otherwise schedules
+    // the batch side is hinted as the broadcast side of all three joins
+    // while it fits under the session's broadcast ceiling
+    // ([[graft.core.DriverSet]]) — the planner otherwise schedules
     // SortMergeJoins whose exchanges are one AQE job each per trigger
-    // (guide §3.1 + §1.2, same wave as Dedup.incrementalPairsPlan)
+    // (guide §3.1 + §1.2); over the ceiling AQE picks the sides
+    val nb = bandsOf(newPh, maxHamming)
+    val batchBytes = graft.core.DriverSet.planBytes(nb)
+    def side(df: DataFrame): DataFrame =
+      graft.core.DriverSet.broadcastIfFits(df, batchBytes)
     val stored = spark.read.parquet(s"$dir/phashes")
       .select("media_id", "phash")
-      .join(broadcast(newPh.select("media_id")), Seq("media_id"), "left_anti")
-    val nb = bandsOf(newPh, maxHamming)
+      .join(side(newPh.select("media_id")), Seq("media_id"), "left_anti")
     val cross = bandsOf(stored, maxHamming).as("y")
-      .join(broadcast(nb.as("x")),
+      .join(side(nb.as("x")),
         col("x.band") === col("y.band") &&
           col("x.bucket") === col("y.bucket") &&
           col("x.media_id") =!= col("y.media_id"))
       .select(least(col("x.media_id"), col("y.media_id")).as("id_a"),
         greatest(col("x.media_id"), col("y.media_id")).as("id_b"),
         col("x.phash").as("ph_a"), col("y.phash").as("ph_b"))
-    val self = nb.as("x").join(broadcast(nb.as("y")),
+    val self = nb.as("x").join(side(nb.as("y")),
         col("x.band") === col("y.band") &&
           col("x.bucket") === col("y.bucket") &&
           col("x.media_id") < col("y.media_id"))
@@ -1159,8 +1166,7 @@ object Multimodal {
     val hashes = newPh.persist()
     // no eager count: the per-micro-batch extra job measured as serial
     // wall (+0.4-0.6 s on the streamed media gates) while the racing
-    // duplicate decodes ran on idle task slots — see
-    // Dedup.incrementalPairsPlan for the measured trade
+    // duplicate decodes ran on idle task slots
     graft.core.BatchStore.emitAndRegister(
       incrementalHashPairs(hashes, storeDir, maxHamming),
       hashes.select("media_id", "phash"), s"$storeDir/phashes",

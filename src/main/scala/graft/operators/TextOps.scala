@@ -185,19 +185,17 @@ object TextOps {
     * pair emits in the LATER document's batch with its FULL shared
     * count (old fps from the store + new fps from the batch), so the
     * union of per-batch emissions equals the one-shot pair set.
-    * `broadcastBatch` ships the batch's exploded fingerprint frame
-    * (roughly one long per document token — UNBOUNDED in micro-batch
-    * size) to every store partition; a batch too large for the
-    * broadcast ceiling passes `false` and the cross leg falls back to
-    * a shuffle join — the [[graft.operators.DocumentTree]]
-    * broadcastNeedles escape hatch, because a driver OOM is not an
+    * The batch's fingerprint frame (roughly one long per document
+    * token — unbounded in micro-batch size) is hinted as the broadcast
+    * side only while the batch's input fits under the session's
+    * broadcast ceiling ([[graft.core.DriverSet]]); a larger batch runs
+    * every leg as a plain join, because a driver OOM is not an
     * acceptable failure mode for an oversized batch.
     * Returns (pairs, the batch's fingerprint frame to register). */
   def incrementalWinnowPairs(newDocs: DataFrame, dir: String,
                              k: Int = 3, w: Int = 4, minShared: Int = 2,
                              idCol: String = "doc_id",
-                             textCol: String = "text",
-                             broadcastBatch: Boolean = true): (DataFrame, DataFrame) = {
+                             textCol: String = "text"): (DataFrame, DataFrame) = {
     val spark = newDocs.sparkSession
     graft.core.Fs.recoverSwap(s"$dir/fps")
     // persist: the batch fingerprints ONCE — three join legs read it
@@ -214,27 +212,22 @@ object TextOps {
       .persist()
     // no eager count: an extra job per micro-batch measured as pure
     // serial wall (+1.6 s on stream_winnow's 3-batch gate) while the
-    // cold-cache duplicate evaluations ran on idle task slots — see
-    // Dedup.incrementalPairsPlan for the measured trade
-    // under broadcastBatch the anti-join and self-join sides are hinted
-    // too — the batch side is broadcast-bounded by definition, and the
-    // size-blind planner otherwise schedules SortMergeJoins whose
-    // exchanges cost one AQE job each per trigger (guide §3.1 + §1.2,
-    // same wave as Dedup.incrementalPairsPlan)
+    // cold-cache duplicate evaluations ran on idle task slots
+    // the anti-join and self-join sides are hinted too while the batch
+    // fits — the size-blind planner otherwise schedules SortMergeJoins
+    // (the Spread barrier hides the batch's size) whose exchanges cost
+    // one AQE job each per trigger (guide §3.1 + §1.2)
+    val batchBytes = graft.core.DriverSet.planBytes(newDocs)
+    def side(df: DataFrame): DataFrame =
+      graft.core.DriverSet.broadcastIfFits(df, batchBytes)
     val stored = spark.read.parquet(s"$dir/fps")
       .select("doc_id", "fp")
-      .join(
-        if (broadcastBatch) broadcast(newFps.select("doc_id"))
-        else newFps.select("doc_id"),
-        Seq("doc_id"), "left_anti")
-    val batchSide =
-      if (broadcastBatch) broadcast(newFps.as("x")) else newFps.as("x")
-    val cross = stored.as("y").join(batchSide,
+      .join(side(newFps.select("doc_id")), Seq("doc_id"), "left_anti")
+    val cross = stored.as("y").join(side(newFps.as("x")),
         col("x.fp") === col("y.fp") && col("x.doc_id") =!= col("y.doc_id"))
       .select(least(col("x.doc_id"), col("y.doc_id")).as("id_a"),
         greatest(col("x.doc_id"), col("y.doc_id")).as("id_b"))
-    val self = newFps.as("x").join(
-        if (broadcastBatch) broadcast(newFps.as("y")) else newFps.as("y"),
+    val self = newFps.as("x").join(side(newFps.as("y")),
         col("x.fp") === col("y.fp") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
     val pairs = cross.unionByName(self)
@@ -250,10 +243,9 @@ object TextOps {
     * .streamBatchImageDedup]] discipline for text passages. */
   def streamBatchWinnow(batch: DataFrame, storeDir: String,
                         pairsDir: String, batchId: Long,
-                        k: Int = 3, w: Int = 4, minShared: Int = 2,
-                        broadcastBatch: Boolean = true): Unit = {
+                        k: Int = 3, w: Int = 4, minShared: Int = 2): Unit = {
     val (pairs, newFps) = incrementalWinnowPairs(batch, storeDir, k, w,
-      minShared, broadcastBatch = broadcastBatch)
+      minShared)
     graft.core.BatchStore.emitAndRegister(pairs,
       newFps.select("doc_id", "fp"), s"$storeDir/fps", pairsDir, batchId)
     newFps.unpersist()

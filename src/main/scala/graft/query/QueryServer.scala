@@ -251,7 +251,13 @@ final class QueryServer(
         if (java.nio.file.Files.exists(f))
           Some(java.nio.file.Files.getLastModifiedTime(f).toMillis)
         else None
-      } catch { case _: Exception => None }
+      } catch {
+        // the in-memory clock still answers; an unreadable file only
+        // loses the disk-side record
+        case NonFatal(e) =>
+          System.err.println(s"[graft] query $id: session file time unreadable: $e")
+          None
+      }
     (mem.toSeq ++ disk.toSeq).maxOption.getOrElse(bootMillis)
   }
 
@@ -674,6 +680,16 @@ final class QueryServer(
       if (!workers.awaitTermination(30, TimeUnit.SECONDS))
         System.err.println("[graft] handlers still running 30 s after stop")
     }
+    // then the background loads those handlers started: each writes a
+    // session frame's rows, and the unpersist below must not release a
+    // frame under a running write (same bound as the handler pool)
+    val loadDeadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
+    loadThreads.forEach { t =>
+      t.join(math.max(1L,
+        TimeUnit.NANOSECONDS.toMillis(loadDeadline - System.nanoTime())))
+    }
+    if (!loadThreads.isEmpty)
+      System.err.println("[graft] cached-result loads still running 30 s after stop")
     // cancel live bulk exports so no thread keeps writing under a
     // state directory the caller may be about to delete, and their
     // state rows record CANCELED instead of a dangling RUNNING
@@ -2278,6 +2294,10 @@ final class QueryServer(
     * (alias-lowercase → LOADING | LOADED | ERROR:msg). */
   private[query] val asyncLoads = new ConcurrentHashMap[String, String]()
 
+  /** The running `graft-crload-*` threads; [[stop]] joins them before it
+    * releases the session frames they write from. */
+  private val loadThreads = ConcurrentHashMap.newKeySet[Thread]()
+
   /** The status verb's contract applied to the DATA verbs (sql /
     * getRows / create): `/loadAsync` reserves the alias in
     * `loadedAliases` synchronously but the temp view registers later on
@@ -2366,9 +2386,10 @@ final class QueryServer(
               asyncLoads.put(alias.toLowerCase,
                 "ERROR:" + Option(e.getMessage).getOrElse(e.getClass.getName))
             }
-        }
+        } finally loadThreads.remove(Thread.currentThread())
       }, s"graft-crload-$alias")
       t.setDaemon(true)
+      loadThreads.add(t)
       t.start()
       (200, s"""{"alias": ${quote(alias)}, "status": "LOADING"}""")
     }

@@ -140,13 +140,12 @@ object StreamingIngest {
     * store registration overwrites its own `batch=N` partition
     * ([[graft.operators.Dedup.appendDedupStoreBatch]]); a batch replayed
     * after a crash — even one that already appended to the store —
-    * recomputes the SAME pairs (the incremental plan anti-joins the
-    * batch's own ids out of the stored side) and replaces its own
-    * output. Store must be seeded with
-    * [[graft.operators.Dedup.seedDedupStoreBatched]]. At scale this is
-    * the landing-zone dedup tier: the historical corpus is never
-    * re-shingled, each arriving batch broadcast-joins the stored bands
-    * once. */
+    * recomputes the SAME pairs (the probe drops the batch's own ids
+    * from the stored side) and replaces its own output. Store must be
+    * seeded with [[graft.operators.Dedup.seedDedupStoreBatched]]. At
+    * scale this is the landing-zone dedup tier: the historical corpus
+    * is never re-shingled, and each arriving batch reads only the
+    * stored band rows that share one of its bucket keys. */
   def nearDupStream(stream: DataFrame, storeDir: String, pairsDir: String,
                     checkpointDir: String, threshold: Double = 0.8)
       : DataStreamWriter[org.apache.spark.sql.Row] = {
@@ -164,13 +163,11 @@ object StreamingIngest {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        // a zero-row micro-batch (an empty file in the landing zone)
-        // has nothing to pair or register — and must not seed an empty
-        // batch partition the next read would still list
-        if (!batch.isEmpty)
-          graft.operators.Dedup.streamBatchNearDup(batch, storeDir,
-            pairsDir, id, threshold, params)
-        ()
+        // a zero-row micro-batch (an empty file in the landing zone) is
+        // recognised by the probe's own batch-side job and writes
+        // nothing — no separate emptiness job per trigger
+        graft.operators.Dedup.streamBatchNearDup(batch, storeDir,
+          pairsDir, id, threshold, params)
       }
   }
 
@@ -227,11 +224,7 @@ object StreamingIngest {
     * [[graft.operators.TextOps.winnowedOverlapPairs]]. */
   def winnowStream(stream: DataFrame, storeDir: String,
                    pairsDir: String, checkpointDir: String,
-                   k: Int = 3, w: Int = 4, minShared: Int = 2,
-                   // a deployment whose micro-batches outgrow the
-                   // broadcast ceiling opts the cross-store leg onto a
-                   // shuffle join (TextOps.incrementalWinnowPairs)
-                   broadcastBatch: Boolean = true)
+                   k: Int = 3, w: Int = 4, minShared: Int = 2)
       : DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
@@ -239,7 +232,7 @@ object StreamingIngest {
       .foreachBatch { (batch: DataFrame, id: Long) =>
         if (!batch.isEmpty)
           graft.operators.TextOps.streamBatchWinnow(batch, storeDir,
-            pairsDir, id, k, w, minShared, broadcastBatch)
+            pairsDir, id, k, w, minShared)
         ()
       }
 

@@ -125,14 +125,20 @@ class Wave10Spec extends SparkSpec {
     val (pairs, _) = TextOps.incrementalWinnowPairs(b2.limit(0), s"$tmp/store")
     pairs.count() // recoverSwap restored the store: the read succeeds
     assert(java.nio.file.Files.exists(src) && !java.nio.file.Files.exists(old))
-    // the shuffle fallback (broadcastBatch = false) computes the same
-    // pairs — the escape hatch for batches beyond broadcast capacity
+    // the unhinted fallback (batch over the session's broadcast
+    // ceiling, forced here by switching the ceiling off) computes the
+    // same pairs — the escape hatch for batches beyond broadcast capacity
     val tmp2 = java.nio.file.Files.createTempDirectory("graft-cwin2").toString
     TextOps.seedWinnowStoreBatched(spark, s"$tmp2/store")
-    TextOps.streamBatchWinnow(b1, s"$tmp2/store", s"$tmp2/pairs", 0L,
-      minShared = 2, broadcastBatch = false)
-    TextOps.streamBatchWinnow(b2, s"$tmp2/store", s"$tmp2/pairs", 1L,
-      minShared = 2, broadcastBatch = false)
+    val ceiling = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(ceiling)
+    spark.conf.set(ceiling, "-1")
+    try {
+      TextOps.streamBatchWinnow(b1, s"$tmp2/store", s"$tmp2/pairs", 0L,
+        minShared = 2)
+      TextOps.streamBatchWinnow(b2, s"$tmp2/store", s"$tmp2/pairs", 1L,
+        minShared = 2)
+    } finally spark.conf.set(ceiling, prev)
     assert(pairSet(spark.read.parquet(s"$tmp2/pairs")
       .select("id_a", "id_b", "shared")) == oneShot, "shuffle fallback")
   }

@@ -41,52 +41,32 @@ class Wave7Spec extends SparkSpec {
       val p2 = p2f.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       p2f.unpersist()
       assert(p2 == Set((11L, 20L)), p2.toString)
-      // the store-side band join broadcasts the NEW batch, NEVER the
-      // store: with auto-broadcast off, the only way the bands file scan
-      // ends up STREAMED into a BroadcastHashJoin is the explicit hint —
-      // flipping the hint to the store side fails this assertion
-      val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-      try {
-        // auto-broadcast OFF: the only broadcasts left are the explicit
-        // hints, so the direction assertion is not vacuously satisfied
-        // by tiny test inputs; AQE off so plan nodes are collectible
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        val (pairs, cached) = Dedup.incrementalPairsPlan(b2, dir.toString, 0.8)
-        def scansBands(p: org.apache.spark.sql.execution.SparkPlan): Boolean =
-          p.collect {
-            case s: org.apache.spark.sql.execution.FileSourceScanExec
-                if s.relation.location.rootPaths
-                  .exists(_.toString.endsWith("/bands")) => s
-          }.nonEmpty
-        // the band join sits beneath cand's persist boundary — traverse
-        // into InMemoryRelation cached plans to reach it
-        def allNodes(p: org.apache.spark.sql.execution.SparkPlan)
-            : Seq[org.apache.spark.sql.execution.SparkPlan] =
-          p.collect { case x => x }.flatMap {
-            case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-              allNodes(m.relation.cachedPlan)
-            case other => Seq(other)
-          }
-        val bandJoin = allNodes(pairs.queryExecution.executedPlan).collect {
-          case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-              if scansBands(j.left) || scansBands(j.right) => j
+      // the probe reads the store by the batch's bucket keys: the
+      // bands scan carries a pushed `bucket` filter, so a probe reads
+      // the rows that can collide with the batch, not the whole store
+      val bucketScan = Dedup.storedBands(spark, dir.toString,
+          org.apache.spark.sql.types.LongType, Some(Seq(7, -3, 11)))
+        .queryExecution.executedPlan.collect {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec
+              if s.relation.location.rootPaths
+                .exists(_.toString.endsWith("/bands")) =>
+            s.metadata.getOrElse("PushedFilters", "")
         }
-        assert(bandJoin.nonEmpty,
-          pairs.queryExecution.executedPlan.toString.take(3000))
-        bandJoin.foreach { j =>
-          val buildIsLeft =
-            j.buildSide == org.apache.spark.sql.catalyst.optimizer.BuildLeft
-          val streamed = if (buildIsLeft) j.right else j.left
-          val build = if (buildIsLeft) j.left else j.right
-          assert(scansBands(streamed) && !scansBands(build),
-            s"store must be streamed, got build=\n$build")
-        }
-        cached.foreach(_.unpersist())
-      } finally {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-        spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      assert(bucketScan.nonEmpty && bucketScan.forall(f =>
+        f.contains("In(bucket") || f.contains("EqualTo(bucket")),
+        bucketScan.mkString("\n"))
+      // over the ceiling (driver-side sets off), the same batch pairs
+      // through plain joins to the same answer
+      val ceiling = "spark.sql.autoBroadcastJoinThreshold"
+      val prev = spark.conf.get(ceiling)
+      for (c <- Seq("-1", "64")) {
+        spark.conf.set(ceiling, c)
+        val viaJoins = try {
+          val f = Dedup.incrementalNearDupPairs(b2, dir.toString, 0.8)
+          try f.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+          finally f.unpersist()
+        } finally spark.conf.set(ceiling, prev)
+        assert(viaJoins == p2, s"ceiling $c")
       }
     } finally graft.core.Fs.deleteRecursively(dir)
   }

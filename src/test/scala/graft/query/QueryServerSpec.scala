@@ -20,6 +20,35 @@ class QueryServerSpec extends SparkSpec {
         .POST(HttpRequest.BodyPublishers.noBody()).build(),
       HttpResponse.BodyHandlers.ofString())
 
+  test("stop() joins an in-flight loadAsync before it releases the session frames") {
+    // every row sleeps, so the async rows write is still running when
+    // stop() is called right after the verb answers
+    val slow = org.apache.spark.sql.functions.udf { (i: Long) =>
+      Thread.sleep(25); i
+    }.asNondeterministic()
+    val df = spark.range(1, 81).select(slow($"id").as("id"),
+      ($"id" % 2).cast("string").as("grp"))
+    val state = java.nio.file.Files.createTempDirectory("graft-stopload")
+    val srv = new QueryServer(Map("t" -> df), stateDir = state.toString,
+      metricsFlush = false)
+    val base = s"http://127.0.0.1:${srv.start()}"
+    def loaders = Thread.getAllStackTraces.keySet.toArray
+      .collect { case t: Thread if t.getName == "graft-crload-cr_stop" => t }
+    try {
+      val body = post(s"$base/query/create?table=t&query=" +
+        java.net.URLEncoder.encode("ID > 10", "UTF-8") + "&orderBy=id").body()
+      val id = "\"queryId\"\\s*:\\s*\"([^\"]+)\"".r
+        .findFirstMatchIn(body).get.group(1)
+      assert(post(s"$base/cachedresults/loadAsync?id=$id&alias=cr_stop")
+        .statusCode() == 200)
+    } finally srv.stop()
+    assert(loaders.forall(!_.isAlive), "a load thread outlived stop()")
+    // the load ran to its end: its rows store committed
+    assert(java.nio.file.Files.exists(
+      state.resolve("cachedrows/cr_stop/_SUCCESS")))
+    graft.core.Fs.deleteRecursively(state)
+  }
+
   test("query lifecycle over HTTP: create, plan, page to 204, close") {
     val df = (1 to 25).map(i => (i.toLong, s"name_$i", if (i % 2 == 0) "A" else "B"))
       .toDF("id", "name", "grp")

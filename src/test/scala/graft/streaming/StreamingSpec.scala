@@ -280,6 +280,29 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("streaming near-dup over the driver-set ceiling pairs through joins to the same set") {
+    // a ceiling below one batch's band rows sends every trigger down the
+    // plain-join path instead of the driver-side probe
+    val docs = nearDupCorpus
+    val oneShot = pairSet(graft.operators.Dedup.minhashLshPairs(docs, n = 3,
+      threshold = 0.8))
+    val tmp = java.nio.file.Files.createTempDirectory("graft-sndj").toString
+    docs.repartition(3).write.parquet(s"$tmp/in")
+    graft.operators.Dedup.seedDedupStoreBatched(docs, s"$tmp/store", n = 3)
+    val ceiling = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(ceiling)
+    spark.conf.set(ceiling, "1000")
+    try StreamingIngest.nearDupStream(
+        spark.readStream.schema("doc_id BIGINT, text STRING")
+          .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in"),
+        s"$tmp/store", s"$tmp/pairs", s"$tmp/ck", threshold = 0.8)
+      .start().awaitTermination(120000)
+    finally spark.conf.set(ceiling, prev)
+    assert(pairSet(spark.read.parquet(s"$tmp/pairs")
+      .select("id_a", "id_b", "inter", "uni")) == oneShot)
+    graft.core.Fs.deleteRecursively(java.nio.file.Paths.get(tmp))
+  }
+
   test("batched dedup store: string doc ids and mid-stream compaction") {
     // the seed derives its schema from the corpus frame — a string-id
     // corpus must round-trip (a type pinned at seed time would make the
