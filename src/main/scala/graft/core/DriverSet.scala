@@ -14,13 +14,8 @@ import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUti
   * driver. Row sizes are Spark's own per-row estimate for the schema. */
 object DriverSet {
 
-  def ceilingBytes(spark: SparkSession): Long =
+  private def ceilingBytes(spark: SparkSession): Long =
     spark.sessionState.conf.autoBroadcastJoinThreshold
-
-  def fits(spark: SparkSession, bytes: BigInt): Boolean = {
-    val c = ceilingBytes(spark)
-    c > 0 && bytes <= c
-  }
 
   def rowBytes(df: DataFrame): Long =
     EstimationUtils.getSizePerRow(df.queryExecution.analyzed.output).toLong
@@ -55,10 +50,11 @@ object DriverSet {
 
   /** `df` hinted as the broadcast side when `bytes` fit under the
     * ceiling; otherwise left to the planner and AQE. */
-  def broadcastIfFits(df: DataFrame, bytes: BigInt): DataFrame =
-    if (fits(df.sparkSession, bytes))
-      org.apache.spark.sql.functions.broadcast(df)
+  def broadcastIfFits(df: DataFrame, bytes: BigInt): DataFrame = {
+    val c = ceilingBytes(df.sparkSession)
+    if (c > 0 && bytes <= c) org.apache.spark.sql.functions.broadcast(df)
     else df
+  }
 
   /** A frame's size by its plan statistics — the estimate for a batch
     * side whose row count the driver does not hold. An input whose size

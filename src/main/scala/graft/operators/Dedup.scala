@@ -775,8 +775,9 @@ object Dedup {
     * writes the probe's cached signature frames, so the MinHash
     * signatures are computed once per trigger. A batch without band rows
     * (zero rows, or every doc shorter than `n` tokens) writes nothing:
-    * the probe's batch-side job already saw that, so no separate
-    * emptiness job runs. On the driver path each write's file count
+    * on the driver path the probe's batch-side job already saw that, so
+    * no separate emptiness job runs (the join path asks the cached band
+    * frame). On the driver path each write's file count
     * follows the row count the driver holds ([[graft.core.DriverSet
     * .files]]) instead of one file per task. */
   private[graft] def streamBatchNearDup(batch: DataFrame, storeDir: String,
@@ -810,7 +811,7 @@ object Dedup {
                                           val docRows: Option[Long],
                                           val candRows: Option[Long],
                                           cached: Seq[DataFrame]) {
-    def empty: Boolean = bandRows.contains(0L)
+    def empty: Boolean = bandRows.fold(newBands.isEmpty)(_ == 0L)
     def release(): Unit = cached.foreach(_.unpersist())
   }
 

@@ -164,8 +164,8 @@ object StreamingIngest {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, id: Long) =>
         // a zero-row micro-batch (an empty file in the landing zone) is
-        // recognised by the probe's own batch-side job and writes
-        // nothing — no separate emptiness job per trigger
+        // recognised by the probe and writes nothing; on the driver path
+        // its batch-side job tells, so no separate emptiness job runs
         graft.operators.Dedup.streamBatchNearDup(batch, storeDir,
           pairsDir, id, threshold, params)
       }

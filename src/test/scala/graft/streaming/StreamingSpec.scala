@@ -258,16 +258,7 @@ class StreamingSpec extends SparkSpec {
     for (nSplit <- Seq(2, 3)) {
       val tmp = java.nio.file.Files.createTempDirectory("graft-snd").toString
       docs.repartition(nSplit).write.parquet(s"$tmp/in")
-      if (nSplit == 3) {
-        // a zero-row file in the landing zone produces an EMPTY
-        // micro-batch — the stream must skip it, not wedge or register
-        // an empty partition
-        docs.limit(0).repartition(1).write.parquet(s"$tmp/empty")
-        val part = new java.io.File(s"$tmp/empty").listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.copy(part.toPath,
-          java.nio.file.Paths.get(s"$tmp/in", "zz-" + part.getName))
-      }
+      if (nSplit == 3) landEmptyFile(docs, tmp)
       graft.operators.Dedup.seedDedupStoreBatched(docs, s"$tmp/store", n = 3)
       val stream = spark.readStream.schema("doc_id BIGINT, text STRING")
         .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
@@ -277,30 +268,54 @@ class StreamingSpec extends SparkSpec {
       val streamed = pairSet(spark.read.parquet(s"$tmp/pairs")
         .select("id_a", "id_b", "inter", "uni"))
       assert(streamed == oneShot, s"split=$nSplit")
+      assert(registered(tmp) == nSplit, s"split=$nSplit")
     }
   }
 
+  /** A zero-row file in the landing zone: it produces an EMPTY
+    * micro-batch, which the stream must skip, not wedge on or register
+    * as an empty partition. */
+  private def landEmptyFile(docs: org.apache.spark.sql.DataFrame,
+                            tmp: String): Unit = {
+    docs.limit(0).repartition(1).write.parquet(s"$tmp/empty")
+    val part = new java.io.File(s"$tmp/empty").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.copy(part.toPath,
+      java.nio.file.Paths.get(s"$tmp/in", "zz-" + part.getName))
+  }
+
+  /** Batch partitions the stream registered in the store's bands table
+    * (the seed partition aside). */
+  private def registered(tmp: String): Int =
+    new java.io.File(s"$tmp/store/bands").listFiles()
+      .count(f => f.getName.startsWith("batch=") && f.getName != "batch=seed")
+
   test("streaming near-dup over the driver-set ceiling pairs through joins to the same set") {
-    // a ceiling below one batch's band rows sends every trigger down the
-    // plain-join path instead of the driver-side probe
+    // a ceiling below one batch's band rows sends every non-empty
+    // trigger down the plain-join path instead of the driver-side probe;
+    // a ceiling switched off sends the empty trigger there too
     val docs = nearDupCorpus
     val oneShot = pairSet(graft.operators.Dedup.minhashLshPairs(docs, n = 3,
       threshold = 0.8))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-sndj").toString
-    docs.repartition(3).write.parquet(s"$tmp/in")
-    graft.operators.Dedup.seedDedupStoreBatched(docs, s"$tmp/store", n = 3)
     val ceiling = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.get(ceiling)
-    spark.conf.set(ceiling, "1000")
-    try StreamingIngest.nearDupStream(
-        spark.readStream.schema("doc_id BIGINT, text STRING")
-          .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in"),
-        s"$tmp/store", s"$tmp/pairs", s"$tmp/ck", threshold = 0.8)
-      .start().awaitTermination(120000)
-    finally spark.conf.set(ceiling, prev)
-    assert(pairSet(spark.read.parquet(s"$tmp/pairs")
-      .select("id_a", "id_b", "inter", "uni")) == oneShot)
-    graft.core.Fs.deleteRecursively(java.nio.file.Paths.get(tmp))
+    for (c <- Seq("1000", "-1")) {
+      val tmp = java.nio.file.Files.createTempDirectory("graft-sndj").toString
+      docs.repartition(3).write.parquet(s"$tmp/in")
+      landEmptyFile(docs, tmp)
+      graft.operators.Dedup.seedDedupStoreBatched(docs, s"$tmp/store", n = 3)
+      spark.conf.set(ceiling, c)
+      try StreamingIngest.nearDupStream(
+          spark.readStream.schema("doc_id BIGINT, text STRING")
+            .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in"),
+          s"$tmp/store", s"$tmp/pairs", s"$tmp/ck", threshold = 0.8)
+        .start().awaitTermination(120000)
+      finally spark.conf.set(ceiling, prev)
+      assert(pairSet(spark.read.parquet(s"$tmp/pairs")
+        .select("id_a", "id_b", "inter", "uni")) == oneShot, s"ceiling $c")
+      assert(registered(tmp) == 3, s"ceiling $c")
+      graft.core.Fs.deleteRecursively(java.nio.file.Paths.get(tmp))
+    }
   }
 
   test("batched dedup store: string doc ids and mid-stream compaction") {
@@ -417,9 +432,10 @@ class StreamingSpec extends SparkSpec {
         hconf.unset("fs.file.impl.disable.cache")
         spark.conf.unset(fmKey)
       }
-      val streamed = pairSet(spark.read.parquet(s"$tmp/pairs")
-        .select("id_a", "id_b", "inter", "uni"))
-      assert(streamed == oneShot, s"killed after $killed")
+      val rows = spark.read.parquet(s"$tmp/pairs")
+        .select("id_a", "id_b", "inter", "uni")
+      assert(pairSet(rows) == oneShot && rows.count() == oneShot.size,
+        s"killed after $killed")
       val dupShingles = spark.read.parquet(s"$tmp/store/shingles")
         .groupBy("doc_id").count().filter(col("count") > 1).count()
       assert(dupShingles == 0, s"killed after $killed")
