@@ -264,9 +264,14 @@ object VectorOps {
     emb.select(col("vec_id"), col("embedding").cast("array<float>"))
       .as[(Long, Array[Float])]
       .mapPartitions(_.map { case (id, v) =>
-        val dv = new Array[Double](v.length)
-        var i = 0
-        while (i < v.length) { dv(i) = v(i).toDouble; i += 1 }
+        // a null embedding stays null: the kernel gives it signature 0,
+        // as the expression does
+        val dv = if (v == null) null else {
+          val d = new Array[Double](v.length)
+          var i = 0
+          while (i < v.length) { d(i) = v(i).toDouble; i += 1 }
+          d
+        }
         (id, v, lshSigKernel(dv, mat))
       }).toDF("vec_id", "embedding", "sig")
   }

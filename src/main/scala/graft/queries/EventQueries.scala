@@ -25,8 +25,9 @@ object EventQueries {
         .otherwise("(A&B)|C"))
 
   /** Visibility-filtered scan under auths {A}: Accumulo-style boolean
-    * expressions evaluated once per DISTINCT marking, broadcast back —
-    * scan stays codegen'd (SURVEY §1.1 ColumnVisibility mapping). */
+    * expressions checked in the scan by the codegen'd `is_visible`
+    * predicate, each distinct marking parsed once per task (SURVEY §1.1
+    * ColumnVisibility mapping). */
   def visibilityFilter(s: SparkSession, d: String): DataFrame =
     Visibility.enforce(withVisibility(Tables.events(s, d)),
         "visibility", Set("A"))

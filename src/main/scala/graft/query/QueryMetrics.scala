@@ -212,10 +212,20 @@ final class RunningQuery(
   private var timedOut = false
 
   def isTimedOut: Boolean = timedOut
+  // set by a page shorter than pageSize: no later page holds rows
+  private var exhausted = false
+
+  /** The exhaustion probe after a short page, answered without a job:
+    * it still advances the durable offset as `cursor.next` does (the
+    * rule [[run]] relies on), so resume state stays byte-identical. */
+  private def skipProbe(): Boolean = {
+    if (exhausted) cursor.advance(queryId, pageSize)
+    exhausted
+  }
 
   /** Next page, or None when exhausted or short-circuited. */
   def nextPage(): Option[DataFrame] = {
-    if (timedOut) return None
+    if (timedOut || skipProbe()) return None
     val t0 = System.currentTimeMillis()
     val page = cursor.next(queryId, df, orderCols, pageSize)
     val rows = page.count()
@@ -227,24 +237,25 @@ final class RunningQuery(
     * per page: returning the DataFrame would make the caller's collect
     * re-run the sorted offset/limit query a second time. */
   def nextPageJson(): Option[(Array[String], Long)] = {
-    if (timedOut) return None
+    if (timedOut || skipProbe()) return None
     val t0 = System.currentTimeMillis()
     val rows = cursor.next(queryId, df, orderCols, pageSize)
       .toJSON.collect() // bounded by pageSize
     if (record(rows.length, t0) == 0) None else Some((rows, pageNum))
   }
 
-  /** Shared page bookkeeping: metric + timeout latch; returns `rows`.
-    * The exhaustion probe (zero rows) is not a served page — it records
-    * no metric and does not advance the page counter (so `pagesServed`
-    * reports what was actually served), but it still arms the timeout
-    * latch. */
+  /** Shared page bookkeeping: metric + timeout latch + exhaustion
+    * latch; returns `rows`. The exhaustion probe (zero rows) is not a
+    * served page — it records no metric and does not advance the page
+    * counter (so `pagesServed` reports what was actually served), but it
+    * still arms the timeout latch. */
   private def record(rows: Long, t0: Long): Long = {
     val dt = System.currentTimeMillis() - t0
     val status =
       if (dt > pageTimeoutMillis) { timedOut = true; "TIMEOUT" }
       else if (rows < pageSize) "PARTIAL"
       else "COMPLETE"
+    if (rows < pageSize) exhausted = true
     if (rows > 0) {
       pageNum += 1
       sink(PageMetric(queryId, pageNum, rows, dt, status, attempt))

@@ -576,6 +576,13 @@ final class QueryServer(
 
   /** Start on `port` (0 = ephemeral); returns the bound port. */
   def start(port: Int = 0): Int = {
+    // The JDK server writes a response's headers and its body as two TCP
+    // segments; without TCP_NODELAY the body waits behind Nagle's
+    // algorithm for the client's delayed ACK (~40 ms) on every response
+    // that has one. The JDK reads the flag once, when the first server
+    // of the JVM is created; an explicit setting wins.
+    if (System.getProperty("sun.net.httpserver.nodelay") == null)
+      System.setProperty("sun.net.httpserver.nodelay", "true")
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     // without an executor the JDK runs every exchange on the one
     // dispatcher thread, so each client's verb would wait for the others
@@ -765,8 +772,8 @@ final class QueryServer(
 
   /** The one planning path for a user query against a served table: the
     * definition's model, syntax and auths through [[resolveModel]] into
-    * the logic's `query`. Lazy — beyond the visibility probe its auths
-    * imply, nothing runs until the frame is paged. */
+    * the logic's `query`. Lazy — nothing runs until the frame is paged
+    * (visibility is a filter in the plan, evaluated by the scan). */
   private def plan(d: QueryDef): DataFrame = {
     val df0 = tableMap.getOrElse(d.table,
       throw new IllegalArgumentException(s"unknown table '${d.table}'"))
@@ -1359,7 +1366,7 @@ final class QueryServer(
         // replaces or ends a live session takes it, so nothing changes
         // the session between here and our put — audit-then-apply is
         // atomic (the reference audits exactly the updates it applies),
-        // and the re-plan's visibility probe holds no server-wide lock
+        // and the re-plan holds no server-wide lock
         if (params.contains("query") && !tableMap.contains(d.table))
           (400, err("query update requires a table-backed session"))
         else {
@@ -1624,8 +1631,8 @@ final class QueryServer(
     *    validate + optimize only, no session, no jobs, nothing cached —
     *    a planning probe can run thousands of these without residue. It
     *    reveals schema + plan structure, so the registry gates the
-    *    caller (401 unknown), but the plan carries no auths: no
-    *    visibility probe runs. */
+    *    caller (401 unknown), but the plan carries no auths, so the
+    *    rendered plan names no grant. */
   private def explain(params: Map[String, String]): (Int, String) = {
     def render(d: QueryDef, df: DataFrame): String = {
       val jexl =
@@ -2802,12 +2809,12 @@ final class QueryServer(
   /** Rebuild a session from its persisted definition: re-plan the query
     * (under its model and auths — both durable beside the definitions)
     * and resume from the DURABLE cursor offset — pages served by the
-    * dead server stay served. The plan (and its visibility probe job)
-    * runs outside the share lock; under it the session opens only if it
-    * is still absent and its definition unchanged, so two concurrent
-    * resumes of one id cannot each persist a frame (the loser caches
-    * nothing: [[open]] is the only place a frame is persisted), and a
-    * resume cannot resurrect a query a teardown deleted meanwhile. */
+    * dead server stay served. The plan runs outside the share lock;
+    * under it the session opens only if it is still absent and its
+    * definition unchanged, so two concurrent resumes of one id cannot
+    * each persist a frame (the loser caches nothing: [[open]] is the
+    * only place a frame is persisted), and a resume cannot resurrect a
+    * query a teardown deleted meanwhile. */
   private def resumeSession(id: String): Option[Session] =
     Option(sessions.get(id)).orElse(
       readDef(id).filter(r => tableMap.contains(r.defn.table)).flatMap { r =>

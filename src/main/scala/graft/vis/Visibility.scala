@@ -83,46 +83,11 @@ object Visibility {
       array_sort(collect_set(when(length(trim(visCol)) > 0, wrapped))), "&")
   }
 
-  /** Visibility filter for a DataFrame.
-    *
-    * Scale path: visibility strings are low-cardinality (they're policy
-    * labels, not data), so evaluate each DISTINCT expression once and
-    * broadcast the verdicts — the scan stays codegen'd and no per-row
-    * parsing happens, at any data size.
-    *
-    * Guarded: the distinct-probe fetches at most `maxDistinct + 1` values.
-    * If a tenant wrote per-value markings (cardinality above the guard),
-    * fall back to the executor-memoized UDF instead of OOMing the driver. */
-  def enforce(df: DataFrame, visCol: String, auths: Set[String],
-              maxDistinct: Int = 10000): DataFrame = {
-    val probe = df.select(col(visCol)).distinct().limit(maxDistinct + 1).collect()
-      .map(_.getString(0))
-    if (probe.length > maxDistinct)
-      return df.filter(isVisibleUdf(auths)(col(visCol)))
-    val allowed = probe.filter(v => v != null && isVisible(v, auths))
-    df.filter(col(visCol).isin(allowed.toSeq: _*) ||
-      (if (probe.contains(null) && isVisible("", auths)) col(visCol).isNull
-       else lit(false)))
-  }
-
-  /** Pure-Column variant when the distinct set is not collectable first:
-    * memoized UDF (parse cache per executor; visibility cardinality is
-    * tiny so the cache hits ~always). Prefer [[enforce]] in plans. */
-  def isVisibleUdf(auths: Set[String]): org.apache.spark.sql.expressions.UserDefinedFunction = {
-    val authSet = auths // serializable closure copy
-    udf((expr: String) => {
-      if (expr == null) true
-      else VisCache.cached(expr, authSet)
-    })
-  }
-}
-
-/** Executor-side memo of (expression, auths) → verdict. */
-private object VisCache {
-  private val cache = new java.util.concurrent.ConcurrentHashMap[(String, Set[String]), java.lang.Boolean]()
-  def cached(expr: String, auths: Set[String]): Boolean =
-    cache.computeIfAbsent((expr, auths),
-      { case (e, a) => java.lang.Boolean.valueOf(Visibility.isVisible(e, a)) })
+  /** Visibility filter for a DataFrame: keeps the rows whose `visCol`
+    * label is visible under `auths`, evaluated in the scan by
+    * [[IsVisible]]. Lazy — nothing runs until the frame does. */
+  def enforce(df: DataFrame, visCol: String, auths: Set[String]): DataFrame =
+    df.filter(IsVisible.column(col(visCol), auths))
 }
 
 private final class VisParser(input: String) {

@@ -42,6 +42,41 @@ class VisibilityEnforceSpec extends SparkSpec {
       .select("id").collect().map(_.getInt(0)).toSet
     assert(ids == Set(1, 3, 5))
   }
+
+  /** A frame whose reads need a job (no local-relation shortcut). */
+  private def labelled(rows: (Int, String)*) =
+    rows.toDF("id", "vis").repartition(2)
+
+  private def visibleIds(df: org.apache.spark.sql.DataFrame, auths: Set[String]): Set[Int] =
+    Visibility.enforce(df, "vis", auths).select("id").collect().map(_.getInt(0)).toSet
+
+  test("null and empty labels are visible") {
+    val df = labelled((1, null), (2, ""), (3, "A"), (4, "  "))
+    assert(visibleIds(df, Set.empty) == Set(1, 2, 4))
+    assert(visibleIds(df, Set("A")) == Set(1, 2, 3, 4))
+  }
+
+  test("enforce runs no job") {
+    val df = labelled((1, "A"), (2, "B"))
+    val (enforced, jobs) = org.apache.spark.graftshim.Jobs.count(spark.sparkContext)(
+      Visibility.enforce(df, "vis", Set("A")))
+    assert(jobs == 0)
+    assert(enforced.select("id").collect().map(_.getInt(0)).toSet == Set(1))
+  }
+
+  test("two enforce calls under equal auths plan the same result") {
+    val df = labelled((1, "A"), (2, "A&B"), (3, "B|C"))
+    def plan(auths: Set[String]) =
+      Visibility.enforce(df, "vis", auths).queryExecution.analyzed
+    assert(plan(Set("A", "B")).sameResult(plan(Set("B", "A"))))
+    assert(!plan(Set("A")).sameResult(plan(Set("B"))))
+  }
+
+  test("a label that does not parse is visible to no one and fails no query") {
+    val df = labelled((1, "A&B|C"), (2, "A&("), (3, "A"), (4, "(A|B)&C"))
+    assert(visibleIds(df, Set("A", "B", "C")) == Set(3, 4))
+    assert(visibleIds(df, Set.empty) == Set.empty)
+  }
 }
 
 class ContentSpec extends SparkSpec {

@@ -148,14 +148,17 @@ class KernelParitySpec extends SparkSpec {
 
   test("the LSH signature kernel is bit-equal to the lshSignature expression") {
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
-    val viaExpr = emb
+    val withNull = emb.select(col("vec_id"), col("embedding"))
+      .unionByName(Seq((100000L, null: Array[Float])).toDF("vec_id", "embedding"))
+    val viaExpr = withNull
       .select(col("vec_id"),
         VectorOps.lshSignature(col("embedding"), planes = 32, dim).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaKernel = VectorOps.lshSigned(emb, planes = 32, dim)
+    val viaKernel = VectorOps.lshSigned(withNull, planes = 32, dim)
       .select("vec_id", "sig")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaKernel == viaExpr)
+    assert(viaKernel(100000L) == 0L)
   }
 
   test("lshSigKernel edge rows: zero vector, NaN component, length mismatch") {

@@ -1,6 +1,7 @@
 package graft.query
 
 import graft.SparkSpec
+import org.apache.spark.graftshim.Jobs
 import org.apache.spark.sql.functions._
 
 /** Per-page metrics + page-timeout short-circuit (RunningQuery,
@@ -148,6 +149,31 @@ class RunningQuerySpec extends SparkSpec {
       .select("elapsedMillis").collect().map(_.getLong(0)).toSeq
     assert(paged.size == 3 && paged.sum <= wall, s"pages $paged, run $wall ms")
     QueryMetrics.clear()
+  }
+
+  test("after a short page the exhaustion probe runs no job; offsets match the per-page drain") {
+    // 25 rows: the third page is short, so the fourth call is answered
+    // without a job. 30 rows: every page is full, so the probe job runs.
+    for ((n, pages, probeRuns) <- Seq((25, Seq(10, 10, 5), false),
+                                      (30, Seq(10, 10, 10), true))) {
+      val df = (1 to n).toDF("n")
+      val paged = freshCursor()
+      val rq = new RunningQuery(paged, "rqS", df, Seq("n"), pageSize = 10)
+      // every page, the exhaustion probe, and one call past it
+      val calls = Seq.fill(5)(Jobs.count(spark.sparkContext)(rq.nextPageJson()))
+      assert(calls.map(_._1.fold(0)(_._1.length)) == pages ++ Seq(0, 0))
+      val jobs = calls.map(_._2)
+      assert(jobs.take(3).forall(_ > 0), s"$n rows: jobs per call $jobs")
+      assert((jobs(3) > 0) == probeRuns, s"$n rows: jobs per call $jobs")
+      assert(jobs(4) == 0, s"$n rows: jobs per call $jobs")
+      // each call advanced the durable offset as the per-page drain does
+      val ref = freshCursor()
+      val refRq = new RunningQuery(ref, "rqS", df, Seq("n"), pageSize = 10)
+      assert(refRq.runPerPage() == 3)
+      assert(refRq.nextPage().isEmpty)
+      assert(paged.currentOffset("rqS") == ref.currentOffset("rqS"))
+      assert(paged.currentOffset("rqS") == 50L)
+    }
   }
 
   test("zero-row exhaustion probe emits no page metric") {

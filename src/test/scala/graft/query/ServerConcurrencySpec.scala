@@ -220,6 +220,32 @@ class ServerConcurrencySpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("two sessions of one query under one registry user cache one frame") {
+    val df = (1 to 60).map(i => (i.toLong, (i % 3).toLong, Seq("A", "A|B", "B")(i % 3)))
+      .toDF("id", "grp", "visibility").repartition(2)
+    val srv = new QueryServer(tables = Map("t" -> df),
+      users = Map("alice" -> Set("A")), metricsFlush = false)
+    val svc = new RemoteQueryService(s"http://127.0.0.1:${srv.start()}")
+    def cachedRdds = spark.sparkContext.getPersistentRDDs.size
+    def create(): String = {
+      val (st, body) = svc.httpStatus("POST",
+        s"/query/create?table=t&query=${enc("ID > 0")}&pageSize=7&orderBy=id&user=alice")
+      assert(st == 200, body)
+      "\"queryId\": \"([^\"]+)\"".r.findFirstMatchIn(body).get.group(1)
+    }
+    try {
+      val before = cachedRdds
+      val a = create()
+      val b = create()
+      // a frame's cached RDD materializes with its first page
+      Seq(a, b).foreach(id =>
+        assert(svc.httpStatus("GET", s"/query/next?id=$id&user=alice")._1 == 200))
+      assert(cachedRdds == before + 1, "two sessions of one query cached two frames")
+      Seq(a, b).foreach(svc.close(_, "alice"))
+      assert(cachedRdds == before)
+    } finally srv.stop()
+  }
+
   test("stop() ends the worker threads of every server") {
     val df = (1 to 20).map(i => (i.toLong, (i % 2).toLong)).toDF("id", "grp")
     val baseline = workerThreads()
