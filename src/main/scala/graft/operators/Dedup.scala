@@ -157,13 +157,18 @@ object Dedup {
                             threshold: Double): DataFrame = {
     val shA = withSh.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
     val shB = withSh.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
-    cand.join(shA, "id_a").join(shB, "id_b")
+    jaccardAtLeast(cand.join(shA, "id_a").join(shB, "id_b"), threshold)
+  }
+
+  /** The verified pairs of (id_a, id_b, sh_a, sh_b) rows: exact shingle
+    * intersection and union, kept at Jaccard ≥ `threshold`. */
+  private def jaccardAtLeast(withShs: DataFrame, threshold: Double): DataFrame =
+    withShs
       .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
       .withColumn("uni", size(col("sh_a")) + size(col("sh_b")) - col("inter"))
       .filter(col("uni") > 0 &&
         col("inter").cast("double") >= col("uni").cast("double") * threshold)
       .select("id_a", "id_b", "inter", "uni")
-  }
 
   /** Exact-substring duplication profile ("Deduplicating Training Data
     * Makes Language Models Better", Lee et al. 2022 — ExactSubstr): a
@@ -871,8 +876,10 @@ object Dedup {
     *  - store side: the stored bands are read with the batch's bucket
     *    set pushed into the scan, and the matching rows come to the
     *    driver too; candidates and partner ids are built there;
-    *  - verify: [[verifyJaccard]] against the stored shingles of those
-    *    partner ids only (a pushed `doc_id` filter) plus the batch's own.
+    *  - verify: the stored shingles of those partner ids only (a pushed
+    *    `doc_id` filter) plus the batch's own come to the driver in one
+    *    job, and each candidate's Jaccard is computed over a local frame
+    *    of its two arrays.
     *
     * Both driver-side sets obey [[graft.core.DriverSet]]'s ceiling. When
     * either is over it, the same candidates come from plain Spark joins
@@ -905,17 +912,46 @@ object Dedup {
         val batchIds = b.iterator.map(_.get(0)).toSet
         val partners = pairs.iterator.flatMap(p => Iterator(p._1, p._2))
           .filterNot(batchIds).toSeq.distinct
-        val cand = spark.createDataFrame(
-            java.util.Arrays.asList(pairs.map(p => Row(p._1, p._2)): _*),
-            StructType(Seq(StructField("x", idType, nullable = false),
-              StructField("y", idType, nullable = false))))
-          .select(least(col("x"), col("y")).as("id_a"),
-            greatest(col("x"), col("y")).as("id_b"))
         val allSh =
           if (partners.isEmpty) newSh
           else storedSh.filter(col("doc_id").isin(partners: _*))
             .unionByName(newSh)
-        new NearDupProbe(verifyJaccard(cand, allSh, threshold), newSh,
+        val shType = allSh.schema("sh").dataType
+        def local(rows: Seq[Row], fields: StructField*): DataFrame =
+          spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+            StructType(StructField("x", idType, nullable = false) +:
+              StructField("y", idType, nullable = false) +: fields))
+        // each pair carries both shingle arrays in one local frame, so no
+        // join verifies them: a join would broadcast a hash relation per
+        // side and trigger, each holding a 1 MB page until the context
+        // cleaner gets to it. A doc with several shingle rows pairs each,
+        // as the join does; one with none drops.
+        val shRows =
+          if (pairs.isEmpty) Some(Array.empty[Row]) else DriverSet.collect(allSh)
+        val verified = shRows match {
+          case Some(rows) =>
+            val shOf = rows.toSeq.groupBy(_.get(0))
+              .map { case (id, rs) => id -> rs.map(_.get(1)) }
+            val none = Seq.empty[Any]
+            val withShs = for {
+              (x, y) <- pairs
+              sx <- shOf.getOrElse(x, none)
+              sy <- shOf.getOrElse(y, none)
+            } yield Row(x, y, sx, sy)
+            val xFirst = col("x") < col("y")
+            jaccardAtLeast(local(withShs, StructField("sx", shType),
+                StructField("sy", shType))
+              .select(least(col("x"), col("y")).as("id_a"),
+                greatest(col("x"), col("y")).as("id_b"),
+                when(xFirst, col("sx")).otherwise(col("sy")).as("sh_a"),
+                when(xFirst, col("sy")).otherwise(col("sx")).as("sh_b")),
+              threshold)
+          case None =>
+            verifyJaccard(local(pairs.map(p => Row(p._1, p._2)))
+              .select(least(col("x"), col("y")).as("id_a"),
+                greatest(col("x"), col("y")).as("id_b")), allSh, threshold)
+        }
+        new NearDupProbe(verified, newSh,
           newBands, Some(b.length.toLong), Some(b.length.toLong / bands),
           Some(pairs.size.toLong), Seq(newSh, newBands))
       case _ =>
