@@ -4,15 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.control.NonFatal
 import graft.content.{AnalyzedContent, Analyzer}
-import graft.operators.{Dedup, VectorOps}
+import graft.operators.Dedup
 
 /** Kernel warm-up: tiny in-memory frames carrying the SAME taxed
   * expression combos as the most expensive tagged warm-up gates. The
   * one-time interpreter/JIT bill for higher-order expression trees is per
   * expression SHAPE, not per data size, so paying it over ~50 rows
-  * replaces the 5-20 s sf0.001 runs of analyzer_tokens / ann_lsh /
-  * dedup_minhash_lsh / ann_ivf_recall / dedup_ngram_jaccard (r4 verdict
-  * item 6: those five dominated a 119 s warm-up pass).
+  * replaces the 5-20 s sf0.001 runs of analyzer_tokens /
+  * dedup_minhash_lsh / dedup_ngram_jaccard (r4 verdict item 6).
   *
   * WarmupSpec verifies each kernel reproduces its gate's combo EXACTLY
   * (same shape-feature subset in the optimized plan), so the rot-guard
@@ -32,9 +31,6 @@ object Warmup {
     val docs = (0L until 48L).map(i =>
       (i, (0 until 24).map(j => words(((i + j) % 8).toInt)).mkString(" ")))
       .toDF("doc_id", "text").repartition(2)
-    val emb = (0L until 64L).map(i =>
-      (i, Array.tabulate(16)(j => ((i * 31 + j * 7) % 13).toFloat / 13f)))
-      .toDF("vec_id", "embedding").repartition(2)
     Seq(
       // analyzer_tokens: transform(|filter(|explode|posexplode|generate|collect_
       "analyzer" -> {
@@ -53,39 +49,16 @@ object Warmup {
       // driver-side probe builds candidates without an explode)
       "shingle_hashes" -> docs.select(col("doc_id"),
         Dedup.hashedShingles(col("text"), 3).as("sh")),
-      // ann_lsh: aggregate(|zip_with(|explode|generate
-      "ann_lsh" -> VectorOps.lshTopK(emb, probeId = 0L, k = 5).select("vec_id"),
-      // emb_neardup_cell: transform(|aggregate(|zip_with(|explode|generate
-      "cell_neardup" -> VectorOps.cellNearDupPairs(emb, threshold = 0.45,
-        nCells = 4),
-      // ann_ivf_recall: aggregate(|zip_with(
-      "ann_ivf" -> VectorOps.ivfTopK(emb, probeId = 0L, k = 5).select("vec_id"),
+      // the vector gates (ann_*, emb_*) score through native expressions
+      // (graft.functions.VectorExprs): none carries a higher-order
+      // function, and ann_lsh / emb_neardup_cell's explode|generate is
+      // the surprisal kernel's combo, so they need no kernel of their own
       // text_repetition: transform(|zip_with(|filter(|explode|generate
       "repetition" -> graft.operators.TextOps.repetition(docs),
       // text_surprisal: filter(|explode|generate (the model-total collect
       // inside surprisal() runs two tiny jobs at construction — part of
       // the warming)
       "surprisal" -> graft.operators.TextOps.surprisal(docs, 1.0, 2.0),
-      // ann_pq_recall: transform(|aggregate(|zip_with( (normalize +
-      // per-subspace argmin encode + ADC fold + rerank cosine)
-      "pq" -> VectorOps.pqTopKReranked(emb, probeId = 0L, k = 5,
-        shortlist = 16, m = 4, codeK = 4).select("vec_id"),
-      // ann_pq_batch: aggregate(|zip_with( (the probes-as-data ADC fold
-      // over a broadcast probe join — the batch shortlist's shape;
-      // codebooks are a tiny literal so no index build runs here)
-      "pq_batch" -> {
-        val books = Seq.tabulate(4)(j => Seq.tabulate(4)(c =>
-          Seq.tabulate(4)(dd => (j + c + dd).toDouble / 8)))
-        // code column as a plain literal array: the kernel must carry
-        // EXACTLY the gate's feature subset (a transform()-built code
-        // would add a feature and break exact-match coverage)
-        VectorOps.pqAdcShortlistBatch(
-          emb.select(col("vec_id"),
-            array(lit(0), lit(1), lit(2), lit(3)).as("code")),
-          books,
-          probes = Seq(0L -> Seq.fill(16)(0.25), 1L -> Seq.fill(16)(0.5)),
-          shortlist = 8)
-      },
       // rel_facets_cms: explode|generate|udf( (the CMS union Aggregator +
       // estimate UDF + map explode)
       "cms_facets" -> {

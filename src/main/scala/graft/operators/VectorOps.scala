@@ -1,119 +1,160 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.functions.{Cosine, IvfAssign, IvfAssignTop, LshSignature, PqEncode, PqNormalize}
+import graft.functions.VectorExpr.{arg, dot, norm}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
 
 /** Vector similarity operators for embedding columns (`ARRAY<FLOAT>`):
   * brute-force cosine top-k (exact baseline), an exact cosine-threshold
-  * pair join, and a random-hyperplane LSH bucket path for scale.
+  * pair join, LSH / IVF / PQ approximate search, and k-NN joins.
   *
-  * Two expression styles:
-  *  - [[dot]]/[[cosine]]: higher-order `zip_with`+`aggregate` — dimension-
-  *    agnostic but interpreted (not codegen'd). Fine on the n-row side of
-  *    a probe lookup; poison inside an n² join.
-  *  - [[dotN]]: the dimension-expanded flat arithmetic expression — stays
-  *    inside whole-stage codegen, ~2 orders of magnitude faster per pair.
-  *    All hot paths (pair joins, signatures) use this.
-  */
+  * Every per-vector computation — [[cosine]], [[pqNormalize]],
+  * [[pqEncode]], [[ivfAssign]], [[ivfAssignTop]], [[lshSignature]] — is
+  * one native Catalyst expression (graft.functions.VectorExprs), used as
+  * a plain column on corpus passes and needle-bounded frames alike. The
+  * all-pairs operators keep their scan shapes (a broadcast matrix, or
+  * cell buckets after one shuffle, scored by flat loops) and share one
+  * dot/norm fold, one insertion top-k and one cell-bucketing step. They
+  * skip a vector whose embedding is null or has no positive norm: it has
+  * no cosine with anything (the [[cosine]] expression gives null). */
 object VectorOps {
 
-  /** Σ aᵢ·bᵢ as a sequential left fold — deterministic evaluation order,
-    * so results are bit-stable across partitionings and match any oracle
-    * that folds left in doubles. Interpreted; use [[dotN]] in joins. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
-  /** Σ aᵢ·bᵢ statically expanded for a known dimension: a flat chain of
-    * `element_at` products — no higher-order functions, so the whole
-    * predicate compiles into whole-stage codegen. Left-to-right summation
-    * order is identical to [[dot]]'s fold, so results are bit-equal. */
-  def dotN(a: Column, b: Column, dim: Int): Column =
-    (0 until dim).map { i =>
-      element_at(a, i + 1).cast("double") * element_at(b, i + 1).cast("double")
-    }.reduce(_ + _)
+  /** Cosine similarity of two vector columns; null when either is null,
+    * the lengths differ, or a norm is zero. */
+  def cosine(a: Column, b: Column): Column = Shim.column(Cosine(arg(a), arg(b)))
 
   /** Embedding dimensionality probe (one tiny aggregate job). */
   def embDim(emb: DataFrame, vecCol: String = "embedding"): Int =
     emb.select(max(size(col(vecCol)))).head().getInt(0)
 
-  /** Kernel twin of the `cosine(embedding, pvec)` scoring leg: one
-    * corpus scan emitting (probe_id, vec_id, sim) for every probe (self
-    * excluded), probes riding in the task closure. sim folds exactly as
-    * [[cosine]] does — dot left-to-right, then ÷ (‖a‖·‖b‖) — so every
-    * double is bit-equal to the expression form (KernelParitySpec).
-    * Probes arrive RAW (unnormalized); their norms precompute once per
-    * task, which is the same fold the expression re-ran per row. */
-  private def cosineSimsKernel(emb: DataFrame,
-                               probes: Seq[(Long, Seq[Double])]): DataFrame = {
+  private def nonNull(emb: DataFrame): DataFrame =
+    emb.filter(col("embedding").isNotNull)
+
+  /** The cosine scoring leg of the exact probe searches: one corpus scan
+    * emitting (probe_id, vec_id, sim) for every probe (self excluded),
+    * probes riding in the task closure with their norms precomputed.
+    * sim folds as [[cosine]] does; a zero-norm row or probe scores
+    * nothing. */
+  private def cosineScan(emb: DataFrame,
+                         probes: Seq[(Long, Seq[Double])]): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val ps: Array[(Long, Array[Double], Double)] = probes.map { case (p, v) =>
-      val a = v.toArray
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i) * a(i); i += 1 }
-      (p, a, math.sqrt(s))
-    }.toArray
-    emb.select(col("vec_id"), col("embedding").cast("array<double>"))
+    val ps = probes.map { case (p, v) => val a = v.toArray; (p, a, norm(a)) }
+      .filter(_._3 > 0).toArray
+    nonNull(emb).select(col("vec_id"), col("embedding").cast("array<double>"))
       .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, v) =>
-          var na = 0.0; var i = 0
-          while (i < v.length) { na += v(i) * v(i); i += 1 }
-          val sqna = math.sqrt(na)
-          ps.iterator.filter(_._1 != id).map { case (pid, pv, pn) =>
-            var d = 0.0; var j = 0
-            while (j < v.length) { d += v(j) * pv(j); j += 1 }
-            (pid, id, d / (sqna * pn))
-          }
+      .mapPartitions(_.flatMap { case (id, v) =>
+        val nv = norm(v)
+        ps.iterator.filter(p => p._1 != id && nv > 0).map { case (pid, pv, pn) =>
+          (pid, id, dot(v, pv) / (nv * pn))
         }
-      }.toDF("probe_id", "vec_id", "sim")
+      }).toDF("probe_id", "vec_id", "sim")
   }
 
   /** Exact top-k nearest neighbours of `probeId`'s vector by cosine.
     * Returns (vec_id, rank), rank 1..k, ties broken by vec_id.
     * One driver lookup fetches the probe, then a single distributed
-    * scan scores the corpus through the cosine KERNEL (the interpreted
-    * HOF form paid ~100× per row — guide §4); TakeOrderedAndProject
-    * keeps the top-k without a global sort. */
-  def bruteForceTopK(emb: DataFrame, probeId: Long, k: Int): DataFrame = {
-    val probe: Seq[Double] = emb.filter(col("vec_id") === probeId)
-      .select(col("embedding").cast("array<double>"))
-      .head().getSeq[Double](0)
-    cosineSimsKernel(emb, Seq(probeId -> probe))
+    * scan scores the corpus; TakeOrderedAndProject keeps the top-k
+    * without a global sort. */
+  def bruteForceTopK(emb: DataFrame, probeId: Long, k: Int): DataFrame =
+    cosineScan(emb, Seq(probeId -> probeVec(emb, probeId)))
       .orderBy(col("sim").desc, col("vec_id").asc)
       .limit(k)
       .select(col("vec_id"),
         row_number().over(org.apache.spark.sql.expressions.Window
           .orderBy(col("sim").desc, col("vec_id").asc)).as("rank"))
-  }
 
   /** Exact top-k for N probes in ONE corpus scan (the oracle side of
     * batched ANN gates, and the honest exact baseline for multi-needle
-    * search). Probes travel in the scoring kernel's closure — constant
-    * plan at any batch width, one flat-loop cosine per (row, probe)
-    * (the broadcast-joined HOF-expression form this replaces paid the
-    * interpreter per pair). Per-probe top-k via the same
-    * WindowGroupLimit shape the PQ shortlist uses. Returns
-    * (probe_id, vec_id, sim). */
+    * search). Probes travel in the scan's closure — constant plan at any
+    * batch width. Per-probe top-k via the same WindowGroupLimit shape
+    * the PQ shortlist uses. Returns (probe_id, vec_id, sim). */
   def bruteForceTopKBatch(emb: DataFrame, probeIds: Seq[Long],
                           k: Int): DataFrame = {
     require(probeIds.nonEmpty, "need at least one probe")
-    val fetched = emb.filter(col("vec_id").isin(probeIds: _*))
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](0 + 1)).toMap
-    val missing = probeIds.filterNot(fetched.contains)
-    require(missing.isEmpty, s"unknown probe id(s): ${missing.mkString(",")}")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("probe_id")).orderBy(col("sim").desc, col("vec_id").asc)
-    cosineSimsKernel(emb, probeIds.map(p => p -> fetched(p)))
+    cosineScan(emb, fetchProbes(emb, probeIds, normalized = false))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
       .select(col("probe_id"), col("vec_id"), col("sim"))
+  }
+
+  /** Every vector with a positive norm by id, as doubles with its norm:
+    * the one matrix the broadcast all-pairs scans read. */
+  private case class Matrix(ids: Array[Long], vecs: Array[Array[Double]],
+                            norms: Array[Double])
+
+  /** The broadcast-matrix scan shape: the matrix is collected and
+    * broadcast once, row indices are DISTRIBUTED, and `row(m, i)` emits
+    * row i's output with tight flat-array loops over the matrix. */
+  private def matrixScan[T: Encoder](emb: DataFrame)(
+      row: (Matrix, Int) => Iterator[T]): Dataset[T] = {
+    val spark = emb.sparkSession
+    import spark.implicits._
+    val rows = nonNull(emb)
+      .select(col("vec_id"), col("embedding").cast("array<double>"))
+      .as[(Long, Array[Double])].collect()
+      .map { case (id, v) => (id, v, norm(v)) }.filter(_._3 > 0).sortBy(_._1)
+    val bc = spark.sparkContext.broadcast(
+      Matrix(rows.map(_._1), rows.map(_._2), rows.map(_._3)))
+    spark.range(0, rows.length.toLong, 1,
+        numPartitions = spark.sparkContext.defaultParallelism * 2)
+      .mapPartitions { it =>
+        val m = bc.value
+        it.flatMap(i => row(m, i.intValue))
+      }
+  }
+
+  /** Insertion top-k by (sim desc, id asc), O(k) per offer — the k-NN
+    * joins' per-vector heap. */
+  private final class TopK(k: Int) {
+    val sims: Array[Double] = Array.fill(k)(Double.NegativeInfinity)
+    val ids: Array[Long] = Array.fill(k)(Long.MaxValue)
+    def offer(sim: Double, id: Long): Unit = {
+      var p = k - 1
+      if (sim > sims(p) || (sim == sims(p) && id < ids(p))) {
+        while (p > 0 && (sim > sims(p - 1) ||
+            (sim == sims(p - 1) && id < ids(p - 1)))) {
+          sims(p) = sims(p - 1); ids(p) = ids(p - 1)
+          p -= 1
+        }
+        sims(p) = sim; ids(p) = id
+      }
+    }
+    /** Filled ranks, 0-based, best first. */
+    def ranks: Iterator[Int] =
+      (0 until k).iterator.filter(r => sims(r) > Double.NegativeInfinity)
+  }
+
+  /** The cell-bucketed scan shape: each non-null vector lands in its
+    * `nAssign` nearest cells ([[ivfAssignTop]] exploded), ONE shuffle on
+    * the cell key co-locates every cell, and `perCell` runs over each
+    * cell's (vec_id, vector, norm) array. Memory per task is the resident
+    * cells' vectors — bounded because nCells grows with the corpus (the
+    * cell-fits-in-executor contract every IVF layout has). */
+  private def cellScan[T: Encoder](emb: DataFrame, centroids: Seq[Seq[Double]],
+                                   nAssign: Int)(
+      perCell: Array[(Long, Array[Double], Double)] => Iterator[T]): Dataset[T] = {
+    val spark = emb.sparkSession
+    import spark.implicits._
+    emb.select(explode(ivfAssignTop(col("embedding"), centroids, nAssign)).as("cell"),
+        col("vec_id"), col("embedding"))
+      .repartition(col("cell"))
+      .select(col("cell"), col("vec_id"), col("embedding").cast("array<double>"))
+      .as[(Int, Long, Array[Double])]
+      .mapPartitions { it =>
+        val byCell = scala.collection.mutable.LinkedHashMap
+          .empty[Int, scala.collection.mutable.ArrayBuffer[(Long, Array[Double], Double)]]
+        it.foreach { case (c, id, v) =>
+          val nv = norm(v)
+          if (nv > 0) byCell.getOrElseUpdate(c,
+            scala.collection.mutable.ArrayBuffer.empty) += ((id, v, nv))
+        }
+        byCell.valuesIterator.flatMap(buf => perCell(buf.toArray))
+      }
   }
 
   /** All-pairs near-duplicates by cosine ≥ threshold. EXACT.
@@ -123,157 +164,33 @@ object VectorOps {
     * the bulk with recall ≈ 1 — measured on this data: per-bit hyperplane
     * collision 0.65 for true pairs vs 0.53 for random ones). A
     * BroadcastNestedLoopJoin pays row-materialization per pair (two
-    * 64-float arrays copied 2M times); the kernel below instead
-    * broadcasts the vector matrix once and runs a tight flat-array loop
-    * per DISTRIBUTED row — the dot-product kernel the codegen'd join
-    * can't reach (~10× faster at n=2000).
+    * 64-float arrays copied 2M times); [[matrixScan]] instead broadcasts
+    * the vector matrix once and runs a flat dot loop per DISTRIBUTED row
+    * (~10× faster at n=2000).
     *
-    * Scale envelope: the broadcast is n·d floats (~256 MB at n=1M,
+    * Scale envelope: the broadcast is n·d doubles (~512 MB at n=1M,
     * d=64) — beyond that, exact all-pairs is infeasible ANYWHERE and the
-    * scale path is per-[[ivfCellId]]-cell kernels or [[lshTopK]] with
-    * measured recall. */
+    * scale path is [[cellNearDupPairs]] or [[lshTopK]] with measured
+    * recall. */
   def cosineNearDupPairs(emb: DataFrame, threshold: Double): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val vecs: Array[(Long, Array[Float])] = emb
-      .select(col("vec_id"), col("embedding").cast("array<float>"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    val bc = spark.sparkContext.broadcast(vecs)
-    val n = vecs.length
     val thr = threshold
-    spark.range(0, n.toLong, 1,
-        numPartitions = spark.sparkContext.defaultParallelism * 2)
-      .mapPartitions { it =>
-        val arr = bc.value
-        val m = arr.length
-        val dims = if (m == 0) 0 else arr(0)._2.length
-        val norms = new Array[Double](m)
-        var k = 0
-        while (k < m) {
-          val v = arr(k)._2
-          var s = 0.0; var d = 0
-          while (d < dims) { s += v(d).toDouble * v(d).toDouble; d += 1 }
-          norms(k) = math.sqrt(s); k += 1
-        }
-        it.flatMap { iL =>
-          val i = iL.toInt
-          val vi = arr(i)._2
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-          var j = i + 1
-          while (j < m) {
-            val vj = arr(j)._2
-            var s = 0.0; var d = 0
-            while (d < dims) { s += vi(d).toDouble * vj(d).toDouble; d += 1 }
-            if (s >= thr * norms(i) * norms(j)) out += ((arr(i)._1, arr(j)._1))
-            j += 1
-          }
-          out
-        }
-      }.toDF("id_a", "id_b")
+    matrixScan(emb) { (m, i) =>
+      val vi = m.vecs(i)
+      (i + 1 until m.ids.length).iterator
+        .filter(j => dot(vi, m.vecs(j)) >= thr * m.norms(i) * m.norms(j))
+        .map(j => (m.ids(i), m.ids(j)))
+    }.toDF("id_a", "id_b")
   }
-
-  /** Pure-Catalyst variant of [[cosineNearDupPairs]] (BNLJ + static
-    * codegen'd dot) — kept as a cross-check in tests. */
-  def cosineNearDupPairsSql(emb: DataFrame, threshold: Double): DataFrame = {
-    val dim = embDim(emb)
-    val withNorm = emb.select(col("vec_id"), col("embedding"),
-        sqrt(dotN(col("embedding"), col("embedding"), dim)).as("nrm"))
-      .persist()
-    val a = withNorm.select(col("vec_id").as("id_a"),
-      col("embedding").as("emb_a"), col("nrm").as("nrm_a"))
-    val b = withNorm.select(col("vec_id").as("id_b"),
-      col("embedding").as("emb_b"), col("nrm").as("nrm_b"))
-    a.join(b, col("id_a") < col("id_b"))
-      .filter(dotN(col("emb_a"), col("emb_b"), dim) >=
-        lit(threshold) * col("nrm_a") * col("nrm_b"))
-      .select("id_a", "id_b")
-  }
-
-  /** Deterministic pseudo-random hyperplane component for (plane, dim):
-    * a hash-derived value in [-1, 1] — no RNG, so signatures are stable
-    * across runs and cluster layouts. Computed driver-side into constant
-    * array literals: a statically-expanded planes×dim expression tree
-    * (2048 nodes at 32×64) blows up Janino codegen compile time, so the
-    * signature instead folds a SMALL higher-order expression over one 2-D
-    * constant — interpreted per row, which is the right trade for a
-    * write-once signature column.
-    *
-    * md5-derived (first 60 bits of md5("plane:dim")) so any engine can
-    * replicate the matrix exactly — the ann_lsh oracle rebuilds it in
-    * DuckDB SQL, the same move that made dedup_simhash hash-matchable. */
-  private[operators] def planeComponent(plane: Int, dim: Int): Double = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(s"$plane:$dim".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val v = java.lang.Long.parseLong(hex.take(15), 16) // 60 bits, positive
-    ((v % 2000001L).toDouble - 1000000.0) / 1000000.0
-  }
-
-  private def planeMatrix(planes: Int, dim: Int): Column =
-    typedLit((0 until planes).map(p => (0 until dim).map(i => planeComponent(p, i))))
 
   /** Random-hyperplane LSH signature: `planes` sign bits packed into a
     * BIGINT. Vectors with high cosine similarity collide with high
-    * probability; bucket-join replaces the cross-join at scale. */
+    * probability; bucket-join replaces the cross-join at scale. A null
+    * embedding's signature is 0. */
   def lshSignature(vec: Column, planes: Int, dim: Int): Column = {
     require(planes <= 63, "signature packs into one BIGINT")
-    val mat = planeMatrix(planes, dim)
-    val bits = zip_with(mat, sequence(lit(0), lit(planes - 1)),
-      (plane, p) => {
-        val proj = aggregate(zip_with(vec, plane,
-          (x, w) => x.cast("double") * w), lit(0.0), (acc, x) => acc + x)
-        when(proj >= 0, call_function("shiftleft", lit(1L), p)).otherwise(lit(0L))
-      })
-    aggregate(bits, lit(0L), (acc, b) => acc.bitwiseOR(b))
-  }
-
-  /** Kernel twin of [[lshSignature]] (guide §4, same recipe as the PQ/IVF
-    * kernels below): per plane a flat left-to-right dot product, sign bit
-    * packed at position p — bit-equal to the expression incl. the
-    * null/NaN edges: a zip_with length mismatch gives a null projection
-    * (bit 0), and the `proj >= 0` comparison is Spark SQL's TOTAL double
-    * ordering, where NaN ≥ 0 and -0.0 ≥ 0.0 are both true — `!(proj < 0)`
-    * in primitive terms, NOT `proj >= 0` (KernelParitySpec edge rows). */
-  private[operators] def lshSigKernel(v: Array[Double],
-                                      mat: Array[Array[Double]]): Long = {
-    if (v == null) return 0L
-    var sig = 0L
-    var p = 0
-    while (p < mat.length) {
-      val plane = mat(p)
-      if (v.length == plane.length) { // zip_with length mismatch ⇒ null proj ⇒ bit 0
-        var proj = 0.0; var i = 0
-        while (i < plane.length) { proj += v(i) * plane(i); i += 1 }
-        if (!(proj < 0)) sig |= 1L << p // Spark total ordering: NaN ≥ 0
-      }
-      p += 1
-    }
-    sig
-  }
-
-  /** (vec_id, embedding, sig) — the corpus-wide signature pass of
-    * [[lshTopK]] through [[lshSigKernel]] instead of the per-row
-    * interpreted `zip_with`/`aggregate` fold (guide §4: no non-codegen
-    * expressions on corpus passes; the expression form stays for
-    * needle-bounded use and the oracle-replayable tests). */
-  private[operators] def lshSigned(emb: DataFrame, planes: Int,
-                                   dim: Int): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val mat = Array.tabulate(planes, dim)((p, i) => planeComponent(p, i))
-    emb.select(col("vec_id"), col("embedding").cast("array<float>"))
-      .as[(Long, Array[Float])]
-      .mapPartitions(_.map { case (id, v) =>
-        // a null embedding stays null: the kernel gives it signature 0,
-        // as the expression does
-        val dv = if (v == null) null else {
-          val d = new Array[Double](v.length)
-          var i = 0
-          while (i < v.length) { d(i) = v(i).toDouble; i += 1 }
-          d
-        }
-        (id, v, lshSigKernel(dv, mat))
-      }).toDF("vec_id", "embedding", "sig")
+    Shim.column(LshSignature(arg(vec), planes, dim))
   }
 
   /** ANN via LSH prebucketing: candidates = vectors sharing at least one
@@ -286,12 +203,13 @@ object VectorOps {
     val bandBits = planes / bands
     val mask = (1L << bandBits) - 1
     val dim = embDim(emb)
-    val withSig = lshSigned(emb, planes, dim)
     val bandCols = (0 until bands).map { b =>
       struct(lit(b).as("band"),
         shiftright(col("sig"), b * bandBits).bitwiseAND(lit(mask)).as("key"))
     }
-    val exploded = withSig
+    val exploded = nonNull(emb)
+      .select(col("vec_id"), col("embedding"),
+        lshSignature(col("embedding"), planes, dim).as("sig"))
       .withColumn("band_key", explode(array(bandCols: _*)))
       .persist()
     val probeBuckets = exploded.filter(col("vec_id") === probeId)
@@ -300,10 +218,8 @@ object VectorOps {
       .join(broadcast(probeBuckets), col("band_key") === col("probe_bk"))
       .filter(col("vec_id") =!= probeId)
       .select("vec_id", "embedding").distinct()
-    val probe: Seq[Double] = emb.filter(col("vec_id") === probeId)
-      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
     candidates
-      .withColumn("sim", cosine(col("embedding"), typedLit(probe)))
+      .withColumn("sim", cosine(col("embedding"), typedLit(probeVec(emb, probeId))))
       .orderBy(col("sim").desc, col("vec_id").asc)
       .limit(k)
       .select("vec_id", "sim")
@@ -312,18 +228,10 @@ object VectorOps {
   /** IVF-style coarse partitioning: assign each vector to the nearest of
     * `nCells` hash-derived centroids once at write time; queries probe
     * only the closest cells. Here the cell id doubles as a clustering
-    * (partition) key — the 100 TB layout story. Same constant-matrix
-    * fold as [[lshSignature]] (write-once column; keep the tree small). */
-  def ivfCellId(vec: Column, nCells: Int, dim: Int): Column = {
-    val mat = typedLit((0 until nCells).map(c =>
-      (0 until dim).map(i => planeComponent(1000 + c, i))))
-    val scored = zip_with(mat, sequence(lit(0), lit(nCells - 1)),
-      (centroid, c) => struct(
-        aggregate(zip_with(vec, centroid, (x, w) => x.cast("double") * w),
-          lit(0.0), (acc, x) => acc + x).as("sim"),
-        c.as("cell")))
-    array_max(scored).getField("cell")
-  }
+    * (partition) key — the 100 TB layout story. */
+  def ivfCellId(vec: Column, nCells: Int, dim: Int): Column =
+    ivfAssign(vec, (0 until nCells).map(c =>
+      (0 until dim).map(i => LshSignature.planeComponent(1000 + c, i))))
 
   /** Data-sampled IVF centroids: every (n/nCells)-th vector by id,
     * L2-normalized — the deterministic zero-iteration coarse quantizer
@@ -334,46 +242,38 @@ object VectorOps {
                    n0: Option[Long] = None): Seq[Seq[Double]] = {
     val n = n0.getOrElse(emb.count())
     val stride = math.max(1L, n / nCells)
-    emb.filter(pmod(col("vec_id"), lit(stride)) === 0)
+    nonNull(emb).filter(pmod(col("vec_id"), lit(stride)) === 0)
       .orderBy("vec_id").limit(nCells)
       .select(col("embedding").cast("array<double>")).collect()
-      .map { r =>
-        val v = r.getSeq[Double](0)
-        val nrm = math.sqrt(v.map(x => x * x).sum)
-        if (nrm == 0) v else v.map(_ / nrm)
-      }.toSeq
+      .map(r => PqNormalize.normalize(r.getSeq[Double](0).toArray).toSeq).toSeq
   }
 
   /** Cell assignment against explicit centroids (argmax cosine — the
-    * centroids are unit vectors, so max dot suffices). */
-  def ivfAssign(vec: Column, centroids: Seq[Seq[Double]]): Column = {
-    val mat = typedLit(centroids)
-    val scored = zip_with(mat, sequence(lit(0), lit(centroids.size - 1)),
-      (centroid, c) => struct(
-        aggregate(zip_with(vec, centroid, (x, w) => x.cast("double") * w),
-          lit(0.0), (acc, x) => acc + x).as("sim"),
-        c.as("cell")))
-    array_max(scored).getField("cell")
-  }
+    * centroids are unit vectors, so max dot suffices; ties go to the
+    * larger cell). Null for a null embedding. */
+  def ivfAssign(vec: Column, centroids: Seq[Seq[Double]]): Column =
+    Shim.column(IvfAssign(arg(vec), centroids))
 
   /** The probe's `nProbe` best cells — driver-side on the one probe
     * vector (the query-time half of the IVF protocol). */
   def ivfProbeCells(vec: Seq[Double], centroids: Seq[Seq[Double]],
-                    nProbe: Int): Seq[Int] =
-    centroids.zipWithIndex.map { case (cen, c) =>
-      (vec.indices.map(i => vec(i) * cen(i)).sum, c)
-    }.sortBy { case (s, c) => (-s, c) }.take(nProbe).map(_._2)
+                    nProbe: Int): Seq[Int] = {
+    val v = vec.toArray
+    centroids.zipWithIndex.map { case (cen, c) => (dot(v, cen.toArray), c) }
+      .sortBy { case (s, c) => (-s, c) }.take(nProbe).map(_._2)
+  }
 
   /** Vectors every deterministic trainer sees: a stride sample of at
-    * most `trainN` rows, id-ordered — the FAISS discipline (quantizers
-    * train on a bounded sample, never the corpus), and the reason
-    * training costs ZERO corpus passes beyond one bounded collect. */
+    * most `trainN` non-null rows, id-ordered — the FAISS discipline
+    * (quantizers train on a bounded sample, never the corpus), and the
+    * reason training costs ZERO corpus passes beyond one bounded
+    * collect. */
   private def trainSample(df: DataFrame, vecExpr: Column,
                           trainN: Int,
                           n0: Option[Long] = None): Array[Array[Double]] = {
     val n = n0.getOrElse(df.count())
     val stride = math.max(1L, n / trainN)
-    df.filter(pmod(col("vec_id"), lit(stride)) === 0)
+    df.filter(pmod(col("vec_id"), lit(stride)) === 0 && vecExpr.isNotNull)
       .orderBy("vec_id").limit(trainN)
       .select(vecExpr).collect()
       .map(_.getSeq[Double](0).toArray)
@@ -382,19 +282,15 @@ object VectorOps {
   /** Lloyd-refined centroids: the deterministic [[ivfCentroids]] seeds,
     * then `iters` k-means rounds DRIVER-SIDE over a bounded
     * [[trainSample]] — tight flat loops instead of one corpus-wide
-    * assign + mean-aggregate JOB per round (r7 shape: at 100 TB that
-    * was `iters` extra passes over the data for a model-sized
-    * artifact; at gate scale it was most of the coarse-training wall).
-    * Assignment replicates [[ivfAssign]] exactly: argmax dot with
-    * left-to-right sums, ties to the LARGER cell. Empty cells keep
-    * their previous centroid; means are L2-normalized. Refined
-    * centroids raise cell recall (pinned in VectorOpsSpec) without
-    * changing any plan shape — the engine-portable gates keep the
-    * zero-iteration sample so their oracles stay exact. */
+    * assign + mean-aggregate JOB per round. Assignment is [[ivfAssign]]'s
+    * own body. Empty cells keep their previous centroid; means are
+    * L2-normalized. Refined centroids raise cell recall (pinned in
+    * VectorOpsSpec) without changing any plan shape — the
+    * engine-portable gates keep the zero-iteration sample so their
+    * oracles stay exact. */
   def kmeansCentroids(emb: DataFrame, nCells: Int,
                       iters: Int = 2, trainN: Int = 16384): Seq[Seq[Double]] = {
-    // one count serves both deterministic stride samplers (same frame,
-    // same n — the second count job was pure repetition)
+    // one count serves both deterministic stride samplers
     val n = emb.count()
     var cen: Array[Array[Double]] =
       ivfCentroids(emb, nCells, Some(n)).map(_.toArray).toArray
@@ -406,14 +302,7 @@ object VectorOps {
         val sums = Array.fill(cen.length, dim)(0.0)
         val cnts = new Array[Long](cen.length)
         train.foreach { v =>
-          var best = 0; var bestS = Double.NegativeInfinity
-          var c = 0
-          while (c < cen.length) {
-            var s = 0.0; var i = 0
-            while (i < dim) { s += v(i) * cen(c)(i); i += 1 }
-            if (s >= bestS) { bestS = s; best = c } // ties -> larger cell
-            c += 1
-          }
+          val best = IvfAssign.assign(v, cen)
           var i = 0
           while (i < dim) { sums(best)(i) += v(i); i += 1 }
           cnts(best) += 1
@@ -422,7 +311,7 @@ object VectorOps {
           if (cnts(c) == 0) old
           else {
             val mean = Array.tabulate(dim)(i => sums(c)(i) / cnts(c))
-            val nrm = math.sqrt(mean.map(x => x * x).sum)
+            val nrm = norm(mean)
             if (nrm == 0) old else mean.map(_ / nrm)
           }
         }
@@ -431,21 +320,12 @@ object VectorOps {
     cen.map(_.toSeq).toSeq
   }
 
-  /** The `nAssign` nearest cells per vector (multi-probe assignment):
-    * sort the (sim, cell) structs descending — struct ordering makes
-    * ties resolve to the larger cell, identical to [[ivfAssign]]'s
-    * argmax — and keep the first `nAssign` cell ids. */
+  /** The `nAssign` nearest cells per vector (multi-probe assignment),
+    * best first, ties to the larger cell as in [[ivfAssign]]. Null for a
+    * null embedding. */
   def ivfAssignTop(vec: Column, centroids: Seq[Seq[Double]],
-                   nAssign: Int): Column = {
-    val mat = typedLit(centroids)
-    val scored = zip_with(mat, sequence(lit(0), lit(centroids.size - 1)),
-      (centroid, c) => struct(
-        aggregate(zip_with(vec, centroid, (x, w) => x.cast("double") * w),
-          lit(0.0), (acc, x) => acc + x).as("sim"),
-        c.as("cell")))
-    transform(slice(reverse(array_sort(scored)), 1, nAssign),
-      s => s.getField("cell"))
-  }
+                   nAssign: Int): Column =
+    Shim.column(IvfAssignTop(arg(vec), centroids, nAssign))
 
   /** Cluster-bucketed embedding near-dup — the 100 TB scale path for
     * [[cosineNearDupPairs]] (SemDeDup's contract: semantic duplicates
@@ -455,27 +335,21 @@ object VectorOps {
     * (multi-probe — recovers boundary pairs the single-cell form loses;
     * work bound becomes nAssign²·n²/nCells for balanced cells).
     *
-    * Assignment is one interpreted pass against deterministic
-    * centroids — DEFAULT [[kmeansCentroids]] (Lloyd-refined; the raw
+    * Centroids default to [[kmeansCentroids]] (Lloyd-refined; the raw
     * [[ivfCentroids]] stride sample is available via
     * `centroidsOverride` for engine-replayable oracles, but as a
     * DEPLOYMENT default it degenerates on replicated corpora: every
     * stride hit can land in one replica's direction and the cell split
     * collapses to 3·n² — SCALE.md measured 215.8 s vs 7.7 s on the
-    * r8 k-NN probe); pairs are then resolved by ONE repartition on
-    * the cell key and a per-partition flat-array dot kernel — the same
-    * move as [[cosineNearDupPairs]], because a shuffle JOIN would copy
-    * two 64-float arrays into every candidate pair row (measured 6 s
-    * vs 1 s at 1M pairs). The kernel's fold order is identical to
-    * [[dotN]]'s left-to-right double chain, so the pair set is
-    * bit-equal to the declarative form and the DuckDB oracle. Memory
-    * per task is the resident cells' vectors — bounded because nCells
-    * grows with the corpus (the cell-fits-in-executor contract every
-    * IVF layout already has). Pairs sharing no assigned cell are
-    * forfeited by contract — recall vs the exact operator is pinned in
-    * VectorOpsSpec, and the `emb_neardup_cell` gate replays the whole
-    * pipeline (centroid choice, top-2 assignment, threshold) in the
-    * oracle. Returns distinct (id_a, id_b). */
+    * r8 k-NN probe). Pairs are resolved by [[cellScan]] — a shuffle JOIN
+    * would copy two 64-float arrays into every candidate pair row
+    * (measured 6 s vs 1 s at 1M pairs). The dot folds left to right, so
+    * the pair set is bit-equal to the DuckDB oracle's. Pairs sharing no
+    * assigned cell are forfeited by contract — recall vs the exact
+    * operator is pinned in VectorOpsSpec, and the `emb_neardup_cell`
+    * gate replays the whole pipeline (centroid choice, top-2
+    * assignment, threshold) in the oracle. Returns distinct
+    * (id_a, id_b). */
   def cellNearDupPairs(emb: DataFrame, threshold: Double,
                        nCells: Int = 16, nAssign: Int = 2,
                        centroidsOverride: Option[Seq[Seq[Double]]] = None): DataFrame = {
@@ -483,115 +357,51 @@ object VectorOps {
     import spark.implicits._
     val centroids = centroidsOverride.getOrElse(kmeansCentroids(emb, nCells))
     val thr = threshold
-    assignedCells(emb, centroids, nAssign)
-      .repartition(col("cell"))
-      .mapPartitions { it =>
-        val byCell = scala.collection.mutable.LinkedHashMap
-          .empty[Int, scala.collection.mutable.ArrayBuffer[(Long, Array[Float], Double)]]
-        it.foreach { case (c, id, v) =>
-          var s = 0.0; var d = 0
-          while (d < v.length) { s += v(d).toDouble * v(d).toDouble; d += 1 }
-          byCell.getOrElseUpdate(c,
-            scala.collection.mutable.ArrayBuffer.empty) += ((id, v, math.sqrt(s)))
-        }
-        byCell.valuesIterator.flatMap { buf =>
-          val arr = buf.toArray
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-          var i = 0
-          while (i < arr.length) {
-            val (ida, va, na) = arr(i)
-            var j = i + 1
-            while (j < arr.length) {
-              val (idb, vb, nb) = arr(j)
-              var s = 0.0; var d = 0
-              while (d < va.length) { s += va(d).toDouble * vb(d).toDouble; d += 1 }
-              if (s >= thr * na * nb)
-                out += (if (ida < idb) (ida, idb) else (idb, ida))
-              j += 1
-            }
-            i += 1
-          }
-          out
-        }
-      }.toDF("id_a", "id_b").distinct()
+    cellScan(emb, centroids, nAssign) { arr =>
+      for {
+        i <- arr.indices.iterator
+        j <- (i + 1 until arr.length).iterator
+        (ida, va, na) = arr(i)
+        (idb, vb, nb) = arr(j)
+        if dot(va, vb) >= thr * na * nb
+      } yield if (ida < idb) (ida, idb) else (idb, ida)
+    }.toDF("id_a", "id_b").distinct()
   }
 
   /** Exact all-pairs k-NN JOIN: for EVERY vector its k nearest
     * neighbours by cosine — the SemDeDup / kNN-LM / retrieval-training
     * primitive where, unlike the probe searches above, every row is a
     * query. Same broadcast-matrix envelope as [[cosineNearDupPairs]]
-    * (n·d floats broadcast once; beyond that the scale path is
-    * [[knnJoinCell]]): per DISTRIBUTED row one flat dot loop over the
-    * matrix with an O(k) insertion top-k — O(n²d) work spread over the
-    * cluster, never materialized as pairs. The fold is the same
-    * sequential s += vᵢ·vⱼ as every kernel here, so sims (and therefore
-    * ranks, tie-broken by neighbour id) are bit-reproducible against a
-    * left-folding oracle. Returns (vec_id, nb_id, rank), rank 1..k. */
+    * (beyond it the scale path is [[knnJoinCell]]): per DISTRIBUTED row
+    * one flat dot loop over the matrix into an O(k) insertion top-k —
+    * O(n²d) work spread over the cluster, never materialized as pairs.
+    * Sims (and therefore ranks, tie-broken by neighbour id) are
+    * bit-reproducible against a left-folding oracle. Returns
+    * (vec_id, nb_id, rank), rank 1..k. */
   def knnJoinExact(emb: DataFrame, k: Int): DataFrame = {
     require(k >= 1, "k must be positive")
     val spark = emb.sparkSession
     import spark.implicits._
-    val vecs: Array[(Long, Array[Float])] = emb
-      .select(col("vec_id"), col("embedding").cast("array<float>"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    val bc = spark.sparkContext.broadcast(vecs)
     val kk = k
-    spark.range(0, vecs.length.toLong, 1,
-        numPartitions = spark.sparkContext.defaultParallelism * 2)
-      .mapPartitions { it =>
-        val arr = bc.value
-        val m = arr.length
-        val dims = if (m == 0) 0 else arr(0)._2.length
-        val norms = new Array[Double](m)
-        var t = 0
-        while (t < m) {
-          val v = arr(t)._2
-          var s = 0.0; var d = 0
-          while (d < dims) { s += v(d).toDouble * v(d).toDouble; d += 1 }
-          norms(t) = math.sqrt(s); t += 1
-        }
-        it.flatMap { iL =>
-          val i = iL.toInt
-          val vi = arr(i)._2
-          val bestSim = Array.fill(kk)(Double.NegativeInfinity)
-          val bestId = Array.fill(kk)(Long.MaxValue)
-          var j = 0
-          while (j < m) {
-            if (j != i) {
-              val vj = arr(j)._2
-              var s = 0.0; var d = 0
-              while (d < dims) { s += vi(d).toDouble * vj(d).toDouble; d += 1 }
-              val sim = s / (norms(i) * norms(j))
-              val id = arr(j)._1
-              // insertion by (sim desc, id asc)
-              var p = kk - 1
-              if (sim > bestSim(p) || (sim == bestSim(p) && id < bestId(p))) {
-                while (p > 0 && (sim > bestSim(p - 1) ||
-                    (sim == bestSim(p - 1) && id < bestId(p - 1)))) {
-                  bestSim(p) = bestSim(p - 1); bestId(p) = bestId(p - 1)
-                  p -= 1
-                }
-                bestSim(p) = sim; bestId(p) = id
-              }
-            }
-            j += 1
-          }
-          (0 until kk).iterator
-            .filter(r => bestSim(r) > Double.NegativeInfinity)
-            .map(r => (arr(i)._1, bestId(r), (r + 1).toLong))
-        }
-      }.toDF("vec_id", "nb_id", "rank")
+    matrixScan(emb) { (m, i) =>
+      val top = new TopK(kk)
+      var j = 0
+      while (j < m.ids.length) {
+        if (j != i) top.offer(dot(m.vecs(i), m.vecs(j)) / (m.norms(i) * m.norms(j)), m.ids(j))
+        j += 1
+      }
+      top.ranks.map(r => (m.ids(i), top.ids(r), (r + 1).toLong))
+    }.toDF("vec_id", "nb_id", "rank")
   }
 
   /** Cell-bucketed k-NN join — the 100 TB path past [[knnJoinExact]]'s
     * broadcast envelope (the same SemDeDup contract as
     * [[cellNearDupPairs]]: near neighbours share a coarse cell, so each
     * vector searches only its `nAssign` cells and work is
-    * nAssign²·Σ|cell|², never n²). One explode + ONE cell-keyed
-    * repartition + per-partition flat-array top-k kernels, then
-    * per-vector candidates from different cells merge under one
-    * (dedup → rank) window. Approximate: neighbours sharing no assigned
-    * cell are forfeited — recall vs exact is measured and gated
+    * nAssign²·Σ|cell|², never n²). One [[cellScan]] runs a per-cell
+    * top-k, then per-vector candidates from different cells merge under
+    * one (dedup → rank) window. Approximate: neighbours sharing no
+    * assigned cell are forfeited — recall vs exact is measured and gated
     * (ann_knn_cell_recall) rather than assumed. Default centroids are
     * [[kmeansCentroids]] (Lloyd) — see [[cellNearDupPairs]] for why the
     * stride sample is an override, not a default. */
@@ -603,48 +413,21 @@ object VectorOps {
     import spark.implicits._
     val centroids = centroidsOverride.getOrElse(kmeansCentroids(emb, nCells))
     val kk = k
-    val perCell = assignedCells(emb, centroids, nAssign)
-      .repartition(col("cell"))
-      .mapPartitions { it =>
-        val byCell = scala.collection.mutable.LinkedHashMap
-          .empty[Int, scala.collection.mutable.ArrayBuffer[(Long, Array[Float], Double)]]
-        it.foreach { case (c, id, v) =>
-          var s = 0.0; var d = 0
-          while (d < v.length) { s += v(d).toDouble * v(d).toDouble; d += 1 }
-          byCell.getOrElseUpdate(c,
-            scala.collection.mutable.ArrayBuffer.empty) += ((id, v, math.sqrt(s)))
-        }
-        byCell.valuesIterator.flatMap { buf =>
-          val arr = buf.toArray
-          arr.indices.iterator.flatMap { i =>
-            val (ida, va, na) = arr(i)
-            val bestSim = Array.fill(kk)(Double.NegativeInfinity)
-            val bestId = Array.fill(kk)(Long.MaxValue)
-            var j = 0
-            while (j < arr.length) {
-              if (j != i) {
-                val (idb, vb, nb) = arr(j)
-                var s = 0.0; var d = 0
-                while (d < va.length) { s += va(d).toDouble * vb(d).toDouble; d += 1 }
-                val sim = s / (na * nb)
-                var p = kk - 1
-                if (sim > bestSim(p) || (sim == bestSim(p) && idb < bestId(p))) {
-                  while (p > 0 && (sim > bestSim(p - 1) ||
-                      (sim == bestSim(p - 1) && idb < bestId(p - 1)))) {
-                    bestSim(p) = bestSim(p - 1); bestId(p) = bestId(p - 1)
-                    p -= 1
-                  }
-                  bestSim(p) = sim; bestId(p) = idb
-                }
-              }
-              j += 1
-            }
-            (0 until kk).iterator
-              .filter(r => bestSim(r) > Double.NegativeInfinity)
-              .map(r => (ida, bestId(r), bestSim(r)))
+    val perCell = cellScan(emb, centroids, nAssign) { arr =>
+      arr.indices.iterator.flatMap { i =>
+        val (ida, va, na) = arr(i)
+        val top = new TopK(kk)
+        var j = 0
+        while (j < arr.length) {
+          if (j != i) {
+            val (idb, vb, nb) = arr(j)
+            top.offer(dot(va, vb) / (na * nb), idb)
           }
+          j += 1
         }
-      }.toDF("vec_id", "nb_id", "sim")
+        top.ranks.map(r => (ida, top.ids(r), top.sims(r)))
+      }
+    }.toDF("vec_id", "nb_id", "sim")
     // a pair seen from two shared cells carries the SAME sim (identical
     // fold) — dedupe, then one global per-vector rank
     val w = org.apache.spark.sql.expressions.Window
@@ -663,12 +446,10 @@ object VectorOps {
   def ivfTopK(emb: DataFrame, probeId: Long, k: Int,
               nCells: Int = 16, nProbe: Int = 4): DataFrame = {
     val centroids = ivfCentroids(emb, nCells)
-    val probe: Seq[Double] = emb.filter(col("vec_id") === probeId)
-      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
+    val probe = probeVec(emb, probeId)
     val cells = ivfProbeCells(probe, centroids, nProbe)
-    cosineSimsKernel(
-        withCellKernel(emb, centroids)
-          .filter(col("cell").isin(cells: _*))
+    cosineScan(
+        emb.filter(ivfAssign(col("embedding"), centroids).isin(cells: _*))
           .select("vec_id", "embedding"),
         Seq(probeId -> probe))
       .orderBy(col("sim").desc, col("vec_id").asc)
@@ -685,23 +466,28 @@ object VectorOps {
   // at 100 TB. Vectors are L2-normalized first so subspace-L2 ADC ranks
   // like cosine (for unit vectors ‖a−b‖² = 2 − 2·cos).
 
-  private def l2sq(a: Seq[Double], b: Seq[Double]): Double =
-    a.indices.map(i => (a(i) - b(i)) * (a(i) - b(i))).sum
-
-  private def normalizeVec(v: Seq[Double]): Seq[Double] = {
-    val nrm = math.sqrt(v.map(x => x * x).sum)
-    if (nrm == 0) v else v.map(_ / nrm)
+  /** The ADC lookup table of a normalized probe: per subspace j and code
+    * c, ‖probe[j] − centroid_{j,c}‖². */
+  private def adcTable(pn: Seq[Double],
+                       books: Seq[Seq[Seq[Double]]]): Seq[Seq[Double]] = {
+    val dsub = books.head.head.size
+    books.indices.map { j =>
+      val sub = pn.slice(j * dsub, (j + 1) * dsub)
+      books(j).map(cen => sub.indices.map(i => (sub(i) - cen(i)) * (sub(i) - cen(i))).sum)
+    }
   }
+
+  /** A row's ADC distance: its m codes' table entries summed left to
+    * right as a flat chain (m is static, so it stays in whole-stage
+    * codegen). */
+  private def adcDist(lut: Column, m: Int): Column =
+    (0 until m).map(j => lut(j)(col("code")(j))).reduce(_ + _)
 
   /** Per-subspace codebooks: a deterministic stride sample seeds
     * `codeK` centroids per subspace (same scheme as [[ivfCentroids]]),
-    * then `iters` Lloyd rounds refine EVERY subspace at once — one
-    * (subspace, code, component)-keyed mean aggregate per round
-    * (map-side combined; the collect is m·codeK·dsub doubles, a
-    * model-sized materialization). Raw sampled centroids quantize badly
-    * (measured recall 0.1-0.3); two Lloyd rounds are what make PQ
-    * usable, exactly as in production PQ training. Empty codes keep
-    * their previous centroid. */
+    * then `iters` Lloyd rounds refine every subspace. Raw sampled
+    * centroids quantize badly (measured recall 0.1-0.3); two Lloyd rounds
+    * are what make PQ usable, exactly as in production PQ training. */
   def pqCodebooks(emb: DataFrame, m: Int, codeK: Int,
                   iters: Int = 2): Seq[Seq[Seq[Double]]] = {
     val normed = pqNormalized(emb).persist()
@@ -711,18 +497,13 @@ object VectorOps {
 
   /** Training over an already-materialized normalized frame — shared
     * with [[pqTopKReranked]] so one persisted pass feeds training AND
-    * the code scan instead of re-shuffling the corpus per stage.
+    * the code scan.
     *
     * Lloyd rounds run DRIVER-SIDE over a bounded [[trainSample]] (the
-    * FAISS discipline; see [[kmeansCentroids]]): the r7 shape paid one
-    * corpus-wide encode + (subspace, code, component)-mean JOB per
-    * round for a model-sized artifact — at gate scale that was most of
-    * every index build's wall, at 100 TB it is `iters` needless corpus
-    * passes. Seeds are the same deterministic stride rows as before
-    * (positions 0, n/codeK, … of the id-ordered sample — identical
-    * vectors when ids are contiguous); per-round assignment replicates
-    * [[pqEncode]] exactly (left-to-right (x−w)² sums, ties to the
-    * smaller code); empty codes keep their previous centroid. */
+    * FAISS discipline; see [[kmeansCentroids]]). Seeds are deterministic
+    * stride rows of the id-ordered sample; per-round assignment is
+    * [[pqEncode]]'s own body; empty codes keep their previous
+    * centroid. */
   private def pqCodebooksFromNormed(normed: DataFrame, m: Int, codeK: Int,
                                     iters: Int,
                                     trainN: Int = 16384): Seq[Seq[Seq[Double]]] = {
@@ -741,21 +522,12 @@ object VectorOps {
       val sums = Array.fill(m, codeK, dsub)(0.0)
       val cnts = Array.fill(m, codeK)(0L)
       train.foreach { v =>
+        val code = PqEncode.encode(v, books)
         var j = 0
         while (j < m) {
-          var best = 0; var bestD = Double.PositiveInfinity
-          var c = 0
-          while (c < codeK) {
-            var dd = 0.0; var i = 0
-            while (i < dsub) {
-              val d = v(j * dsub + i) - books(j)(c)(i); dd += d * d; i += 1
-            }
-            if (dd < bestD) { bestD = dd; best = c } // ties -> smaller code
-            c += 1
-          }
           var i = 0
-          while (i < dsub) { sums(j)(best)(i) += v(j * dsub + i); i += 1 }
-          cnts(j)(best) += 1
+          while (i < dsub) { sums(j)(code(j))(i) += v(j * dsub + i); i += 1 }
+          cnts(j)(code(j)) += 1
           j += 1
         }
       }
@@ -766,232 +538,39 @@ object VectorOps {
     books.map(_.map(_.toSeq: Seq[Double]).toSeq: Seq[Seq[Double]]).toSeq
   }
 
-  /** L2-normalization expression. CAUTION: never feed this directly
-    * into the argmin trees below — interpreted HOF evaluation
-    * re-computes the subtree once per centroid per subspace (measured:
-    * ~0.5M redundant ops PER VECTOR), which is why the PQ paths
-    * materialize the normalized column behind a shuffle barrier first
-    * ([[pqNormalized]]). */
-  private[operators] def pqNormalize(vec: Column): Column = {
-    val norm = sqrt(aggregate(vec, lit(0.0),
-      (a, x) => a + x.cast("double") * x.cast("double")))
-    transform(vec,
-      x => when(norm === 0.0, x.cast("double"))
-        .otherwise(x.cast("double") / norm))
-  }
+  /** L2-normalization: x / ‖x‖, a zero vector passes through; null for a
+    * null embedding. */
+  private[operators] def pqNormalize(vec: Column): Column =
+    Shim.column(PqNormalize(arg(vec)))
 
-  // ---- Kernel twins of the corpus-pass expressions -------------------
-  // The HOF expressions above/below (pqNormalize / pqEncode / ivfAssign)
-  // are the right tool on model-sized or needle-bounded frames, but on a
-  // CORPUS-WIDE pass the per-row interpreter overhead dominates the
-  // arithmetic by orders of magnitude (guide §4: keep non-codegen
-  // expressions off hot paths; measured at sf0.1: the normalize stage of
-  // one index build ran 1.8-4.2 s and the encode stage 0.6-0.7 s where
-  // the same arithmetic in a flat-loop kernel is ~10 ms). Each kernel
-  // replicates its expression twin's IEEE evaluation order EXACTLY
-  // (left-to-right folds, identical tie-breaks: encode ties -> smaller
-  // code, assign ties -> larger cell), so codes/cells/norms are
-  // bit-equal — pinned row-for-row by KernelParitySpec.
-
-  /** Kernel twin of [[pqNormalize]]: x / sqrt(Σx²), left-to-right sum,
-    * zero-norm vectors pass through. */
-  private[operators] def normalizeKernel(v: Array[Double]): Array[Double] = {
-    if (v == null) return null
-    var s = 0.0; var i = 0
-    while (i < v.length) { s += v(i) * v(i); i += 1 }
-    val nrm = math.sqrt(s)
-    if (nrm == 0) v
-    else {
-      val out = new Array[Double](v.length)
-      var j = 0
-      while (j < v.length) { out(j) = v(j) / nrm; j += 1 }
-      out
-    }
-  }
-
-  /** Kernel twin of [[pqEncode]] — the same per-subspace argmin loop
-    * [[pqCodebooksFromNormed]] trains with. */
-  private[operators] def pqEncodeKernel(
-      v: Array[Double], books: Array[Array[Array[Double]]]): Array[Int] = {
-    if (v == null) return null
-    val m = books.length
-    val dsub = books(0)(0).length
-    val out = new Array[Int](m)
-    var j = 0
-    while (j < m) {
-      var best = 0; var bestD = Double.PositiveInfinity
-      var c = 0
-      while (c < books(j).length) {
-        var dd = 0.0; var i = 0
-        while (i < dsub) {
-          val d = v(j * dsub + i) - books(j)(c)(i); dd += d * d; i += 1
-        }
-        if (dd < bestD) { bestD = dd; best = c } // ties -> smaller code
-        c += 1
-      }
-      out(j) = best; j += 1
-    }
-    out
-  }
-
-  /** Kernel twin of [[ivfAssign]] — the same argmax-dot loop
-    * [[kmeansCentroids]] refines with. Ordering is
-    * java.lang.Double.compare (ties -> larger cell), matching array_max's
-    * struct ordering exactly: NaN greatest and -0.0 < 0.0 — a primitive
-    * `>=` would never select a NaN sim and would treat ±0.0 as a tie,
-    * diverging from the expression on those edges (ADVICE r13). */
-  private[operators] def ivfAssignKernel(
-      v: Array[Double], cents: Array[Array[Double]]): Int = {
-    var best = 0; var bestS = Double.NegativeInfinity
-    var c = 0
-    while (c < cents.length) {
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i) * cents(c)(i); i += 1 }
-      if (java.lang.Double.compare(s, bestS) >= 0) { bestS = s; best = c }
-      c += 1
-    }
-    best
-  }
-
-  /** Kernel twin of [[ivfAssignTop]]: the top-`nAssign` cells in
-    * (sim desc, cell desc) order — exactly
-    * `reverse(array_sort(struct(sim, cell)))`, including Spark's
-    * NaN-greatest double ordering (java.lang.Double.compare). */
-  private[operators] def ivfAssignTopKernel(
-      v: Array[Double], cents: Array[Array[Double]],
-      nAssign: Int): Array[Int] = {
-    val n = cents.length
-    val sims = new Array[Double](n)
-    var c = 0
-    while (c < n) {
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i) * cents(c)(i); i += 1 }
-      sims(c) = s; c += 1
-    }
-    Array.tabulate(n)(identity).sortWith { (a, b) =>
-      val cmp = java.lang.Double.compare(sims(a), sims(b))
-      if (cmp != 0) cmp > 0 else a > b
-    }.take(nAssign)
-  }
-
-  /** (cell, vec_id, v) multi-probe cell assignment as a corpus-pass
-    * KERNEL — the explode([[ivfAssignTop]]) projection the cell-bucketed
-    * ops (SemDeDup pairs, cell k-NN join) shuffle on, minus the
-    * per-row HOF interpreter (guide §4). Emission order per vector is
-    * the explode order (best cell first); assignments are bit-equal to
-    * the expression (KernelParitySpec). */
-  private def assignedCells(emb: DataFrame, centroids: Seq[Seq[Double]],
-                            nAssign: Int)
-      : org.apache.spark.sql.Dataset[(Int, Long, Array[Float])] = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val ca = centroids.map(_.toArray).toArray
-    emb.select(col("vec_id"), col("embedding").cast("array<float>"))
-      .as[(Long, Array[Float])]
-      .mapPartitions(_.flatMap { case (id, v) =>
-        val dv = new Array[Double](v.length)
-        var i = 0
-        while (i < v.length) { dv(i) = v(i).toDouble; i += 1 }
-        ivfAssignTopKernel(dv, ca, nAssign).iterator.map(c => (c, id, v))
-      })
-      .toDF("cell", "vec_id", "v")
-      .as[(Int, Long, Array[Float])]
-  }
-
-  /** (vec_id, embedding, cell) — single-cell [[ivfAssign]] as a
-    * corpus-pass KERNEL (the expression form stays for needle-bounded
-    * frames and the oracle-replayable tests). */
-  def withCellKernel(emb: DataFrame,
-                     centroids: Seq[Seq[Double]]): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val ca = centroids.map(_.toArray).toArray
-    emb.select(col("vec_id"), col("embedding").cast("array<float>"))
-      .as[(Long, Array[Float])]
-      .mapPartitions(_.map { case (id, v) =>
-        val dv = new Array[Double](v.length)
-        var i = 0
-        while (i < v.length) { dv(i) = v(i).toDouble; i += 1 }
-        (id, v, ivfAssignKernel(dv, ca))
-      }).toDF("vec_id", "embedding", "cell")
-  }
-
-  /** The stored-codes column from an already-normalized frame via the
-    * encode KERNEL — one deserialized flat-array pass, shared by the
-    * index writers and the on-the-fly ADC scan. Column layout and every
-    * code value are identical to the old `select(pqEncode(nv))`
-    * projection (KernelParitySpec). */
-  private def encodedCodes(normed: DataFrame,
-                           books: Seq[Seq[Seq[Double]]]): DataFrame = {
-    val spark = normed.sparkSession
-    import spark.implicits._
-    val b = books.map(_.map(_.toArray).toArray).toArray
-    normed.as[(Long, Array[Double])]
-      .mapPartitions(_.map { case (id, v) => (id, pqEncodeKernel(v, b)) })
-      .toDF("vec_id", "code")
-  }
-
-  /** (vec_id, nv) with nv MATERIALIZED through a shuffle barrier — the
-    * barrier stops projection collapse from re-inlining the
-    * normalization into every downstream consumer, and (since the
-    * kernel rework) puts the normalize pass ABOVE the exchange so it
-    * runs at shuffle parallelism instead of single-file scan
-    * parallelism. At scale this is the write-once normalized layout PQ
-    * deployments store anyway. */
-  private[operators] def pqNormalized(emb: DataFrame): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    emb.select(col("vec_id"), col("embedding").cast("array<double>"))
+  /** (vec_id, nv) for every non-null embedding, normalized ABOVE a
+    * shuffle on vec_id, so the pass runs at shuffle parallelism instead
+    * of single-file scan parallelism. At scale this is the write-once
+    * normalized layout PQ deployments store anyway. */
+  private[operators] def pqNormalized(emb: DataFrame): DataFrame =
+    nonNull(emb).select(col("vec_id"), col("embedding"))
       .repartition(col("vec_id"))
-      .as[(Long, Array[Double])]
-      .mapPartitions(_.map { case (id, v) => (id, normalizeKernel(v)) })
-      .toDF("vec_id", "nv")
-  }
+      .select(col("vec_id"), pqNormalize(col("embedding")).as("nv"))
 
   /** The m-code PQ column from an ALREADY-normalized vector: per
-    * subspace the argmin-L2 centroid id; struct ordering over
-    * (dist, id) makes ties resolve to the smaller id on every engine.
-    * Cost per row is m·codeK·dsub multiply-adds — nothing recomputed. */
-  def pqEncode(vn: Column, codebooks: Seq[Seq[Seq[Double]]]): Column = {
-    val m = codebooks.size
-    val dsub = codebooks.head.head.size
-    val codes = (0 until m).map { j =>
-      val sub = slice(vn, j * dsub + 1, dsub)
-      val scored = zip_with(typedLit(codebooks(j)),
-        sequence(lit(0), lit(codebooks(j).size - 1)),
-        (cen, c) => struct(
-          aggregate(zip_with(sub, cen, (x, w) => (x - w) * (x - w)),
-            lit(0.0), (acc, x) => acc + x).as("dist"),
-          c.as("c")))
-      array_min(scored).getField("c")
-    }
-    array(codes: _*)
-  }
+    * subspace the argmin-L2 centroid id, ties to the smaller id. Cost
+    * per row is m·codeK·dsub multiply-adds. Null for a null vector. */
+  def pqEncode(vn: Column, codebooks: Seq[Seq[Seq[Double]]]): Column =
+    Shim.column(PqEncode(arg(vn), codebooks))
 
   /** The ADC shortlist stage shared by [[pqTopK]] and
-    * [[pqTopKReranked]]: probe's per-(subspace, centroid) squared
-    * distances become a driver-side lookup table; each stored vector's
-    * approximate distance is m table lookups summed over its codes —
-    * the raw vectors are never read. TakeOrderedAndProject, ascending
-    * distance. */
+    * [[pqTopKReranked]]: the probe's [[adcTable]] is a literal; each
+    * stored vector's approximate distance is m table lookups summed over
+    * its codes — the raw vectors are never read. TakeOrderedAndProject,
+    * ascending distance. */
   private def pqAdcShortlist(normed: DataFrame, probeN: Seq[Double],
                              books: Seq[Seq[Seq[Double]]], probeId: Long,
-                             n: Int): DataFrame = {
-    val m = books.size
-    val dsub = probeN.size / m
-    val lut: Seq[Seq[Double]] = (0 until m).map(j =>
-      books(j).map(cen => l2sq(probeN.slice(j * dsub, (j + 1) * dsub), cen)))
-    val lutCol = typedLit(lut)
-    val dist = aggregate(
-      zip_with(col("code"), sequence(lit(0), lit(m - 1)),
-        (c, j) => lutCol(j)(c)),
-      lit(0.0), (acc, x) => acc + x)
-    encodedCodes(normed, books)
+                             n: Int): DataFrame =
+    normed.select(col("vec_id"), pqEncode(col("nv"), books).as("code"))
       .filter(col("vec_id") =!= probeId)
-      .select(col("vec_id"), dist.as("dist"))
+      .select(col("vec_id"), adcDist(typedLit(adcTable(probeN, books)), books.size).as("dist"))
       .orderBy(col("dist").asc, col("vec_id").asc)
       .limit(n)
-  }
 
   /** Probe vector fetch (one driver lookup, raw floats as doubles). */
   private def probeVec(emb: DataFrame, probeId: Long): Seq[Double] =
@@ -1006,7 +585,7 @@ object VectorOps {
              books0: Option[Seq[Seq[Seq[Double]]]] = None,
              iters: Int = 2): DataFrame = {
     val books = books0.getOrElse(pqCodebooks(emb, m, codeK, iters))
-    pqAdcShortlist(pqNormalized(emb), normalizeVec(probeVec(emb, probeId)),
+    pqAdcShortlist(pqNormalized(emb), fetchProbes(emb, Seq(probeId)).head._2,
       books, probeId, k)
   }
 
@@ -1025,7 +604,7 @@ object VectorOps {
     // returned frame depends only on the RAW table. The probe is
     // fetched ONCE (cosine is scale-invariant, so the normalized copy
     // serves both the ADC table and the exact re-rank).
-    val probeN = normalizeVec(probeVec(emb, probeId))
+    val probeN = fetchProbes(emb, Seq(probeId)).head._2
     val normed = pqNormalized(emb).persist()
     val candIds: Seq[Long] =
       try {
@@ -1056,10 +635,6 @@ object VectorOps {
   // BEFORE the shuffle) keeps the shuffle at
   // O(partitions × probes × shortlist), never O(n × probes).
 
-  /** Train codebooks and encode the corpus ONCE; write both as tables
-    * under `dir` (`codes`: (vec_id, code ARRAY<INT>); `codebooks`:
-    * (j, c, centroid ARRAY<DOUBLE>)). Returns the trained codebooks so
-    * the writer can search immediately without re-reading. */
   /** Shared training half of the index writers: train codebooks over an
     * already-normalized persisted pass and write the codebooks table
     * (model-sized, m·codeK rows — one file). */
@@ -1082,8 +657,13 @@ object VectorOps {
     * drift apart. */
   private def writePqCodes(normed: DataFrame, books: Seq[Seq[Seq[Double]]],
                            target: String, mode: String): Unit =
-    encodedCodes(normed, books).write.mode(mode).parquet(target)
+    normed.select(col("vec_id"), pqEncode(col("nv"), books).as("code"))
+      .write.mode(mode).parquet(target)
 
+  /** Train codebooks and encode the corpus ONCE; write both as tables
+    * under `dir` (`codes`: (vec_id, code ARRAY<INT>); `codebooks`:
+    * (j, c, centroid ARRAY<DOUBLE>)). Returns the trained codebooks so
+    * the writer can search immediately without re-reading. */
   def pqWriteIndex(emb: DataFrame, dir: String, m: Int = 8,
                    codeK: Int = 16, iters: Int = 2): Seq[Seq[Seq[Double]]] = {
     val normed = pqNormalized(emb).persist()
@@ -1209,13 +789,20 @@ object VectorOps {
     * driver model (m·codeK·dsub doubles). */
   def pqReadIndex(spark: SparkSession, dir: String)
       : (DataFrame, Seq[Seq[Seq[Double]]]) = {
-    // restore a half-swapped compaction before reading the codes table
+    val books = readBooks(spark, dir)
+    (spark.read.parquet(s"$dir/codes"), books)
+  }
+
+  /** The codebooks of a written index (flat or IVF-PQ). Restores a
+    * half-swapped compaction first, so the codes table the caller reads
+    * next is whole. */
+  private def readBooks(spark: SparkSession,
+                        dir: String): Seq[Seq[Seq[Double]]] = {
     graft.core.Fs.recoverSwap(s"$dir/codes")
-    val books = spark.read.parquet(s"$dir/codebooks")
+    spark.read.parquet(s"$dir/codebooks")
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map(_._2.sortBy(_._2).map(_._3.toSeq).toSeq)
-    (spark.read.parquet(s"$dir/codes"), books)
   }
 
   /** One scan of the stored codes serving N probes, with probes as
@@ -1240,14 +827,9 @@ object VectorOps {
     require(probes.nonEmpty, "need at least one probe")
     val spark = codes.sparkSession
     import spark.implicits._
-    val m = books.size
-    val dsub = books.head.head.size
     val probeRows: Seq[(Long, Seq[Seq[Double]], Seq[Int])] =
       probes.zipWithIndex.map { case ((pid, pn), i) =>
-        val lut = (0 until m).map(j =>
-          books(j).map(cen =>
-            l2sq(pn.slice(j * dsub, (j + 1) * dsub), cen)).toSeq)
-        (pid, lut, cellsOf.fold(Seq.empty[Int])(_(i)))
+        (pid, adcTable(pn, books), cellsOf.fold(Seq.empty[Int])(_(i)))
       }
     val probesDf = spark.createDataset(probeRows).toDF("probe_id", "lut", "cells")
     // IVF composition: the join condition itself scopes each probe to
@@ -1258,20 +840,13 @@ object VectorOps {
         array_contains(col("cells"), col("cell")))
       case None => codes.crossJoin(broadcast(probesDf))
     }
-    // every probe's distance from the SAME pass over the codes — m
-    // 0-based lut lookups + adds per (row, probe), raw vectors never
-    // read. m is statically known, so the sum is a flat chain of
-    // GetArrayItem pairs (no higher-order function): it stays inside
-    // whole-stage codegen, and its left-to-right order matches the
-    // single-probe ADC fold so dist doubles are bit-equal (the fold's
-    // 0.0 seed is absorbed: ADC terms are sums of squares, never -0.0)
-    val dist = (0 until m).map(j => col("lut")(j)(col("code")(j)))
-      .reduce(_ + _)
+    // every probe's distance from the SAME pass over the codes, raw
+    // vectors never read
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("probe_id")).orderBy(col("dist").asc, col("vec_id").asc)
     joined
       .filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"), dist.as("dist"))
+      .select(col("probe_id"), col("vec_id"), adcDist(col("lut"), books.size).as("dist"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= shortlist)
       .select(col("probe_id"), col("vec_id"), col("dist"))
@@ -1306,13 +881,16 @@ object VectorOps {
       .select(col("probe_id"), col("vec_id"), col("sim"))
   }
 
-  /** All probe vectors in ONE lookup job, L2-normalized, input order. */
-  private def fetchProbes(emb: DataFrame,
-                          probeIds: Seq[Long]): Seq[(Long, Seq[Double])] = {
+  /** All probe vectors in ONE lookup job, input order; L2-normalized
+    * unless `normalized` is false. */
+  private def fetchProbes(emb: DataFrame, probeIds: Seq[Long],
+                          normalized: Boolean = true): Seq[(Long, Seq[Double])] = {
     val fetched = emb.filter(col("vec_id").isin(probeIds: _*))
       .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect().map(r => r.getLong(0) -> normalizeVec(r.getSeq[Double](1)))
-      .toMap
+      .collect().map { r =>
+        val v = r.getSeq[Double](1)
+        r.getLong(0) -> (if (normalized) PqNormalize.normalize(v.toArray).toSeq else v)
+      }.toMap
     val missing = probeIds.filterNot(fetched.contains)
     require(missing.isEmpty, s"unknown probe id(s): ${missing.mkString(",")}")
     probeIds.map(pid => pid -> fetched(pid))
@@ -1365,24 +943,16 @@ object VectorOps {
   private def writeIvfPqCodes(normed: DataFrame,
                               books: Seq[Seq[Seq[Double]]],
                               centroids: Seq[Seq[Double]],
-                              target: String, mode: String): Unit = {
-    val spark = normed.sparkSession
-    import spark.implicits._
-    val b = books.map(_.map(_.toArray).toArray).toArray
-    val cents = centroids.map(_.toArray).toArray
-    normed.as[(Long, Array[Double])]
-      .mapPartitions(_.map { case (id, v) =>
-        (id, ivfAssignKernel(v, cents), pqEncodeKernel(v, b)) })
-      .toDF("vec_id", "cell", "code")
+                              target: String, mode: String): Unit =
+    normed.select(col("vec_id"), ivfAssign(col("nv"), centroids).as("cell"),
+        pqEncode(col("nv"), books).as("code"))
       .repartition(col("cell"))
       .write.partitionBy("cell").mode(mode).parquet(target)
-  }
 
   def ivfPqWriteIndex(emb: DataFrame, dir: String, nCells: Int = 16,
                       m: Int = 8, codeK: Int = 16, iters: Int = 2,
                       coarseIters: Int = 2): Seq[Seq[Seq[Double]]] = {
     val spark = emb.sparkSession
-    import spark.implicits._
     // Lloyd-refined coarse quantizer: the raw stride sample misplaces
     // cell boundaries enough to strand true neighbours in unprobed
     // cells (measured: probe-42 recall 2/10 sampled vs green refined)
@@ -1398,7 +968,7 @@ object VectorOps {
 
   /** [[ivfPqWriteIndex]] in BATCH-PARTITIONED layout
     * (`codes/batch=seed/cell=C`) for STREAMING maintenance — the IVF-PQ
-    * twin of [[pqSeedIndexBatched]]. Cell stays a partition column at
+    * counterpart of [[pqSeedIndexBatched]]. Cell stays a partition column at
     * the second level under every batch, so probe-time partition
     * pruning on cell is unchanged (pinned in PqIndexSpec); each
     * [[ivfPqAppendToIndexBatch]] overwrites its own `batch=N` subtree,
@@ -1435,10 +1005,7 @@ object VectorOps {
     * two driver-side models (codebooks, coarse centroids). */
   def ivfPqReadIndex(spark: SparkSession, dir: String)
       : (DataFrame, Seq[Seq[Seq[Double]]], Seq[Seq[Double]]) = {
-    val books = spark.read.parquet(s"$dir/codebooks")
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map(_._2.sortBy(_._2).map(_._3.toSeq).toSeq)
+    val books = readBooks(spark, dir)
     val centroids = spark.read.parquet(s"$dir/centroids")
       .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toSeq)
       .sortBy(_._1).map(_._2).toSeq

@@ -300,7 +300,7 @@ object PipelineQueries {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("probe_id"))
         .orderBy(col("sim").desc, col("vec_id").asc)
-      val exact = VectorOps.withCellKernel(emb, cents)
+      val exact = emb.withColumn("cell", VectorOps.ivfAssign(col("embedding"), cents))
         .join(broadcast(exactProbesDf),
           array_contains(col("cells"), col("cell")))
         .filter(col("vec_id") =!= col("probe_id"))

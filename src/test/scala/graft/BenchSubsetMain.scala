@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Dev probe: Bench's exact timing discipline (two separated passes,
   * min, clearCache+GC between queries) on a SUBSET of gates — the
@@ -19,7 +20,9 @@ object BenchSubsetMain {
     // one untimed warm pass (JIT/codegen), like Bench's warm-up
     names.foreach { n =>
       try SparkEntry.queries(n)(spark, sfDir).count()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[benchsub] $n warm pass FAILED: $e")
+      }
       spark.catalog.clearCache(); System.gc()
     }
     // a crashed gate must NOT masquerade as a (fast) timing in A/B

@@ -151,94 +151,3 @@ class DedupSpec extends SparkSpec {
     assert(recall >= 0.8, s"simhash recall too low: $recall")
   }
 }
-
-class VectorOpsSpec extends SparkSpec {
-  import spark.implicits._
-
-  test("cosine basics") {
-    val df = Seq((1, Seq(1.0f, 0.0f), Seq(0.0f, 1.0f)),
-      (2, Seq(1.0f, 1.0f), Seq(1.0f, 1.0f)))
-      .toDF("id", "a", "b")
-    val out = df.select(col("id"), VectorOps.cosine(col("a"), col("b")).as("c"))
-      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    assert(math.abs(out(1)) < 1e-12)
-    assert(math.abs(out(2) - 1.0) < 1e-12)
-  }
-
-  test("kernel near-dup pairs match the Catalyst variant exactly") {
-    val emb = Tables.embeddings(spark, sf001)
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs(VectorOps.cosineNearDupPairs(emb, 0.45)) ==
-      pairs(VectorOps.cosineNearDupPairsSql(emb, 0.45)))
-  }
-
-  test("cell-bucketed near-dup: subset of exact pairs with pinned recall") {
-    val emb = Tables.embeddings(spark, sf001)
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.select("id_a", "id_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = pairs(VectorOps.cosineNearDupPairs(emb, 0.45))
-    // the zero-iteration stride sample (the engine-replayable override
-    // the emb_neardup_cell oracle pins)
-    val cell = pairs(VectorOps.cellNearDupPairs(emb, 0.45,
-      centroidsOverride = Some(VectorOps.ivfCentroids(emb, 16))))
-    // within-cell pairs are a strict subset of the exact pair set
-    assert(cell.subsetOf(exact))
-    // SemDeDup contract: coarse clustering keeps most true near-dups
-    // co-celled. Pin the measured recall floor so a centroid or
-    // assignment regression fails loudly (measured 0.71 at sf0.001 /
-    // 0.79 at sf0.01 with 16 stride-sampled cells and top-2
-    // assignment).
-    assert(exact.nonEmpty)
-    val recall = cell.size.toDouble / exact.size
-    assert(recall >= 0.6, s"recall $recall")
-    // the DEFAULT (r9: Lloyd-refined kmeansCentroids) must not lose
-    // recall vs the raw sample (measured: it raises it) and stays a
-    // subset of exact
-    val refined = pairs(VectorOps.cellNearDupPairs(emb, 0.45))
-    assert(refined.subsetOf(exact))
-    val krecall = refined.size.toDouble / exact.size
-    assert(krecall_ok(krecall = krecall, base = recall), s"kmeans recall $krecall vs $recall")
-  }
-
-  private def krecall_ok(krecall: Double, base: Double): Boolean =
-    krecall >= base - 1e-9
-
-  test("dotN matches the fold dot bit-for-bit") {
-    val emb = Tables.embeddings(spark, sf001)
-    val dim = VectorOps.embDim(emb)
-    val bad = emb.select(
-        VectorOps.dot(col("embedding"), col("embedding")).as("a"),
-        VectorOps.dotN(col("embedding"), col("embedding"), dim).as("b"))
-      .filter(col("a") =!= col("b")).count()
-    assert(bad == 0L)
-  }
-
-  test("brute-force top-k is exact and ordered") {
-    val emb = Tables.embeddings(spark, sf001)
-    val out = VectorOps.bruteForceTopK(emb, 0L, 5).collect()
-    assert(out.length == 5)
-    assert(out.map(_.getAs[Int]("rank")).toSeq == Seq(1, 2, 3, 4, 5))
-  }
-
-  test("LSH top-k recall vs brute force on sf0.001") {
-    val emb = Tables.embeddings(spark, sf001)
-    val exact = VectorOps.bruteForceTopK(emb, 0L, 10)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    val approx = VectorOps.lshTopK(emb, 0L, 10)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    val recall = (exact & approx).size.toDouble / exact.size
-    info(s"LSH recall@10 = $recall")
-    assert(recall >= 0.5, s"LSH recall too low: $recall")
-  }
-
-  test("IVF cell assignment is deterministic and balanced-ish") {
-    val emb = Tables.embeddings(spark, sf001)
-    val cells = emb.withColumn("cell",
-        VectorOps.ivfCellId(col("embedding"), 8, VectorOps.embDim(emb)))
-      .groupBy("cell").count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(cells.keys.toSet.subsetOf((0 until 8).toSet))
-    assert(cells.size >= 4, s"cells too concentrated: $cells")
-  }
-}

@@ -263,18 +263,23 @@ class PqIndexSpec extends SparkSpec {
       nProbe = 2, shortlist = 40).collect().toSeq
     assert(ia == ib)
     // rename-only swap: a crash between the two renames (codes.old
-    // present, codes missing) recovers on the next read — identical
-    // results, leftover dropped
-    java.nio.file.Files.move(java.nio.file.Paths.get(s"$dir/codes"),
-      java.nio.file.Paths.get(s"$dir/codes.old"))
+    // present, codes missing) recovers on the next read of either index
+    // kind — identical results, leftover dropped
+    for (d <- Seq(dir, dir2))
+      java.nio.file.Files.move(java.nio.file.Paths.get(s"$d/codes"),
+        java.nio.file.Paths.get(s"$d/codes.old"))
     val (c4, b4) = VectorOps.pqReadIndex(spark, dir)
     val recovered = VectorOps.pqTopKBatch(all, c4, b4, Seq(0L, 41L),
       k = 5, shortlist = 30).collect().toSeq
     assert(recovered == before)
-    assert(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$dir/codes")) &&
-      !java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$dir/codes.old")))
+    val (c5, b5, cents5) = VectorOps.ivfPqReadIndex(spark, dir2)
+    assert(VectorOps.ivfPqTopKBatch(all, c5, b5, cents5, Seq(0L), k = 5,
+      nProbe = 2, shortlist = 40).collect().toSeq == ib)
+    for (d <- Seq(dir, dir2))
+      assert(java.nio.file.Files.exists(
+          java.nio.file.Paths.get(s"$d/codes")) &&
+        !java.nio.file.Files.exists(
+          java.nio.file.Paths.get(s"$d/codes.old")), d)
   }
 
   test("batched streaming layout: same books/codes/search as flat appends; replay idempotent; compaction appendable") {

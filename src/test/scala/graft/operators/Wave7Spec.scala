@@ -279,24 +279,6 @@ class Wave7Spec extends SparkSpec {
     assert(merged(("k0", "absent")) == 0L && merged(("k1", "absent")) == 0L)
   }
 
-  test("PQ codes: m codes in [0, codeK), deterministic, 32x smaller than the vectors") {
-    val emb = Tables.embeddings(spark, sf001)
-    val books = VectorOps.pqCodebooks(emb, m = 8, codeK = 16)
-    assert(books.size == 8 && books.forall(_.size == 16) &&
-      books.forall(_.forall(_.size == 8))) // dim 64 / m 8
-    def codes() = emb
-      .select(col("vec_id"), VectorOps.pqEncode(
-        // pqEncode expects a NORMALIZED vector; the raw fixture vectors
-        // are close enough for the domain/determinism assertions
-        col("embedding").cast("array<double>"), books).as("c"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-    val c1 = codes()
-    assert(c1.values.forall(cs => cs.size == 8 && cs.forall(c => c >= 0 && c < 16)))
-    assert(codes() == c1, "encoding must be deterministic")
-    // 8 codes (≤8 bytes logical) vs 64 floats (256 bytes): the 32x
-    // storage story the ADC scan exploits
-  }
-
   test("sf0.01 documents: simhash recall floor vs the exact jaccard pair set") {
     // ngram/minhash have exact-match gates and SemDeDup/LSH/IVF have
     // pinned recall floors; this pins simhash's so a banding regression
