@@ -630,16 +630,14 @@ object Dedup {
 
   // ---- Incremental dedup: a write-once signature store ---------------
   // The ingest-pipeline shape: a corpus's shingle hashes + LSH band
-  // table are written ONCE; each new batch dedups against the STORE —
-  // the band join broadcasts the (small) new batch against one scan of
-  // the stored bands, and the exact verify reads stored shingles for
-  // candidate partners only (semi-join prune). The old corpus is never
-  // re-shingled and never re-paired, exactly like
-  // [[graft.operators.VectorOps.pqAppendToIndex]] on the ANN side (and
-  // the reference's new shards joining the global index without a
-  // rebuild). At lake scale the band table would be written bucketed by
-  // (band, bucket) so even re-runs of LARGE batches sort-merge without
-  // a shuffle of the stored side.
+  // table are registered ONCE in the batch-partitioned layout of
+  // [[graft.core.BatchStore]]; each new batch dedups against the STORE,
+  // reading only the stored band rows that share one of its bucket keys
+  // and the stored shingles of its candidate partners. The old corpus is
+  // never re-shingled and never re-paired, exactly like
+  // [[graft.operators.VectorOps.pqAppendToIndexBatch]] on the ANN side
+  // (and the reference's new shards joining the global index without a
+  // rebuild).
 
   /** Resolve a store's signature params once (e.g. at stream start) as
     * `Some(params)` for [[streamBatchNearDup]] — absent store → None, so
@@ -662,20 +660,6 @@ object Dedup {
     (r.getAs[Int]("n"), r.getAs[Int]("num_hashes"), r.getAs[Int]("bands"))
   }
 
-  /** Band rows first, shingles second: after a partial failure, a doc
-    * with bands but no shingles merely misses pairs until the append is
-    * retried (band-row duplicates collapse in the candidate
-    * `.distinct()`), whereas duplicated SHINGLE rows would corrupt the
-    * verify join forever. Retrying the whole append is therefore safe.
-    * Flat-layout writes only — the batched streaming layout goes
-    * through [[graft.core.BatchStore]]. */
-  private def writeStoreParts(withSh: DataFrame, dir: String, numHashes: Int,
-                              bands: Int, mode: String): Unit = {
-    bandTable(withSh, numHashes, bands)
-      .write.mode(mode).parquet(s"$dir/bands")
-    withSh.write.mode(mode).parquet(s"$dir/shingles")
-  }
-
   private def writeParams(spark: org.apache.spark.sql.SparkSession,
                           dir: String, n: Int, numHashes: Int,
                           bands: Int): Unit =
@@ -684,65 +668,37 @@ object Dedup {
         lit(bands).as("bands"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
 
-  /** Write the signature store for a corpus: `params` (one row),
-    * `shingles` (doc_id, sh) and `bands` (doc_id, band, bucket). */
-  def writeDedupStore(docs: DataFrame, dir: String, n: Int = 3,
-                      numHashes: Int = 128, bands: Int = 32): Unit = {
-    writeParams(docs.sparkSession, dir, n, numHashes, bands)
-    val withSh = shingled(docs, n).persist()
-    try writeStoreParts(withSh, dir, numHashes, bands, "overwrite")
-    finally withSh.unpersist()
-  }
-
-  /** Offline store maintenance: rewrite the append-splintered `bands`
-    * and `shingles` tables into `filesPerTable` large files each. Every
-    * [[appendDedupStore]] adds one part-file set, so months of live
+  /** Offline store maintenance: rewrite the batch-splintered `bands`
+    * and `shingles` tables into one `batch=compacted` partition of
+    * `filesPerTable` files each ([[graft.core.BatchStore.compact]]).
+    * Every registered batch adds one part-file set, so months of live
     * batches splinter the store and each incremental probe pays
     * per-file open overhead on the stored-bands read. Row content is
-    * unchanged — identical pair results, pinned in Wave7Spec with a
-    * part-file-count assertion. Write-to-temp then RENAME-ONLY swap
+    * unchanged — identical pair results, pinned in DedupStoreSpec with
+    * a part-file-count assertion. Write-to-temp then RENAME-ONLY swap
     * ([[graft.core.Fs.swapDir]]: src→src.old, tmp→src, drop src.old —
     * no crash window leaves the table absent; readers recover a
-    * half-swapped dir via [[graft.core.Fs.recoverSwap]]); run while no
-    * append is in flight (the same offline discipline as a major
-    * compaction, and as [[graft.operators.VectorOps.pqCompactIndex]]). */
+    * half-swapped dir via [[graft.core.Fs.recoverSwap]]). The horizon
+    * marker makes a batch replayed after compaction SKIP
+    * re-registration instead of coexisting with its compacted copy;
+    * run while no append is in flight all the same (the same offline
+    * discipline as a major compaction, and as
+    * [[graft.operators.VectorOps.pqCompactIndex]]). */
   def compactDedupStore(spark: org.apache.spark.sql.SparkSession,
                         dir: String, filesPerTable: Int = 1): Unit =
-    // batched streaming layout ([[seedDedupStoreBatched]]) collapses to
-    // ONE `batch=compacted` partition dir per table (flattening `batch`
-    // into a data column would mix files and k=v dirs and break
-    // partition discovery); the flat layout compacts in place. The
-    // BatchStore horizon marker makes a batch replayed after compaction
-    // SKIP re-registration instead of coexisting with its compacted
-    // copy — run while no append is in flight all the same.
     for (t <- Seq("bands", "shingles"))
       graft.core.BatchStore.compact(spark, s"$dir/$t", filesPerTable)
 
-  /** Register a processed batch as part of the corpus: its signatures
-    * append to the store, so the NEXT batch dedups against it too.
-    * Signature params come from the store itself. Caller contract:
-    * append AFTER consuming the batch's [[incrementalNearDupPairs]]
-    * (the pair frame reads the store), and never append ids already
-    * stored. A failed append may be retried whole (see
-    * [[writeStoreParts]]). */
-  def appendDedupStore(newDocs: DataFrame, dir: String): Unit = {
-    val (n, numHashes, bands) = storeParams(newDocs.sparkSession, dir)
-    val withSh = shingled(newDocs, n).persist()
-    try writeStoreParts(withSh, dir, numHashes, bands, "append")
-    finally withSh.unpersist()
-  }
-
-  /** Seed a signature store in BATCH-PARTITIONED layout (`bands/batch=…`,
-    * `shingles/batch=…`) for STREAMING maintenance: params plus an empty
-    * seed partition per table, so the first micro-batch's incremental
-    * probe reads a valid (empty) store. The batch layout is what makes a
-    * live pipeline exactly-once: [[appendDedupStoreBatch]] OVERWRITES its
-    * own `batch=N` partition, so a crash-replayed micro-batch replaces
-    * its registration instead of duplicating shingle rows (the flat
-    * [[appendDedupStore]] is append-mode and relies on the caller never
-    * re-appending). Readers see one extra `batch` partition column;
-    * [[storedBands]] projects it away. `docs` contributes only
-    * its SCHEMA (zero rows are written from it). */
+  /** Seed a signature store (`params`, `bands/batch=…` with
+    * (doc_id, band, bucket), `shingles/batch=…` with (doc_id, sh)):
+    * params plus an empty seed partition per table, so the first
+    * batch's incremental probe reads a valid (empty) store. The batch
+    * layout is what makes a live pipeline exactly-once:
+    * [[appendDedupStoreBatch]] OVERWRITES its own `batch=N` partition,
+    * so a crash-replayed micro-batch replaces its registration instead
+    * of duplicating shingle rows. Readers see one extra `batch`
+    * partition column; [[storedBands]] projects it away. `docs`
+    * contributes only its SCHEMA (zero rows are written from it). */
   def seedDedupStoreBatched(docs: DataFrame, dir: String, n: Int = 3,
                             numHashes: Int = 128, bands: Int = 32): Unit = {
     writeParams(docs.sparkSession, dir, n, numHashes, bands)
@@ -755,12 +711,14 @@ object Dedup {
     graft.core.BatchStore.seed(emptySh, s"$dir/shingles")
   }
 
-  /** Register one micro-batch in a [[seedDedupStoreBatched]] store —
-    * overwrite-by-batch-partition, so retries and crash-replays of the
-    * SAME batch id are idempotent (and a batch at or below the
-    * compaction horizon is a no-op, [[graft.core.BatchStore]]). Same
-    * caller contract as [[appendDedupStore]] otherwise: append AFTER
-    * consuming the batch's [[incrementalNearDupPairs]]. */
+  /** Register a batch of documents in a [[seedDedupStoreBatched]]
+    * store, so the NEXT batch dedups against it too. Signature params
+    * come from the store itself. Overwrite-by-batch-partition, so
+    * retries and crash-replays of the SAME batch id are idempotent (and
+    * a batch at or below the compaction horizon is a no-op,
+    * [[graft.core.BatchStore]]). Caller contract: register AFTER
+    * consuming the batch's [[incrementalNearDupPairs]] (the pair frame
+    * reads the store), and never register one id under two batch ids. */
   def appendDedupStoreBatch(newDocs: DataFrame, dir: String,
                             batchId: Long): Unit = {
     val (n, numHashes, bands) = storeParams(newDocs.sparkSession, dir)

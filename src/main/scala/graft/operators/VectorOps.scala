@@ -196,27 +196,28 @@ object VectorOps {
   /** ANN via LSH prebucketing: candidates = vectors sharing at least one
     * band of the signature with the probe; exact cosine re-rank within
     * candidates. Approximate — recall measured in tests vs brute force.
-    * The banded signature table is built ONCE (persisted) and serves both
-    * the probe-bucket lookup and the candidate side. */
+    * The probe's ≤ `bands` band keys come to the driver in one job, and
+    * the candidate side is one scan filtered by them, so nothing is
+    * cached. */
   def lshTopK(emb: DataFrame, probeId: Long, k: Int,
               planes: Int = 32, bands: Int = 16): DataFrame = {
     val bandBits = planes / bands
     val mask = (1L << bandBits) - 1
     val dim = embDim(emb)
-    val bandCols = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        shiftright(col("sig"), b * bandBits).bitwiseAND(lit(mask)).as("key"))
+    // one BIGINT per (band, key): the band index above the key bits
+    val bandKeys = (0 until bands).map { b =>
+      shiftright(col("sig"), b * bandBits).bitwiseAND(lit(mask)) +
+        lit(b.toLong << bandBits)
     }
     val exploded = nonNull(emb)
       .select(col("vec_id"), col("embedding"),
         lshSignature(col("embedding"), planes, dim).as("sig"))
-      .withColumn("band_key", explode(array(bandCols: _*)))
-      .persist()
-    val probeBuckets = exploded.filter(col("vec_id") === probeId)
-      .select(col("band_key").as("probe_bk"))
+      .withColumn("band_key", explode(array(bandKeys: _*)))
+    val probeKeys = exploded.filter(col("vec_id") === probeId)
+      .select("band_key").distinct().collect().map(_.getLong(0))
     val candidates = exploded
-      .join(broadcast(probeBuckets), col("band_key") === col("probe_bk"))
-      .filter(col("vec_id") =!= probeId)
+      .filter(col("band_key").isin(probeKeys.toIndexedSeq: _*) &&
+        col("vec_id") =!= probeId)
       .select("vec_id", "embedding").distinct()
     candidates
       .withColumn("sim", cosine(col("embedding"), typedLit(probeVec(emb, probeId))))
@@ -651,70 +652,57 @@ object VectorOps {
     books
   }
 
-  /** Shared encode-and-write half of the flat-PQ writers: one pipeline,
-    * parameterized by the codes target (`codes` flat vs `codes/batch=N`
-    * streaming) and write mode, so the four writer entry points cannot
-    * drift apart. */
-  private def writePqCodes(normed: DataFrame, books: Seq[Seq[Seq[Double]]],
-                           target: String, mode: String): Unit =
+  /** The codes rows of a flat PQ index: (vec_id, code ARRAY<INT>). */
+  private def pqCodes(normed: DataFrame,
+                      books: Seq[Seq[Seq[Double]]]): DataFrame =
     normed.select(col("vec_id"), pqEncode(col("nv"), books).as("code"))
-      .write.mode(mode).parquet(target)
+
+  /** A freshly trained index's codes become its `batch=seed`. A
+    * (re)train replaces the whole codes table: no batch or compaction
+    * horizon of an earlier codebook generation survives it, so codes
+    * from two generations never mix. */
+  private def seedCodes(codes: DataFrame, dir: String,
+                        partitionBy: Seq[String] = Nil): Unit = {
+    graft.core.BatchStore.reset(s"$dir/codes")
+    graft.core.BatchStore.seed(codes, s"$dir/codes", partitionBy)
+  }
 
   /** Train codebooks and encode the corpus ONCE; write both as tables
-    * under `dir` (`codes`: (vec_id, code ARRAY<INT>); `codebooks`:
-    * (j, c, centroid ARRAY<DOUBLE>)). Returns the trained codebooks so
-    * the writer can search immediately without re-reading. */
+    * under `dir` (`codes`: (vec_id, code ARRAY<INT>) in the
+    * batch-partitioned layout of [[graft.core.BatchStore]], the corpus
+    * under `batch=seed`; `codebooks`: (j, c, centroid ARRAY<DOUBLE>)).
+    * Returns the trained codebooks so the writer can search immediately
+    * without re-reading. A RETRAIN (fresh codebooks + full re-encode,
+    * when drift from appended data degrades recall) is this call over
+    * the current corpus — overwrite IS the retrain; there is
+    * deliberately no half-retrain that would mix codes from two
+    * codebook generations. */
   def pqWriteIndex(emb: DataFrame, dir: String, m: Int = 8,
                    codeK: Int = 16, iters: Int = 2): Seq[Seq[Seq[Double]]] = {
     val normed = pqNormalized(emb).persist()
     try {
       val books = trainAndWriteBooks(normed, dir, m, codeK, iters)
-      writePqCodes(normed, books, s"$dir/codes", "overwrite")
+      seedCodes(pqCodes(normed, books), dir)
       books
     } finally normed.unpersist()
   }
 
-  /** Incremental index maintenance: encode NEW vectors with the STORED
-    * codebooks and append their codes — no retrain, no re-encode of the
-    * existing corpus (the write-once contract under live ingest; the
+  /** Incremental index maintenance — one micro-batch of new vectors:
+    * encode with the STORED codebooks (no retrain, no re-encode of the
+    * existing corpus: the write-once contract under live ingest; the
     * reference's analog is new shards joining the global index without
-    * rebuilding it). Quantization drift from a growing corpus is a
-    * re-TRAIN decision made offline, not a side effect of appends. */
-  def pqAppendToIndex(newVecs: DataFrame, dir: String): Unit = {
-    val (_, books) = pqReadIndex(newVecs.sparkSession, dir)
-    requireDimMatches(newVecs, books)
-    writePqCodes(pqNormalized(newVecs), books, s"$dir/codes", "append")
-  }
-
-  /** [[pqWriteIndex]] in BATCH-PARTITIONED layout (`codes/batch=seed`)
-    * for STREAMING maintenance: [[pqAppendToIndexBatch]] then OVERWRITES
-    * its own `batch=N` partition per micro-batch, so a crash-replayed
-    * batch replaces its codes instead of appending duplicates — the same
-    * exactly-once move as [[graft.operators.Dedup.seedDedupStoreBatched]]
-    * (the flat [[pqAppendToIndex]] is append-mode and relies on the
-    * caller never re-appending). Readers see one extra `batch` partition
-    * column; every search path projects it away. */
-  def pqSeedIndexBatched(emb: DataFrame, dir: String, m: Int = 8,
-                         codeK: Int = 16, iters: Int = 2)
-      : Seq[Seq[Seq[Double]]] = {
-    val normed = pqNormalized(emb).persist()
-    try {
-      val books = trainAndWriteBooks(normed, dir, m, codeK, iters)
-      writePqCodes(normed, books, s"$dir/codes/batch=seed", "overwrite")
-      books
-    } finally normed.unpersist()
-  }
-
-  /** Register one micro-batch of new vectors in a [[pqSeedIndexBatched]]
-    * index: encode with the STORED codebooks (no retrain — same contract
-    * as [[pqAppendToIndex]]) and overwrite the batch's own partition, so
-    * retries and crash-replays of the same batch id are idempotent. */
+    * rebuilding it) and register the codes under the batch's own
+    * `batch=N` partition ([[graft.core.BatchStore.registerBatch]]), so
+    * retries and crash-replays of the same batch id replace rather than
+    * duplicate, and a batch at or below the compaction horizon is a
+    * no-op. Quantization drift from a growing corpus is a re-TRAIN
+    * decision made offline, not a side effect of appends. */
   def pqAppendToIndexBatch(newVecs: DataFrame, dir: String,
                            batchId: Long): Unit = {
     val (_, books) = pqReadIndex(newVecs.sparkSession, dir)
     requireDimMatches(newVecs, books)
-    writePqCodes(pqNormalized(newVecs), books, s"$dir/codes/batch=$batchId",
-      "overwrite")
+    graft.core.BatchStore.registerBatch(
+      pqCodes(pqNormalized(newVecs), books), s"$dir/codes", batchId)
   }
 
   /** Appending mismatched-dimension vectors would write garbage codes
@@ -729,60 +717,26 @@ object VectorOps {
       s"appended vectors have dim $got but the stored codebooks encode dim $expected")
   }
 
-  /** [[pqAppendToIndex]] for an IVF-PQ index: assign each new vector's
-    * cell with the stored coarse centroids, encode with the stored
-    * codebooks, append into the cell partitions. */
-  def ivfPqAppendToIndex(newVecs: DataFrame, dir: String): Unit = {
-    val (_, books, centroids) = ivfPqReadIndex(newVecs.sparkSession, dir)
-    requireDimMatches(newVecs, books)
-    writeIvfPqCodes(pqNormalized(newVecs), books, centroids,
-      s"$dir/codes", "append")
-  }
-
   /** Offline index maintenance — the explicit decision the append path
-    * defers. Live appends write one part-file set per batch (write-once,
-    * retry-safe), so a long-ingesting index splinters into many small
-    * files and every probe's code scan pays per-file open overhead.
-    * Compaction rewrites the code table into few large files: per CELL
-    * for an IVF-PQ index (`partitionBy(cell)` is preserved, so
-    * probe-time partition pruning still reads exactly its cells — back
-    * to one file per cell), `files` total for a flat index. Codebooks
-    * and centroids are untouched, codes are byte-identical rows, so
-    * search results cannot change (pinned in PqIndexSpec). Write-to-temp
-    * then RENAME-ONLY swap ([[graft.core.Fs.swapDir]] — no crash window
+    * defers. Each registered batch adds its own part-file set, so a
+    * long-ingesting index splinters into many small files and every
+    * probe's code scan pays per-file open overhead. Compaction is
+    * [[graft.core.BatchStore.compact]] over the codes table: the proven
+    * batches fold into `batch=compacted`, `files` files for a flat index
+    * and one file per CELL for an IVF-PQ index (the `cell` level is
+    * kept, so probe-time partition pruning still reads exactly its
+    * cells), and the horizon marker makes a batch replayed after the
+    * compaction a no-op instead of a duplicate. Codebooks and centroids
+    * are untouched, codes are byte-identical rows, so search results
+    * cannot change (pinned in PqIndexSpec). Write-to-temp then
+    * RENAME-ONLY swap ([[graft.core.Fs.swapDir]] — no crash window
     * leaves `codes` absent; [[graft.core.Fs.recoverSwap]] restores a
-    * half-swapped dir); run while no append is in flight (the reference's
-    * analog is a major compaction — same offline discipline). For a
-    * STREAMED index that discipline means: stream stopped AND its last
-    * batch committed in the checkpoint — compacting a batch whose
-    * commit never landed absorbs its codes into `batch=compacted`, and
-    * the restart's replay then rewrites `batch=N` alongside them,
-    * duplicating those vectors in every later shortlist.
-    *
-    * A quantization RETRAIN (fresh codebooks + full re-encode, when
-    * drift from appended data degrades recall) is [[pqWriteIndex]] /
-    * [[ivfPqWriteIndex]] over the current corpus — overwrite IS the
-    * retrain; there is deliberately no half-retrain that would mix
-    * codes from two codebook generations. */
+    * half-swapped dir); run while no append is in flight (the
+    * reference's analog is a major compaction — same offline
+    * discipline). */
   def pqCompactIndex(spark: SparkSession, dir: String,
-                     files: Int = 1): Unit = {
-    graft.core.Fs.recoverSwap(s"$dir/codes")
-    val codes = spark.read.parquet(s"$dir/codes")
-    val tmp = s"$dir/codes.compacting"
-    // batched streaming layout: collapse every batch partition into ONE
-    // `batch=compacted` partition DIR (not a data column), so later
-    // [[pqAppendToIndexBatch]]/[[ivfPqAppendToIndexBatch]] calls keep a
-    // consistent directory structure; cell stays a partition level
-    val hasBatch = codes.columns.contains("batch")
-    val body = if (hasBatch) codes.drop("batch") else codes
-    val target = if (hasBatch) s"$tmp/batch=compacted" else tmp
-    val writer =
-      if (body.columns.contains("cell"))
-        body.repartition(col("cell")).write.partitionBy("cell")
-      else body.repartition(files).write
-    writer.mode("overwrite").parquet(target)
-    graft.core.Fs.swapDir(s"$dir/codes", tmp)
-  }
+                     files: Int = 1): Unit =
+    graft.core.BatchStore.compact(spark, s"$dir/codes", files)
 
   /** Load a written index: the codes FRAME (stays distributed — this is
     * the 32×-smaller column every search scans) and the codebooks as a
@@ -790,8 +744,14 @@ object VectorOps {
   def pqReadIndex(spark: SparkSession, dir: String)
       : (DataFrame, Seq[Seq[Seq[Double]]]) = {
     val books = readBooks(spark, dir)
-    (spark.read.parquet(s"$dir/codes"), books)
+    (codesTable(spark, dir), books)
   }
+
+  /** The stored codes as rows: the `batch` partition column of the
+    * write-once layout is projected away (`cell` stays, so filters on
+    * it still prune partitions). */
+  private def codesTable(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(s"$dir/codes").drop("batch")
 
   /** The codebooks of a written index (flat or IVF-PQ). Restores a
     * half-swapped compaction first, so the codes table the caller reads
@@ -929,9 +889,8 @@ object VectorOps {
 
   /** Shared halves of the IVF-PQ writers — one centroid-table write and
     * one assign/encode/co-locate pipeline (cells repartitioned before
-    * the partitioned write: one file per cell, the layout a probe's
-    * partition-pruned read wants), parameterized by the codes target
-    * (`codes` flat vs `codes/batch=N` streaming) and mode. */
+    * the cell-partitioned write: one file per cell, the layout a
+    * probe's partition-pruned read wants). */
   private def writeCentroids(spark: SparkSession, dir: String,
                              centroids: Seq[Seq[Double]]): Unit = {
     import spark.implicits._
@@ -940,15 +899,17 @@ object VectorOps {
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
   }
 
-  private def writeIvfPqCodes(normed: DataFrame,
-                              books: Seq[Seq[Seq[Double]]],
-                              centroids: Seq[Seq[Double]],
-                              target: String, mode: String): Unit =
+  private def ivfPqCodes(normed: DataFrame,
+                         books: Seq[Seq[Seq[Double]]],
+                         centroids: Seq[Seq[Double]]): DataFrame =
     normed.select(col("vec_id"), ivfAssign(col("nv"), centroids).as("cell"),
         pqEncode(col("nv"), books).as("code"))
       .repartition(col("cell"))
-      .write.partitionBy("cell").mode(mode).parquet(target)
 
+  /** [[pqWriteIndex]] for the composed index: the corpus codes land in
+    * `codes/batch=seed/cell=C`, cell staying a partition level under
+    * every batch so probe-time pruning on cell holds in every layout
+    * the index goes through (pinned in PqIndexSpec). */
   def ivfPqWriteIndex(emb: DataFrame, dir: String, nCells: Int = 16,
                       m: Int = 8, codeK: Int = 16, iters: Int = 2,
                       coarseIters: Int = 2): Seq[Seq[Seq[Double]]] = {
@@ -961,44 +922,23 @@ object VectorOps {
     val normed = pqNormalized(emb).persist()
     try {
       val books = trainAndWriteBooks(normed, dir, m, codeK, iters)
-      writeIvfPqCodes(normed, books, centroids, s"$dir/codes", "overwrite")
+      seedCodes(ivfPqCodes(normed, books, centroids), dir, Seq("cell"))
       books
     } finally normed.unpersist()
   }
 
-  /** [[ivfPqWriteIndex]] in BATCH-PARTITIONED layout
-    * (`codes/batch=seed/cell=C`) for STREAMING maintenance — the IVF-PQ
-    * counterpart of [[pqSeedIndexBatched]]. Cell stays a partition column at
-    * the second level under every batch, so probe-time partition
-    * pruning on cell is unchanged (pinned in PqIndexSpec); each
-    * [[ivfPqAppendToIndexBatch]] overwrites its own `batch=N` subtree,
-    * so crash-replays replace rather than duplicate codes. */
-  def ivfPqSeedIndexBatched(emb: DataFrame, dir: String, nCells: Int = 16,
-                            m: Int = 8, codeK: Int = 16, iters: Int = 2,
-                            coarseIters: Int = 2): Seq[Seq[Seq[Double]]] = {
-    val spark = emb.sparkSession
-    val centroids = kmeansCentroids(emb, nCells, coarseIters)
-    writeCentroids(spark, dir, centroids)
-    val normed = pqNormalized(emb).persist()
-    try {
-      val books = trainAndWriteBooks(normed, dir, m, codeK, iters)
-      writeIvfPqCodes(normed, books, centroids,
-        s"$dir/codes/batch=seed", "overwrite")
-      books
-    } finally normed.unpersist()
-  }
-
-  /** Register one micro-batch in a [[ivfPqSeedIndexBatched]] index:
-    * assign cells with the STORED coarse centroids, encode with the
-    * STORED codebooks, overwrite the batch's own cell-partitioned
-    * subtree — idempotent under retry/replay like
-    * [[pqAppendToIndexBatch]]. */
+  /** [[pqAppendToIndexBatch]] for an IVF-PQ index: assign cells with the
+    * STORED coarse centroids, encode with the STORED codebooks, and
+    * register the batch's own cell-partitioned `batch=N` subtree —
+    * idempotent under retry/replay, a no-op below the compaction
+    * horizon. */
   def ivfPqAppendToIndexBatch(newVecs: DataFrame, dir: String,
                               batchId: Long): Unit = {
     val (_, books, centroids) = ivfPqReadIndex(newVecs.sparkSession, dir)
     requireDimMatches(newVecs, books)
-    writeIvfPqCodes(pqNormalized(newVecs), books, centroids,
-      s"$dir/codes/batch=$batchId", "overwrite")
+    graft.core.BatchStore.registerBatch(
+      ivfPqCodes(pqNormalized(newVecs), books, centroids), s"$dir/codes",
+      batchId, partitionBy = Seq("cell"))
   }
 
   /** Load an IVF-PQ index: the cell-partitioned codes FRAME plus the
@@ -1009,7 +949,7 @@ object VectorOps {
     val centroids = spark.read.parquet(s"$dir/centroids")
       .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toSeq)
       .sortBy(_._1).map(_._2).toSeq
-    (spark.read.parquet(s"$dir/codes"), books, centroids)
+    (codesTable(spark, dir), books, centroids)
   }
 
   /** Batched IVF-PQ search over a persisted index: each probe selects

@@ -105,10 +105,10 @@ object PipelineQueries {
 
   /** Incremental dedup against a write-once signature store: 80% of the
     * corpus is the EXISTING store (shingle hashes + LSH band table,
-    * written once); the other 20% arrives as a new batch and dedups
-    * against the store + itself — the old corpus is never re-shingled
-    * or re-paired (its band table is scanned once with the new batch
-    * broadcast). Same verified (inter, uni) contract as the one-shot
+    * registered once as batch 0); the other 20% arrives as a new batch
+    * and dedups against the store + itself — the old corpus is never
+    * re-shingled or re-paired (its band table is read by the new
+    * batch's bucket keys). Same verified (inter, uni) contract as the one-shot
     * pair ops; oracle = the exact pair set restricted to pairs
     * involving a new doc. */
   def dedupIncremental(s: SparkSession, d: String): DataFrame = {
@@ -117,8 +117,9 @@ object PipelineQueries {
     // is cached eagerly, but a recompute under cache eviction must
     // still find the store files
     val dir = java.nio.file.Files.createTempDirectory("graft-dedupstore")
-    Dedup.writeDedupStore(docs.filter(col("doc_id") % 5 =!= 0),
-      dir.toString, n = 3)
+    val stored = docs.filter(col("doc_id") % 5 =!= 0)
+    Dedup.seedDedupStoreBatched(stored, dir.toString, n = 3)
+    Dedup.appendDedupStoreBatch(stored, dir.toString, 0L)
     Dedup.incrementalNearDupPairs(
       docs.filter(col("doc_id") % 5 === 0), dir.toString, threshold = 0.8)
   }

@@ -261,7 +261,7 @@ object StreamingQueries {
     val emb = graft.core.Tables.embeddings(s, d)
     val base = tmp("graft-sann")
     val V = graft.operators.VectorOps
-    V.pqSeedIndexBatched(emb.filter(col("vec_id") % 4 =!= 3),
+    V.pqWriteIndex(emb.filter(col("vec_id") % 4 =!= 3),
       s"$base/index", m = 8, codeK = 16, iters = 2)
     emb.filter(col("vec_id") % 4 === 3).select("vec_id", "embedding")
       .repartition(2).write.parquet(s"$base/in")

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -25,6 +25,16 @@ final case class CapState(n: Long, best: Seq[(Long, Long)])
   * reference lacks entirely.
   */
 object StreamingIngest {
+
+  /** The preamble every `foreachBatch` writer below shares: an
+    * AvailableNow trigger checkpointed under `checkpointDir`, running
+    * `body` on each micro-batch and its id. */
+  private def eachBatch(stream: DataFrame, checkpointDir: String)(
+      body: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(body)
 
   /** File-source micro-batch ingest: the FlagMaker analog.
     * `maxFilesPerTrigger` plays the role of the flag file-count threshold. */
@@ -58,29 +68,26 @@ object StreamingIngest {
     * like the data write beside it), never double-counts. */
   def ingestTo(stream: DataFrame, outDir: String, checkpointDir: String,
                toLong: DataFrame => DataFrame,
-               statsDir: Option[String] = None): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        statsDir match {
-          case None =>
-            toLong(batch).write.mode("overwrite")
+               statsDir: Option[String] = None): DataStreamWriter[Row] =
+    eachBatch(stream, checkpointDir) { (batch, id) =>
+      statsDir match {
+        case None =>
+          toLong(batch).write.mode("overwrite")
+            .partitionBy("shard_date")
+            .parquet(s"$outDir/batch_id=$id")
+        case Some(sd) =>
+          // the long frame feeds TWO jobs (data write + stats fold) —
+          // persist once, release after both
+          val long = toLong(batch).persist()
+          try {
+            long.write.mode("overwrite")
               .partitionBy("shard_date")
               .parquet(s"$outDir/batch_id=$id")
-          case Some(sd) =>
-            // the long frame feeds TWO jobs (data write + stats fold) —
-            // persist once, release after both
-            val long = toLong(batch).persist()
-            try {
-              long.write.mode("overwrite")
-                .partitionBy("shard_date")
-                .parquet(s"$outDir/batch_id=$id")
-              graft.ingest.MetadataStats.updateBatch(
-                sd, id, graft.ingest.Ingest.datatypeStats(long))
-            } finally long.unpersist()
-        }
+            graft.ingest.MetadataStats.updateBatch(
+              sd, id, graft.ingest.Ingest.datatypeStats(long))
+          } finally long.unpersist()
       }
+    }
 
   /** Watermarked event-time windowed counts — net-new vs the reference
     * (its late data just lands in old date partitions; the DISCARD_INTERVAL
@@ -115,16 +122,13 @@ object StreamingIngest {
   def facetSketchStream(stream: DataFrame, outDir: String,
                         checkpointDir: String, batchCol: String,
                         keyCol: String, valCol: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // idempotent per-batch partition, same rationale as ingestTo —
-        // a replayed sketch batch must not double-count into the merge
-        graft.ingest.Facets.sketchBatches(batch, batchCol, keyCol, valCol)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-      }
+      : DataStreamWriter[Row] =
+    eachBatch(stream, checkpointDir) { (batch, id) =>
+      // idempotent per-batch partition, same rationale as ingestTo —
+      // a replayed sketch batch must not double-count into the merge
+      graft.ingest.Facets.sketchBatches(batch, batchCol, keyCol, valCol)
+        .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
+    }
 
   /** Streaming near-dup against a write-once signature store — the LIVE
     * analog of [[graft.operators.Dedup.incrementalNearDupPairs]], and
@@ -148,7 +152,7 @@ object StreamingIngest {
     * stored band rows that share one of its bucket keys. */
   def nearDupStream(stream: DataFrame, storeDir: String, pairsDir: String,
                     checkpointDir: String, threshold: Double = 0.8)
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     // signature params are immutable for the store's LIFE — resolve
     // them once at stream start instead of one 1-row-table job per
     // micro-batch (they still re-resolve per batch if this closure is
@@ -159,16 +163,13 @@ object StreamingIngest {
     // stop the stream first (Dedup.readStoreParams scaladoc).
     val params = graft.operators.Dedup.readStoreParams(
       stream.sparkSession, storeDir)
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // a zero-row micro-batch (an empty file in the landing zone) is
-        // recognised by the probe and writes nothing; on the driver path
-        // its batch-side job tells, so no separate emptiness job runs
-        graft.operators.Dedup.streamBatchNearDup(batch, storeDir,
-          pairsDir, id, threshold, params)
-      }
+    eachBatch(stream, checkpointDir) { (batch, id) =>
+      // a zero-row micro-batch (an empty file in the landing zone) is
+      // recognised by the probe and writes nothing; on the driver path
+      // its batch-side job tells, so no separate emptiness job runs
+      graft.operators.Dedup.streamBatchNearDup(batch, storeDir,
+        pairsDir, id, threshold, params)
+    }
   }
 
   /** Live image-dedup tier — the pHash twin of [[nearDupStream]]: each
@@ -183,16 +184,12 @@ object StreamingIngest {
   def imageDedupStream(stream: DataFrame, storeDir: String,
                        pairsDir: String, checkpointDir: String,
                        maxHamming: Int = 7)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.Multimodal.streamBatchImageDedup(batch, storeDir,
-            pairsDir, id, maxHamming)
-        ()
-      }
+      : DataStreamWriter[Row] =
+    eachBatch(stream, checkpointDir) { (batch, id) =>
+      if (!batch.isEmpty)
+        graft.operators.Multimodal.streamBatchImageDedup(batch, storeDir,
+          pairsDir, id, maxHamming)
+    }
 
   /** Live audio-dedup tier — the fingerprint twin of
     * [[imageDedupStream]]: each micro-batch of audio decodes ONCE,
@@ -204,16 +201,12 @@ object StreamingIngest {
   def audioDedupStream(stream: DataFrame, storeDir: String,
                        pairsDir: String, checkpointDir: String,
                        maxHamming: Int = 7)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.Multimodal.streamBatchAudioDedup(batch, storeDir,
-            pairsDir, id, maxHamming)
-        ()
-      }
+      : DataStreamWriter[Row] =
+    eachBatch(stream, checkpointDir) { (batch, id) =>
+      if (!batch.isEmpty)
+        graft.operators.Multimodal.streamBatchAudioDedup(batch, storeDir,
+          pairsDir, id, maxHamming)
+    }
 
   /** Live winnowed-fingerprint tier — copied-passage detection against
     * a growing corpus: each micro-batch of documents fingerprints ONCE
@@ -225,69 +218,56 @@ object StreamingIngest {
   def winnowStream(stream: DataFrame, storeDir: String,
                    pairsDir: String, checkpointDir: String,
                    k: Int = 3, w: Int = 4, minShared: Int = 2)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.TextOps.streamBatchWinnow(batch, storeDir,
-            pairsDir, id, k, w, minShared)
-        ()
-      }
+      : DataStreamWriter[Row] =
+    eachBatch(stream, checkpointDir) { (batch, id) =>
+      if (!batch.isEmpty)
+        graft.operators.TextOps.streamBatchWinnow(batch, storeDir,
+          pairsDir, id, k, w, minShared)
+    }
 
   /** Live video-dedup tier — the [[vfp64]] twin of [[imageDedupStream]]
     * over the same store layout and exactly-once discipline. */
   def videoDedupStream(stream: DataFrame, storeDir: String,
                        pairsDir: String, checkpointDir: String,
                        maxHamming: Int = 7)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.Multimodal.streamBatchVideoDedup(batch, storeDir,
-            pairsDir, id, maxHamming)
-        ()
-      }
+      : DataStreamWriter[Row] =
+    eachBatch(stream, checkpointDir) { (batch, id) =>
+      if (!batch.isEmpty)
+        graft.operators.Multimodal.streamBatchVideoDedup(batch, storeDir,
+          pairsDir, id, maxHamming)
+    }
 
   /** Live ANN-index maintenance — the vector-side twin of
-    * [[nearDupStream]] and the streaming face of
-    * [[graft.operators.VectorOps.pqAppendToIndex]]'s write-once
-    * contract: each micro-batch of new vectors is encoded with the
-    * STORED codebooks (zero retrain, the old corpus is never re-read)
-    * and lands in its own `batch=N` codes partition, so a crash-replayed
-    * batch replaces rather than duplicates its codes. Seed with
-    * [[graft.operators.VectorOps.pqSeedIndexBatched]]; searches run off
-    * the growing index at any point between batches. Quantization drift
+    * [[nearDupStream]]: each micro-batch of new vectors is encoded with
+    * the STORED codebooks (zero retrain, the old corpus is never
+    * re-read) and registered in its own `batch=N` codes partition
+    * ([[graft.operators.VectorOps.pqAppendToIndexBatch]]), so a
+    * crash-replayed batch replaces rather than duplicates its codes,
+    * and one replayed after a compaction is a no-op. Seed with
+    * [[graft.operators.VectorOps.pqWriteIndex]]; searches run off the
+    * growing index at any point between batches. Quantization drift
     * from streamed data remains an offline retrain decision
-    * ([[graft.operators.VectorOps.pqWriteIndex]] over the full corpus);
-    * file splinter from many batches is
-    * [[graft.operators.VectorOps.pqCompactIndex]]. Serves BOTH index
-    * families: a `centroids` table in the index dir marks IVF-PQ
-    * (seeded by [[graft.operators.VectorOps.ivfPqSeedIndexBatched]] —
-    * cells assigned with the stored coarse centroids, partition pruning
-    * unchanged); its absence marks flat PQ
-    * ([[graft.operators.VectorOps.pqSeedIndexBatched]]). */
+    * (`pqWriteIndex` over the full corpus); file splinter from many
+    * batches is [[graft.operators.VectorOps.pqCompactIndex]]. Serves
+    * BOTH index families: a `centroids` table in the index dir marks
+    * IVF-PQ (seeded by [[graft.operators.VectorOps.ivfPqWriteIndex]],
+    * appended by [[graft.operators.VectorOps.ivfPqAppendToIndexBatch]]
+    * — cells assigned with the stored coarse centroids, partition
+    * pruning unchanged); its absence marks flat PQ. */
   def annIndexStream(stream: DataFrame, indexDir: String,
                      checkpointDir: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val V = graft.operators.VectorOps
-        // a zero-row micro-batch would NPE the dim check and wedge the
-        // stream (the checkpoint replays the batch on every restart)
-        if (!batch.isEmpty) {
-          if (java.nio.file.Files.exists(
-              java.nio.file.Paths.get(indexDir, "centroids")))
-            V.ivfPqAppendToIndexBatch(batch, indexDir, id)
-          else V.pqAppendToIndexBatch(batch, indexDir, id)
-        }
-        ()
+      : DataStreamWriter[Row] =
+    eachBatch(stream, checkpointDir) { (batch, id) =>
+      val V = graft.operators.VectorOps
+      // a zero-row micro-batch would NPE the dim check and wedge the
+      // stream (the checkpoint replays the batch on every restart)
+      if (!batch.isEmpty) {
+        if (java.nio.file.Files.exists(
+            java.nio.file.Paths.get(indexDir, "centroids")))
+          V.ivfPqAppendToIndexBatch(batch, indexDir, id)
+        else V.pqAppendToIndexBatch(batch, indexDir, id)
       }
+    }
 
   /** Live global-index maintenance with CUSTOM streaming state — the
     * GlobalIndexUidAggregator combiner (GlobalIndexUidAggregator.java:
@@ -339,27 +319,23 @@ object StreamingIngest {
                      maxMeanTokLen: Double = 10.0,
                      minAlphaRatio: Double = 0.6,
                      minStopwordRatio: Double = 0.02)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // an empty micro-batch registers nothing (and must not seed an
-        // empty batch partition the ledger read would still list)
-        if (!batch.isEmpty)
-          graft.operators.TextOps.qualityFilter(batch,
-              minTokens = minTokens, maxTokens = maxTokens,
-              minMeanTokLen = minMeanTokLen, maxMeanTokLen = maxMeanTokLen,
-              minAlphaRatio = minAlphaRatio,
-              minStopwordRatio = minStopwordRatio,
-              carry = Seq("source", "text"))
-            .filter(col("keep"))
-            .select(col("doc_id"), col("source"),
-              graft.operators.TextOps.fingerprint(col("text"))
-                .as("fingerprint"))
-            .write.mode("overwrite").parquet(s"$ledgerDir/kept/batch=$id")
-        ()
-      }
+      : DataStreamWriter[Row] =
+    eachBatch(stream, checkpointDir) { (batch, id) =>
+      // an empty micro-batch registers nothing (and must not seed an
+      // empty batch partition the ledger read would still list)
+      if (!batch.isEmpty)
+        graft.operators.TextOps.qualityFilter(batch,
+            minTokens = minTokens, maxTokens = maxTokens,
+            minMeanTokLen = minMeanTokLen, maxMeanTokLen = maxMeanTokLen,
+            minAlphaRatio = minAlphaRatio,
+            minStopwordRatio = minStopwordRatio,
+            carry = Seq("source", "text"))
+          .filter(col("keep"))
+          .select(col("doc_id"), col("source"),
+            graft.operators.TextOps.fingerprint(col("text"))
+              .as("fingerprint"))
+          .write.mode("overwrite").parquet(s"$ledgerDir/kept/batch=$id")
+    }
 
   /** The curated-corpus answer as of the ledger's current batches —
     * [[curationStream]]'s read side. Exact-dedup survivor = min id per

@@ -54,6 +54,17 @@ class CacheHygieneSpec extends SparkSpec {
     checkOp("spanScrub")(Dedup.spanScrub(_, k = 5))
   }
 
+  test("lshTopK leaves no signature cache behind") {
+    val emb = (0L until 20L).map(i => (i, Array.tabulate(8)(d =>
+        ((i * 7 + d * 3) % 10).toFloat - 4.5f)))
+      .toDF("vec_id", "embedding")
+    checkOp("lshTopK") { _ =>
+      val out = VectorOps.lshTopK(emb, 0L, 3)
+      out.collect()
+      out
+    }
+  }
+
   test("ssdeep ops pin the documented riding-frame shape (ADVICE r13, adjudicated r14)") {
     // DELIBERATE exception to the one-frame contract: the ssdeep ops'
     // intermediates ride in the returned plan and release with the

@@ -126,7 +126,7 @@ class PqIndexSpec extends SparkSpec {
       .filter(_.getName.endsWith(".parquet")).head
     val booksBytes = java.nio.file.Files.readAllBytes(booksFile.toPath).toSeq
 
-    VectorOps.pqAppendToIndex(rest, dir)
+    VectorOps.pqAppendToIndexBatch(rest, dir, 0L)
     // the codebooks file is byte-identical — nothing retrained
     assert(java.nio.file.Files.readAllBytes(booksFile.toPath).toSeq
       == booksBytes)
@@ -154,7 +154,7 @@ class PqIndexSpec extends SparkSpec {
     val short = (0L until 5L).map(i => (i + 100L, Array.fill(4)(0.5f)))
       .toDF("vec_id", "embedding")
     val ex = intercept[IllegalArgumentException] {
-      VectorOps.pqAppendToIndex(short, dir)
+      VectorOps.pqAppendToIndexBatch(short, dir, 1L)
     }
     assert(ex.getMessage.contains("dim 4"), ex.getMessage)
   }
@@ -166,7 +166,7 @@ class PqIndexSpec extends SparkSpec {
       iters = 2)
     val (codes, books, cents) = VectorOps.ivfPqReadIndex(spark, dir)
     // the codes table is PHYSICALLY partitioned by cell
-    val cellDirs = new java.io.File(s"$dir/codes").listFiles()
+    val cellDirs = new java.io.File(s"$dir/codes/batch=seed").listFiles()
       .filter(_.getName.startsWith("cell=")).map(_.getName).toSet
     assert(cellDirs.nonEmpty && cellDirs.subsetOf(
       (0 until 4).map(c => s"cell=$c").toSet), cellDirs.toString)
@@ -227,10 +227,10 @@ class PqIndexSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-pq-cmp").toString
     VectorOps.pqWriteIndex(all.filter(col("vec_id") < 30L), dir,
       m = 4, codeK = 8, iters = 1)
-    // three live appends → three more part-file sets
-    Seq(30L, 40L, 50L).foreach { lo =>
-      VectorOps.pqAppendToIndex(
-        all.filter(col("vec_id") >= lo && col("vec_id") < lo + 10L), dir)
+    // three live batches → three more part-file sets
+    Seq(30L, 40L, 50L).zipWithIndex.foreach { case (lo, b) =>
+      VectorOps.pqAppendToIndexBatch(
+        all.filter(col("vec_id") >= lo && col("vec_id") < lo + 10L), dir, b)
     }
     val splintered = partFiles(s"$dir/codes")
     assert(splintered >= 4, s"expected splinters, got $splintered")
@@ -248,13 +248,13 @@ class PqIndexSpec extends SparkSpec {
     val dir2 = java.nio.file.Files.createTempDirectory("graft-ivfpq-cmp").toString
     VectorOps.ivfPqWriteIndex(all.filter(col("vec_id") < 40L), dir2,
       nCells = 4, m = 4, codeK = 8, iters = 1, coarseIters = 1)
-    VectorOps.ivfPqAppendToIndex(all.filter(col("vec_id") >= 40L), dir2)
+    VectorOps.ivfPqAppendToIndexBatch(all.filter(col("vec_id") >= 40L), dir2, 0L)
     val (c2, b2, cents) = VectorOps.ivfPqReadIndex(spark, dir2)
     val ib = VectorOps.ivfPqTopKBatch(all, c2, b2, cents, Seq(0L), k = 5,
       nProbe = 2, shortlist = 40).collect().toSeq
     VectorOps.pqCompactIndex(spark, dir2)
-    val cellDirs = new java.io.File(s"$dir2/codes").listFiles()
-      .filter(_.getName.startsWith("cell="))
+    val cellDirs = new java.io.File(s"$dir2/codes/batch=compacted")
+      .listFiles().filter(_.getName.startsWith("cell="))
     assert(cellDirs.nonEmpty && cellDirs.forall(cd =>
       cd.listFiles().count(_.getName.endsWith(".parquet")) == 1),
       cellDirs.map(_.getName).mkString(","))
@@ -282,108 +282,83 @@ class PqIndexSpec extends SparkSpec {
           java.nio.file.Paths.get(s"$d/codes.old")), d)
   }
 
-  test("batched streaming layout: same books/codes/search as flat appends; replay idempotent; compaction appendable") {
+  /** Every code row as JSON, sorted: equal multisets of rows. */
+  private def codeRows(codes: org.apache.spark.sql.DataFrame): Seq[String] =
+    codes.toJSON.collect().toSeq.sorted
+
+  private def subdirs(dir: String): Seq[String] =
+    new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName).toSeq
+
+  test("PQ index: a batch replayed before or after compaction changes no code row and no search") {
     val all = corpus.cache()
-    def codeSet(codes: org.apache.spark.sql.DataFrame): Set[(Long, String)] =
-      codes.select("vec_id", "code").collect()
-        .map(r => (r.getLong(0), r.getSeq[Int](1).mkString(","))).toSet
-    // flat reference: books train on the seed corpus, two live appends
-    val flat = java.nio.file.Files.createTempDirectory("graft-pq-flat").toString
-    VectorOps.pqWriteIndex(all.filter(col("vec_id") < 40L), flat,
-      m = 4, codeK = 8, iters = 1)
-    VectorOps.pqAppendToIndex(
-      all.filter(col("vec_id") >= 40L && col("vec_id") < 50L), flat)
-    VectorOps.pqAppendToIndex(all.filter(col("vec_id") >= 50L), flat)
-    // batched layout: SAME seed corpus → same deterministic training path
-    val bat = java.nio.file.Files.createTempDirectory("graft-pq-bat").toString
-    VectorOps.pqSeedIndexBatched(all.filter(col("vec_id") < 40L), bat,
-      m = 4, codeK = 8, iters = 1)
-    VectorOps.pqAppendToIndexBatch(
-      all.filter(col("vec_id") >= 40L && col("vec_id") < 50L), bat, 0L)
-    VectorOps.pqAppendToIndexBatch(all.filter(col("vec_id") >= 50L), bat, 1L)
-    val (cf, bf) = VectorOps.pqReadIndex(spark, flat)
-    val (cb, bb) = VectorOps.pqReadIndex(spark, bat)
-    assert(bb == bf) // byte-identical codebooks
-    assert(codeSet(cb) == codeSet(cf)) // identical code rows
+    val dir = java.nio.file.Files.createTempDirectory("graft-pq-bat").toString
     val probeIds = Seq(0L, 41L, 55L)
-    val sFlat = VectorOps.pqTopKBatch(all, cf, bf, probeIds, k = 5,
-      shortlist = 30).collect().toSeq
-    val sBat = VectorOps.pqTopKBatch(all, cb, bb, probeIds, k = 5,
-      shortlist = 30).collect().toSeq
-    assert(sBat == sFlat)
-    // a crash-replayed batch overwrites its own partition — no duplicates
-    VectorOps.pqAppendToIndexBatch(all.filter(col("vec_id") >= 50L), bat, 1L)
-    val (cb2, _) = VectorOps.pqReadIndex(spark, bat)
-    assert(cb2.count() == 60L && codeSet(cb2) == codeSet(cf))
-    // offline compaction mid-stream: collapse the splinters, then a
-    // LATER streamed append must still see a consistent layout and the
-    // full index must keep serving identical searches
-    VectorOps.pqCompactIndex(spark, bat)
-    val subdirs = new java.io.File(s"$bat/codes").listFiles()
-      .filter(_.isDirectory).map(_.getName).toSeq
-    assert(subdirs == Seq("batch=compacted"), subdirs.mkString(","))
-    val bat2 = java.nio.file.Files.createTempDirectory("graft-pq-bat2").toString
-    VectorOps.pqSeedIndexBatched(all.filter(col("vec_id") < 40L), bat2,
+    def state() = {
+      val (codes, books) = VectorOps.pqReadIndex(spark, dir)
+      (codes.count(), codeRows(codes.select("vec_id", "code")),
+        VectorOps.pqTopKBatch(all, codes, books, probeIds, k = 5,
+          shortlist = 30).collect().toSeq)
+    }
+    def register(lo: Long, id: Long): Unit = VectorOps.pqAppendToIndexBatch(
+      all.filter(col("vec_id") >= lo && col("vec_id") < lo + 10L), dir, id)
+    VectorOps.pqWriteIndex(all.filter(col("vec_id") < 40L), dir,
       m = 4, codeK = 8, iters = 1)
-    VectorOps.pqAppendToIndexBatch(
-      all.filter(col("vec_id") >= 40L && col("vec_id") < 50L), bat2, 0L)
-    VectorOps.pqCompactIndex(spark, bat2) // compact BETWEEN live batches
-    VectorOps.pqAppendToIndexBatch(all.filter(col("vec_id") >= 50L), bat2, 1L)
-    val (cc, bc) = VectorOps.pqReadIndex(spark, bat2)
-    assert(bc == bf && codeSet(cc) == codeSet(cf))
-    val sCompacted = VectorOps.pqTopKBatch(all, cc, bc, probeIds, k = 5,
-      shortlist = 30).collect().toSeq
-    assert(sCompacted == sFlat)
+    register(40L, 0L)
+    val s0 = state()
+    assert(s0._1 == 50L)
+    // a crash-replayed batch overwrites its own partition — no duplicates
+    register(40L, 0L)
+    assert(state() == s0)
+    // offline compaction: one partition, the same rows and searches
+    VectorOps.pqCompactIndex(spark, dir)
+    assert(subdirs(s"$dir/codes") == Seq("batch=compacted"),
+      subdirs(s"$dir/codes").mkString(","))
+    assert(state() == s0)
+    // the compacted index stays appendable, and replaying a batch the
+    // compaction folded in is a no-op, not a second copy of its codes
+    register(50L, 1L)
+    val s1 = state()
+    assert(s1._1 == 60L)
+    register(40L, 0L)
+    assert(state() == s1)
   }
 
-  test("IVF-PQ batched streaming layout: search matches flat appends, cell pruning survives, compaction appendable") {
+  test("IVF-PQ index: a batch replayed before or after compaction changes no code row and no search; cell pruning survives") {
     val all = corpus.cache()
-    // flat reference
-    val flat = java.nio.file.Files.createTempDirectory("graft-ivf-flat").toString
-    VectorOps.ivfPqWriteIndex(all.filter(col("vec_id") < 40L), flat,
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-bat").toString
+    def state() = {
+      val (codes, books, cents) = VectorOps.ivfPqReadIndex(spark, dir)
+      // cell is a partition level under every batch — a cell filter
+      // prunes files in every layout the index goes through
+      val plan = codes.filter(col("cell").isin(0, 1)).queryExecution
+        .executedPlan.toString
+      assert(plan.contains("PartitionFilters") && plan.contains("cell"), plan)
+      (codes.count(), codeRows(codes.select("vec_id", "cell", "code")),
+        VectorOps.ivfPqTopKBatch(all, codes, books, cents, Seq(0L, 41L),
+          k = 5, nProbe = 2, shortlist = 40).collect().toSeq)
+    }
+    def register(lo: Long, id: Long): Unit = VectorOps.ivfPqAppendToIndexBatch(
+      all.filter(col("vec_id") >= lo && col("vec_id") < lo + 10L), dir, id)
+    VectorOps.ivfPqWriteIndex(all.filter(col("vec_id") < 40L), dir,
       nCells = 4, m = 4, codeK = 8, iters = 1, coarseIters = 1)
-    VectorOps.ivfPqAppendToIndex(all.filter(col("vec_id") >= 40L), flat)
-    val (cf, bf, sf_) = VectorOps.ivfPqReadIndex(spark, flat)
-    val ref = VectorOps.ivfPqTopKBatch(all, cf, bf, sf_, Seq(0L, 41L),
-      k = 5, nProbe = 2, shortlist = 40).collect().toSeq
-    // batched layout: same seed corpus → same centroids + books
-    val bat = java.nio.file.Files.createTempDirectory("graft-ivf-bat").toString
-    VectorOps.ivfPqSeedIndexBatched(all.filter(col("vec_id") < 40L), bat,
-      nCells = 4, m = 4, codeK = 8, iters = 1, coarseIters = 1)
-    VectorOps.ivfPqAppendToIndexBatch(all.filter(col("vec_id") >= 40L), bat, 0L)
-    val (cb, bb, sb) = VectorOps.ivfPqReadIndex(spark, bat)
-    assert(bb == bf && sb == sf_)
-    val got = VectorOps.ivfPqTopKBatch(all, cb, bb, sb, Seq(0L, 41L),
-      k = 5, nProbe = 2, shortlist = 40).collect().toSeq
-    assert(got == ref)
-    // cell is still a partition column UNDER each batch — a cell filter
-    // must prune files exactly as in the flat layout
-    val plan = cb.filter(col("cell").isin(0, 1)).queryExecution
-      .executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("cell"), plan)
+    register(40L, 0L)
+    val s0 = state()
+    assert(s0._1 == 50L)
     // a replayed batch overwrites its own subtree — no duplicates
-    VectorOps.ivfPqAppendToIndexBatch(all.filter(col("vec_id") >= 40L), bat, 0L)
-    assert(VectorOps.ivfPqReadIndex(spark, bat)._1.count() == 60L)
-    // compaction BETWEEN live batches keeps the layout appendable:
-    // seed <40, append [40,50) as batch 0, compact, append [50,60) as
-    // batch 1 — the final index must serve the same searches as flat
-    val bat2 = java.nio.file.Files.createTempDirectory("graft-ivf-bat2").toString
-    VectorOps.ivfPqSeedIndexBatched(all.filter(col("vec_id") < 40L), bat2,
-      nCells = 4, m = 4, codeK = 8, iters = 1, coarseIters = 1)
-    VectorOps.ivfPqAppendToIndexBatch(
-      all.filter(col("vec_id") >= 40L && col("vec_id") < 50L), bat2, 0L)
-    VectorOps.pqCompactIndex(spark, bat2)
-    val subdirs = new java.io.File(s"$bat2/codes").listFiles()
-      .filter(_.isDirectory).map(_.getName).toSeq
-    assert(subdirs == Seq("batch=compacted"), subdirs.mkString(","))
-    assert(new java.io.File(s"$bat2/codes/batch=compacted").listFiles()
-      .filter(_.isDirectory).forall(_.getName.startsWith("cell=")))
-    VectorOps.ivfPqAppendToIndexBatch(all.filter(col("vec_id") >= 50L), bat2, 1L)
-    val (cc, bc, sc_) = VectorOps.ivfPqReadIndex(spark, bat2)
-    assert(cc.count() == 60L && bc == bf && sc_ == sf_)
-    val got2 = VectorOps.ivfPqTopKBatch(all, cc, bc, sc_, Seq(0L, 41L),
-      k = 5, nProbe = 2, shortlist = 40).collect().toSeq
-    assert(got2 == ref)
+    register(40L, 0L)
+    assert(state() == s0)
+    // compaction keeps the cell level under batch=compacted
+    VectorOps.pqCompactIndex(spark, dir)
+    assert(subdirs(s"$dir/codes") == Seq("batch=compacted"),
+      subdirs(s"$dir/codes").mkString(","))
+    assert(subdirs(s"$dir/codes/batch=compacted").forall(_.startsWith("cell=")))
+    assert(state() == s0)
+    // appendable after compaction; a folded batch's replay is a no-op
+    register(50L, 1L)
+    val s1 = state()
+    assert(s1._1 == 60L)
+    register(40L, 0L)
+    assert(state() == s1)
   }
 
   test("IVF-PQ whole-corpus recall floor: reranked top-5 vs GLOBAL brute force >= 4/5") {

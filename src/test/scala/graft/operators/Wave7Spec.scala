@@ -12,125 +12,6 @@ class Wave7Spec extends SparkSpec {
 
   def sf01 = "/root/testdata/sf0.01"
 
-  test("incremental dedup: batches dedup against the store, appends feed the NEXT batch, old corpus untouched") {
-    val mk = (id: Long, text: String) => (id, text)
-    val base = Seq(
-      mk(1L, "alpha beta gamma delta epsilon zeta eta theta"),
-      mk(2L, "totally different words live in this one document here"),
-      mk(3L, "yet another unrelated piece of text with its own tokens"))
-      .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-incdedup")
-    try {
-      Dedup.writeDedupStore(base, dir.toString, n = 3)
-      // batch 1: doc 10 duplicates doc 1 (store hit); doc 11 is novel
-      val b1 = Seq(
-        mk(10L, "alpha beta gamma delta epsilon zeta eta theta"),
-        mk(11L, "completely novel content that matches nothing else at all"))
-        .toDF("doc_id", "text")
-      val p1f = Dedup.incrementalNearDupPairs(b1, dir.toString, threshold = 0.8)
-      val p1 = p1f.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      p1f.unpersist()
-      assert(p1 == Set((1L, 10L)), p1.toString)
-      Dedup.appendDedupStore(b1, dir.toString)
-      // batch 2: doc 20 duplicates doc 11 — a PREVIOUS BATCH's doc, only
-      // findable because the append registered it
-      val b2 = Seq(
-        mk(20L, "completely novel content that matches nothing else at all"))
-        .toDF("doc_id", "text")
-      val p2f = Dedup.incrementalNearDupPairs(b2, dir.toString, threshold = 0.8)
-      val p2 = p2f.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      p2f.unpersist()
-      assert(p2 == Set((11L, 20L)), p2.toString)
-      // the probe reads the store by the batch's bucket keys: the
-      // bands scan carries a pushed `bucket` filter, so a probe reads
-      // the rows that can collide with the batch, not the whole store
-      val bucketScan = Dedup.storedBands(spark, dir.toString,
-          org.apache.spark.sql.types.LongType, Some(Seq(7, -3, 11)))
-        .queryExecution.executedPlan.collect {
-          case s: org.apache.spark.sql.execution.FileSourceScanExec
-              if s.relation.location.rootPaths
-                .exists(_.toString.endsWith("/bands")) =>
-            s.metadata.getOrElse("PushedFilters", "")
-        }
-      assert(bucketScan.nonEmpty &&
-        bucketScan.forall(_.contains("In(bucket")), bucketScan.mkString("\n"))
-      // with the ceiling off (no driver-side sets), the same batch
-      // pairs through plain joins to the same answer
-      val ceiling = "spark.sql.autoBroadcastJoinThreshold"
-      val prev = spark.conf.get(ceiling)
-      spark.conf.set(ceiling, "-1")
-      val viaJoins = try {
-        val f = Dedup.incrementalNearDupPairs(b2, dir.toString, 0.8)
-        try f.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        finally f.unpersist()
-      } finally spark.conf.set(ceiling, prev)
-      assert(viaJoins == p2)
-    } finally graft.core.Fs.deleteRecursively(dir)
-  }
-
-  test("compactDedupStore: splinters collapse to one file per table, pair results identical") {
-    val mk = (id: Long, text: String) => (id, text)
-    val base = Seq(
-      mk(1L, "alpha beta gamma delta epsilon zeta eta theta"),
-      mk(2L, "totally different words live in this one document here"))
-      .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-cmpdedup")
-    try {
-      Dedup.writeDedupStore(base, dir.toString, n = 3)
-      // three live appends splinter both tables
-      (0 until 3).foreach { b =>
-        Dedup.appendDedupStore(Seq(
-          mk(100L + b, s"batch $b content entirely its own number ${b * 7}"))
-          .toDF("doc_id", "text"), dir.toString)
-      }
-      def files(t: String): Int = new java.io.File(s"$dir/$t").listFiles()
-        .count(_.getName.endsWith(".parquet"))
-      assert(files("bands") >= 4 && files("shingles") >= 4,
-        s"bands=${files("bands")} shingles=${files("shingles")}")
-      val probe = Seq(
-        mk(200L, "alpha beta gamma delta epsilon zeta eta theta"),
-        mk(201L, "batch 1 content entirely its own number 7"))
-        .toDF("doc_id", "text")
-      val beforeF = Dedup.incrementalNearDupPairs(probe, dir.toString, 0.8)
-      val before = beforeF.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      beforeF.unpersist()
-      assert(before == Set((1L, 200L), (101L, 201L)), before.toString)
-      Dedup.compactDedupStore(spark, dir.toString)
-      assert(files("bands") == 1 && files("shingles") == 1,
-        s"bands=${files("bands")} shingles=${files("shingles")}")
-      val afterF = Dedup.incrementalNearDupPairs(probe, dir.toString, 0.8)
-      val after = afterF.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      afterF.unpersist()
-      assert(after == before)
-      // crash-safety of the rename-only swap: a crash BETWEEN the two
-      // renames leaves bands.old (complete) and no bands — the next
-      // reader recovers the old generation and answers identically
-      val bands = java.nio.file.Paths.get(s"$dir/bands")
-      java.nio.file.Files.move(bands,
-        java.nio.file.Paths.get(s"$dir/bands.old"))
-      assert(!java.nio.file.Files.exists(bands))
-      val recF = Dedup.incrementalNearDupPairs(probe, dir.toString, 0.8)
-      val rec = recF.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      recF.unpersist()
-      assert(rec == before)
-      assert(java.nio.file.Files.exists(bands) &&
-        !java.nio.file.Files.exists(
-          java.nio.file.Paths.get(s"$dir/bands.old")))
-      // a crash AFTER the second rename leaves only a stale .old +
-      // .compacting pair; recovery drops both without touching bands
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(s"$dir/bands.old"))
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(s"$dir/bands.compacting"))
-      Dedup.compactDedupStore(spark, dir.toString)
-      assert(files("bands") == 1 &&
-        !java.nio.file.Files.exists(
-          java.nio.file.Paths.get(s"$dir/bands.old")) &&
-        !java.nio.file.Files.exists(
-          java.nio.file.Paths.get(s"$dir/bands.compacting")))
-    } finally graft.core.Fs.deleteRecursively(dir)
-  }
-
   test("packWindows: contiguous token stream, correct window spans, equals the global-window form") {
     val docs = (1L to 300L).map(i => (i, (i % 11) + 1))
       .toDF("doc_id", "n_tokens")
