@@ -25,15 +25,24 @@ object DriverSet {
     * drops everything once the running total passes the ceiling, so
     * the driver holds about twice the ceiling at worst). None = over
     * the ceiling: the caller computes with joins instead. */
-  def collect(df: DataFrame): Option[Array[Row]] = {
+  def collect(df: DataFrame): Option[Array[Row]] =
+    collectRows(df, rowBytes(df)).map { rows =>
+      val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+      rows.map(r => toRow(r).asInstanceOf[Row])
+    }
+
+  /** [[collect]] in Catalyst's row form, for a caller that computes over
+    * the rows with Catalyst's own expressions (an ordering), counting
+    * each row at `bytesPerRow` against the ceiling. */
+  def collectRows(df: DataFrame, bytesPerRow: Long): Option[Array[InternalRow]] = {
     val spark = df.sparkSession
     val c = ceilingBytes(spark)
     if (c <= 0) return None
-    val cap = math.min(c / math.max(rowBytes(df), 1L), Int.MaxValue - 1L).toInt
+    val cap = math.min(c / math.max(bytesPerRow, 1L), Int.MaxValue - 1L).toInt
     val buf = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
     var over = false
     // the frame's own planned query (`df.rdd` would analyze, optimize
-    // and plan a second, deserializing one); rows convert on the driver
+    // and plan a second, deserializing one)
     spark.sparkContext.runJob(df.queryExecution.toRdd,
       (it: Iterator[InternalRow]) => it.take(cap + 1).map(_.copy()).toArray,
       (_: Int, part: Array[InternalRow]) =>
@@ -41,11 +50,7 @@ object DriverSet {
           if (buf.length.toLong + part.length > cap) { over = true; buf.clear() }
           else buf ++= part
         })
-    if (over) None
-    else {
-      val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
-      Some(buf.iterator.map(r => toRow(r).asInstanceOf[Row]).toArray)
-    }
+    if (over) None else Some(buf.toArray)
   }
 
   /** `df` hinted as the broadcast side when `bytes` fit under the

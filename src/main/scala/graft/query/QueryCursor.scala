@@ -14,10 +14,11 @@ import java.nio.charset.StandardCharsets
   * reference streams in (shard, datatype, uid) key order; an explicit
   * order is what makes OFFSET/LIMIT pages deterministic and resumable.
   * State is one tiny file per queryId under `stateDir` (the "query
-  * storage cache" of the reference's microservices); the data itself is
-  * recomputed per page — at scale you'd persist()/checkpoint the frame
-  * once per query instead of re-planning, which callers can do by
-  * passing an already-cached frame.
+  * storage cache" of the reference's microservices). [[next]] computes
+  * each page from the frame (pass a cached one to avoid re-planning its
+  * scans); [[RunningQuery.nextPageJson]] instead slices one sorted
+  * collect of the whole result when it fits the driver, advancing the
+  * same offset.
   */
 final class QueryCursor(stateDir: String) {
 
@@ -48,12 +49,16 @@ final class QueryCursor(stateDir: String) {
     page
   }
 
-  /** Advance the durable offset WITHOUT serving a page frame — the
-    * batched ledger drain ([[RunningQuery.run]]) keeps cursor state
-    * byte-identical to a per-page drain while computing the page counts
-    * in one job. */
-  def advance(queryId: String, pageSize: Int): Unit =
-    saveOffset(queryId, currentOffset(queryId) + pageSize)
+  /** Advance the durable offset WITHOUT serving a page frame, returning
+    * where the page starts — the batched ledger drain
+    * ([[RunningQuery.run]]) and the held pages of
+    * [[RunningQuery.nextPageJson]] keep cursor state byte-identical to a
+    * per-page drain. */
+  def advance(queryId: String, pageSize: Int): Long = {
+    val off = currentOffset(queryId)
+    saveOffset(queryId, off + pageSize)
+    off
+  }
 
   /** Drop cursor state (query close). */
   def close(queryId: String): Unit = {

@@ -1,6 +1,9 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.DriverSet
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import scala.collection.mutable.ArrayBuffer
 
 /** Query metrics capture + query logic (QueryMetricQueryLogic,
@@ -197,6 +200,7 @@ final class RunningQuery(
     sink: PageMetric => Unit = QueryMetrics.recordPage,
     // run ordinal stamped on every recorded page (see PageMetric)
     val attempt: Long = 0L) {
+  import org.apache.spark.sql.functions.{col, struct, to_json}
 
   RunningQuery.checkOrder(df, orderCols)
 
@@ -233,15 +237,49 @@ final class RunningQuery(
   }
 
   /** Next page COLLECTED to the driver as JSON rows, with the 1-based
-    * page number — the serving path (QueryServer /query/next). One job
-    * per page: returning the DataFrame would make the caller's collect
-    * re-run the sorted offset/limit query a second time. */
+    * page number — the serving path (QueryServer /query/next).
+    *
+    * The first call runs ONE job for the whole query: it collects the
+    * frame's order columns and each row's JSON through
+    * [[graft.core.DriverSet]]'s bound and sorts them on the driver with
+    * Catalyst's own ordering for `orderBy(col)` (ascending, nulls
+    * first). That call's page carries the whole result's cost; every
+    * page after it is a slice of the held rows at the durable offset and
+    * runs no job, so only that first page can trip `pageTimeoutMillis`.
+    * Over the ceiling each page is its own sorted offset/limit job that
+    * collects only the JSON column: a top-k per partition merged on the
+    * driver, with no shuffle. Offsets, page numbers, metrics and the
+    * exhaustion probe are the same on both paths. */
   def nextPageJson(): Option[(Array[String], Long)] = {
     if (timedOut || skipProbe()) return None
     val t0 = System.currentTimeMillis()
-    val rows = cursor.next(queryId, df, orderCols, pageSize)
-      .toJSON.collect() // bounded by pageSize
+    val rows = held match {
+      case Some(sorted) =>
+        val from = cursor.advance(queryId, pageSize)
+        sorted.slice(from.min(sorted.length).toInt,
+          (from + pageSize).min(sorted.length).toInt)
+      case None =>
+        cursor.next(queryId, df, orderCols, pageSize).select(json)
+          .collect().map(_.getString(0)) // bounded by pageSize
+    }
     if (record(rows.length, t0) == 0) None else Some((rows, pageNum))
+  }
+
+  // a row as the document a page serves, one expression for both paths
+  // (quoted: a dotted column name is one column, not a struct field)
+  private def json: Column =
+    to_json(struct(df.columns.map(c => col(s"`${c.replace("`", "``")}`")).toSeq: _*))
+
+  /** The whole result's page JSON in page order, computed by the first
+    * [[nextPageJson]]; None over the DriverSet ceiling. A row counts at
+    * its order columns plus its source row, which its JSON restates. */
+  private lazy val held: Option[Array[String]] = {
+    val keyed = df.select(orderCols.map(col) :+ json: _*)
+    val out = keyed.queryExecution.analyzed.output
+    DriverSet.collectRows(keyed, DriverSet.rowBytes(keyed) + DriverSet.rowBytes(df))
+      .map(_.sorted(new LazilyGeneratedOrdering(
+        out.init.map(SortOrder(_, Ascending)), out))
+        .map(_.getUTF8String(out.length - 1).toString))
   }
 
   /** Shared page bookkeeping: metric + timeout latch + exhaustion

@@ -151,21 +151,42 @@ class RunningQuerySpec extends SparkSpec {
     QueryMetrics.clear()
   }
 
+  /** `body` with DriverSet's ceiling as the session sets it (held pages)
+    * or turned off (one sorted offset/limit job per page). */
+  private def paging[A](held: Boolean)(body: => A): A =
+    if (held) body
+    else {
+      val ceiling = "spark.sql.autoBroadcastJoinThreshold"
+      val prev = spark.conf.get(ceiling)
+      spark.conf.set(ceiling, "-1")
+      try body finally spark.conf.set(ceiling, prev)
+    }
+
   test("after a short page the exhaustion probe runs no job; offsets match the per-page drain") {
-    // 25 rows: the third page is short, so the fourth call is answered
-    // without a job. 30 rows: every page is full, so the probe job runs.
-    for ((n, pages, probeRuns) <- Seq((25, Seq(10, 10, 5), false),
+    // Held: the first call runs the one collect, every later call none.
+    // Ceiling off, 25 rows: the third page is short, so the fourth call
+    // is answered without a job; 30 rows: every page is full, so the
+    // probe job runs.
+    // (RDD-backed like a served, cached frame: Spark cannot bound its
+    // row count, so it plans every offset page as a sorted top-k instead
+    // of folding a page past a local frame's end into an empty one)
+    for (held <- Seq(true, false);
+         (n, pages, probeRuns) <- Seq((25, Seq(10, 10, 5), false),
                                       (30, Seq(10, 10, 10), true))) {
-      val df = (1 to n).toDF("n")
+      val df = spark.sparkContext.parallelize(1 to n, 4).toDF("n")
       val paged = freshCursor()
       val rq = new RunningQuery(paged, "rqS", df, Seq("n"), pageSize = 10)
       // every page, the exhaustion probe, and one call past it
-      val calls = Seq.fill(5)(Jobs.count(spark.sparkContext)(rq.nextPageJson()))
+      val calls = paging(held)(
+        Seq.fill(5)(Jobs.count(spark.sparkContext)(rq.nextPageJson())))
       assert(calls.map(_._1.fold(0)(_._1.length)) == pages ++ Seq(0, 0))
       val jobs = calls.map(_._2)
-      assert(jobs.take(3).forall(_ > 0), s"$n rows: jobs per call $jobs")
-      assert((jobs(3) > 0) == probeRuns, s"$n rows: jobs per call $jobs")
-      assert(jobs(4) == 0, s"$n rows: jobs per call $jobs")
+      if (held) assert(jobs == Seq(1, 0, 0, 0, 0), s"$n rows held: jobs per call $jobs")
+      else {
+        assert(jobs.take(3).forall(_ > 0), s"$n rows: jobs per call $jobs")
+        assert((jobs(3) > 0) == probeRuns, s"$n rows: jobs per call $jobs")
+        assert(jobs(4) == 0, s"$n rows: jobs per call $jobs")
+      }
       // each call advanced the durable offset as the per-page drain does
       val ref = freshCursor()
       val refRq = new RunningQuery(ref, "rqS", df, Seq("n"), pageSize = 10)
@@ -174,6 +195,99 @@ class RunningQuerySpec extends SparkSpec {
       assert(paged.currentOffset("rqS") == ref.currentOffset("rqS"))
       assert(paged.currentOffset("rqS") == 50L)
     }
+  }
+
+  /** Rows a hand comparator would misorder, in four partitions: nulls,
+    * NaN, -0.0 and 0.0 in the first order columns, and strings whose
+    * UTF-8 byte order is not Java's `String.compareTo` order (U+FFFD
+    * sorts after the emoji's first UTF-16 char, before its UTF-8
+    * bytes). `id` is unique, so each order has one right answer; the
+    * JSON carries a date, an array, a map and a dotted column name. */
+  private def awkward = {
+    val names = Seq(None, Some("\uFFFD"), Some("\uD83D\uDE00"), Some("a"),
+      Some("B"), Some("\u00E9"), None, Some("\uFFFD"), Some("a"), Some(""))
+    val scores = Seq(Some(0.0), None, Some(-0.0), Some(Double.NaN), Some(1.5),
+      Some(0.0), Some(-0.0), None, Some(Double.NaN), Some(Double.NegativeInfinity))
+    (0 until 23).map { i =>
+      (names(i % names.size), 100 - i * 7 % 23, scores((i * 3) % scores.size),
+        java.sql.Date.valueOf(s"2026-0${1 + i % 9}-1${i % 10}"),
+        Seq.tabulate(i % 3)(_ * i), Map(s"k$i" -> i), s"dot$i")
+    }.toDF("name", "id", "score", "day", "arr", "m", "a.b").repartition(4)
+  }
+
+  /** Every page of `df` in `order` to exhaustion: per page its JSON rows,
+    * number, status and the durable offset after it, and the jobs each
+    * call ran. */
+  private def drain(df: org.apache.spark.sql.DataFrame, order: Seq[String],
+                    held: Boolean) = paging(held) {
+    val cursor = freshCursor()
+    val statuses = scala.collection.mutable.ArrayBuffer[String]()
+    val rq = new RunningQuery(cursor, "par", df, order, pageSize = 3,
+      sink = statuses += _.status)
+    val calls = Iterator.continually(
+      Jobs.count(spark.sparkContext)(rq.nextPageJson()) match {
+        case (page, jobs) => (page.map { case (rows, n) =>
+          (rows.toSeq, n, cursor.currentOffset("par")) }, jobs)
+      }).takeWhile(_._1.nonEmpty).toList
+    (calls.flatMap(_._1).zip(statuses).map { case ((r, n, o), st) => (r, n, st, o) },
+      calls.map(_._2), cursor.currentOffset("par"))
+  }
+
+  test("held pages equal the per-page offset pages: order, JSON, numbers, statuses, offsets") {
+    val df = awkward.persist()
+    try for (order <- Seq(Seq("NAME", "Id"), Seq("SCORE", "ID"))) {
+      val (held, heldJobs, heldEnd) = drain(df, order, held = true)
+      val (paged, pagedJobs, pagedEnd) = drain(df, order, held = false)
+      assert(heldJobs.tail.forall(_ == 0) && pagedJobs.forall(_ > 0),
+        s"$order: held $heldJobs, per page $pagedJobs")
+      assert(held.size == 8 && held.flatMap(_._1).size == 23, held.mkString("\n"))
+      assert(held == paged, s"$order\nheld:\n${held.mkString("\n")}\nper page:\n${paged.mkString("\n")}")
+      assert(heldEnd == pagedEnd)
+      // both are the order Spark's own orderBy gives the frame
+      val want = df.orderBy(order.map(col): _*).toJSON.collect().toSeq
+      assert(held.flatMap(_._1) == want, s"$order: ${held.flatMap(_._1)}")
+    } finally df.unpersist()
+  }
+
+  test("over the ceiling a page is one top-k collect with no exchange, equal to the toJSON page") {
+    import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val df = awkward.persist()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val ql = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(name: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(name: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    df.count() // fill the cache outside the recorded pages
+    spark.listenerManager.register(ql)
+    // drain's job counting empties the listener bus that delivers plans
+    val (pages, _, _) = try drain(df, Seq("name", "id"), held = false)
+      finally spark.listenerManager.unregister(ql)
+    import scala.jdk.CollectionConverters._
+    def root(p: SparkPlan): SparkPlan = p match {
+      case a: AdaptiveSparkPlanExec => root(a.executedPlan)
+      case s: QueryStageExec => root(s.plan) // the final result stage
+      case p => p
+    }
+    val run = plans.asScala.toSeq.map(root)
+    // one execution per page; the probe after the short last page runs none
+    assert(run.size == pages.size, run.mkString("\n"))
+    run.foreach { p =>
+      assert(p.isInstanceOf[TakeOrderedAndProjectExec], p.treeString)
+      assert(p.collect { case e: ShuffleExchangeExec => e }.isEmpty, p.treeString)
+    }
+    // the pages as the server used to serve them: toJSON over the offset page
+    val ref = freshCursor()
+    val want = Iterator.continually(
+      ref.next("ref", df, Seq("name", "id"), 3).toJSON.collect().toSeq)
+      .takeWhile(_.nonEmpty).toList
+    assert(pages.map(_._1) == want)
+    df.unpersist()
   }
 
   test("zero-row exhaustion probe emits no page metric") {

@@ -22,42 +22,56 @@ class ServerResumeSpec extends SparkSpec {
     HttpResponse.BodyHandlers.ofString())
 
   test("a new server over the same stateDir resumes paging where the dead one stopped") {
-    val stateDir =
-      java.nio.file.Files.createTempDirectory("graft-resume").toString
-    val df = (1 to 30).map(i => (i.toLong, s"v$i")).toDF("id", "v")
-    val tables = Map("t" -> df)
+    // killed after page 1 of 3, and after page 2 of 4 (the last short)
+    for ((n, killedAfter) <- Seq((30, 1), (35, 2))) {
+      val stateDir =
+        java.nio.file.Files.createTempDirectory("graft-resume").toString
+      val df = (1 to n).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+      val tables = Map("t" -> df)
+      def create(port: Int): String = {
+        val created = post(s"http://127.0.0.1:$port/query/create?table=t&query=" +
+          java.net.URLEncoder.encode("ID >= 1", "UTF-8") + "&pageSize=10&orderBy=id")
+        assert(created.statusCode() == 200, created.body())
+        "\"queryId\": \"([0-9a-f]+)\"".r.findFirstMatchIn(created.body()).get.group(1)
+      }
+      def next(port: Int, id: String) = get(s"http://127.0.0.1:$port/query/next?id=$id")
+      def drain(port: Int, id: String): Seq[String] =
+        Iterator.continually(next(port, id)).takeWhile(_.statusCode() == 200)
+          .map(_.body()).toList
+      // the same query drained without a break, on a server of its own
+      val srv0 = new QueryServer(tables)
+      val p0 = srv0.start()
+      val unbroken = try drain(p0, create(p0)) finally srv0.stop()
+      assert(unbroken.flatMap("\"id\":(\\d+)".r.findAllMatchIn(_)
+        .map(_.group(1).toInt)) == (1 to n), unbroken.mkString("\n"))
 
-    val srv1 = new QueryServer(tables, stateDir = stateDir)
-    val p1 = srv1.start()
-    val created = post(s"http://127.0.0.1:$p1/query/create?table=t&query=" +
-      java.net.URLEncoder.encode("ID >= 1", "UTF-8") + "&pageSize=10&orderBy=id")
-    assert(created.statusCode() == 200, created.body())
-    val id = "\"queryId\": \"([0-9a-f]+)\"".r
-      .findFirstMatchIn(created.body()).get.group(1)
-    val page1 = get(s"http://127.0.0.1:$p1/query/next?id=$id")
-    assert("\"id\":(\\d+)".r.findAllMatchIn(page1.body())
-      .map(_.group(1).toInt).toSeq == (1 to 10), page1.body().take(400))
-    srv1.stop() // the process dies mid-query; sessions map is gone
+      val srv1 = new QueryServer(tables, stateDir = stateDir)
+      val p1 = srv1.start()
+      val id = create(p1)
+      val served = Seq.fill(killedAfter)(next(p1, id).body())
+      assert("\"id\":(\\d+)".r.findAllMatchIn(served.head)
+        .map(_.group(1).toInt).toSeq == (1 to 10), served.head.take(400))
+      srv1.stop() // the process dies mid-query; sessions map is gone
 
-    val srv2 = new QueryServer(tables, stateDir = stateDir)
-    val p2 = srv2.start()
-    try {
-      // pages already served STAY served: the resumed cursor continues
-      val page2 = get(s"http://127.0.0.1:$p2/query/next?id=$id")
-      assert(page2.statusCode() == 200, page2.body())
-      assert("\"id\":(\\d+)".r.findAllMatchIn(page2.body())
-        .map(_.group(1).toInt).toSeq == (11 to 20), page2.body().take(400))
-      // the resumed page keeps its TRUE ordinal (page 2), not page 1
-      assert(page2.body().contains("\"page\": 2"), page2.body().take(200))
-      // close drops the durable definition: a third server knows nothing
-      assert(post(s"http://127.0.0.1:$p2/query/close?id=$id").statusCode() == 200)
-      val srv3 = new QueryServer(tables, stateDir = stateDir)
-      val p3 = srv3.start()
-      try assert(get(s"http://127.0.0.1:$p3/query/next?id=$id").statusCode() == 404)
-      finally srv3.stop()
-      // lookup-style ids never persist: unknown ids still 404
-      assert(get(s"http://127.0.0.1:$p2/query/next?id=deadbeef").statusCode() == 404)
-    } finally srv2.stop()
+      val srv2 = new QueryServer(tables, stateDir = stateDir)
+      val p2 = srv2.start()
+      try {
+        // pages already served STAY served: the resumed cursor continues,
+        // and each resumed page keeps its TRUE ordinal, not page 1
+        val resumed = drain(p2, id)
+        assert(resumed.head.contains(s"\"page\": ${killedAfter + 1}"),
+          resumed.head.take(200))
+        assert(served ++ resumed == unbroken)
+        // close drops the durable definition: a third server knows nothing
+        assert(post(s"http://127.0.0.1:$p2/query/close?id=$id").statusCode() == 200)
+        val srv3 = new QueryServer(tables, stateDir = stateDir)
+        val p3 = srv3.start()
+        try assert(next(p3, id).statusCode() == 404)
+        finally srv3.stop()
+        // lookup-style ids never persist: unknown ids still 404
+        assert(next(p2, "deadbeef").statusCode() == 404)
+      } finally srv2.stop()
+    }
   }
 
   test("a definition file in the original format resumes: owner, auths and paging position") {
