@@ -2,7 +2,9 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.execution.SQLExecution
 
 /** The one size rule for a set the driver holds: rows it collects to
   * compute on, and frames it hints as the broadcast side of a join.
@@ -11,7 +13,8 @@ import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUti
   * set off), so a set that Spark itself would not broadcast is never
   * pulled to the driver either: above the ceiling the caller falls back
   * to plain joins and AQE, which degrade instead of exhausting the
-  * driver. Row sizes are Spark's own per-row estimate for the schema. */
+  * driver. A collected set counts its rows' real bytes; a hinted frame
+  * and a file count use Spark's own estimates. */
 object DriverSet {
 
   private def ceilingBytes(spark: SparkSession): Long =
@@ -21,36 +24,48 @@ object DriverSet {
     EstimationUtils.getSizePerRow(df.queryExecution.analyzed.output).toLong
 
   /** `df`'s rows on the driver when they fit under the ceiling, in ONE
-    * job (each partition ships at most ceiling+1 rows; the handler
-    * drops everything once the running total passes the ceiling, so
-    * the driver holds about twice the ceiling at worst). None = over
-    * the ceiling: the caller computes with joins instead. */
+    * job, counted at their real (UnsafeRow) bytes: each partition ships
+    * rows until it passes the ceiling, and the handler drops everything
+    * once the running total passes it, so the driver holds about twice
+    * the ceiling at worst. The job runs as its own SQL execution, so
+    * listeners see its plan and phase times. None = over the ceiling:
+    * the caller computes with joins instead. */
   def collect(df: DataFrame): Option[Array[Row]] =
-    collectRows(df, rowBytes(df)).map { rows =>
+    collectRows(df).map { rows =>
       val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
       rows.map(r => toRow(r).asInstanceOf[Row])
     }
 
   /** [[collect]] in Catalyst's row form, for a caller that computes over
-    * the rows with Catalyst's own expressions (an ordering), counting
-    * each row at `bytesPerRow` against the ceiling. */
-  def collectRows(df: DataFrame, bytesPerRow: Long): Option[Array[InternalRow]] = {
-    val spark = df.sparkSession
-    val c = ceilingBytes(spark)
+    * the rows with Catalyst's own expressions (an ordering). */
+  def collectRows(df: DataFrame): Option[Array[InternalRow]] = {
+    val c = ceilingBytes(df.sparkSession)
     if (c <= 0) return None
-    val cap = math.min(c / math.max(bytesPerRow, 1L), Int.MaxValue - 1L).toInt
     val buf = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-    var over = false
+    var bytes = 0L
     // the frame's own planned query (`df.rdd` would analyze, optimize
-    // and plan a second, deserializing one)
-    spark.sparkContext.runJob(df.queryExecution.toRdd,
-      (it: Iterator[InternalRow]) => it.take(cap + 1).map(_.copy()).toArray,
-      (_: Int, part: Array[InternalRow]) =>
-        if (!over) {
-          if (buf.length.toLong + part.length > cap) { over = true; buf.clear() }
-          else buf ++= part
-        })
-    if (over) None else Some(buf.toArray)
+    // and plan a second, deserializing one); a physical plan's rows are
+    // UnsafeRows, as Spark's own collect assumes
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      df.sparkSession.sparkContext.runJob(qe.toRdd,
+        (it: Iterator[InternalRow]) => {
+          val part = scala.collection.mutable.ArrayBuffer.empty[UnsafeRow]
+          var n = 0L
+          while (n <= c && it.hasNext) {
+            val r = it.next().asInstanceOf[UnsafeRow].copy()
+            n += r.getSizeInBytes
+            part += r
+          }
+          part.toArray
+        },
+        (_: Int, part: Array[UnsafeRow]) =>
+          if (bytes <= c) {
+            bytes += part.iterator.map(_.getSizeInBytes.toLong).sum
+            if (bytes > c) buf.clear() else buf ++= part
+          })
+    }
+    if (bytes > c) None else Some(buf.toArray)
   }
 
   /** `df` hinted as the broadcast side when `bytes` fit under the

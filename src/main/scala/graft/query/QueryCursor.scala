@@ -16,9 +16,9 @@ import java.nio.charset.StandardCharsets
   * State is one tiny file per queryId under `stateDir` (the "query
   * storage cache" of the reference's microservices). [[next]] computes
   * each page from the frame (pass a cached one to avoid re-planning its
-  * scans); [[RunningQuery.nextPageJson]] instead slices one sorted
-  * collect of the whole result when it fits the driver, advancing the
-  * same offset.
+  * scans); from its second page on, [[RunningQuery.nextPageJson]]
+  * instead slices one sorted collect of the whole result when it fits
+  * the driver, advancing the same offset.
   */
 final class QueryCursor(stateDir: String) {
 

@@ -239,20 +239,25 @@ final class RunningQuery(
   /** Next page COLLECTED to the driver as JSON rows, with the 1-based
     * page number — the serving path (QueryServer /query/next).
     *
-    * The first call runs ONE job for the whole query: it collects the
+    * The first call is one sorted offset/limit job that collects only
+    * the JSON column: a top-k per partition merged on the driver, with
+    * no shuffle, so a query read for one page pays for one page. The
+    * second call runs ONE job for the rest of the query: it collects the
     * frame's order columns and each row's JSON through
     * [[graft.core.DriverSet]]'s bound and sorts them on the driver with
     * Catalyst's own ordering for `orderBy(col)` (ascending, nulls
-    * first). That call's page carries the whole result's cost; every
-    * page after it is a slice of the held rows at the durable offset and
-    * runs no job, so only that first page can trip `pageTimeoutMillis`.
-    * Over the ceiling each page is its own sorted offset/limit job that
-    * collects only the JSON column: a top-k per partition merged on the
-    * driver, with no shuffle. Offsets, page numbers, metrics and the
-    * exhaustion probe are the same on both paths. */
+    * first). That page carries the whole result's cost; every page
+    * after it is a slice of the held rows at the durable offset and runs
+    * no job, so it cannot trip `pageTimeoutMillis`. Over the ceiling
+    * every page is its own top-k job. Offsets, page numbers, metrics and
+    * the exhaustion probe are the same on both paths; as with per-page
+    * jobs, only a total order fixes which of several tied rows lands on
+    * which page. */
   def nextPageJson(): Option[(Array[String], Long)] = {
     if (timedOut || skipProbe()) return None
     val t0 = System.currentTimeMillis()
+    // from the second page of this run on, the rest comes from one collect
+    if (pageNum > startPage && !overCeiling && held.isEmpty) hold()
     val rows = held match {
       case Some(sorted) =>
         val from = cursor.advance(queryId, pageSize)
@@ -266,21 +271,25 @@ final class RunningQuery(
   }
 
   // a row as the document a page serves, one expression for both paths
-  // (quoted: a dotted column name is one column, not a struct field)
-  private def json: Column =
-    to_json(struct(df.columns.map(c => col(s"`${c.replace("`", "``")}`")).toSeq: _*))
+  private def json: Column = to_json(struct(col("*")))
 
-  /** The whole result's page JSON in page order, computed by the first
-    * [[nextPageJson]]; None over the DriverSet ceiling. A row counts at
-    * its order columns plus its source row, which its JSON restates. */
-  private lazy val held: Option[Array[String]] = {
+  // the whole result's page JSON in page order, from the second page
+  // until the query is exhausted or times out
+  private var held: Option[Array[String]] = None
+  private var overCeiling = false
+
+  /** Collect the whole result into [[held]], or latch [[overCeiling]]. */
+  private def hold(): Unit = {
     val keyed = df.select(orderCols.map(col) :+ json: _*)
     val out = keyed.queryExecution.analyzed.output
-    DriverSet.collectRows(keyed, DriverSet.rowBytes(keyed) + DriverSet.rowBytes(df))
-      .map(_.sorted(new LazilyGeneratedOrdering(
-        out.init.map(SortOrder(_, Ascending)), out))
-        .map(_.getUTF8String(out.length - 1).toString))
+    held = DriverSet.collectRows(keyed).map(_.sorted(
+      new LazilyGeneratedOrdering(out.init.map(SortOrder(_, Ascending)), out))
+      .map(_.getUTF8String(out.length - 1).toString))
+    overCeiling = held.isEmpty
   }
+
+  /** Whether the session holds its result's pages on the driver. */
+  private[query] def holding: Boolean = held.nonEmpty
 
   /** Shared page bookkeeping: metric + timeout latch + exhaustion
     * latch; returns `rows`. The exhaustion probe (zero rows) is not a
@@ -294,6 +303,7 @@ final class RunningQuery(
       else if (rows < pageSize) "PARTIAL"
       else "COMPLETE"
     if (rows < pageSize) exhausted = true
+    if (exhausted || timedOut) held = None // no later page reads it
     if (rows > 0) {
       pageNum += 1
       sink(PageMetric(queryId, pageNum, rows, dt, status, attempt))

@@ -23,11 +23,11 @@ import scala.util.control.NonFatal
   *    plans eagerly so a bad query fails at create (the reference's
   *    createQuery semantics), and the frame is persisted: duplicate,
   *    cached results, exports and predictions read that snapshot. The
-  *    first page runs one job for the whole result when it fits
-  *    [[graft.core.DriverSet]]'s ceiling and the session serves every
-  *    page as a slice of it ([[RunningQuery.nextPageJson]]); above the
-  *    ceiling each page is a sorted offset/limit job over the cached
-  *    partitions.
+  *    first page is one top-k job over the cached partitions; the
+  *    second runs one job for the whole result when it fits
+  *    [[graft.core.DriverSet]]'s ceiling, and the session serves it and
+  *    every later page as a slice of it ([[RunningQuery.nextPageJson]]);
+  *    above the ceiling every page is its own top-k job.
   *  - `POST /query/createAndNext?…` (same parameters) → create + FIRST
   *    page in one round trip — the reference's primary verb
   *    (createQueryAndNext); empty results close the query and 204.
@@ -1618,9 +1618,10 @@ final class QueryServer(
     // QUERY_OWNER_MISMATCH)
     withSession(params) { s =>
       touchSession(qid(params)) // paging resets the idle-eviction clock
-      // a slice of the rows the first page collected (a job per page
-      // only above the DriverSet ceiling); "page" is the 1-based page
-      // NUMBER, matching the pageNum /query/metrics reports for it
+      // a top-k job for the first page, then slices of the rows the
+      // second page collected (a job per page only above the DriverSet
+      // ceiling); "page" is the 1-based page NUMBER, matching the
+      // pageNum /query/metrics reports for it
       s.running.nextPageJson() match {
         case Some((rows, pageNum)) =>
           (200, s"""{"page": $pageNum, "rows": [${rows.mkString(",")}]}""")

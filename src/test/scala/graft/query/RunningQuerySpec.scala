@@ -151,19 +151,22 @@ class RunningQuerySpec extends SparkSpec {
     QueryMetrics.clear()
   }
 
+  /** `body` with DriverSet's ceiling set to `bytes`. */
+  private def ceiling[A](bytes: String)(body: => A): A = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, bytes)
+    try body finally spark.conf.set(key, prev)
+  }
+
   /** `body` with DriverSet's ceiling as the session sets it (held pages)
     * or turned off (one sorted offset/limit job per page). */
   private def paging[A](held: Boolean)(body: => A): A =
-    if (held) body
-    else {
-      val ceiling = "spark.sql.autoBroadcastJoinThreshold"
-      val prev = spark.conf.get(ceiling)
-      spark.conf.set(ceiling, "-1")
-      try body finally spark.conf.set(ceiling, prev)
-    }
+    if (held) body else ceiling("-1")(body)
 
   test("after a short page the exhaustion probe runs no job; offsets match the per-page drain") {
-    // Held: the first call runs the one collect, every later call none.
+    // Held: the first call runs its page's job, the second the one
+    // collect, every later call none; the held rows go with exhaustion.
     // Ceiling off, 25 rows: the third page is short, so the fourth call
     // is answered without a job; 30 rows: every page is full, so the
     // probe job runs.
@@ -177,12 +180,19 @@ class RunningQuerySpec extends SparkSpec {
       val paged = freshCursor()
       val rq = new RunningQuery(paged, "rqS", df, Seq("n"), pageSize = 10)
       // every page, the exhaustion probe, and one call past it
-      val calls = paging(held)(
-        Seq.fill(5)(Jobs.count(spark.sparkContext)(rq.nextPageJson())))
+      val calls = paging(held)(Seq.fill(5) {
+        val (page, jobs) = Jobs.count(spark.sparkContext)(rq.nextPageJson())
+        (page, jobs, rq.holding)
+      })
       assert(calls.map(_._1.fold(0)(_._1.length)) == pages ++ Seq(0, 0))
       val jobs = calls.map(_._2)
-      if (held) assert(jobs == Seq(1, 0, 0, 0, 0), s"$n rows held: jobs per call $jobs")
-      else {
+      val holding = calls.map(_._3)
+      if (held) {
+        assert(jobs == Seq(1, 1, 0, 0, 0), s"$n rows held: jobs per call $jobs")
+        assert(holding == Seq(false, true, n == 30, false, false),
+          s"$n rows: holding per call $holding")
+      } else {
+        assert(!holding.contains(true), s"$n rows: holding per call $holding")
         assert(jobs.take(3).forall(_ > 0), s"$n rows: jobs per call $jobs")
         assert((jobs(3) > 0) == probeRuns, s"$n rows: jobs per call $jobs")
         assert(jobs(4) == 0, s"$n rows: jobs per call $jobs")
@@ -238,7 +248,7 @@ class RunningQuerySpec extends SparkSpec {
     try for (order <- Seq(Seq("NAME", "Id"), Seq("SCORE", "ID"))) {
       val (held, heldJobs, heldEnd) = drain(df, order, held = true)
       val (paged, pagedJobs, pagedEnd) = drain(df, order, held = false)
-      assert(heldJobs.tail.forall(_ == 0) && pagedJobs.forall(_ > 0),
+      assert(heldJobs.drop(2).forall(_ == 0) && pagedJobs.forall(_ > 0),
         s"$order: held $heldJobs, per page $pagedJobs")
       assert(held.size == 8 && held.flatMap(_._1).size == 23, held.mkString("\n"))
       assert(held == paged, s"$order\nheld:\n${held.mkString("\n")}\nper page:\n${paged.mkString("\n")}")
@@ -247,6 +257,18 @@ class RunningQuerySpec extends SparkSpec {
       val want = df.orderBy(order.map(col): _*).toJSON.collect().toSeq
       assert(held.flatMap(_._1) == want, s"$order: ${held.flatMap(_._1)}")
     } finally df.unpersist()
+  }
+
+  test("a result whose real bytes pass the ceiling pages per job, though its schema estimate fits") {
+    // 40 rows of 4 KB text: ~160 KB of JSON, against a 40 KB ceiling
+    // that Spark's per-row schema estimate (a string at 20 bytes) fits
+    val df = spark.sparkContext.parallelize(1 to 40, 4)
+      .map(i => (i, "x" * 4096 + i)).toDF("id", "text")
+    assert(graft.core.DriverSet.rowBytes(df) * 40 * 2 < 40000)
+    val (pages, jobs, _) = ceiling("40000")(drain(df, Seq("id"), held = true))
+    // the second page's collect gives up over the ceiling, once
+    assert(jobs == 1 +: 2 +: Seq.fill(12)(1), s"jobs per page $jobs")
+    assert(pages.flatMap(_._1) == df.orderBy("id").toJSON.collect().toSeq)
   }
 
   test("over the ceiling a page is one top-k collect with no exchange, equal to the toJSON page") {
