@@ -1,7 +1,6 @@
 package graft.query
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths}
 import java.nio.charset.StandardCharsets
 
@@ -43,7 +42,7 @@ final class QueryCursor(stateDir: String) {
   def next(queryId: String, df: DataFrame, orderCols: Seq[String],
            pageSize: Int): DataFrame = {
     val off = currentOffset(queryId)
-    val page = df.orderBy(orderCols.map(col): _*)
+    val page = df.orderBy(orderCols.map(RunningQuery.orderColumn): _*)
       .offset(off.toInt).limit(pageSize)
     saveOffset(queryId, off + pageSize)
     page

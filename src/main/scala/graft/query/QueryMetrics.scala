@@ -280,7 +280,7 @@ final class RunningQuery(
 
   /** Collect the whole result into [[held]], or latch [[overCeiling]]. */
   private def hold(): Unit = {
-    val keyed = df.select(orderCols.map(col) :+ json: _*)
+    val keyed = df.select(orderCols.map(RunningQuery.orderColumn) :+ json: _*)
     val out = keyed.queryExecution.analyzed.output
     held = DriverSet.collectRows(keyed).map(_.sorted(
       new LazilyGeneratedOrdering(out.init.map(SortOrder(_, Ascending)), out))
@@ -366,4 +366,10 @@ object RunningQuery {
     require(missing.isEmpty,
       s"unknown orderBy column(s): ${missing.mkString(", ")}")
   }
+
+  /** The order column `name` as ONE identifier: a dot is part of the
+    * name, as [[checkOrder]] reads it, not a path into a struct
+    * (`col("a.b")` would read field `b` of `a`). */
+  private[query] def orderColumn(name: String): Column =
+    org.apache.spark.sql.functions.col(s"`${name.replace("`", "``")}`")
 }

@@ -80,6 +80,23 @@ import scala.util.control.NonFatal
   * session before. One wait remains under it: `/cachedresults/create`
   * restoring a source alias after a restart re-plans the alias's owning
   * query.
+  *
+  * Refusals: a verb refuses by throwing one [[QueryServer.Refusal]],
+  * which its handler answers as `(status, {"error": msg})`; the checks
+  * and accessors that throw it ([[need]], [[grant]], [[ownedBy]],
+  * [[admin]], [[scope]], [[withSession]]) stand in front of the work.
+  * The principal rule is decided in one section, the only reader of
+  * `users` and `adminUsers`: with a registry configured, every entity
+  * of the caller's chain (`user=`, then `proxiedEntities=`) must be
+  * registered (401 naming the first unknown one); a query runs under the
+  * chain's intersected grant, which `auths=` may only narrow (403); an
+  * object with an owner serves its owner and the admins (401
+  * QUERY_OWNER_MISMATCH); a listing shows a caller their own objects and
+  * an admin every object. A verb finds what it acts on before it checks
+  * the caller — a missing parameter (400), an unknown table or an
+  * unconfigured tier (404) answers even an unknown caller — and an
+  * object without an owner, one that does not exist included, is not
+  * gated.
   */
 final class QueryServer(
     tables: Map[String, DataFrame],
@@ -354,19 +371,11 @@ final class QueryServer(
     * admin-only operational hook (evict as of a future instant =
     * forced eviction; admins can already close any object). */
   private def adminExpire(params: Map[String, String]): (Int, String) = {
-    if (users.nonEmpty) {
-      val caller = params.getOrElse("user", "anonymous")
-      if (!users.contains(caller))
-        return (401, err(s"unknown user '$caller'"))
-      if (!adminUsers.contains(caller))
-        return (401, err("admin required"))
-    }
-    try {
-      val now = params.get("asOf").map(_.toLong)
-        .getOrElse(System.currentTimeMillis())
-      val (qs, as) = expire(now)
-      (200, s"""{"expiredQueries": $qs, "expiredAliases": $as}""")
-    } catch { case e: Exception => (400, err(e.getMessage)) }
+    admin(params)
+    val now = params.get("asOf").map(_.toLong)
+      .getOrElse(System.currentTimeMillis())
+    val (qs, as) = expire(now)
+    (200, s"""{"expiredQueries": $qs, "expiredAliases": $as}""")
   }
 
   /** Alias-scoped UNBIND shared by close and the expiration sweep:
@@ -541,8 +550,8 @@ final class QueryServer(
     val a = alias.toLowerCase
     if (seen(a)) return true // re-pointed cycles cannot deadlock us
     val q = loadedAliases.get(a)
-    if (q == null) return false
-    val sp = sparkOf.getOrElse(return false)
+    if (q == null || sparkOf.isEmpty) return false
+    val sp = sparkOf.get
     if (sp.catalog.tableExists(a)) return true
     Option(aliasSql.get(a)) match {
       case Some(sql) =>
@@ -553,9 +562,8 @@ final class QueryServer(
         val restored = referencedNames(sp, sql)
           .filter(n => loadedAliases.containsKey(n))
           .forall(n => ensureAliasView(n, seen + a))
-        if (!restored) return false
-        sp.sql(sql).createOrReplaceTempView(a)
-        true
+        if (restored) sp.sql(sql).createOrReplaceTempView(a)
+        restored
       case None =>
         // durable ROWS first (CachedRunningQuery.java:399 — the stored
         // result table outlives the service): a restart re-registers
@@ -600,7 +608,7 @@ final class QueryServer(
     server.setExecutor(workers)
     server.createContext("/query/create", handler(create))
     server.createContext("/query/createAndNext", handler(createAndNext))
-    server.createContext("/query/define", handler(define))
+    server.createContext("/query/define", handler(define, failure = 400))
     server.createContext("/query/execute", executeHandler)
     server.createContext("/query/get", handler(getDefinition))
     server.createContext("/query/predictions", handler(predictions))
@@ -608,20 +616,20 @@ final class QueryServer(
     server.createContext("/query/next", handler(next))
     server.createContext("/query/plan", handler(explain))
     server.createContext("/query/metrics", handler(metrics))
-    server.createContext("/query/metrics/summary", handler(metricsSummary))
+    server.createContext("/query/metrics/summary", handler(metricsSummary, failure = 400))
     server.createContext("/query/close", handler(close))
     server.createContext("/query/list", handler(list))
     server.createContext("/query/listQueryLogic", handler(listQueryLogic))
-    server.createContext("/query/duplicate", handler(duplicate))
+    server.createContext("/query/duplicate", handler(duplicate, failure = 400))
     server.createContext("/query/reset", handler(reset))
     server.createContext("/query/update", handler(update))
     server.createContext("/query/cancel", handler(cancel))
-    server.createContext("/query/predict", handler(predict))
-    server.createContext("/lookupUUID", handler(lookupUuid))
-    server.createContext("/lookupContentUUID", handler(lookupContentUuid))
-    server.createContext("/lookupUID", handler(lookupUid))
-    server.createContext("/translateId", handler(translateId))
-    server.createContext("/translateIDs", handler(translateId))
+    server.createContext("/query/predict", handler(predict, failure = 400))
+    server.createContext("/lookupUUID", handler(lookupUuid, failure = 400))
+    server.createContext("/lookupContentUUID", handler(lookupContentUuid, failure = 400))
+    server.createContext("/lookupUID", handler(lookupUid, failure = 400))
+    server.createContext("/translateId", handler(translateId, failure = 400))
+    server.createContext("/translateIDs", handler(translateId, failure = 400))
     server.createContext("/mapreduce/listConfigurations",
       handler(mrListConfigurations))
     server.createContext("/mapreduce/submit", handler(mrSubmit))
@@ -645,16 +653,16 @@ final class QueryServer(
     server.createContext("/model/deleteMapping", handler(modelDeleteMapping))
     server.createContext("/cachedresults/load", handler(cachedLoad))
     server.createContext("/cachedresults/update", handler(cachedUpdate))
-    server.createContext("/cachedresults/sql", handler(cachedSql))
+    server.createContext("/cachedresults/sql", handler(cachedSql, failure = 400))
     server.createContext("/cachedresults/getRows", handler(cachedGetRows))
     server.createContext("/cachedresults/loadAsync", handler(cachedLoadAsync))
     server.createContext("/cachedresults/status", handler(cachedStatus))
-    server.createContext("/cachedresults/create", handler(cachedCreate))
+    server.createContext("/cachedresults/create", handler(cachedCreate, failure = 400))
     server.createContext("/atom/categories", handler(atomCategories))
-    server.createContext("/atom/feed", handler(atomFeedPage))
-    server.createContext("/atom/entry", handler(atomEntry))
+    server.createContext("/atom/feed", handler(atomFeedPage, failure = 400))
+    server.createContext("/atom/entry", handler(atomEntry, failure = 400))
     server.createContext("/admin/listTables", handler(adminListTables))
-    server.createContext("/admin/expire", handler(adminExpire))
+    server.createContext("/admin/expire", handler(adminExpire, failure = 400))
     server.createContext("/user/listEffectiveAuthorizations",
       handler(listEffectiveAuths))
     server.createContext("/user/flushCachedCredentials",
@@ -724,10 +732,7 @@ final class QueryServer(
   // ---- endpoint implementations -------------------------------------
 
   private def create(params: Map[String, String]): (Int, String) =
-    doCreate(params) match {
-      case Left(resp) => resp
-      case Right(id) => (200, s"""{"queryId": "$id"}""")
-    }
+    (200, s"""{"queryId": "${doCreate(params)}"}""")
 
   /** `POST /query/createAndNext?…` — the reference's PRIMARY verb
     * (QueryExecutorBean.java:616 createQueryAndNext, the path §3.1 calls
@@ -735,24 +740,22 @@ final class QueryServer(
     * one round trip. An empty result closes the query and returns 204
     * (the reference's NoResultsQueryException → NO_CONTENT + close) —
     * callers never hold a session for a query with nothing to page. */
-  private def createAndNext(params: Map[String, String]): (Int, String) =
-    doCreate(params) match {
-      case Left(resp) => resp
-      case Right(id) =>
-        // the session was registered by doCreate under this id; a
-        // concurrent close between then and here just yields 204
-        try onLive(id)(_.running.nextPageJson()).flatten match {
-          case Some((rows, pageNum)) => (200, firstPage(id, rows, pageNum))
-          case None => reapRows(teardown(id)._2); (204, "")
-        } catch {
-          case e: Exception =>
-            // a first-page RUNTIME failure must not strand a session
-            // the caller has no id for (the error response carries no
-            // queryId) — the reference closes the query on failure
-            reapRows(teardown(id)._2)
-            (500, err(e.getMessage))
-        }
+  private def createAndNext(params: Map[String, String]): (Int, String) = {
+    val id = doCreate(params)
+    // the session was registered by doCreate under this id; a
+    // concurrent close between then and here just yields 204
+    try onLive(id)(_.running.nextPageJson()).flatten match {
+      case Some((rows, pageNum)) => (200, firstPage(id, rows, pageNum))
+      case None => reapRows(teardown(id)._2); (204, "")
+    } catch {
+      case e: Exception =>
+        // a first-page RUNTIME failure must not strand a session
+        // the caller has no id for (the error response carries no
+        // queryId) — the reference closes the query on failure
+        reapRows(teardown(id)._2)
+        (500, err(e.getMessage))
     }
+  }
 
   /** Resolve a stored model name (the reference's QUERY_MODEL
     * parameter) against the model store: the logic rebinds to the
@@ -787,24 +790,19 @@ final class QueryServer(
     effLogic.query(df0, d.query, qp)
   }
 
-  /** The definition a create/define/execute/predict/plan request names.
-    * Left = the refusal: 400 for a missing or malformed parameter, 404
-    * for an unknown table, 401/403 from [[resolveAuths]]. */
-  private def queryDef(params: Map[String, String])
-      : Either[(Int, String), QueryDef] = {
-    val table = params.getOrElse("table",
-      return Left((400, err("missing 'table'"))))
-    val q = params.getOrElse("query",
-      return Left((400, err("missing 'query'"))))
-    if (!tableMap.contains(table))
-      return Left((404, err(s"unknown table '$table'")))
-    resolveAuths(params).flatMap { auths =>
-      try Right(QueryDef(table, q, params.getOrElse("syntax", "JEXL"),
-        params.getOrElse("model", ""), auths, ownerOf(params),
-        pageSize(params, defaultPageSize),
-        params.get("orderBy").map(csv).getOrElse(Seq.empty)))
-      catch { case e: Exception => Left((400, err(e.getMessage))) }
-    }
+  /** The definition a create/define/execute/predict/plan request names,
+    * or the refusal: 400 for a missing or malformed parameter, 404 for
+    * an unknown table, 401/403 from [[grant]]. */
+  private def queryDef(params: Map[String, String]): QueryDef = {
+    val table = need(params, "table")
+    val q = need(params, "query")
+    if (!tableMap.contains(table)) refuse(404, s"unknown table '$table'")
+    val auths = grant(params)
+    try QueryDef(table, q, params.getOrElse("syntax", "JEXL"),
+      params.getOrElse("model", ""), auths, ownerOf(params),
+      pageSize(params, defaultPageSize),
+      params.get("orderBy").map(csv).getOrElse(Seq.empty))
+    catch { case e: Exception => refuse(400, e.getMessage) }
   }
 
   /** `d` with its default order resolved against the planned frame. */
@@ -862,95 +860,104 @@ final class QueryServer(
       System.currentTimeMillis(), 0L, 0L,
       user = params.getOrElse("user", "anonymous"), logicName = logicName))
 
-  /** ONE parse of the proxied-entity chain, shared by enforcement
-    * ([[resolveAuths]]) and introspection ([[listEffectiveAuths]]) — a
-    * drifted copy would let the verb REPORT a grant computed under a
-    * different chain than the one enforcement uses, the exact guessing
-    * mismatch the introspection verb exists to eliminate. Head = the
-    * calling user, tail = the proxied entities. */
+  // ---- principals -----------------------------------------------------
+  // The one reader of `users` and `adminUsers`. The reference runs every
+  // REST verb under the caller's authenticated proxied chain
+  // (web-services/security DatawaveUser, consumed at
+  // LookupUUIDUtil.java:343-430), and a query, CachedResults row or bulk
+  // job belongs to its creator (QueryExecutorBean.java:1094-1095
+  // QUERY_OWNER_MISMATCH, repeated at :1146/:1773/:1858;
+  // CachedResultsBean.java:342 keys rows by getOwnerFromPrincipal). An
+  // EMPTY registry keeps the embedded-library behaviour: the deployment
+  // did its own authn, and nothing here refuses anyone.
+
+  /** The caller's chain: `user=` (default `anonymous`), then the
+    * `proxiedEntities=e1,e2` between the end user and this service. ONE
+    * parse, shared by enforcement and `/user/listEffectiveAuthorizations`,
+    * so the verb cannot report a grant computed under another chain. */
   private def principalChain(params: Map[String, String]): Seq[String] =
     params.getOrElse("user", "anonymous") +:
       params.get("proxiedEntities").map(csv).getOrElse(Seq.empty)
 
-  /** User→authorizations resolution (the reference's proxied-principal
-    * chain: web-services/security DatawaveUser → Accumulo
-    * Authorizations, consumed at LookupUUIDUtil.java:343-430): when a
-    * principal registry is configured, auths stop being caller-asserted
-    * — the caller names a `user`, the server resolves the GRANTED set,
-    * and an explicit `auths=` request may only DOWNGRADE (a requested
-    * token outside the grant is 403, an unknown user 401 — fail-closed
-    * both ways). A `proxiedEntities=e1,e2` chain (the reference's
-    * proxied servers between the end user and this service) narrows the
-    * effective grant to the INTERSECTION of every chain entity's grant —
+  /** The registered chain, None without a registry. Every entity of the
+    * chain must be registered: the first unknown one is refused 401,
+    * named as the user or as a proxied entity — fail-closed on every
+    * verb that reads the caller, whatever it then checks. */
+  private def chain(params: Map[String, String]): Option[Seq[String]] =
+    if (users.isEmpty) None
+    else {
+      val entities = principalChain(params)
+      entities.find(e => !users.contains(e)).foreach { e =>
+        refuse(401, s"unknown ${if (e == entities.head) "user" else "proxied entity"} '$e'")
+      }
+      Some(entities)
+    }
+
+  /** The registered calling user, None without a registry. */
+  private def caller(params: Map[String, String]): Option[String] =
+    chain(params).map(_.head)
+
+  /** The auths a request runs under, None without a registry: the
+    * server resolves the GRANT, and an explicit `auths=` may only
+    * DOWNGRADE it (a token outside the grant is 403). A proxied chain
+    * narrows the grant to the INTERSECTION of every entity's grant —
     * WSAuthorizationsUtil.mergePrincipals (web-services/common-util
     * security/util/WSAuthorizationsUtil.java:23) and
     * getDowngradedAuthorizations consumed at CompositeQueryLogic
     * .java:236: no entity in the chain may see what any other entity is
-    * not cleared for. An unknown chain entity is 401 exactly like an
-    * unknown user. An EMPTY registry keeps the embedded-library behavior
-    * (the deployment did its own authn; no server-side enforcement).
-    * Left = error response; Right = the auths to enforce. */
-  private def resolveAuths(params: Map[String, String])
-      : Either[(Int, String), Option[Set[String]]] =
-    if (users.isEmpty) Right(None)
-    else {
-      val user = params.getOrElse("user", "anonymous")
-      val chain = principalChain(params)
-      chain.find(e => !users.contains(e)) match {
-        case Some(unknown) =>
-          Left((401, err(s"unknown ${if (unknown == user) "user" else "proxied entity"} '$unknown'")))
-        case None =>
-          // chain-wide minimum: the effective grant every request in
-          // this call is enforced under
-          val granted = chain.map(users).reduce(_ intersect _)
-          params.get("auths").map(_.split(',').toSet.filter(_.nonEmpty)) match {
-            case Some(req) if !req.subsetOf(granted) =>
-              Left((403, err(s"chain '${chain.mkString(",")}' is not granted: " +
-                (req -- granted).toSeq.sorted.mkString(","))))
-            case Some(req) => Right(Some(req))
-            case None => Right(Some(granted))
-          }
+    * not cleared for. */
+  private def grant(params: Map[String, String]): Option[Set[String]] =
+    chain(params).map { entities =>
+      val granted = entities.map(users).reduce(_ intersect _)
+      params.get("auths").map(_.split(',').toSet.filter(_.nonEmpty)) match {
+        case Some(req) if !req.subsetOf(granted) =>
+          refuse(403, s"chain '${entities.mkString(",")}' is not granted: " +
+            (req -- granted).toSeq.sorted.mkString(","))
+        case Some(req) => req
+        case None => granted
       }
     }
 
-  /** Principal-bound OBJECT ownership (QueryExecutorBean.java:1094-1095:
-    * `QUERY_OWNER_MISMATCH` on next/close/admin verbs, repeated at
-    * :1146/:1773/:1858; CachedResultsBean.java:342 keys rows by
-    * getOwnerFromPrincipal): with a principal registry configured, every
-    * session, CachedResults alias, and bulk job BELONGS to the principal
-    * that created it, and consuming verbs re-resolve the caller and
-    * refuse anyone else — row-level visibility at materialization is not
-    * enough when caller X can page rows principal Y materialized under
-    * Y's auths. `adminUsers` may act on any object (the reference's
-    * adminClose/adminCancel override). No registry, or an ownerless
-    * legacy object (created before a registry was configured), keeps the
-    * capability-addressed behavior unchanged. None = allowed; Some =
-    * the refusal response (401 unknown caller, exactly resolveAuths's
-    * fail-closed rule, or 401 QUERY_OWNER_MISMATCH). */
-  private def ownerGate(params: Map[String, String], owner: String)
-      : Option[(Int, String)] =
-    if (users.isEmpty || owner.isEmpty) None
-    else {
-      val caller = params.getOrElse("user", "anonymous")
-      if (!users.contains(caller))
-        Some((401, err(s"unknown user '$caller'")))
-      else if (caller != owner && !adminUsers.contains(caller))
-        // bare code, no owner name: the refusal must not disclose WHO
-        // owns the object to a non-owner probing ids/aliases
-        Some((401, err("QUERY_OWNER_MISMATCH")))
-      else None
+  /** Object ownership: an object with an `owner` serves that principal
+    * and `adminUsers` (the reference's adminClose/adminCancel override);
+    * anyone else is 401 with the bare code — the refusal must not
+    * disclose WHO owns the object to a non-owner probing ids or aliases.
+    * Row-level visibility at materialization is not enough when caller
+    * X could page rows principal Y materialized under Y's auths. An
+    * ownerless object (no registry at its creation, or none at all)
+    * keeps the capability-addressed behaviour: nothing is checked. */
+  private def ownedBy(params: Map[String, String], owner: String): Unit =
+    if (owner.nonEmpty) caller(params).foreach { c =>
+      if (c != owner && !adminUsers.contains(c)) refuse(401, "QUERY_OWNER_MISMATCH")
     }
+
+  /** A server-wide operation: with a registry, admins only (401). */
+  private def admin(params: Map[String, String]): Unit =
+    caller(params).foreach { c =>
+      if (!adminUsers.contains(c)) refuse(401, "admin required")
+    }
+
+  /** Whose objects a listing shows: the caller's own (and ownerless
+    * ones), as the reference's persisters scan a range keyed by the
+    * caller's userid; None = every object, for an admin or without a
+    * registry. */
+  private def scope(params: Map[String, String]): Option[String] =
+    caller(params).filterNot(adminUsers.contains)
+
+  /** Whether a listing scoped to `who` ([[scope]]) shows `owner`'s object. */
+  private def shows(who: Option[String], owner: String): Boolean =
+    who.forall(c => owner.isEmpty || owner == c)
 
   /** The recorded owner of `params("user")`-created objects: "" when no
     * registry is configured, so ownerless objects never gate. */
   private def ownerOf(params: Map[String, String]): String =
     if (users.isEmpty) "" else params.getOrElse("user", "anonymous")
 
-  /** `body` on query `id` once the caller passes its owner's gate. */
-  private def owned(params: Map[String, String])(
-      body: String => (Int, String)): (Int, String) = {
+  /** Query `id` once the caller passes its owner's gate. */
+  private def ownedQuery(params: Map[String, String]): String = {
     val id = qid(params)
-    ownerGate(params, queryOwner(id)).getOrElse(body(id))
+    ownedBy(params, queryOwner(id))
+    id
   }
 
   /** `body` on the caller's session, live or resumed from its durable
@@ -960,8 +967,8 @@ final class QueryServer(
   private def withSession(params: Map[String, String])(
       body: Session => (Int, String)): (Int, String) = {
     session(params) // resumes a defined or restarted query
-    onLive(qid(params))(s => ownerGate(params, s.defn.owner).getOrElse(body(s)))
-      .getOrElse((404, err("unknown queryId")))
+    onLive(qid(params)) { s => ownedBy(params, s.defn.owner); body(s) }
+      .getOrElse(refuse(404, "unknown queryId"))
   }
 
   /** `body` on `id`'s live session under that session's monitor, looked
@@ -1034,10 +1041,8 @@ final class QueryServer(
     * comma-separated list is unambiguous. */
   private def validateVisibilities(params: Map[String, String])
       : (Int, String) = {
-    val raw = params.getOrElse("visibilities",
-      return (400, err("missing 'visibilities'")))
-    val exprs = csv(raw)
-    if (exprs.isEmpty) return (400, err("no visibility expressions given"))
+    val exprs = csv(need(params, "visibilities"))
+    if (exprs.isEmpty) refuse(400, "no visibility expressions given")
     val results = exprs.map { e =>
       // parse may refuse by Option OR by exception — both are "invalid"
       val valid = scala.util.Try(graft.vis.Visibility.parse(e))
@@ -1054,54 +1059,46 @@ final class QueryServer(
     * construct a valid downgrade request instead of guessing and eating
     * 403s (ClientLoginExampleBean.java:78 calls this before querying).
     * Reports the grant itself: a stray `auths=` downgrade param is
-    * ignored, not validated. 401 unknown caller/entity (resolveAuths's
-    * fail-closed rule); 404 when no registry is configured — an
-    * embedded-library deployment has no server-resolved grant to
-    * introspect. */
-  private def listEffectiveAuths(params: Map[String, String]): (Int, String) =
-    if (users.isEmpty) (404, err("no principal registry configured"))
-    else resolveAuths(params.removed("auths")) match {
-      case Left(resp) => resp
-      case Right(Some(granted)) =>
-        val chain = principalChain(params)
-        (200, s"""{"user": ${quote(chain.head)},""" +
-          s""" "proxiedEntities": [${chain.tail.map(quote).mkString(",")}],""" +
-          s""" "auths": [${granted.toSeq.sorted.map(quote).mkString(",")}]}""")
-      case Right(None) => // unreachable: users.nonEmpty resolves a grant
-        (404, err("no principal registry configured"))
-    }
+    * ignored, not validated. 401 unknown caller/entity ([[chain]]);
+    * 404 when no registry is configured — an embedded-library deployment
+    * has no server-resolved grant to introspect. */
+  private def listEffectiveAuths(params: Map[String, String]): (Int, String) = {
+    val granted = grant(params.removed("auths"))
+      .getOrElse(refuse(404, "no principal registry configured"))
+    val chain = principalChain(params)
+    (200, s"""{"user": ${quote(chain.head)},""" +
+      s""" "proxiedEntities": [${chain.tail.map(quote).mkString(",")}],""" +
+      s""" "auths": [${granted.toSeq.sorted.map(quote).mkString(",")}]}""")
+  }
 
   /** `GET /user/flushCachedCredentials` — the reference's cache-evict
     * sibling (UserOperationsBean flush). This registry is served live
     * (no credential cache to evict), so the verb is the CONTRACT only:
-    * 401 for an unknown caller, 200 acknowledging the flush for a
-    * registered one — a client written against the reference keeps
-    * working. */
+    * 401 for an unknown caller or proxied entity, 200 acknowledging the
+    * flush for a registered one — a client written against the
+    * reference keeps working. */
   private def flushCachedCredentials(params: Map[String, String])
-      : (Int, String) =
-    if (users.isEmpty) (404, err("no principal registry configured"))
-    else {
-      val user = params.getOrElse("user", "anonymous")
-      if (!users.contains(user)) (401, err(s"unknown user '$user'"))
-      else (200, s"""{"user": ${quote(user)}, "flushed": true}""")
-    }
+      : (Int, String) = {
+    val user = caller(params)
+      .getOrElse(refuse(404, "no principal registry configured"))
+    (200, s"""{"user": ${quote(user)}, "flushed": true}""")
+  }
 
   /** Shared create core: validate, audit, plan, open the session, record
-    * the create metric. Left = the error response; Right = the new id. */
-  private def doCreate(
-      params: Map[String, String]): Either[(Int, String), String] =
-    queryDef(params).flatMap { d =>
-      val id = newId()
-      // audit BEFORE execution (QueryExecutorBean.java:704-740: an
-      // auditor failure fails the create — QUERY_AUDITING_ERROR); plan
-      // eagerly so a bad query or orderBy fails the create call (the
-      // reference's createQuery semantics), not the first page
-      try {
-        open(id, d, audited(params, id, d.query, d.syntax, d.table)(plan(d)))
-        created(params, id, d, d.table)
-        Right(id)
-      } catch { case e: Exception => Left((400, err(e.getMessage))) }
-    }
+    * the create metric; returns the new id. */
+  private def doCreate(params: Map[String, String]): String = {
+    val d = queryDef(params)
+    val id = newId()
+    // audit BEFORE execution (QueryExecutorBean.java:704-740: an
+    // auditor failure fails the create — QUERY_AUDITING_ERROR); plan
+    // eagerly so a bad query or orderBy fails the create call (the
+    // reference's createQuery semantics), not the first page
+    try {
+      open(id, d, audited(params, id, d.query, d.syntax, d.table)(plan(d)))
+      created(params, id, d, d.table)
+      id
+    } catch { case e: Exception => refuse(400, e.getMessage) }
+  }
 
   /** `TYPE:value[,TYPE:value…]` terms — shared by every lookup
     * endpoint so the parse rules cannot drift between them. */
@@ -1127,10 +1124,7 @@ final class QueryServer(
     // itself so row-level visibility enforcement applies to the served
     // rows, not just the gate (LookupUUIDUtil runs the resolved chain's
     // auths through the delegate logic)
-    val auths = resolveAuths(params) match {
-      case Left(resp) => return resp
-      case Right(a) => a
-    }
+    val auths = grant(params)
     val d = QueryDef("", query, syntax, auths = auths, owner = ownerOf(params),
       pageSize = pageSize(params, defaultPageSize))
     val id = newId()
@@ -1148,22 +1142,15 @@ final class QueryServer(
     s"""{"queryId": "$id", "page": $pageNum, "rows": [${rows.mkString(",")}]}"""
 
   private def lookupUuid(params: Map[String, String]): (Int, String) = {
-    if (uuidTypes.isEmpty)
-      return (404, err("no UUID types registered on this server"))
-    val raw = params.getOrElse("terms", return (400, err("missing 'terms'")))
-    try {
-      val terms = parseTerms(raw)
-      val reg = LookupUUID.Registry(uuidTypes)
-      // audit-before-execute applies to lookups too (they run full
-      // queries); the rendered LUCENE disjunction is the audited query
-      val rendered = LookupUUID.queryString(reg, terms)
-      lookupSession(params, rendered, "LUCENE", "lookupUUID",
-        selectors = None) { auths =>
-        LookupUUID.lookup(reg, terms, tableMap, logic,
-          QueryParams(auths = auths))
-      }
-    } catch {
-      case e: Exception => (400, err(e.getMessage))
+    val reg = uuidRegistry
+    val terms = parseTerms(need(params, "terms"))
+    // audit-before-execute applies to lookups too (they run full
+    // queries); the rendered LUCENE disjunction is the audited query
+    val rendered = LookupUUID.queryString(reg, terms)
+    lookupSession(params, rendered, "LUCENE", "lookupUUID",
+      selectors = None) { auths =>
+      LookupUUID.lookup(reg, terms, tableMap, logic,
+        QueryParams(auths = auths))
     }
   }
 
@@ -1173,21 +1160,16 @@ final class QueryServer(
     * documents for the UIDs page back directly. Requires a `content`
     * table registered on the server. */
   private def lookupUid(params: Map[String, String]): (Int, String) = {
-    val contentTable = tableMap.getOrElse("content",
-      return (404, err("no content table registered on this server")))
-    val raw = params.getOrElse("uids", return (400, err("missing 'uids'")))
-    try {
-      val uids = csv(raw)
-      // the uids themselves are the audit selectors (the
-      // SplitSelectorExtractor shape — not parseable as a query)
-      lookupSession(params, raw, "UID", "lookupUID",
-        selectors = Some(uids)) { auths =>
-        LookupUUID.lookupUid(LookupUUID.Registry(uuidTypes),
-          Seq("event" -> uids.mkString(" ")), tableMap, contentTable,
-          params = QueryParams(auths = auths))
-      }
-    } catch {
-      case e: Exception => (400, err(e.getMessage))
+    val contentTable = content
+    val raw = need(params, "uids")
+    val uids = csv(raw)
+    // the uids themselves are the audit selectors (the
+    // SplitSelectorExtractor shape — not parseable as a query)
+    lookupSession(params, raw, "UID", "lookupUID",
+      selectors = Some(uids)) { auths =>
+      LookupUUID.lookupUid(LookupUUID.Registry(uuidTypes),
+        Seq("event" -> uids.mkString(" ")), tableMap, contentTable,
+        params = QueryParams(auths = auths))
     }
   }
 
@@ -1197,54 +1179,40 @@ final class QueryServer(
     * the whole answer and the query is auto-closed — callers never call
     * next/close (the reference's documented contract). 204 on no hits. */
   private def translateId(params: Map[String, String]): (Int, String) = {
-    if (uuidTypes.isEmpty)
-      return (404, err("no UUID types registered on this server"))
-    val ids = params.get("id").map(Seq(_)).orElse(
-      params.get("ids").map(csv))
-      .getOrElse(return (400, err("missing 'id' or 'ids'")))
+    val reg = uuidRegistry
+    val ids = params.get("id").map(Seq(_)).orElse(params.get("ids").map(csv))
+      .getOrElse(refuse(400, "missing 'id' or 'ids'"))
     // translations serve data rows — the registry gates them AND the
     // resolved auths filter what the translation may reveal
-    val auths = resolveAuths(params) match {
-      case Left(resp) => return resp
-      case Right(a) => a
+    val auths = grant(params)
+    val n = pageSize(params, defaultPageSize)
+    val rendered = LookupUUID.translateQueryString(reg, ids)
+    val result = audited(params, newId(), rendered, "LUCENE", "translateId") {
+      LookupUUID.translate(reg, ids, tableMap, logic,
+        QueryParams(auths = auths))
     }
-    try {
-      val n = pageSize(params, defaultPageSize)
-      val reg = LookupUUID.Registry(uuidTypes)
-      val rendered = LookupUUID.translateQueryString(reg, ids)
-      val result = audited(params, newId(), rendered, "LUCENE", "translateId") {
-        LookupUUID.translate(reg, ids, tableMap, logic,
-          QueryParams(auths = auths))
-      }
-      // one page, deterministic order, then done — no session survives;
-      // the over-fetch by one row surfaces truncation explicitly (the
-      // reference's X-Partial-Results signal) instead of dropping hits
-      // silently
-      val fetched = result.orderBy(result.columns.head)
-        .limit(if (n == Int.MaxValue) n else n + 1)
-        .toJSON.collect()
-      val partial = fetched.length > n
-      val rows = if (partial) fetched.dropRight(1) else fetched
-      if (rows.isEmpty) (204, "")
-      else (200,
-        s"""{"partial": $partial, "rows": [${rows.mkString(",")}]}""")
-    } catch { case e: Exception => (400, err(e.getMessage)) }
+    // one page, deterministic order, then done — no session survives;
+    // the over-fetch by one row surfaces truncation explicitly (the
+    // reference's X-Partial-Results signal) instead of dropping hits
+    // silently
+    val fetched = result.orderBy(result.columns.head)
+      .limit(if (n == Int.MaxValue) n else n + 1)
+      .toJSON.collect()
+    val partial = fetched.length > n
+    val rows = if (partial) fetched.dropRight(1) else fetched
+    if (rows.isEmpty) (204, "")
+    else (200,
+      s"""{"partial": $partial, "rows": [${rows.mkString(",")}]}""")
   }
 
   /** `GET /query/list` — the caller's active queries (QueryExecutorBean
     * `/list`): id, definition, and paging position per session. */
   private def list(params: Map[String, String]): (Int, String) = {
     import scala.jdk.CollectionConverters._
-    // with a registry, the listing is the CALLER'S queries (the
-    // reference's persister scans a range keyed by the caller's userid,
-    // QueryExecutorBean.java:1092 comment); admins see every session
-    val caller = params.getOrElse("user", "anonymous")
-    if (users.nonEmpty && !users.contains(caller))
-      return (401, err(s"unknown user '$caller'"))
-    val mine = sessions.asScala.toSeq.filter { case (_, s) =>
-      users.isEmpty || adminUsers.contains(caller) ||
-        s.defn.owner.isEmpty || s.defn.owner == caller
-    }
+    // with a registry, the listing is the CALLER'S queries
+    // (QueryExecutorBean.java:1092 comment); admins see every session
+    val who = scope(params)
+    val mine = sessions.asScala.toSeq.filter { case (_, s) => shows(who, s.defn.owner) }
     val rows = mine.sortBy(_._1).map { case (id, s) =>
       s"""{"queryId": ${quote(id)}, "query": ${quote(s.defn.query)},""" +
         s""" "syntax": ${quote(s.defn.syntax)}, "pagesServed": ${s.running.pagesServed}}"""
@@ -1256,10 +1224,7 @@ final class QueryServer(
     * (QueryExecutorBean `/listQueryLogic`); catalog names are still
     * registry-gated like /admin/listTables (401 unknown caller). */
   private def listQueryLogic(params: Map[String, String]): (Int, String) = {
-    resolveAuths(params) match {
-      case Left(resp) => return resp
-      case Right(_) => ()
-    }
+    grant(params)
     (200, tableMap.keys.toSeq.sorted.map(quote).mkString("[", ",", "]"))
   }
 
@@ -1267,30 +1232,28 @@ final class QueryServer(
     * same definition, paging restarted from page 1 (QueryExecutorBean
     * `/{id}/duplicate`). The persisted frame is shared, not re-planned. */
   private def duplicate(params: Map[String, String]): (Int, String) =
-    try {
-      // the read-copy-put runs under the source's monitor, so it is
-      // atomic vs teardown: a concurrent close/cancel of the source
-      // between our read and our put would see no other sharer and
-      // unpersist the frame we are about to share (the duplicate would
-      // still be correct, just uncached). Only the owner may copy a
-      // session (the reference's duplicate path runs the :1146
-      // ownership check); the COPY belongs to the caller — same
-      // principal unless an admin duplicated it for themselves.
-      withSession(params) { s =>
-        val d = s.defn.copy(pageSize = pageSize(params, s.defn.pageSize),
-          owner = if (ownerOf(params).nonEmpty) ownerOf(params)
-                  else s.defn.owner)
-        val id = newId()
-        // a duplicate is a NEW query and audits as one (the reference
-        // re-enters createQuery with the copied definition)
-        audited(params, id, d.query, d.syntax, "duplicate")(())
-        open(id, d, s.df)
-        // the duplicate is a query of its own: without a metric row its
-        // durable pages would be orphans the summary's metric-join drops
-        created(params, id, d, d.table)
-        (200, s"""{"queryId": "$id"}""")
-      }
-    } catch { case e: Exception => (400, err(e.getMessage)) }
+    // the read-copy-put runs under the source's monitor, so it is
+    // atomic vs teardown: a concurrent close/cancel of the source
+    // between our read and our put would see no other sharer and
+    // unpersist the frame we are about to share (the duplicate would
+    // still be correct, just uncached). Only the owner may copy a
+    // session (the reference's duplicate path runs the :1146
+    // ownership check); the COPY belongs to the caller — same
+    // principal unless an admin duplicated it for themselves.
+    withSession(params) { s =>
+      val d = s.defn.copy(pageSize = pageSize(params, s.defn.pageSize),
+        owner = if (ownerOf(params).nonEmpty) ownerOf(params)
+                else s.defn.owner)
+      val id = newId()
+      // a duplicate is a NEW query and audits as one (the reference
+      // re-enters createQuery with the copied definition)
+      audited(params, id, d.query, d.syntax, "duplicate")(())
+      open(id, d, s.df)
+      // the duplicate is a query of its own: without a metric row its
+      // durable pages would be orphans the summary's metric-join drops
+      created(params, id, d, d.table)
+      (200, s"""{"queryId": "$id"}""")
+    }
 
   /** `POST /query/reset?id=…` — same query id, paging restarted
     * (QueryExecutorBean `/{id}/reset`: releases resources and re-runs;
@@ -1330,13 +1293,10 @@ final class QueryServer(
     * gates the caller, but the plan carries no auths, so no visibility
     * probe runs. No predictors → `hasResults=false` (NoOpQueryPredictor
     * deployment). */
-  private def predict(params: Map[String, String]): (Int, String) =
-    queryDef(params) match {
-      case Left(resp) => resp
-      case Right(d) =>
-        try predicted(plan(d.copy(auths = None)), d.table)
-        catch { case e: Exception => (400, err(e.getMessage)) }
-    }
+  private def predict(params: Map[String, String]): (Int, String) = {
+    val d = queryDef(params)
+    predicted(plan(d.copy(auths = None)), d.table)
+  }
 
   /** The configured predictors' answer for a planned frame — logic-aware:
     * the history predictor prices `table` off its own past runs, never a
@@ -1393,7 +1353,7 @@ final class QueryServer(
     * `/{id}/cancel`; pages already served stay served). */
   private def cancel(params: Map[String, String]): (Int, String) =
     // owner-gated (QueryExecutorBean adminCancel is the admin override)
-    owned(params)(end(_, "canceled"))
+    end(ownedQuery(params), "canceled")
 
   /** `POST /query/define?table=T&query=Q[&syntax=…][&pageSize=N]
     * [&orderBy=…]` — the reference's `/{logicName}/define`
@@ -1406,64 +1366,57 @@ final class QueryServer(
     * audit-before-execute discipline needs the caller's user context,
     * which the lazy resume no longer has; the reference defers the
     * audit to its execute verbs). */
-  private def define(params: Map[String, String]): (Int, String) =
-    queryDef(params) match {
-      case Left(resp) => resp
-      case Right(d) =>
-        try {
-          val id = newId()
-          // schema resolution only — a bad query or unknown orderBy fails
-          // the define, but nothing executes and nothing caches
-          val planned = audited(params, id, d.query, d.syntax, d.table)(plan(d))
-          val defn = ordered(d, planned)
-          RunningQuery.checkOrder(planned, defn.orderBy)
-          writeDef(id, Saved(defn))
-          created(params, id, defn, d.table)
-          (200, s"""{"queryId": "$id"}""")
-        } catch { case e: Exception => (400, err(e.getMessage)) }
-    }
+  private def define(params: Map[String, String]): (Int, String) = {
+    val d = queryDef(params)
+    val id = newId()
+    // schema resolution only — a bad query or unknown orderBy fails
+    // the define, but nothing executes and nothing caches
+    val planned = audited(params, id, d.query, d.syntax, d.table)(plan(d))
+    val defn = ordered(d, planned)
+    RunningQuery.checkOrder(planned, defn.orderBy)
+    writeDef(id, Saved(defn))
+    created(params, id, defn, d.table)
+    (200, s"""{"queryId": "$id"}""")
+  }
 
   /** `GET /query/get?id=…` — the reference's `GET /{id}`
     * (listQueryByID): the stored definition of a live OR defined query. */
-  private def getDefinition(params: Map[String, String]): (Int, String) =
+  private def getDefinition(params: Map[String, String]): (Int, String) = {
     // READ verb: must not resume — inspecting a defined-but-never-
     // executed query leaves it session-less and frame-less (define's
     // contract), so absent a live session the durable record is read
     // directly instead of through session()/resumeSession(). The stored
     // definition (query text, table) is the owner's — reading it is
     // gated like the reference's listQueryByID.
-    owned(params) { id => definition(id) match {
-      case None => (404, err("unknown queryId"))
-      case Some((d, served)) =>
-        (200, s"""{"queryId": ${quote(id)},""" +
-          s""" "table": ${quote(d.table)}, "query": ${quote(d.query)},""" +
-          s""" "syntax": ${quote(d.syntax)}, "pageSize": ${d.pageSize},""" +
-          s""" "orderBy": ${quote(d.orderBy.mkString(","))},""" +
-          s""" "pagesServed": $served}""")
-    } }
+    val id = ownedQuery(params)
+    val (d, served) = definition(id).getOrElse(refuse(404, "unknown queryId"))
+    (200, s"""{"queryId": ${quote(id)},""" +
+      s""" "table": ${quote(d.table)}, "query": ${quote(d.query)},""" +
+      s""" "syntax": ${quote(d.syntax)}, "pageSize": ${d.pageSize},""" +
+      s""" "orderBy": ${quote(d.orderBy.mkString(","))},""" +
+      s""" "pagesServed": $served}""")
+  }
 
   /** `GET /query/predictions?id=…` — the reference's `/{id}/predictions`:
     * the configured predictors run against the CREATED query's planned
     * frame (no execution beyond what the session already did). */
-  private def predictions(params: Map[String, String]): (Int, String) =
+  private def predictions(params: Map[String, String]): (Int, String) = {
     // READ verb: like /query/get, resolves the durable definition
     // directly when no live session exists — the prediction plans the
     // frame (definitionFrame) but registers no session and persists
     // nothing, so a defined query does not appear in /query/list after.
-    owned(params) { id => definition(id) match {
-      case None => (404, err("unknown queryId"))
-      case Some((d, _)) =>
-        try predicted(definitionFrame(id),
-          if (d.table.nonEmpty) d.table else "unknown")
-        catch { case e: Exception => (400, err(e.getMessage)) }
-    } }
+    val id = ownedQuery(params)
+    val (d, _) = definition(id).getOrElse(refuse(404, "unknown queryId"))
+    try predicted(definitionFrame(id), if (d.table.nonEmpty) d.table else "unknown")
+    catch { case e: Exception => (400, err(e.getMessage)) }
+  }
 
   /** `POST /query/remove?id=…` — the reference's `/{id}/remove`: close
     * if running AND delete the persisted definition (close + persister
     * remove, QueryExecutorBean.java:2616). [[teardown]] already does
     * both for this storage model. */
   private def remove(params: Map[String, String]): (Int, String) =
-    owned(params)(end(_, "removed"))
+    end(ownedQuery(params), "removed")
 
   /** `POST /query/execute?table=T&query=Q[&syntax=…][&orderBy=…]` — the
     * reference's `/{logicName}/execute`: run the query and STREAM every
@@ -1477,40 +1430,39 @@ final class QueryServer(
     * proper error statuses. */
   private val executeHandler: HttpHandler = ex =>
     try {
+      val params = requestParams(ex)
       // execute streams data — same registry gate + resolved-auths
       // enforcement as /query/create (the reference's execute verb
       // runs under the caller's principal exactly like create)
-      parsed(ex).flatMap(p => queryDef(p).map(p -> _)) match {
-        case Left((status, body)) => respond(ex, status, body)
-        case Right((params, d)) =>
-          val id = newId()
-          val result = audited(params, id, d.query, d.syntax, d.table)(plan(d))
-          val rows =
-            if (d.orderBy.isEmpty) result
-            else {
-              RunningQuery.checkOrder(result, d.orderBy)
-              result.orderBy(d.orderBy.map(result.col): _*)
-            }
-          created(params, id, d, d.table)
-          // chunked from here on: partitions stream through the driver
-          // one at a time
-          ex.getResponseHeaders.set("Content-Type", "application/json")
-          ex.sendResponseHeaders(200, 0)
-          val os = ex.getResponseBody
-          try {
-            os.write(s"""{"queryId": "$id", "rows": ["""
-              .getBytes(StandardCharsets.UTF_8))
-            val it = rows.toJSON.toLocalIterator()
-            var first = true
-            while (it.hasNext) {
-              if (!first) os.write(','.toInt)
-              os.write(it.next().getBytes(StandardCharsets.UTF_8))
-              first = false
-            }
-            os.write("]}".getBytes(StandardCharsets.UTF_8))
-          } finally { os.close(); ex.close() }
-      }
+      val d = queryDef(params)
+      val id = newId()
+      val result = audited(params, id, d.query, d.syntax, d.table)(plan(d))
+      val rows =
+        if (d.orderBy.isEmpty) result
+        else {
+          RunningQuery.checkOrder(result, d.orderBy)
+          result.orderBy(d.orderBy.map(RunningQuery.orderColumn): _*)
+        }
+      created(params, id, d, d.table)
+      // chunked from here on: partitions stream through the driver
+      // one at a time
+      ex.getResponseHeaders.set("Content-Type", "application/json")
+      ex.sendResponseHeaders(200, 0)
+      val os = ex.getResponseBody
+      try {
+        os.write(s"""{"queryId": "$id", "rows": ["""
+          .getBytes(StandardCharsets.UTF_8))
+        val it = rows.toJSON.toLocalIterator()
+        var first = true
+        while (it.hasNext) {
+          if (!first) os.write(','.toInt)
+          os.write(it.next().getBytes(StandardCharsets.UTF_8))
+          first = false
+        }
+        os.write("]}".getBytes(StandardCharsets.UTF_8))
+      } finally { os.close(); ex.close() }
     } catch {
+      case r: Refusal => respond(ex, r.status, err(r.msg))
       case e: Exception =>
         // response not yet committed → proper error; committed →
         // close truncates (documented above)
@@ -1583,34 +1535,33 @@ final class QueryServer(
     * `content` table. `uidField` names the hit column carrying the uid
     * (default `uid`). */
   private def lookupContentUuid(params: Map[String, String]): (Int, String) = {
-    if (uuidTypes.isEmpty)
-      return (404, err("no UUID types registered on this server"))
-    val contentTable = tableMap.getOrElse("content",
-      return (404, err("no content table registered on this server")))
-    val raw = params.getOrElse("terms", return (400, err("missing 'terms'")))
+    val reg = uuidRegistry
+    val contentTable = content
+    val raw = need(params, "terms")
     // content lookups serve stored documents — registry-gated, and the
     // resolved auths filter both the hit query AND the content fetch
-    val auths = resolveAuths(params) match {
-      case Left(resp) => return resp
-      case Right(a) => a
+    val qp = QueryParams(auths = grant(params))
+    val terms = parseTerms(raw)
+    val rendered = LookupUUID.queryString(reg, terms)
+    val docs = audited(params, newId(), rendered, "LUCENE",
+      "lookupContentUUID") {
+      LookupUUID.contentLookup(contentTable,
+        LookupUUID.lookup(reg, terms, tableMap, logic, qp),
+        uidCol = params.getOrElse("uidField", "uid"), params = qp)
     }
-    try {
-      val terms = parseTerms(raw)
-      val reg = LookupUUID.Registry(uuidTypes)
-      val rendered = LookupUUID.queryString(reg, terms)
-      val qp = QueryParams(auths = auths)
-      val docs = audited(params, newId(), rendered, "LUCENE",
-        "lookupContentUUID") {
-        LookupUUID.contentLookup(contentTable,
-          LookupUUID.lookup(reg, terms, tableMap, logic, qp),
-          uidCol = params.getOrElse("uidField", "uid"), params = qp)
-      }
-      val rows = docs.toJSON.collect() // bounded by contentLookup maxDocs
-      (200, s"""{"rows": [${rows.mkString(",")}]}""")
-    } catch {
-      case e: Exception => (400, err(e.getMessage))
-    }
+    val rows = docs.toJSON.collect() // bounded by contentLookup maxDocs
+    (200, s"""{"rows": [${rows.mkString(",")}]}""")
   }
+
+  /** The UUID-type registry, or 404 on a server that registers none. */
+  private def uuidRegistry: LookupUUID.Registry =
+    if (uuidTypes.isEmpty) refuse(404, "no UUID types registered on this server")
+    else LookupUUID.Registry(uuidTypes)
+
+  /** The stored-document table, or 404 on a server without one. */
+  private def content: DataFrame =
+    tableMap.getOrElse("content",
+      refuse(404, "no content table registered on this server"))
 
   private def next(params: Map[String, String]): (Int, String) =
     // paging is principal-bound: only the creating owner (or an admin)
@@ -1651,32 +1602,29 @@ final class QueryServer(
     }
     if (params.contains("id"))
       withSession(params)(s => (200, render(s.defn, s.df)))
-    else queryDef(params) match {
-      case Left(resp) => resp
-      case Right(d) =>
-        try (200, render(d, plan(d.copy(auths = None))))
-        catch { case e: Exception => (400, err(e.getMessage)) }
+    else {
+      val d = queryDef(params)
+      try (200, render(d, plan(d.copy(auths = None))))
+      catch { case e: Exception => (400, err(e.getMessage)) }
     }
   }
 
-  private def metrics(params: Map[String, String]): (Int, String) =
+  private def metrics(params: Map[String, String]): (Int, String) = {
     // a query's page history is the owner's (QueryMetricsBean serves
     // the caller's own metrics; admins see all)
-    owned(params) { id =>
-      // durable history outlives the session (a restarted server or a
-      // closed query keeps its recorded pages); a table-less server has
-      // no ledger at all
-      val ledger = sparkOf.fold(Seq.empty[PageMetric])(metricsStore.pages(_, id))
-      if (ledger.isEmpty && !sessions.containsKey(id) &&
-          !java.nio.file.Files.exists(sessionFile(id)))
-        (404, err("unknown queryId"))
-      else {
-        val pages = ledger.map(p =>
-          s"""{"page": ${p.pageNum}, "rows": ${p.rows},""" +
-            s""" "elapsedMillis": ${p.elapsedMillis}, "status": ${quote(p.status)}}""")
-        (200, s"""{"queryId": ${quote(id)}, "pages": [${pages.mkString(",")}]}""")
-      }
-    }
+    val id = ownedQuery(params)
+    // durable history outlives the session (a restarted server or a
+    // closed query keeps its recorded pages); a table-less server has
+    // no ledger at all
+    val ledger = sparkOf.fold(Seq.empty[PageMetric])(metricsStore.pages(_, id))
+    if (ledger.isEmpty && !sessions.containsKey(id) &&
+        !java.nio.file.Files.exists(sessionFile(id)))
+      refuse(404, "unknown queryId")
+    val pages = ledger.map(p =>
+      s"""{"page": ${p.pageNum}, "rows": ${p.rows},""" +
+        s""" "elapsedMillis": ${p.elapsedMillis}, "status": ${quote(p.status)}}""")
+    (200, s"""{"queryId": ${quote(id)}, "pages": [${pages.mkString(",")}]}""")
+  }
 
   /** `POST /cachedresults/load?id=…&alias=A` — the reference's
     * CachedResults `load` (CachedResultsBean: materialize a finished
@@ -1704,15 +1652,11 @@ final class QueryServer(
     * start the export ASYNC, answer the new job id
     * (MapReduceBean.submit:376-430). */
   private def mrSubmit(params: Map[String, String]): (Int, String) = {
-    val jobName = params.getOrElse("jobName",
-      return (400, err("missing 'jobName'")))
+    val jobName = need(params, "jobName")
     // with a registry, the submitter must be a known principal (the job
     // serves that principal's query results) and the job records them
     // as its owner — every later job verb is owner-gated
-    resolveAuths(params) match {
-      case Left(resp) => return resp
-      case Right(_) => ()
-    }
+    grant(params)
     // a BulkResults job exports the rows of a DEFINED query under that
     // definition's resolved auths — shipping another principal's
     // definition into a job the caller owns would launder its rows past
@@ -1720,12 +1664,7 @@ final class QueryServer(
     val runtime =
       try bulkJobs.parseParams(params.getOrElse("parameters", ""))
       catch { case _: IllegalArgumentException => Map.empty[String, String] }
-    runtime.get("queryId").foreach { qId =>
-      ownerGate(params, queryOwner(qId)) match {
-        case Some(resp) => return resp
-        case None => ()
-      }
-    }
+    runtime.get("queryId").foreach(qId => ownedBy(params, queryOwner(qId)))
     bulkJobs.submit(jobName, params.getOrElse("parameters", ""),
       params.getOrElse("roles", "").split(',').toSet.filter(_.nonEmpty),
       owner = ownerOf(params)) match {
@@ -1741,28 +1680,16 @@ final class QueryServer(
       case None =>
         // with a registry the listing is the CALLER'S jobs (the
         // reference's state persister scans by userid; admins see all)
-        val caller = params.getOrElse("user", "anonymous")
-        if (users.nonEmpty && !users.contains(caller))
-          return (401, err(s"unknown user '$caller'"))
-        val ids = bulkJobs.listJobIds.filter { id =>
-          users.isEmpty || adminUsers.contains(caller) || {
-            val o = bulkJobs.jobOwner(id); o.isEmpty || o == caller
-          }
-        }
+        val who = scope(params)
+        val ids = bulkJobs.listJobIds.filter(id => shows(who, bulkJobs.jobOwner(id)))
         (200, s"[${ids.map(quote).mkString(",")}]")
-      case Some(id) =>
-        ownerGate(params, bulkJobs.jobOwner(id)) match {
-          case Some(resp) => return resp
-          case None => ()
-        }
-        bulkJobs.info(id) match {
-          case None => (404, err("unknown jobId"))
-          case Some((name, state, files)) =>
-            val fs = files.map { case (n, sz) =>
-              s"""{"name": ${quote(n)}, "size": $sz}""" }
-            (200, s"""{"jobName": ${quote(name)}, "state": ${quote(state)},""" +
-              s""" "resultFiles": [${fs.mkString(",")}]}""")
-        }
+      case Some(_) =>
+        val (name, state, files) = bulkJobs.info(ownedJob(params))
+          .getOrElse(refuse(404, "unknown jobId"))
+        val fs = files.map { case (n, sz) =>
+          s"""{"name": ${quote(n)}, "size": $sz}""" }
+        (200, s"""{"jobName": ${quote(name)}, "state": ${quote(state)},""" +
+          s""" "resultFiles": [${fs.mkString(",")}]}""")
     }
 
   /** `POST /mapreduce/cancel?jobId=…` — abort the job group's running
@@ -1770,34 +1697,28 @@ final class QueryServer(
   private def mrCancel(params: Map[String, String]): (Int, String) =
     // owner-gated; adminUsers retain the reference's adminCancel
     // override (MapReduceBean.java:2409 adminCancel)
-    ownedJob(params) { jobId =>
-      if (bulkJobs.cancel(jobId)) (200, """{"canceled": true}""")
-      else (404, err("unknown jobId"))
-    }
+    if (bulkJobs.cancel(ownedJob(params))) (200, """{"canceled": true}""")
+    else (404, err("unknown jobId"))
 
   /** `POST /mapreduce/restart?jobId=…` — cancel + resubmit the same
     * definition as a NEW job id (MapReduceBean.restart:669-690). */
   private def mrRestart(params: Map[String, String]): (Int, String) =
-    ownedJob(params) { jobId =>
-      bulkJobs.restart(jobId) match {
-        case Left((st, msg)) => (st, err(msg))
-        case Right(id) => (200, s"""{"jobId": "$id"}""")
-      }
+    bulkJobs.restart(ownedJob(params)) match {
+      case Left((st, msg)) => (st, err(msg))
+      case Right(id) => (200, s"""{"jobId": "$id"}""")
     }
 
   /** `POST /mapreduce/remove?jobId=…` — cancel if running, drop state
     * and result files (MapReduceBean.remove:983-1010). */
   private def mrRemove(params: Map[String, String]): (Int, String) =
-    ownedJob(params) { jobId =>
-      if (bulkJobs.remove(jobId)) (200, """{"removed": true}""")
-      else (404, err("unknown jobId"))
-    }
+    if (bulkJobs.remove(ownedJob(params))) (200, """{"removed": true}""")
+    else (404, err("unknown jobId"))
 
-  /** `body` on bulk job `jobId` once the caller passes its owner's gate. */
-  private def ownedJob(params: Map[String, String])(
-      body: String => (Int, String)): (Int, String) = {
+  /** Bulk job `jobId` once the caller passes its owner's gate. */
+  private def ownedJob(params: Map[String, String]): String = {
     val jobId = params.getOrElse("jobId", "")
-    ownerGate(params, bulkJobs.jobOwner(jobId)).getOrElse(body(jobId))
+    ownedBy(params, bulkJobs.jobOwner(jobId))
+    jobId
   }
 
   /** `GET /mapreduce/getFile?jobId=…&fileName=…` — stream one result
@@ -1805,39 +1726,29 @@ final class QueryServer(
     * the job's results directory). */
   private val mrGetFileHandler: HttpHandler = ex =>
     try {
-      val refusal = parsed(ex) match {
-        case Left(resp) => Some(resp)
-        case Right(params) =>
-          val jobId = params.getOrElse("jobId", "")
-          // result files hold rows materialized under the SUBMITTER'S
-          // auths — streaming them is owner-gated like every data verb
-          // (MapReduceBean.getResultFile serves the caller's own job)
-          ownerGate(params, bulkJobs.jobOwner(jobId)).orElse {
-            bulkJobs.resultFile(jobId, params.getOrElse("fileName", "")) match {
-              case None => Some((404, err("unknown jobId or fileName")))
-              case Some(path) =>
-                // size+copy can race a concurrent /mapreduce/remove —
-                // answer a structured 404 like every handler()-wrapped
-                // endpoint rather than dropping the exchange
-                try {
-                  val size = java.nio.file.Files.size(path)
-                  ex.getResponseHeaders.set("Content-Type",
-                    "application/octet-stream")
-                  ex.sendResponseHeaders(200, size)
-                  val os = ex.getResponseBody
-                  try java.nio.file.Files.copy(path, os) finally os.close()
-                  None
-                } catch {
-                  case _: java.io.IOException =>
-                    Some((404, err("result file no longer available")))
-                }
-            }
-          }
+      val params = requestParams(ex)
+      // result files hold rows materialized under the SUBMITTER'S
+      // auths — streaming them is owner-gated like every data verb
+      // (MapReduceBean.getResultFile serves the caller's own job)
+      val path = bulkJobs.resultFile(ownedJob(params),
+        params.getOrElse("fileName", ""))
+        .getOrElse(refuse(404, "unknown jobId or fileName"))
+      // size+copy can race a concurrent /mapreduce/remove — answer a
+      // structured 404 like every handler()-wrapped endpoint rather than
+      // dropping the exchange
+      try {
+        val size = java.nio.file.Files.size(path)
+        ex.getResponseHeaders.set("Content-Type", "application/octet-stream")
+        ex.sendResponseHeaders(200, size)
+        val os = ex.getResponseBody
+        try java.nio.file.Files.copy(path, os) finally os.close()
+      } catch {
+        case _: java.io.IOException => refuse(404, "result file no longer available")
       }
-      refusal.foreach { case (status, body) =>
-        try respond(ex, status, body)
+    } catch {
+      case r: Refusal =>
+        try respond(ex, r.status, err(r.msg))
         catch { case _: java.io.IOException => () } // headers already sent
-      }
     } finally ex.close()
 
   // ---- modification service (ModificationBean.java:88-134) -----------
@@ -1882,18 +1793,12 @@ final class QueryServer(
     * injects the history timestamp (the reference stamps server time;
     * a replayable trail needs injection). */
   private def modSubmit(params: Map[String, String]): (Int, String) = {
-    val service = params.getOrElse("service",
-      return (400, err("missing 'service'")))
-    val table = params.getOrElse("table",
-      return (400, err("missing 'table'")))
-    val long = tableMap.getOrElse(table,
-      return (404, err(s"unknown table '$table'")))
+    val service = need(params, "service")
+    val table = need(params, "table")
+    val long = tableMap.getOrElse(table, refuse(404, s"unknown table '$table'"))
     // a configured principal registry gates mutations too (unknown
     // caller = 401 before any edit parses)
-    resolveAuths(params) match {
-      case Left(resp) => return resp
-      case Right(_) => ()
-    }
+    grant(params)
     try {
       val edit = parseEdit(params)
       // resolve defaulted attribution NOW so the durable log replays
@@ -2016,24 +1921,20 @@ final class QueryServer(
       }
     }
 
-  private def withSpark(
-      f: SparkSession => (Int, String)): (Int, String) =
-    sparkOf match {
-      case Some(sp) => f(sp)
-      case None => (500, err("no table attached; model store unavailable"))
-    }
+  /** The session the model store lives in, or 500 on a server with no
+    * table. */
+  private def modelSpark: SparkSession =
+    sparkOf.getOrElse(refuse(500, "no table attached; model store unavailable"))
 
   private def modelVerb(params: Map[String, String])(
       f: (SparkSession, String) => Either[ModelStore.ModelError, (Int, String)])
-      : (Int, String) = withSpark { sp =>
+      : (Int, String) = {
+    val sp = modelSpark
     // model management MUTATES shared planning state (every query may
     // resolve through a stored model) — with a registry configured the
     // caller must be a known principal, like /modification/submit
-    resolveAuths(params) match {
-      case Left(resp) => return resp
-      case Right(_) => ()
-    }
-    val name = params.getOrElse("name", return (400, err("missing 'name'")))
+    grant(params)
+    val name = need(params, "name")
     try f(sp, name) match {
       case Left(e) => (e.status, err(e.msg))
       case Right(ok) => ok
@@ -2043,9 +1944,7 @@ final class QueryServer(
   /** `GET /model/list` — model names in the table (ModelBean
     * listModelNames; reserved record kinds never list). */
   private def modelList(params: Map[String, String]): (Int, String) =
-    withSpark { sp =>
-      (200, s"""{"names": [${models.listNames(sp).map(quote).mkString(",")}]}""")
-    }
+    (200, s"""{"names": [${models.listNames(modelSpark).map(quote).mkString(",")}]}""")
 
   /** `GET /model/get?name=…` — the model and all its mappings
     * (ModelBean getModel; 404 when empty). */
@@ -2064,9 +1963,7 @@ final class QueryServer(
     * model; 412 if the name exists (ModelBean importModel). */
   private def modelImport(params: Map[String, String]): (Int, String) =
     modelVerb(params) { (sp, name) =>
-      val raw = params.getOrElse("mappings",
-        return (400, err("missing 'mappings'")))
-      models.importModel(sp, name, parseMappings(raw, name))
+      models.importModel(sp, name, parseMappings(need(params, "mappings"), name))
         .map(_ => (200, """{"imported": true}"""))
     }
 
@@ -2074,9 +1971,7 @@ final class QueryServer(
     * a missing source, 412 on an existing target). */
   private def modelClone(params: Map[String, String]): (Int, String) =
     modelVerb(params) { (sp, name) =>
-      val newName = params.getOrElse("newName",
-        return (400, err("missing 'newName'")))
-      models.cloneModel(sp, name, newName)
+      models.cloneModel(sp, name, need(params, "newName"))
         .map(_ => (200, """{"cloned": true}"""))
     }
 
@@ -2091,9 +1986,7 @@ final class QueryServer(
     * (ModelBean insertMapping). */
   private def modelInsert(params: Map[String, String]): (Int, String) =
     modelVerb(params) { (sp, name) =>
-      val raw = params.getOrElse("mappings",
-        return (400, err("missing 'mappings'")))
-      models.insertMappings(sp, name, parseMappings(raw, name))
+      models.insertMappings(sp, name, parseMappings(need(params, "mappings"), name))
         .map(_ => (200, """{"inserted": true}"""))
     }
 
@@ -2101,9 +1994,7 @@ final class QueryServer(
     * given mappings (ModelBean deleteMapping). */
   private def modelDeleteMapping(params: Map[String, String]): (Int, String) =
     modelVerb(params) { (sp, name) =>
-      val raw = params.getOrElse("mappings",
-        return (400, err("missing 'mappings'")))
-      models.deleteMappings(sp, name, parseMappings(raw, name))
+      models.deleteMappings(sp, name, parseMappings(need(params, "mappings"), name))
         .map(_ => (200, """{"deleted": true}"""))
     }
 
@@ -2114,53 +2005,51 @@ final class QueryServer(
     // row, and holding shareLock for its duration would stall every
     // other verb (create/close/loadAsync) behind one big load.
     session(params) // a restart-resume plans before the lock is taken
-    val staged = shareLock.synchronized { session(params) match {
-      case None => Left((404, err("unknown queryId")))
-      case Some(s) =>
-        // only the query's owner may export it as a view
-        // (CachedResultsBean.java:342: the CachedResults row is keyed
-        // by getOwnerFromPrincipal)
-        ownerGate(params, s.defn.owner) match {
-          case Some(resp) => return resp
-          case None => ()
-        }
-        val alias = params.getOrElse("alias", return (400, err("missing 'alias'")))
-        if (!alias.matches("[A-Za-z_][A-Za-z0-9_]*"))
-          return (400, err(s"invalid alias '$alias'"))
-        val id = qid(params)
-        // an alias another live query already exported must not be
-        // silently rebound under a caller mid-way through
-        // /cachedresults/sql — first-writer-wins until its owner closes
-        // (re-load by the SAME query is a no-op refresh)
-        val owner = loadedAliases.putIfAbsent(alias.toLowerCase, id)
-        if (owner != null && owner != id)
-          return (409, err(s"alias '$alias' is bound to another query"))
-        s.df.createOrReplaceTempView(alias)
-        // a synchronous load supersedes any stale async state (e.g. a
-        // failed /loadAsync retried through /load must not keep
-        // answering 500 on /status or the data verbs)
-        asyncLoads.remove(alias.toLowerCase)
-        aliasSql.remove(alias.toLowerCase) // a re-load re-binds a plain view
-        // TTL clock: a (re-)load refreshes the alias's daysToLive
-        aliasTs.put(alias.toLowerCase,
-          java.lang.Long.valueOf(System.currentTimeMillis()))
-        touchSession(id) // exporting is a use of the owning query
-        persistAliases()
-        Right((s, alias, id))
-    } }
-    staged match {
-      case Left(resp) => resp
-      case Right((s, alias, id)) =>
-        // Phase 2 (outside shareLock, under the per-alias writer lock):
-        // materialize the rows durably (the reference's MySQL insert at
-        // load, CachedResultsBean.load) so a restarted server serves
-        // them WITHOUT re-running the owning query. A write failure or
-        // a raced close/re-point degrades durability only — the live
-        // view serves, and a restart takes the resume path (the
-        // uncommitted/absent store reads as absent).
-        val durable = writeStaged(id, s, alias)
-        (200, s"""{"view": ${quote(alias)}, "durable": $durable}""")
+    val (s, alias, id) = shareLock.synchronized {
+      val s = session(params).getOrElse(refuse(404, "unknown queryId"))
+      // only the query's owner may export it as a view
+      // (CachedResultsBean.java:342: the CachedResults row is keyed
+      // by getOwnerFromPrincipal)
+      ownedBy(params, s.defn.owner)
+      val alias = viewName(params, "alias")
+      val id = qid(params)
+      // an alias another live query already exported must not be
+      // silently rebound under a caller mid-way through
+      // /cachedresults/sql — first-writer-wins until its owner closes
+      // (re-load by the SAME query is a no-op refresh)
+      val owner = loadedAliases.putIfAbsent(alias.toLowerCase, id)
+      if (owner != null && owner != id)
+        refuse(409, s"alias '$alias' is bound to another query")
+      s.df.createOrReplaceTempView(alias)
+      // a synchronous load supersedes any stale async state (e.g. a
+      // failed /loadAsync retried through /load must not keep
+      // answering 500 on /status or the data verbs)
+      asyncLoads.remove(alias.toLowerCase)
+      aliasSql.remove(alias.toLowerCase) // a re-load re-binds a plain view
+      // TTL clock: a (re-)load refreshes the alias's daysToLive
+      aliasTs.put(alias.toLowerCase,
+        java.lang.Long.valueOf(System.currentTimeMillis()))
+      touchSession(id) // exporting is a use of the owning query
+      persistAliases()
+      (s, alias, id)
     }
+    // Phase 2 (outside shareLock, under the per-alias writer lock):
+    // materialize the rows durably (the reference's MySQL insert at
+    // load, CachedResultsBean.load) so a restarted server serves
+    // them WITHOUT re-running the owning query. A write failure or
+    // a raced close/re-point degrades durability only — the live
+    // view serves, and a restart takes the resume path (the
+    // uncommitted/absent store reads as absent).
+    val durable = writeStaged(id, s, alias)
+    (200, s"""{"view": ${quote(alias)}, "durable": $durable}""")
+  }
+
+  /** `params(key)` as a view name, `[A-Za-z_][A-Za-z0-9_]*` (400
+    * otherwise): it becomes a catalog view and a rows-store path. */
+  private def viewName(params: Map[String, String], key: String): String = {
+    val name = need(params, key)
+    if (!name.matches("[A-Za-z_][A-Za-z0-9_]*")) refuse(400, s"invalid $key '$name'")
+    name
   }
 
   /** `POST /cachedresults/update?id=…&alias=A[&from=OLDID]` — the
@@ -2177,46 +2066,34 @@ final class QueryServer(
     // outside it (a multi-second Spark job must not stall the server),
     // and a raced teardown drops the orphan store afterwards
     session(params) // a restart-resume plans before the lock is taken
-    val staged = shareLock.synchronized { session(params) match {
-      case None => Left((404, err("unknown queryId")))
-      case Some(s) =>
-        ownerGate(params, s.defn.owner) match {
-          case Some(resp) => return resp
-          case None => ()
-        }
-        val alias = params.getOrElse("alias", return (400, err("missing 'alias'")))
-        val owner = loadedAliases.get(alias.toLowerCase)
-        if (owner == null)
-          return (404, err(s"alias '$alias' is not loaded"))
-        // re-pointing steals the view from its current owning QUERY —
-        // the caller must also be that query's principal
-        ownerGate(params, queryOwner(owner)) match {
-          case Some(resp) => return resp
-          case None => ()
-        }
-        val id = qid(params)
-        if (owner != id && !params.get("from").contains(owner))
-          return (409, err(s"alias '$alias' is owned by another query;" +
-            " pass from=<ownerId> to re-point it"))
-        loadedAliases.put(alias.toLowerCase, id)
-        s.df.createOrReplaceTempView(alias)
-        aliasSql.remove(alias.toLowerCase)
-        // the reference's lastUpdated: an update refreshes the TTL
-        aliasTs.put(alias.toLowerCase,
-          java.lang.Long.valueOf(System.currentTimeMillis()))
-        touchSession(id)
-        persistAliases()
-        Right((s, alias, id))
-    } }
-    staged match {
-      case Left(resp) => resp
-      case Right((s, alias, id)) =>
-        // the re-point replaces the durable rows too — a restart must
-        // serve the NEW query's materialization; a failed write or a
-        // raced close/re-point degrades to the resume path
-        val durable = writeStaged(id, s, alias)
-        (200, s"""{"view": ${quote(alias)}, "durable": $durable}""")
+    val (s, alias, id) = shareLock.synchronized {
+      val s = session(params).getOrElse(refuse(404, "unknown queryId"))
+      ownedBy(params, s.defn.owner)
+      val alias = need(params, "alias")
+      val owner = Option(loadedAliases.get(alias.toLowerCase))
+        .getOrElse(refuse(404, s"alias '$alias' is not loaded"))
+      // re-pointing steals the view from its current owning QUERY —
+      // the caller must also be that query's principal
+      ownedBy(params, queryOwner(owner))
+      val id = qid(params)
+      if (owner != id && !params.get("from").contains(owner))
+        refuse(409, s"alias '$alias' is owned by another query;" +
+          " pass from=<ownerId> to re-point it")
+      loadedAliases.put(alias.toLowerCase, id)
+      s.df.createOrReplaceTempView(alias)
+      aliasSql.remove(alias.toLowerCase)
+      // the reference's lastUpdated: an update refreshes the TTL
+      aliasTs.put(alias.toLowerCase,
+        java.lang.Long.valueOf(System.currentTimeMillis()))
+      touchSession(id)
+      persistAliases()
+      (s, alias, id)
     }
+    // the re-point replaces the durable rows too — a restart must
+    // serve the NEW query's materialization; a failed write or a
+    // raced close/re-point degrades to the resume path
+    val durable = writeStaged(id, s, alias)
+    (200, s"""{"view": ${quote(alias)}, "durable": $durable}""")
   }
 
   /** `GET /cachedresults/sql?sql=…[&pageSize=N]` — CachedResults
@@ -2225,45 +2102,38 @@ final class QueryServer(
     * against its MySQL copy; Spark SQL runs it against the cached frame
     * directly). One page of rows, bounded by pageSize. */
   private def cachedSql(params: Map[String, String]): (Int, String) = {
-    val sql = params.getOrElse("sql", return (400, err("missing 'sql'")))
-    try {
-      val n = pageSize(params, defaultPageSize)
-      val spark = sparkOf.getOrElse(return (500, err("no tables registered")))
-      // the reference's CachedRunningQuery only ever builds SELECTs —
-      // gate on the PARSED plan, not string prefixes: a WITH-prefixed
-      // INSERT parses fine and a head-keyword check would let it mutate
-      // the shared catalog/filesystem through this verb. Any Command
-      // (DDL, SET, …) or insert node anywhere in the plan (subqueries
-      // included) is refused.
-      val refs = referencedNames(spark, sql) // one parse, reused below
-      val pending = asyncGate(refs)
-      if (pending.isDefined) return pending.get
-      // every loaded alias the statement touches is principal-bound:
-      // a caller who merely knows another principal's alias NAME must
-      // not read the rows that principal materialized under their own
-      // auths (CachedResultsBean.java:1128 QUERY_OWNER_MISMATCH on the
-      // retrieval path)
-      refs.foreach { n =>
-        if (loadedAliases.containsKey(n)) {
-          ownerGate(params, aliasOwner(n)) match {
-            case Some(resp) => return resp
-            case None => ()
-          }
-          // post-restart: the durable alias re-registers its view
-          // lazily from the resumed owning session; a non-restorable
-          // alias answers the same 404 contract as /getRows, not a raw
-          // TABLE_OR_VIEW_NOT_FOUND 400
-          if (!ensureAliasView(n))
-            return (404, err(s"alias '$n' cannot be restored"))
-        }
-      }
-      guardSelect(spark, sql)
-      val rows = reading(refs.flatMap(r => Option(loadedAliases.get(r)))) {
-        spark.sql(sql).limit(n).toJSON.collect()
-      }
-      (200, s"""{"rows": [${rows.mkString(",")}]}""")
-    } catch { case e: Exception => (400, err(e.getMessage)) }
+    val sql = need(params, "sql")
+    val n = pageSize(params, defaultPageSize)
+    val spark = tablesSpark
+    // the reference's CachedRunningQuery only ever builds SELECTs —
+    // [[guardSelect]] refuses anything else
+    val refs = referencedNames(spark, sql) // one parse, reused below
+    asyncGate(refs)
+    // every loaded alias the statement touches is principal-bound:
+    // a caller who merely knows another principal's alias NAME must
+    // not read the rows that principal materialized under their own
+    // auths (CachedResultsBean.java:1128 QUERY_OWNER_MISMATCH on the
+    // retrieval path)
+    refs.filter(n => loadedAliases.containsKey(n)).foreach(restoredOwned(params, _))
+    guardSelect(spark, sql)
+    val rows = reading(refs.flatMap(r => Option(loadedAliases.get(r)))) {
+      spark.sql(sql).limit(n).toJSON.collect()
+    }
+    (200, s"""{"rows": [${rows.mkString(",")}]}""")
   }
+
+  /** Loaded alias `n` once the caller passes its owner's gate, its view
+    * live: after a restart the durable alias re-registers its view
+    * lazily, and one that cannot be restored answers 404, not a raw
+    * TABLE_OR_VIEW_NOT_FOUND. */
+  private def restoredOwned(params: Map[String, String], n: String): Unit = {
+    ownedBy(params, aliasOwner(n))
+    if (!ensureAliasView(n)) refuse(404, s"alias '$n' cannot be restored")
+  }
+
+  /** The served tables' session, or 500 on a server with no table. */
+  private def tablesSpark: SparkSession =
+    sparkOf.getOrElse(refuse(500, "no tables registered"))
 
   /** The SELECT-only + loaded-relations-only guard shared by
     * /cachedresults/sql and /cachedresults/create. Gate on the PARSED
@@ -2320,16 +2190,17 @@ final class QueryServer(
     * same 412 precondition `/status` reports, and one whose background
     * load FAILED (and was not since re-loaded) answers 500 with the
     * recorded error — never a raw TABLE_OR_VIEW_NOT_FOUND. */
-  private def asyncGate(names: Iterable[String]): Option[(Int, String)] =
-    names.iterator.map(n => (n.toLowerCase, asyncLoads.get(n.toLowerCase)))
-      .collectFirst {
-        case (n, "LOADING") =>
-          (412, err(s"alias '$n' is not yet loaded"))
-        case (n, s) if s != null && s.startsWith("ERROR:") &&
+  private def asyncGate(names: Iterable[String]): Unit =
+    names.foreach { name =>
+      val n = name.toLowerCase
+      asyncLoads.get(n) match {
+        case "LOADING" => refuse(412, s"alias '$n' is not yet loaded")
+        case s if s != null && s.startsWith("ERROR:") &&
             !loadedAliases.containsKey(n) =>
-          (500, err(s"alias '$n' failed to load: " +
-            s.stripPrefix("ERROR:")))
+          refuse(500, s"alias '$n' failed to load: " + s.stripPrefix("ERROR:"))
+        case _ => ()
       }
+    }
 
   /** Single-part relation names referenced by `sql` (lowercased) — what
     * [[asyncGate]] screens before [[guardSelect]] reports a mid-load
@@ -2349,20 +2220,15 @@ final class QueryServer(
     * SYNCHRONOUSLY, so the 200 response already reserves the name. */
   private def cachedLoadAsync(params: Map[String, String]): (Int, String) =
     shareLock.synchronized {
-      val alias = params.getOrElse("alias", return (400, err("missing 'alias'")))
-      if (!alias.matches("[A-Za-z_][A-Za-z0-9_]*"))
-        return (400, err(s"invalid alias '$alias'"))
+      val alias = viewName(params, "alias")
       val id = qid(params)
       if (Option(sessions.get(id)).isEmpty &&
           !java.nio.file.Files.exists(sessionFile(id)))
-        return (404, err("unknown queryId"))
-      ownerGate(params, queryOwner(id)) match {
-        case Some(resp) => return resp
-        case None => ()
-      }
+        refuse(404, "unknown queryId")
+      ownedBy(params, queryOwner(id))
       val owner = loadedAliases.putIfAbsent(alias.toLowerCase, id)
       if (owner != null && owner != id)
-        return (409, err(s"alias '$alias' is bound to another query"))
+        refuse(409, s"alias '$alias' is bound to another query")
       aliasTs.put(alias.toLowerCase,
         java.lang.Long.valueOf(System.currentTimeMillis()))
       asyncLoads.put(alias.toLowerCase, "LOADING")
@@ -2413,14 +2279,10 @@ final class QueryServer(
     * reference's "not yet loaded" precondition), 404 unknown, 500 with
     * the recorded error when the background load failed. */
   private def cachedStatus(params: Map[String, String]): (Int, String) = {
-    val alias = params.getOrElse("alias",
-      return (400, err("missing 'alias'"))).toLowerCase
+    val alias = need(params, "alias").toLowerCase
     // even the load state is the owner's (uniform enforcement — an
     // alias name another principal chose reveals nothing)
-    ownerGate(params, aliasOwner(alias)) match {
-      case Some(resp) => return resp
-      case None => ()
-    }
+    ownedBy(params, aliasOwner(alias))
     asyncLoads.get(alias) match {
       case null =>
         if (loadedAliases.containsKey(alias))
@@ -2444,90 +2306,63 @@ final class QueryServer(
     * subquery over an unloaded relation or a mutation. */
   private def cachedCreate(params: Map[String, String]): (Int, String) =
     shareLock.synchronized {
+      val src = need(params, "alias")
+      asyncGate(Seq(src))
+      val owner = Option(loadedAliases.get(src.toLowerCase))
+        .getOrElse(refuse(412, s"alias '$src' is not loaded"))
+      // deriving a view reads the source's rows — owner-gated like
+      // /cachedresults/sql (the derived view inherits the source's
+      // owning query, and with it the same principal)
+      ownedBy(params, queryOwner(owner))
+      val view = viewName(params, "view")
+      val prior = loadedAliases.putIfAbsent(view.toLowerCase, owner)
+      if (prior != null && prior != owner)
+        refuse(409, s"alias '$view' is bound to another query")
+      // parts may be expressions (the reference's fields list carries
+      // aggregates when grouping is set) — structural safety comes
+      // from guardSelect on the ASSEMBLED single statement, which
+      // refuses mutations, unloaded relations, and file-path reads;
+      // a part smuggling a second statement fails the single-
+      // statement parse outright
+      def part(name: String): Option[String] =
+        params.get(name).map(_.trim).filter(_.nonEmpty)
+      val sql = s"SELECT ${part("fields").getOrElse("*")} FROM $src" +
+        part("conditions").map(c => s" WHERE $c").getOrElse("") +
+        part("grouping").map(g => s" GROUP BY $g").getOrElse("") +
+        part("order").map(o => s" ORDER BY $o").getOrElse("")
       try {
-        val src = params.getOrElse("alias", return (400, err("missing 'alias'")))
-        val srcPending = asyncGate(Seq(src))
-        if (srcPending.isDefined) return srcPending.get
-        val owner = loadedAliases.get(src.toLowerCase)
-        if (owner == null)
-          return (412, err(s"alias '$src' is not loaded"))
-        // deriving a view reads the source's rows — owner-gated like
-        // /cachedresults/sql (the derived view inherits the source's
-        // owning query, and with it the same principal)
-        ownerGate(params, queryOwner(owner)) match {
-          case Some(resp) => return resp
-          case None => ()
-        }
-        val view = params.getOrElse("view", return (400, err("missing 'view'")))
-        if (!view.matches("[A-Za-z_][A-Za-z0-9_]*"))
-          return (400, err(s"invalid view '$view'"))
-        val prior = loadedAliases.putIfAbsent(view.toLowerCase, owner)
-        if (prior != null && prior != owner)
-          return (409, err(s"alias '$view' is bound to another query"))
-        // the reservation above must not outlive a FAILED create: every
-        // refusal below (owner gate, async gate, restore 404, guard /
-        // SQL errors) releases it — a phantom binding would squat the
-        // name (409 for everyone else), answer /status as LOADED, and a
-        // restart's persistAliases could even make it durable. Only OUR
-        // reservation releases (a re-create over an existing binding
-        // keeps it — CAS remove on the owner value).
-        def failed(resp: (Int, String)): (Int, String) = {
-          if (prior == null) loadedAliases.remove(view.toLowerCase, owner)
-          resp
-        }
-        // parts may be expressions (the reference's fields list carries
-        // aggregates when grouping is set) — structural safety comes
-        // from guardSelect on the ASSEMBLED single statement, which
-        // refuses mutations, unloaded relations, and file-path reads;
-        // a part smuggling a second statement fails the single-
-        // statement parse outright
-        def part(name: String): Option[String] =
-          params.get(name).map(_.trim).filter(_.nonEmpty)
-        val sql = s"SELECT ${part("fields").getOrElse("*")} FROM $src" +
-          part("conditions").map(c => s" WHERE $c").getOrElse("") +
-          part("grouping").map(g => s" GROUP BY $g").getOrElse("") +
-          part("order").map(o => s" ORDER BY $o").getOrElse("")
-        val spark = sparkOf.getOrElse(
-          return failed((500, err("no tables registered"))))
+        val spark = tablesSpark
+        val refs = referencedNames(spark, sql) // one parse, reused below
         // conditions may reference OTHER loaded aliases via subqueries —
         // those must also be past their async load
-        try {
-          val refs = referencedNames(spark, sql) // one parse, reused below
-          val refPending = asyncGate(refs)
-          if (refPending.isDefined) return failed(refPending.get)
-          // EVERY loaded alias the assembled statement touches is
-          // owner-gated, exactly as /cachedresults/sql gates its refs: a
-          // `conditions` subquery like `x IN (SELECT s FROM other_alias)`
-          // reads that alias's rows into a view the CALLER then owns —
-          // without this gate the derived view launders another
-          // principal's materialized data through /getRows. Source views
-          // may also need re-registration post-restart; a non-restorable
-          // one answers the /getRows 404 contract.
-          refs.filter(n => loadedAliases.containsKey(n)).foreach { n =>
-            ownerGate(params, aliasOwner(n)) match {
-              case Some(resp) => return failed(resp)
-              case None => ()
-            }
-            if (!ensureAliasView(n))
-              return failed((404, err(s"alias '$n' cannot be restored")))
-          }
-        } catch {
-          case e: Exception => return failed((400, err(e.getMessage)))
-        }
-        try {
-          guardSelect(spark, sql)
-          spark.sql(sql).createOrReplaceTempView(view)
-        } catch {
-          case e: Exception => return failed((400, err(e.getMessage)))
-        }
-        // the derived view's defining SQL travels with the alias so a
-        // restarted server can re-define it (CachedResults durability)
-        aliasSql.put(view.toLowerCase, sql)
-        aliasTs.put(view.toLowerCase,
-          java.lang.Long.valueOf(System.currentTimeMillis()))
-        persistAliases()
-        (200, s"""{"view": ${quote(view)}, "sql": ${quote(sql)}}""")
-      } catch { case e: Exception => (400, err(e.getMessage)) }
+        asyncGate(refs)
+        // EVERY loaded alias the assembled statement touches is
+        // owner-gated, exactly as /cachedresults/sql gates its refs: a
+        // `conditions` subquery like `x IN (SELECT s FROM other_alias)`
+        // reads that alias's rows into a view the CALLER then owns —
+        // without this gate the derived view launders another
+        // principal's materialized data through /getRows.
+        refs.filter(n => loadedAliases.containsKey(n)).foreach(restoredOwned(params, _))
+        guardSelect(spark, sql)
+        spark.sql(sql).createOrReplaceTempView(view)
+      } catch {
+        // the reservation above must not outlive a FAILED create: a
+        // phantom binding would squat the name (409 for everyone else),
+        // answer /status as LOADED, and a restart's persistAliases could
+        // even make it durable. Only OUR reservation releases (a
+        // re-create over an existing binding keeps it — CAS remove on
+        // the owner value).
+        case e: Throwable =>
+          if (prior == null) loadedAliases.remove(view.toLowerCase, owner)
+          throw e
+      }
+      // the derived view's defining SQL travels with the alias so a
+      // restarted server can re-define it (CachedResults durability)
+      aliasSql.put(view.toLowerCase, sql)
+      aliasTs.put(view.toLowerCase,
+        java.lang.Long.valueOf(System.currentTimeMillis()))
+      persistAliases()
+      (200, s"""{"view": ${quote(view)}, "sql": ${quote(sql)}}""")
     }
 
   /** `GET /cachedresults/getRows?alias=A[&rowBegin=N][&rowEnd=M]` — the
@@ -2537,20 +2372,14 @@ final class QueryServer(
     * the view's first column (the reference's MySQL table is ordered by
     * its row id); the range is bounded like every other page. */
   private def cachedGetRows(params: Map[String, String]): (Int, String) = {
-    val alias = params.getOrElse("alias", return (400, err("missing 'alias'")))
-    val pending = asyncGate(Seq(alias))
-    if (pending.isDefined) return pending.get
+    val alias = need(params, "alias")
+    asyncGate(Seq(alias))
     if (!loadedAliases.containsKey(alias.toLowerCase))
-      return (404, err(s"alias '$alias' is not loaded"))
+      refuse(404, s"alias '$alias' is not loaded")
     // alias names are CALLER-CHOSEN strings, not unguessable handles —
     // the row retrieval is owner-gated (CachedResultsBean getRows runs
     // the :1393 ownership check)
-    ownerGate(params, aliasOwner(alias)) match {
-      case Some(resp) => return resp
-      case None => ()
-    }
-    if (!ensureAliasView(alias))
-      return (404, err(s"alias '$alias' cannot be restored"))
+    restoredOwned(params, alias)
     try {
       val rowBegin = params.get("rowBegin").map(_.toLong).getOrElse(1L)
       val rowEnd = params.get("rowEnd").map(_.toLong)
@@ -2563,7 +2392,7 @@ final class QueryServer(
         s"row positions beyond ${Int.MaxValue} are not addressable")
       val n = rowEnd - rowBegin + 1
       require(n <= 100000, s"row range too large ($n; max 100000)")
-      val spark = sparkOf.getOrElse(return (500, err("no tables registered")))
+      val spark = tablesSpark
       // TOTAL order: every column participates, so tied leading values
       // cannot shuffle rows across page boundaries between requests
       // (only fully-identical rows are interchangeable — unobservable).
@@ -2584,79 +2413,59 @@ final class QueryServer(
 
   private lazy val atomFeedSvc: Option[AtomFeed] = atomTable.map(new AtomFeed(_))
 
+  /** The atom feed once the caller passes the registry: atom documents
+    * are DATA, gated like every other data-serving verb (unknown caller
+    * 401); 404 on a server with no atom table. */
+  private def atomFeed(params: Map[String, String]): AtomFeed = {
+    val svc = atomFeedSvc.getOrElse(refuse(404, "no atom table configured"))
+    grant(params)
+    svc
+  }
+
   /** `GET /atom/categories` — the category-names document
     * (AtomServiceBean.java:118 getCategories); empty → 204 (the
     * reference's NoResultsException → NO_CONTENT). */
-  private def atomCategories(params: Map[String, String]): (Int, String) =
-    atomFeedSvc match {
-      case None => (404, err("no atom table configured"))
-      case Some(svc) =>
-        // atom documents are DATA — the registry gates the whole tier
-        // like every other data-serving verb (unknown caller 401)
-        resolveAuths(params) match {
-          case Left(resp) => return resp
-          case Right(_) => ()
-        }
-        val cats = svc.categories()
-        if (cats.isEmpty) (204, "")
-        else (200, s"""{"categories": [${cats.map(quote).mkString(",")}]}""")
-    }
+  private def atomCategories(params: Map[String, String]): (Int, String) = {
+    val cats = atomFeed(params).categories()
+    if (cats.isEmpty) (204, "")
+    else (200, s"""{"categories": [${cats.map(quote).mkString(",")}]}""")
+  }
 
   /** `GET /atom/feed?category=C[&pagesize=N][&l=cursor]` — one paged
     * feed document (AtomServiceBean.java:190 getFeed): newest-first
     * entries, a `next` cursor naming the last returned key (resume is
     * strictly after it); an empty page → 204. */
-  private def atomFeedPage(params: Map[String, String]): (Int, String) =
-    atomFeedSvc match {
-      case None => (404, err("no atom table configured"))
-      case Some(svc) =>
-        resolveAuths(params) match {
-          case Left(resp) => return resp
-          case Right(_) => ()
-        }
-        try {
-          val category = params.getOrElse("category",
-            return (400, err("missing 'category'")))
-          val pagesize = params.get("pagesize").map(_.toInt).getOrElse(30)
-          svc.feed(category, params.get("l"), pagesize) match {
-            case None => (204, "")
-            case Some(p) =>
-              val es = p.entries.map(e =>
-                s"""{"id": ${quote(e.id)}, "title": ${quote(e.title)},""" +
-                  s""" "updated": ${quote(e.updated)},""" +
-                  s""" "occurrences": ${e.occurrences}}""")
-              (200, s"""{"title": ${quote(p.category)},""" +
-                s""" "author": ${quote(p.author)},""" +
-                s""" "updated": ${quote(p.updated)},""" +
-                s""" "next": ${quote(p.nextCursor)},""" +
-                s""" "entries": [${es.mkString(",")}]}""")
-          }
-        } catch { case e: Exception => (400, err(e.getMessage)) }
+  private def atomFeedPage(params: Map[String, String]): (Int, String) = {
+    val svc = atomFeed(params)
+    val category = need(params, "category")
+    val pagesize = params.get("pagesize").map(_.toInt).getOrElse(30)
+    svc.feed(category, params.get("l"), pagesize) match {
+      case None => (204, "")
+      case Some(p) =>
+        val es = p.entries.map(e =>
+          s"""{"id": ${quote(e.id)}, "title": ${quote(e.title)},""" +
+            s""" "updated": ${quote(e.updated)},""" +
+            s""" "occurrences": ${e.occurrences}}""")
+        (200, s"""{"title": ${quote(p.category)},""" +
+          s""" "author": ${quote(p.author)},""" +
+          s""" "updated": ${quote(p.updated)},""" +
+          s""" "next": ${quote(p.nextCursor)},""" +
+          s""" "entries": [${es.mkString(",")}]}""")
     }
+  }
 
   /** `GET /atom/entry?category=C&id=I` — one entry document
     * (AtomServiceBean.java:287 getEntry); no match → 204. */
-  private def atomEntry(params: Map[String, String]): (Int, String) =
-    atomFeedSvc match {
-      case None => (404, err("no atom table configured"))
-      case Some(svc) =>
-        resolveAuths(params) match {
-          case Left(resp) => return resp
-          case Right(_) => ()
-        }
-        try {
-          val category = params.getOrElse("category",
-            return (400, err("missing 'category'")))
-          val id = params.getOrElse("id", return (400, err("missing 'id'")))
-          svc.entry(category, id) match {
-            case None => (204, "")
-            case Some(e) => (200,
-              s"""{"id": ${quote(e.id)}, "title": ${quote(e.title)},""" +
-                s""" "updated": ${quote(e.updated)},""" +
-                s""" "occurrences": ${e.occurrences}}""")
-          }
-        } catch { case e: Exception => (400, err(e.getMessage)) }
+  private def atomEntry(params: Map[String, String]): (Int, String) = {
+    val svc = atomFeed(params)
+    svc.entry(need(params, "category"), need(params, "id")) match {
+      case None => (204, "")
+      case Some(e) => (200,
+        s"""{"id": ${quote(e.id)}, "title": ${quote(e.title)},""" +
+          s""" "updated": ${quote(e.updated)},""" +
+          s""" "occurrences": ${e.occurrences}}""")
     }
+  }
 
   /** `GET /admin/listTables` — the lake analog of the reference's
     * Accumulo admin ListTables verb (web-services/accumulo
@@ -2666,58 +2475,48 @@ final class QueryServer(
     * metadata only — no oracle row data leaves through this verb, and
     * a configured principal registry still gates it (401 unknown). */
   private def adminListTables(params: Map[String, String]): (Int, String) = {
-    resolveAuths(params) match {
-      case Left(resp) => return resp
-      case Right(_) => ()
+    grant(params)
+    val items = tableMap.toSeq.sortBy(_._1).map { case (name, df) =>
+      val cols = df.schema.fields.map(f =>
+        s"""{"name": ${quote(f.name)},""" +
+          s""" "type": ${quote(f.dataType.simpleString)}}""")
+      s"""{"table": ${quote(name)}, "rows": ${df.count()},""" +
+        s""" "columns": [${cols.mkString(",")}]}"""
     }
-    try {
-      val items = tableMap.toSeq.sortBy(_._1).map { case (name, df) =>
-        val cols = df.schema.fields.map(f =>
-          s"""{"name": ${quote(f.name)},""" +
-            s""" "type": ${quote(f.dataType.simpleString)}}""")
-        s"""{"table": ${quote(name)}, "rows": ${df.count()},""" +
-          s""" "columns": [${cols.mkString(",")}]}"""
-      }
-      (200, s"""{"tables": [${items.mkString(",")}]}""")
-    } catch { case e: Exception => (500, err(e.getMessage)) }
+    (200, s"""{"tables": [${items.mkString(",")}]}""")
   }
 
   /** `GET /query/metrics/summary[?end=millis][&user=u]` — the reference's
     * `/Query/Metrics/summary/all` and `/summary/user`
     * (QueryMetricsBean.java:224-336): nine time-window buckets over
     * query create times, each with query/page/page-result counts. */
-  private def metricsSummary(params: Map[String, String]): (Int, String) =
-    try {
-      // with a registry the summary is principal-scoped like the
-      // reference's `/summary/user` (the caller's own queries); admins
-      // keep `/summary/all` and may name `forUser=` to inspect one
-      // principal. Without a registry, `user=` stays the plain filter.
-      val caller = params.getOrElse("user", "anonymous")
-      val filter: Option[String] =
-        if (users.isEmpty) params.get("user")
-        else if (!users.contains(caller))
-          return (401, err(s"unknown user '$caller'"))
-        else if (adminUsers.contains(caller)) params.get("forUser")
-        else Some(caller)
-      val end = params.get("end").map(_.toLong)
-        .getOrElse(System.currentTimeMillis())
-      val spark = sparkOf.getOrElse(return (500, err("no tables registered")))
-      // pending ∪ flushed table: a restarted (or sibling) server over
-      // the same stateDir reports the SAME history the dead one built.
-      // Build AND collect under the store lock so a concurrent compact
-      // cannot delete the enumerated part files mid-read.
-      val rows = metricsStore.readLocked {
-        QueryMetrics.summaryFrom(metricsStore.metricsDF(spark),
-            metricsStore.pagesDF(spark), end, filter)
-          .orderBy("ord").toJSON.collect() // exactly nine bucket rows
-      }
-      (200, s"""{"buckets": [${rows.mkString(",")}]}""")
-    } catch { case e: Exception => (400, err(e.getMessage)) }
+  private def metricsSummary(params: Map[String, String]): (Int, String) = {
+    // with a registry the summary is principal-scoped like the
+    // reference's `/summary/user` (the caller's own queries); admins
+    // keep `/summary/all` and may name `forUser=` to inspect one
+    // principal. Without a registry, `user=` stays the plain filter.
+    val filter =
+      if (users.isEmpty) params.get("user")
+      else scope(params).orElse(params.get("forUser"))
+    val end = params.get("end").map(_.toLong)
+      .getOrElse(System.currentTimeMillis())
+    val spark = tablesSpark
+    // pending ∪ flushed table: a restarted (or sibling) server over
+    // the same stateDir reports the SAME history the dead one built.
+    // Build AND collect under the store lock so a concurrent compact
+    // cannot delete the enumerated part files mid-read.
+    val rows = metricsStore.readLocked {
+      QueryMetrics.summaryFrom(metricsStore.metricsDF(spark),
+          metricsStore.pagesDF(spark), end, filter)
+        .orderBy("ord").toJSON.collect() // exactly nine bucket rows
+    }
+    (200, s"""{"buckets": [${rows.mkString(",")}]}""")
+  }
 
   private def close(params: Map[String, String]): (Int, String) =
     // close is owner-gated like next (QueryExecutorBean.java:1773);
     // adminUsers retain the reference's adminClose override
-    owned(params)(end(_, "closed"))
+    end(ownedQuery(params), "closed")
 
   /** Unpersist a removed session's frame ONLY when no live session
     * still shares it (`/query/duplicate` shares the persisted frame by
@@ -2847,6 +2646,13 @@ final class QueryServer(
 
   // ---- plumbing ------------------------------------------------------
 
+  private def refuse(status: Int, msg: String): Nothing =
+    throw new Refusal(status, msg)
+
+  /** `params(key)`, or a 400 naming the missing parameter. */
+  private def need(params: Map[String, String], key: String): String =
+    params.getOrElse(key, refuse(400, s"missing '$key'"))
+
   private def qid(params: Map[String, String]): String =
     params.getOrElse("id", "")
   private def session(params: Map[String, String]): Option[Session] =
@@ -2887,20 +2693,24 @@ final class QueryServer(
 
   /** The request's query-string parameters; a malformed one (a bad
     * percent-escape) is the caller's error, a 400. */
-  private def parsed(ex: HttpExchange): Either[(Int, String), Map[String, String]] =
-    try Right(parseQuery(ex.getRequestURI.getRawQuery))
+  private def requestParams(ex: HttpExchange): Map[String, String] =
+    try parseQuery(ex.getRequestURI.getRawQuery)
     catch {
       case e: IllegalArgumentException =>
-        Left((400, err(s"malformed query string: ${e.getMessage}")))
+        refuse(400, s"malformed query string: ${e.getMessage}")
     }
 
-  private def handler(f: Map[String, String] => (Int, String)): HttpHandler =
+  /** The handler of a verb: `f`'s answer, its [[Refusal]] as
+    * `(status, {"error": msg})`, and any other failure as `failure` —
+    * 400 for a verb whose every failure is the request's fault. */
+  private def handler(f: Map[String, String] => (Int, String),
+                      failure: Int = 500): HttpHandler =
     ex => {
-      val (status, body) = parsed(ex) match {
-        case Left(resp) => resp
-        case Right(params) =>
-          try f(params) catch { case e: Exception => (500, err(e.getMessage)) }
-      }
+      val (status, body) =
+        try f(requestParams(ex)) catch {
+          case r: Refusal => (r.status, err(r.msg))
+          case e: Exception => (failure, err(e.getMessage))
+        }
       respond(ex, status, body)
     }
 
@@ -2928,6 +2738,14 @@ object QueryServer {
 
   private final case class Session(defn: QueryDef, df: DataFrame,
                                    running: RunningQuery)
+
+  /** A verb's refusal, answered as `(status, {"error": msg})` by the
+    * handler that runs the verb. A ControlThrowable, like the non-local
+    * `return` it replaces: it passes through a verb's `case e:
+    * Exception` and `NonFatal` catches, releases every monitor on its way
+    * out, and carries no stack trace. */
+  private final class Refusal(val status: Int, val msg: String)
+    extends scala.util.control.ControlThrowable
 
   /** A durable definition with the paging position it was saved at:
     * `pagesServed` pages served when the cursor stood at `offset`, in

@@ -201,7 +201,7 @@ class QueryServerSpec extends SparkSpec {
 
   test("define/execute/get/predictions/remove round out the executor verbs") {
     val df = (1 to 25).map(i => (i.toLong, s"name_$i", if (i % 2 == 0) "A" else "B"))
-      .toDF("id", "name", "grp")
+      .toDF("id", "name", "grp").withColumn("a.b", -$"id")
     val srv = new QueryServer(tables = Map("people" -> df))
     val port = srv.start()
     try {
@@ -240,6 +240,12 @@ class QueryServerSpec extends SparkSpec {
       assert(exe.statusCode() == 200, exe.body().take(300))
       assert("\"id\":".r.findAllIn(exe.body()).size == 12, exe.body().take(600))
       assert(get(s"$base/list").body() == "[]")
+      // an order column whose name holds a dot is one column, not a path
+      val dotted = post(s"$base/execute?table=people&query=${enc("GRP == 'A'")}" +
+        "&orderBy=a.b")
+      assert(dotted.statusCode() == 200 &&
+        "\"id\":(\\d+)".r.findAllMatchIn(dotted.body()).map(_.group(1).toInt)
+          .toSeq == (24 to 2 by -2), dotted.body().take(600))
       assert(post(s"$base/execute?table=people&query=${enc("NOPE == 1")}")
         .statusCode() == 400)
     } finally srv.stop()
@@ -1336,6 +1342,158 @@ class QueryServerSpec extends SparkSpec {
       } finally srv2.stop()
     } finally {
       try srv.stop() catch { case _: Exception => () }
+      graft.core.Fs.deleteRecursively(stateDir)
+    }
+  }
+
+  test("refusal table: every route's status for an unknown caller, a " +
+      "non-owner and an unknown proxied entity") {
+    val df = Seq((1L, "click", "A"), (2L, "view", "A"), (3L, "buy", "A"))
+      .toDF("event_id", "event_type", "visibility")
+    val content = graft.content.ContentStore.contentTable(
+      Seq((1L, "one text")).toDF("doc_id", "text"))
+      .withColumn("visibility", org.apache.spark.sql.functions.lit("A"))
+    val atom = Seq(("event_type", "click", java.sql.Date.valueOf("2024-01-01"), 3L))
+      .toDF("category", "value", "latest_date", "occurrences")
+    val stateDir =
+      java.nio.file.Files.createTempDirectory("graft-refusals").toString
+    val srv = new QueryServer(Map("t" -> df, "content" -> content),
+      stateDir = stateDir,
+      uuidTypes = Seq(LookupUUID.UuidType("EVENT_ID", logic = "t")),
+      atomTable = Some(atom),
+      users = Map("alice" -> Set("A"), "bob" -> Set("A"), "root" -> Set("A")),
+      adminUsers = Set("root"), metricsFlush = false)
+    val base = s"http://127.0.0.1:${srv.start()}"
+    val enc = (v: String) => java.net.URLEncoder.encode(v, "UTF-8")
+    val q = enc("EVENT_ID > 0")
+    def grab(key: String, body: String): String =
+      ("\"" + key + "\": \"([0-9a-f]+)\"").r.findFirstMatchIn(body)
+        .getOrElse(fail(s"no $key in $body")).group(1)
+    // alice's objects: a created query, a defined one, a loaded alias
+    // and a bulk job over the defined query
+    def query(): String = grab("queryId", post(s"$base/query/create?table=t" +
+      s"&query=$q&orderBy=event_id&pageSize=1&user=alice").body())
+    def job(): String = {
+      val d = grab("queryId",
+        post(s"$base/query/define?table=t&query=$q&user=alice").body())
+      grab("jobId", post(s"$base/mapreduce/submit?jobName=BulkResultsJob" +
+        s"&parameters=${enc(s"queryId:$d;format:json")}" +
+        "&roles=AuthorizedUser&user=alice").body())
+    }
+    try {
+      val id = query()
+      val defId = grab("queryId",
+        post(s"$base/query/define?table=t&query=$q&user=alice").body())
+      assert(post(s"$base/cachedresults/load?id=$id&alias=ref_a&user=alice")
+        .statusCode() == 200)
+      val jobId = job()
+      val O = (401, 401, 401) // refused all three ways: alice's object
+      val G = (401, 200, 401) // a registry gate with no object behind it
+      val U = (200, 200, 200) // no principal read at all
+      // route -> (unknown user, bob on alice's object, alice proxied
+      // through an unknown entity); a destructive verb gets a fresh object
+      val rows: Seq[(String, () => String, (Int, Int, Int))] = Seq(
+        ("/query/create", () => s"/query/create?table=t&query=$q", G),
+        ("/query/createAndNext", () => s"/query/createAndNext?table=t&query=$q", G),
+        ("/query/define", () => s"/query/define?table=t&query=$q", G),
+        ("/query/execute", () => s"/query/execute?table=t&query=$q", G),
+        ("/query/get", () => s"/query/get?id=$id", O),
+        ("/query/predictions", () => s"/query/predictions?id=$id", O),
+        ("/query/remove", () => s"/query/remove?id=${query()}", O),
+        ("/query/next", () => s"/query/next?id=$id", O),
+        ("/query/plan?id", () => s"/query/plan?id=$id", O),
+        ("/query/plan?table", () => s"/query/plan?table=t&query=$q", G),
+        ("/query/metrics", () => s"/query/metrics?id=$id", O),
+        ("/query/metrics/summary", () => "/query/metrics/summary", G),
+        ("/query/close", () => s"/query/close?id=${query()}", O),
+        ("/query/list", () => "/query/list", G),
+        ("/query/listQueryLogic", () => "/query/listQueryLogic", G),
+        ("/query/duplicate", () => s"/query/duplicate?id=$id", O),
+        ("/query/reset", () => s"/query/reset?id=$id", O),
+        ("/query/update", () => s"/query/update?id=$id", O),
+        ("/query/cancel", () => s"/query/cancel?id=${query()}", O),
+        ("/query/predict", () => s"/query/predict?table=t&query=$q", G),
+        ("/lookupUUID", () => "/lookupUUID?terms=EVENT_ID:1", G),
+        ("/lookupContentUUID",
+          () => "/lookupContentUUID?terms=EVENT_ID:1&uidField=event_id", G),
+        ("/lookupUID", () => "/lookupUID?uids=1", G),
+        ("/translateId", () => "/translateId?id=1", G),
+        ("/translateIDs", () => "/translateIDs?ids=1,2", G),
+        ("/mapreduce/listConfigurations", () => "/mapreduce/listConfigurations", U),
+        ("/mapreduce/submit", () => "/mapreduce/submit?jobName=BulkResultsJob" +
+          s"&parameters=${enc(s"queryId:$defId;format:json")}" +
+          "&roles=AuthorizedUser", O),
+        ("/mapreduce/list?jobId", () => s"/mapreduce/list?jobId=$jobId", O),
+        ("/mapreduce/list", () => "/mapreduce/list", G),
+        ("/mapreduce/cancel", () => s"/mapreduce/cancel?jobId=${job()}", O),
+        ("/mapreduce/restart", () => s"/mapreduce/restart?jobId=${job()}", O),
+        ("/mapreduce/remove", () => s"/mapreduce/remove?jobId=${job()}", O),
+        ("/mapreduce/getFile",
+          () => s"/mapreduce/getFile?jobId=$jobId&fileName=part", O),
+        ("/modification/listConfigurations",
+          () => "/modification/listConfigurations", U),
+        ("/modification/getMutableFieldList",
+          () => "/modification/getMutableFieldList", U),
+        ("/modification/reloadCache", () => "/modification/reloadCache", U),
+        // no service is configured: a known caller's edit is malformed
+        ("/modification/submit",
+          () => "/modification/submit?service=s&table=t", (401, 400, 401)),
+        ("/model/list", () => "/model/list", U),
+        ("/model/get", () => "/model/get?name=nomodel", (401, 404, 401)),
+        ("/model/import",
+          () => "/model/import?name=m_bob&mappings=A:F:FORWARD", G),
+        ("/model/clone",
+          () => "/model/clone?name=nomodel&newName=m2", (401, 404, 401)),
+        ("/model/delete", () => "/model/delete?name=nomodel", (401, 404, 401)),
+        ("/model/insert",
+          () => "/model/insert?name=m_ins&mappings=A:F:FORWARD", G),
+        ("/model/deleteMapping",
+          () => "/model/deleteMapping?name=nomodel&mappings=A:F:FORWARD", G),
+        ("/cachedresults/load",
+          () => s"/cachedresults/load?id=$id&alias=ref_load", O),
+        ("/cachedresults/update",
+          () => s"/cachedresults/update?id=$id&alias=ref_a", O),
+        ("/cachedresults/sql",
+          () => s"/cachedresults/sql?sql=${enc("SELECT * FROM ref_a")}", O),
+        ("/cachedresults/getRows", () => "/cachedresults/getRows?alias=ref_a", O),
+        ("/cachedresults/loadAsync",
+          () => s"/cachedresults/loadAsync?id=$id&alias=ref_async", O),
+        ("/cachedresults/status", () => "/cachedresults/status?alias=ref_a", O),
+        ("/cachedresults/create",
+          () => "/cachedresults/create?alias=ref_a&view=ref_view", O),
+        ("/atom/categories", () => "/atom/categories", G),
+        ("/atom/feed", () => "/atom/feed?category=event_type", G),
+        ("/atom/entry", () => "/atom/entry?category=event_type&id=" +
+          AtomFeed.encodeId("click"), G),
+        ("/admin/listTables", () => "/admin/listTables", G),
+        ("/admin/expire", () => "/admin/expire", O),
+        ("/user/listEffectiveAuthorizations",
+          () => "/user/listEffectiveAuthorizations", G),
+        ("/user/flushCachedCredentials",
+          () => "/user/flushCachedCredentials", G),
+        ("/accumulo/validateVisibilities",
+          () => "/accumulo/validateVisibilities?visibilities=A", U))
+      // a 401 for an unknown principal names it; the proxied entity is
+      // refused as such, whatever else the caller may do
+      val callers = Seq(("mallory", "user=mallory", "mallory"),
+        ("bob", "user=bob", ""),
+        ("alice+nosuch", "user=alice&proxiedEntities=nosuch", "nosuch"))
+      val wrong = rows.flatMap { case (route, url, want) =>
+        val u = url()
+        callers.zip(want.productIterator.toSeq).flatMap {
+          case ((who, param, named), status) =>
+            val r = post(s"$base$u${if (u.contains("?")) "&" else "?"}$param")
+            val ok = r.statusCode() == status &&
+              (status != 401 || named.isEmpty || r.body().contains(s"'$named'"))
+            if (ok) None
+            else Some(s"$route as $who: ${r.statusCode()}" +
+              s" ${r.body().take(120).replace('\n', ' ')}" +
+              s" (want $status)")
+        }
+      }
+      assert(wrong.isEmpty, wrong.mkString("\n", "\n", ""))
+    } finally {
+      srv.stop()
       graft.core.Fs.deleteRecursively(stateDir)
     }
   }

@@ -245,7 +245,7 @@ class RunningQuerySpec extends SparkSpec {
 
   test("held pages equal the per-page offset pages: order, JSON, numbers, statuses, offsets") {
     val df = awkward.persist()
-    try for (order <- Seq(Seq("NAME", "Id"), Seq("SCORE", "ID"))) {
+    try for (order <- Seq(Seq("NAME", "Id"), Seq("SCORE", "ID"), Seq("A.B", "id"))) {
       val (held, heldJobs, heldEnd) = drain(df, order, held = true)
       val (paged, pagedJobs, pagedEnd) = drain(df, order, held = false)
       assert(heldJobs.drop(2).forall(_ == 0) && pagedJobs.forall(_ > 0),
@@ -254,7 +254,7 @@ class RunningQuerySpec extends SparkSpec {
       assert(held == paged, s"$order\nheld:\n${held.mkString("\n")}\nper page:\n${paged.mkString("\n")}")
       assert(heldEnd == pagedEnd)
       // both are the order Spark's own orderBy gives the frame
-      val want = df.orderBy(order.map(col): _*).toJSON.collect().toSeq
+      val want = df.orderBy(order.map(c => col(s"`$c`")): _*).toJSON.collect().toSeq
       assert(held.flatMap(_._1) == want, s"$order: ${held.flatMap(_._1)}")
     } finally df.unpersist()
   }
